@@ -373,7 +373,7 @@ def _q_corr_cov_matrix(spark, sf_dir):
     # weighted correlation matrix (reference frame.py:253-285) and the
     # covariance-matrix extension, FUSED: the cov moments are a subset of
     # corr's, so both stats come out of ONE aggregate pass over the pair
-    # moments (corr.py frame_corr_cov) — one scan, no join.
+    # moments (corr.py pair_matrix) — one scan, no join.
     wdf = wt(_li(spark, sf_dir), _W)
     cols = ["l_extendedprice", "l_discount", "l_tax"]
     return wdf.corr_cov(subset=cols).select(
@@ -4105,7 +4105,7 @@ def _ewm_sql(alpha: float = 0.05) -> str:
 """
 
 
-# weighted Pearson moments as SQL, mirroring _stats.corr_from_moments
+# weighted Pearson moments as SQL, mirroring _stats.assemble("corr")
 # (products left-associated exactly like the kernel: (w*x)*y etc.)
 _CORR_SQL = """
 WITH m AS (
@@ -8084,7 +8084,7 @@ _ORACLE["weighted_centroids"] = """
     GROUP BY i, j
 """
 
-# weighted covariance moments mirroring _stats.cov_from_moments
+# weighted covariance moments mirroring _stats.assemble("cov")
 _COV_SQL = """
 WITH m AS (
   SELECT COUNT(CASE WHEN {x} IS NOT NULL AND {y} IS NOT NULL

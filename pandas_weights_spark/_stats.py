@@ -1,11 +1,23 @@
-"""Weighted-moment Column-expression kernels.
+"""The weighted-moment algebra: one builder, one assembler.
 
 This is the numerical heart of the engine — the PySpark analog of the
-reference's ``_stats.py`` (``/root/reference/src/pandas_weights/_stats.py:14-73``).
-Every weighted statistic (global, grouped, resampled, streaming) is built
-from these *lazy* Column expressions, so Catalyst compiles each statistic
-into a single partial+final aggregate pass (one shuffle per grouping) with
-whole-stage codegen — no Python in the hot path.
+reference's ``pandas_weights/_stats.py`` (lines 14-73). Every moment
+statistic and every corr/cov — global, grouped, salted, resampled,
+rolled up, windowed, streaming — is made of two pieces:
+
+* :func:`moment_sums` builds the *mergeable* moment sums of a column
+  (``W`` = masked weight sum, ``n`` = valid pair count, ``s1``..``s4``
+  = ``Σ w·xᵏ``) or of a column pair (the seven Pearson sums
+  ``n, w, wx, wy, wxy, wxx, wyy`` under the joint validity mask), as
+  aggregate expressions or over a given ``WindowSpec``. Sums are
+  associative, so salting, time rollups and windows merge them exactly.
+* :func:`assemble` turns those sums — or columns already holding them,
+  e.g. a previous stage's merged sums — into ``count/sum/mean/var/std/
+  sem/skew/kurt`` or ``corr/cov``.
+
+Everything stays a lazy Column expression, so Catalyst compiles each
+statistic into one partial+final aggregate pass (one shuffle per
+grouping) with whole-stage codegen — no Python in the hot path.
 
 Semantics reproduced from the reference:
 
@@ -14,7 +26,8 @@ Semantics reproduced from the reference:
 * ``sum``    = sum of ``w * x`` with pandas ``min_count`` behavior
   (frame.py:215-220): with ``min_count=0`` an all-NULL column yields 0.0,
   with ``min_count>=1`` it yields NULL.
-* ``mean``   = ``sum(min_count=1) / count(skipna)`` (frame.py:222-229).
+* ``mean``   = ``Σwx / count(skipna)`` (frame.py:222-229); ``Σwx`` is
+  NULL when no row is valid, so no ``min_count`` guard is needed.
 * ``var``    = moment form ``(Σwx² − (Σwx)²/W) / (W − ddof)`` where the
   ddof is subtracted from the *weighted count* — the frequency-weights
   convention (_stats.py:24-33). This forbids Spark's built-in
@@ -24,105 +37,230 @@ Semantics reproduced from the reference:
   non-positive variance — each guard yields NULL (reference yields NaN;
   we use NULL as the engine-wide missing value, see README).
 
-Divide-by-zero is expressed with ``F.try_divide`` so the kernels behave
-identically under ANSI and legacy SQL modes (Spark 4 defaults ANSI on).
+Products keep one IEEE multiplication order everywhere (``x*w``,
+``(x*x)*w``, ``((x*x)*x)*w``, ``(wv*x)*y``) — the SQL oracles replay it,
+so results are bit-identical. Divide-by-zero is expressed with
+``F.try_divide`` so the kernels behave identically under ANSI and
+legacy SQL modes (Spark 4 defaults ANSI on).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column
+from typing import Mapping, Optional
+
+from pyspark.sql import Column, WindowSpec
 from pyspark.sql import functions as F
 
 __all__ = [
+    "MOMENT_STATS",
+    "moment_sums",
+    "sums_read",
+    "assemble",
+    "w_stat",
     "w_count",
-    "w_sum",
-    "w_sum_of_squares",
-    "w_mean",
-    "w_var",
     "w_std",
+    "w_sem",
     "variance_from_weighted_moments",
-    "w_skew",
-    "w_kurt",
-    "corr_moment_exprs",
-    "corr_from_moments",
-    "cov_from_moments",
-    "CORR_MOMENTS",
 ]
 
 _INF = float("inf")
 
+#: statistics :func:`assemble` builds from the univariate sums
+MOMENT_STATS = ("count", "sum", "mean", "var", "std", "sem", "skew", "kurt")
 
-def _zero() -> Column:
-    return F.lit(0.0)
 
+def moment_sums(
+    x: Column,
+    w: Column,
+    *,
+    y: Optional[Column] = None,
+    skipna: bool = True,
+    over: Optional[WindowSpec] = None,
+) -> dict[str, Column]:
+    """The mergeable weighted moment sums of ``x`` (or of the pair
+    ``x, y``), as aggregate expressions — or window expressions over
+    ``over``.
 
-def w_count(x: Column, w: Column, *, skipna: bool = True) -> Column:
-    """Weighted count: ``Σ w · 1[x IS NOT NULL]`` (frame.py:189-213).
+    Univariate keys: ``W`` = ``Σ w·1[x IS NOT NULL]`` (``Σ w`` with
+    ``skipna=False``), ``n`` = count of valid ``x·w``, and ``s1``..``s4``
+    = ``Σ w·xᵏ`` with the power left-associated (``((x*x)*x)*w``).
 
-    ``skipna=False`` counts every row's weight regardless of ``x``.
-    NULL weights contribute 0 either way. Empty/all-NULL input → 0.0,
-    matching pandas ``sum`` with default ``min_count=0``.
+    Pair keys (``y`` given): ``n, w, wx, wy, wxy, wxx, wyy``, all under
+    the joint mask ``x, y, w NOT NULL`` (_stats.py:44), so every pair is
+    "pairwise complete" exactly like the reference.
+
+    Every sum is NULL when no row is valid. The dict is lazy — only the
+    sums a statistic references enter the plan.
     """
-    if skipna:
-        expr = F.sum(F.when(x.isNotNull(), w))
+    if y is not None:
+        wv = F.when(x.isNotNull() & y.isNotNull() & w.isNotNull(), w)
+        sums = {
+            "n": F.count(wv),
+            "w": F.sum(wv),
+            "wx": F.sum(wv * x),
+            "wy": F.sum(wv * y),
+            "wxy": F.sum(wv * x * y),
+            "wxx": F.sum(wv * x * x),
+            "wyy": F.sum(wv * y * y),
+        }
     else:
-        expr = F.sum(w)
-    return F.coalesce(expr, _zero())
+        sums = {
+            "W": F.sum(F.when(x.isNotNull(), w) if skipna else w),
+            "n": F.count(x * w),
+        }
+        p = x
+        for k in range(1, 5):
+            sums[f"s{k}"] = F.sum(p * w)
+            p = p * x
+    if over is not None:
+        sums = {k: v.over(over) for k, v in sums.items()}
+    return sums
 
 
-def w_sum(x: Column, w: Column, *, min_count: int = 0) -> Column:
-    """Weighted sum ``Σ w·x`` with pandas ``min_count`` (frame.py:215-220).
-
-    The product is NULL when either side is NULL, so ``F.count`` of the
-    product equals pandas' count of non-NA weighted values.
-    """
-    prod = x * w
-    total = F.coalesce(F.sum(prod), _zero())
-    if min_count > 0:
-        return F.when(F.count(prod) >= F.lit(min_count), total)
-    return total
-
-
-def w_sum_of_squares(x: Column, w: Column, *, min_count: int = 1) -> Column:
-    """``Σ w·x²`` (_stats.py:14-21; default min_count=1 as in reference)."""
-    return w_sum(x * x, w, min_count=min_count)
+#: the univariate sums each statistic reads in :func:`assemble`
+_READS = {
+    "count": ("W",),
+    "sum": ("s1",),
+    "mean": ("W", "s1"),
+    "var": ("W", "s1", "s2"),
+    "std": ("W", "s1", "s2"),
+    "sem": ("W", "s1", "s2"),
+    "skew": ("W", "s1", "s2", "s3"),
+    "kurt": ("W", "s1", "s2", "s3", "s4"),
+}
 
 
-def w_mean(x: Column, w: Column, *, skipna: bool = True) -> Column:
-    """Weighted mean = ``sum(min_count=1) / count(skipna)`` (frame.py:222-229)."""
-    return F.try_divide(w_sum(x, w, min_count=1), w_count(x, w, skipna=skipna))
+def sums_read(stats, *, min_count: int = 0) -> list[str]:
+    """The univariate sums :func:`assemble` reads for ``stats`` — the
+    state a merge stage (salting, rollup) must carry. ``n`` joins only
+    when a ``sum`` is gated by ``min_count``."""
+    keys = {k for s in stats for k in _READS[s]}
+    if min_count > 0 and "sum" in stats:
+        keys.add("n")
+    return [k for k in ("W", "n", "s1", "s2", "s3", "s4") if k in keys]
 
 
 def variance_from_weighted_moments(
     ws: Column, wss: Column, wc: Column, *, ddof: int = 1
 ) -> Column:
-    """``(Σwx² − (Σwx)²/W) / (W − ddof)`` (_stats.py:24-33).
-
-    Pure arithmetic on already-aggregated moment columns — reused by the
-    global, grouped, resampled, and streaming variance paths, exactly as
-    the reference shares one helper across all three.
-    """
+    """``(Σwx² − (Σwx)²/W) / (W − ddof)`` (_stats.py:24-33)."""
     return F.try_divide(wss - F.try_divide(ws * ws, wc), wc - F.lit(float(ddof)))
 
 
-def w_var(x: Column, w: Column, *, ddof: int = 1, skipna: bool = True) -> Column:
-    """Weighted variance in moment form (frame.py:231-241)."""
-    return variance_from_weighted_moments(
-        w_sum(x, w, min_count=1),
-        w_sum_of_squares(x, w, min_count=1),
-        w_count(x, w, skipna=skipna),
-        ddof=ddof,
+def assemble(
+    stat: str,
+    m: Mapping[str, Column],
+    *,
+    ddof: int = 1,
+    min_count: int = 0,
+    min_periods: int = 1,
+) -> Column:
+    """Build one statistic from moment sums ``m`` — the dict
+    :func:`moment_sums` returns, or Columns holding those sums after a
+    merge stage (any NULL-for-empty sum merges by plain ``F.sum``).
+
+    * ``count`` = ``W`` (0.0 when empty); ``sum`` = ``s1`` with pandas
+      ``min_count`` gated on ``n``; ``mean`` = ``s1 / W``.
+    * ``var``/``std``/``sem``: the moment form with ddof subtracted from
+      ``W``; a negative variance (cancellation) gives a NULL std, and
+      ``sem = std / sqrt(W)``.
+    * ``skew``/``kurt``: population (biased) ``m3 / m2^1.5`` and
+      ``m4 / m2² − 3`` from the raw power sums — the frequency-weights
+      analog of ``scipy.stats.skew/kurtosis(bias=True)``; NULL when
+      ``W <= 0`` or ``m2 <= 0``.
+    * ``corr``/``cov`` (pair sums): guard chain ``n < min_periods``,
+      ``W`` NULL/NaN/±inf, ``W <= ddof``, and for corr non-positive
+      variance — each failure yields NULL.
+    """
+    if stat in ("corr", "cov"):
+        n, w = m["n"], m["w"]
+        denom = w - F.lit(float(ddof))
+        cov = F.try_divide(m["wxy"] - F.try_divide(m["wx"] * m["wy"], w), denom)
+        ok = (
+            (n >= F.lit(min_periods))
+            & w.isNotNull()
+            & ~F.isnan(w)
+            & (F.abs(w) != F.lit(_INF))
+            & (w > F.lit(float(ddof)))
+        )
+        if stat == "cov":
+            return F.when(ok, cov)
+        var_x = F.try_divide(m["wxx"] - F.try_divide(m["wx"] * m["wx"], w), denom)
+        var_y = F.try_divide(m["wyy"] - F.try_divide(m["wy"] * m["wy"], w), denom)
+        return F.when(
+            ok & (var_x > 0) & (var_y > 0),
+            F.try_divide(cov, F.sqrt(var_x * var_y)),
+        )
+    if stat not in MOMENT_STATS:
+        raise ValueError(f"unknown moment statistic {stat!r}")
+    if stat == "count":
+        return F.coalesce(m["W"], F.lit(0.0))
+    s1 = m["s1"]
+    if stat == "sum":
+        total = F.coalesce(s1, F.lit(0.0))
+        if min_count > 0:
+            return F.when(m["n"] >= F.lit(min_count), total)
+        return total
+    W = m["W"]
+    if stat == "mean":
+        return F.try_divide(s1, W)
+    if stat in ("var", "std", "sem"):
+        v = variance_from_weighted_moments(s1, m["s2"], W, ddof=ddof)
+        if stat == "var":
+            return v
+        sd = F.when(v >= 0, F.sqrt(v))
+        if stat == "std":
+            return sd
+        return F.when(W > 0, F.try_divide(sd, F.sqrt(W)))
+    mu = F.try_divide(s1, W)
+    s2w = F.try_divide(m["s2"], W)
+    m2 = s2w - mu * mu
+    s3w = F.try_divide(m["s3"], W)
+    ok = (W > 0) & (m2 > 0)
+    if stat == "skew":
+        m3 = s3w - F.lit(3.0) * mu * s2w + F.lit(2.0) * mu * mu * mu
+        return F.when(ok, F.try_divide(m3, m2 * F.sqrt(m2)))
+    s4w = F.try_divide(m["s4"], W)
+    m4 = (
+        s4w
+        - F.lit(4.0) * mu * s3w
+        + F.lit(6.0) * mu * mu * s2w
+        - F.lit(3.0) * mu * mu * mu * mu
+    )
+    return F.when(ok, F.try_divide(m4, m2 * m2) - F.lit(3.0))
+
+
+def w_stat(
+    stat: str,
+    x: Column,
+    w: Column,
+    *,
+    skipna: bool = True,
+    ddof: int = 1,
+    min_count: int = 0,
+) -> Column:
+    """One aggregate moment statistic of ``x``: :func:`assemble` over
+    :func:`moment_sums`. ``skipna=False`` counts every row's weight in
+    ``W``; ``ddof`` applies to var/std/sem, ``min_count`` to sum."""
+    return assemble(
+        stat, moment_sums(x, w, skipna=skipna), ddof=ddof, min_count=min_count
     )
 
 
-def w_std(x: Column, w: Column, *, ddof: int = 1, skipna: bool = True) -> Column:
-    """Weighted standard deviation = ``sqrt(var)`` (frame.py:243-251).
+def w_count(x: Column, w: Column, *, skipna: bool = True) -> Column:
+    """Weighted count ``Σ w · 1[x IS NOT NULL]`` (frame.py:189-213)."""
+    return w_stat("count", x, w, skipna=skipna)
 
-    Negative variance (catastrophic cancellation) yields NULL rather than
-    NaN so downstream hashing/joins treat it as missing.
-    """
-    v = w_var(x, w, ddof=ddof, skipna=skipna)
-    return F.when(v >= 0, F.sqrt(v))
+
+def w_std(x: Column, w: Column, *, ddof: int = 1, skipna: bool = True) -> Column:
+    """Weighted standard deviation = ``sqrt(var)`` (frame.py:243-251)."""
+    return w_stat("std", x, w, ddof=ddof, skipna=skipna)
+
+
+def w_sem(x: Column, w: Column, *, ddof: int = 1, skipna: bool = True) -> Column:
+    """Weighted standard error of the mean ``std / sqrt(W)`` (the
+    ``DataFrame.sem`` analog; unit weights reproduce pandas)."""
+    return w_stat("sem", x, w, ddof=ddof, skipna=skipna)
 
 
 def w_min(x: Column, w: Column) -> Column:
@@ -137,160 +275,6 @@ def w_max(x: Column, w: Column) -> Column:
     """Maximum observed value carrying probability mass (the q=1
     weighted quantile); same mass rule as :func:`w_min`."""
     return F.max(F.when(w.isNotNull() & (w > 0), x))
-
-
-# --- weighted higher moments (extensions beyond the reference) -------------
-
-
-def _central_moments(x: Column, w: Column, *, skipna: bool, upto: int):
-    """Weighted central moments via raw power sums: one aggregate pass.
-
-    ``Sk = Σ w·x^k`` with the kernel's left-associated product order
-    (``((x*x)*x)*w`` …) — the SQL oracles mirror the same order so the
-    IEEE results are bit-identical.
-    """
-    W = w_count(x, w, skipna=skipna)
-    s1 = F.try_divide(w_sum(x, w, min_count=1), W)  # μ
-    s2w = F.try_divide(w_sum(x * x, w, min_count=1), W)
-    mu = s1
-    m2 = s2w - mu * mu
-    out = {"W": W, "mu": mu, "m2": m2, "s2w": s2w}
-    if upto >= 3:
-        s3w = F.try_divide(w_sum(x * x * x, w, min_count=1), W)
-        out["s3w"] = s3w
-        out["m3"] = s3w - F.lit(3.0) * mu * s2w + F.lit(2.0) * mu * mu * mu
-    if upto >= 4:
-        s4w = F.try_divide(w_sum(x * x * x * x, w, min_count=1), W)
-        out["m4"] = (
-            s4w
-            - F.lit(4.0) * mu * out["s3w"]
-            + F.lit(6.0) * mu * mu * s2w
-            - F.lit(3.0) * mu * mu * mu * mu
-        )
-    return out
-
-
-def w_sem(
-    x: Column, w: Column, *, ddof: int = 1, skipna: bool = True
-) -> Column:
-    """Weighted standard error of the mean: ``std / sqrt(W)`` with the
-    weighted count ``W`` in the role pandas' ``n`` plays
-    (``DataFrame.sem`` analog under the frequency-weights convention;
-    unit weights reproduce pandas exactly). NULL when the std is (W ≤
-    ddof, non-positive variance)."""
-    sd = w_std(x, w, ddof=ddof, skipna=skipna)
-    W = w_count(x, w, skipna=skipna)
-    return F.when(W > 0, F.try_divide(sd, F.sqrt(W)))
-
-
-def w_skew(x: Column, w: Column, *, skipna: bool = True) -> Column:
-    """Weighted skewness ``m3 / m2^1.5`` (population / biased definition,
-    the frequency-weights analog of ``scipy.stats.skew(bias=True)``).
-    Extension beyond the reference; NULL when ``W <= 0`` or ``m2 <= 0``."""
-    m = _central_moments(x, w, skipna=skipna, upto=3)
-    ok = (m["W"] > 0) & (m["m2"] > 0)
-    return F.when(ok, F.try_divide(m["m3"], m["m2"] * F.sqrt(m["m2"])))
-
-
-def w_kurt(x: Column, w: Column, *, skipna: bool = True) -> Column:
-    """Weighted excess kurtosis ``m4 / m2² − 3`` (population / biased
-    definition). Extension beyond the reference; NULL when ``W <= 0`` or
-    ``m2 <= 0``."""
-    m = _central_moments(x, w, skipna=skipna, upto=4)
-    ok = (m["W"] > 0) & (m["m2"] > 0)
-    return F.when(
-        ok, F.try_divide(m["m4"], m["m2"] * m["m2"]) - F.lit(3.0)
-    )
-
-
-# --- weighted Pearson correlation -----------------------------------------
-
-#: Names of the per-pair aggregate moments, in the order produced by
-#: :func:`corr_moment_exprs` and consumed by :func:`corr_from_moments`.
-CORR_MOMENTS = ("n", "w", "wx", "wy", "wxy", "wxx", "wyy")
-
-
-def corr_moment_exprs(x: Column, y: Column, w: Column) -> dict[str, Column]:
-    """The seven aggregate moments of one correlation pair.
-
-    All moments are computed under the pair's joint validity mask
-    ``x NOT NULL AND y NOT NULL AND w NOT NULL`` (_stats.py:44), so each
-    pair in a matrix is "pairwise complete" exactly like the reference.
-    """
-    valid = x.isNotNull() & y.isNotNull() & w.isNotNull()
-    wv = F.when(valid, w)
-    return {
-        "n": F.count(F.when(valid, F.lit(1))),
-        "w": F.sum(wv),
-        "wx": F.sum(wv * x),
-        "wy": F.sum(wv * y),
-        "wxy": F.sum(wv * x * y),
-        "wxx": F.sum(wv * x * x),
-        "wyy": F.sum(wv * y * y),
-    }
-
-
-def corr_from_moments(
-    n: Column,
-    w: Column,
-    wx: Column,
-    wy: Column,
-    wxy: Column,
-    wxx: Column,
-    wyy: Column,
-    *,
-    ddof: int = 1,
-    min_periods: int = 1,
-) -> Column:
-    """Assemble weighted Pearson r from aggregated moments (_stats.py:36-73).
-
-    Guard chain (each failure → NULL, reference returns NaN):
-    ``n < min_periods``; ``W`` NULL/NaN/±inf; ``W <= ddof``;
-    ``var_x <= 0`` or ``var_y <= 0``.
-    """
-    denom = w - F.lit(float(ddof))
-    cov = F.try_divide(wxy - F.try_divide(wx * wy, w), denom)
-    var_x = F.try_divide(wxx - F.try_divide(wx * wx, w), denom)
-    var_y = F.try_divide(wyy - F.try_divide(wy * wy, w), denom)
-    ok = (
-        (n >= F.lit(min_periods))
-        & w.isNotNull()
-        & ~F.isnan(w)
-        & (F.abs(w) != F.lit(_INF))
-        & (w > F.lit(float(ddof)))
-        & (var_x > 0)
-        & (var_y > 0)
-    )
-    return F.when(ok, F.try_divide(cov, F.sqrt(var_x * var_y)))
-
-
-def cov_from_moments(
-    n: Column,
-    w: Column,
-    wx: Column,
-    wy: Column,
-    wxy: Column,
-    *,
-    ddof: int = 1,
-    min_periods: int = 1,
-) -> Column:
-    """Weighted covariance from aggregated moments:
-    ``(Σwxy − ΣwxΣwy/W) / (W − ddof)``, frequency-weights ddof as in
-    :func:`variance_from_weighted_moments`. Extension beyond the
-    reference (it has corr only, _stats.py:36-73); shares the corr guard
-    chain minus the positive-variance checks, which only protect corr's
-    denominator.
-    """
-    denom = w - F.lit(float(ddof))
-    cov = F.try_divide(wxy - F.try_divide(wx * wy, w), denom)
-    ok = (
-        (n >= F.lit(min_periods))
-        & w.isNotNull()
-        & ~F.isnan(w)
-        & (F.abs(w) != F.lit(_INF))
-        & (w > F.lit(float(ddof)))
-    )
-    return F.when(ok, cov)
 
 
 def w_gmean(x: Column, w: Column) -> Column:

@@ -1,37 +1,38 @@
-"""Weighted Pearson correlation operators.
+"""Weighted Pearson correlation and covariance operators.
 
-Three surfaces, mirroring the reference:
+Every corr/cov here is the same two steps: :func:`_stats.moment_sums`
+builds a pair's seven moment sums under its joint validity mask, and
+:func:`_stats.assemble` turns them into corr or cov. Two builders shape
+the output:
 
-* :func:`frame_corr` — pairwise matrix over a table's numeric columns
-  (reference ``frame.py:253-285``), long form ``(col_x, col_y, corr)``.
-* :func:`grouped_corr` — per-group matrices (reference ``frame.py:630-660``)
-  as ``(keys…, col_x, col_y, corr)``. The reference iterates groups on the
-  driver; here it is ONE distributed ``groupBy().agg()`` over all pair
-  moments followed by a JVM-side ``inline`` unpivot — group cardinality is
-  unbounded and there is exactly one shuffle.
-* :func:`aligned_corr` — correlation against another table's column,
-  aligned by an explicit inner join (reference ``series.py:222-247``,
-  ``435-468``: pandas label alignment incl. duplicate-label cross-pairing
-  → join fan-out).
+* :func:`pair_matrix` — long-form matrices ``(keys…, col_x, col_y,
+  corr/cov…)`` over a table's numeric columns, globally (reference
+  ``frame.py:253-285``) or per group (reference ``frame.py:630-660``).
+  The reference iterates groups on the driver; here it is ONE
+  ``groupBy().agg()`` over all pair sums followed by a JVM-side
+  ``inline`` unpivot — group cardinality is unbounded and there is
+  exactly one shuffle (none without keys). Only the i<=j triangle's
+  sums are computed (k(k+1)/2 pairs, as reference frame.py:272-283);
+  the mirror cell reuses the computed value, and Catalyst shares
+  duplicated sums across pairs within the one aggregate.
+* :func:`_aligned` — one column against another table's column, aligned
+  by an explicit inner join (reference ``series.py:222-247``,
+  ``435-468``: pandas label alignment incl. duplicate-label
+  cross-pairing → join fan-out), behind :func:`aligned_corr`,
+  :func:`aligned_cov` and :func:`aligned_corr_cov`.
 
-Only the i<=j triangle's moments are computed (k(k+1)/2 pairs, reference
-frame.py:272-283 does the same); the mirror is emitted by reusing the
-computed value. All moments for all pairs land in a single aggregate, so
-Catalyst's common-subexpression elimination shares duplicated sums.
+The rank (Spearman) and lag (autocorrelation) operators feed ranks or
+lagged values through the same two steps.
 """
 
 from __future__ import annotations
 
 from typing import TYPE_CHECKING, Optional, Sequence, Union
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pandas_weights_spark._stats import (
-    corr_from_moments,
-    corr_moment_exprs,
-    cov_from_moments,
-)
+from pandas_weights_spark._stats import assemble, moment_sums
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -39,14 +40,11 @@ if TYPE_CHECKING:
     from pandas_weights_spark.frame import WeightedDataFrame
 
 __all__ = [
-    "frame_corr",
-    "grouped_corr",
+    "pair_matrix",
+    "corr_pair",
     "aligned_corr",
     "aligned_cov",
     "aligned_corr_cov",
-    "frame_cov",
-    "grouped_cov",
-    "frame_corr_cov",
     "spearman_corr",
     "spearman_matrix",
     "weighted_autocorr",
@@ -68,90 +66,62 @@ def _check_method(method: str) -> None:
         )
 
 
-def _pair_moment_exprs(
+def pair_matrix(
     wdf: "WeightedDataFrame",
-    cols: Sequence[str],
-    names: Optional[Sequence[str]] = None,
-) -> list[Column]:
-    """Aggregate expressions for every i<=j pair's moments (all seven by
-    default; cov passes the five it needs so the extra sums never run)."""
-    w = wdf.weights
-    exprs: list[Column] = []
-    for i, cx in enumerate(cols):
-        x = wdf._value(cx)
-        for j in range(i, len(cols)):
-            cy = cols[j]
-            y = wdf._value(cy)
-            for name, expr in corr_moment_exprs(x, y, w).items():
-                if names is not None and name not in names:
-                    continue
-                exprs.append(expr.alias(f"__m_{i}_{j}_{name}"))
-    return exprs
-
-
-_COV_MOMENTS = ("n", "w", "wx", "wy", "wxy")
-
-
-def _pair_corr(i: int, j: int, ddof: int, min_periods: int) -> Column:
-    m = lambda name: F.col(f"__m_{i}_{j}_{name}")  # noqa: E731
-    return corr_from_moments(
-        m("n"), m("w"), m("wx"), m("wy"), m("wxy"), m("wxx"), m("wyy"),
-        ddof=ddof, min_periods=min_periods,
-    )
-
-
-def _pair_cov(i: int, j: int, swap: bool, ddof: int, min_periods: int) -> Column:
-    m = lambda name: F.col(f"__m_{i}_{j}_{name}")  # noqa: E731
-    # cov(x, y) is symmetric, but the mirror entry's (wx, wy) swap keeps
-    # the formula's float evaluation identical either way
-    wx, wy = (m("wy"), m("wx")) if swap else (m("wx"), m("wy"))
-    return cov_from_moments(
-        m("n"), m("w"), wx, wy, m("wxy"), ddof=ddof, min_periods=min_periods
-    )
-
-
-def _pair_structs(
-    cols: Sequence[str],
-    ddof: int,
-    min_periods: int,
-    stat: str = "corr",
-) -> list[Column]:
-    """One struct per *ordered* pair; the j<i mirror reuses the i<=j moments
-    (symmetry exploitation as in reference frame.py:272-283)."""
-    structs = []
-    for i, cx in enumerate(cols):
-        for j, cy in enumerate(cols):
-            lo, hi = (i, j) if i <= j else (j, i)
-            if stat == "corr":
-                val = _pair_corr(lo, hi, ddof, min_periods)
-            else:
-                val = _pair_cov(lo, hi, j < i, ddof, min_periods)
-            structs.append(
-                F.struct(
-                    F.lit(cx).alias("col_x"),
-                    F.lit(cy).alias("col_y"),
-                    val.alias(stat),
-                )
-            )
-    return structs
-
-
-def frame_corr(
-    wdf: "WeightedDataFrame",
-    method: str = "pearson",
+    keys: Sequence[str],
+    stats: Sequence[str],
+    *,
+    cols: Optional[Sequence[str]] = None,
+    dropna: bool = True,
+    sort: bool = False,
     min_periods: int = 1,
     ddof: int = 1,
-    subset: Optional[Sequence[str]] = None,
 ) -> DataFrame:
-    """Weighted Pearson matrix, long form. One aggregate pass."""
-    _check_method(method)
-    cols = list(subset) if subset is not None else wdf.numeric_columns()
+    """Weighted ``stats`` (``"corr"`` and/or ``"cov"``) matrices in long
+    form ``(keys…, col_x, col_y, *stats)``, one aggregate pass.
+
+    ``cols`` defaults to the numeric columns outside ``keys``;
+    ``dropna`` drops NULL-key rows first (pandas groupby default);
+    ``sort`` orders the output by ``(keys…, col_x, col_y)``. Asking for
+    cov alone aggregates only the five sums it reads.
+    """
+    keys = list(keys)
+    if cols is None:
+        cols = [c for c in wdf.numeric_columns() if c not in keys]
     if not cols:
         raise ValueError("no numeric columns to correlate")
-    moments = wdf.df.agg(*_pair_moment_exprs(wdf, cols))
-    return moments.select(
-        F.inline(F.array(*_pair_structs(cols, ddof, min_periods)))
+    df = wdf.df
+    if dropna:
+        for k in keys:
+            df = df.where(F.col(k).isNotNull())
+    w = wdf.weights
+    cells = {}
+    for i, cx in enumerate(cols):
+        for j in range(i, len(cols)):
+            m = moment_sums(wdf._value(cx), w, y=wdf._value(cols[j]))
+            cells[i, j] = [
+                assemble(s, m, ddof=ddof, min_periods=min_periods).alias(s)
+                for s in stats
+            ]
+    pairs = F.array(
+        *[
+            F.struct(
+                F.lit(cx).alias("col_x"),
+                F.lit(cy).alias("col_y"),
+                *cells[min(i, j), max(i, j)],
+            )
+            for i, cx in enumerate(cols)
+            for j, cy in enumerate(cols)
+        ]
     )
+    out = (
+        df.groupBy(*[F.col(k) for k in keys])
+        .agg(pairs.alias("__pairs__"))
+        .select(*keys, F.inline("__pairs__"))
+    )
+    if sort:
+        out = out.orderBy(*keys, "col_x", "col_y")
+    return out
 
 
 def corr_pair(
@@ -166,134 +136,60 @@ def corr_pair(
     path's ``(x_col, y_col)`` cell without the matrix: 7 aggregate
     expressions instead of ``7·k(k+1)/2`` (measured ~3× less per-row
     aggregate work than a filtered 2-column matrix at sf0.1). The
-    value is BIT-identical to ``frame_corr``'s corresponding cell:
-    same pairwise-complete moment expressions
-    (:func:`corr_moment_exprs` over the frame's nanvl'd values), same
-    :func:`corr_from_moments` kernel. Output: one row ``(corr)``.
+    value is BIT-identical to :func:`pair_matrix`'s corresponding cell
+    (same moment sums over the frame's nanvl'd values, same assembler).
+    Output: one row ``(corr)``.
     """
     _check_method(method)
-    w = wdf.weights
-    x = wdf._value(x_col)
-    y = wdf._value(y_col)
-    moments = [
-        expr.alias(f"__m_0_1_{name}")
-        for name, expr in corr_moment_exprs(x, y, w).items()
-    ]
-    return wdf.df.agg(*moments).select(
-        _pair_corr(0, 1, ddof, min_periods).alias("corr")
+    m = moment_sums(wdf._value(x_col), wdf.weights, y=wdf._value(y_col))
+    return wdf.df.agg(
+        assemble("corr", m, ddof=ddof, min_periods=min_periods).alias("corr")
     )
 
 
-def grouped_corr(
-    wdf: "WeightedDataFrame",
-    keys: Sequence[str],
-    dropna: bool = True,
-    sort: bool = False,
-    method: str = "pearson",
-    min_periods: int = 1,
-    ddof: int = 1,
+def _aligned(
+    left: DataFrame,
+    x_col: str,
+    other: DataFrame,
+    y_col: str,
+    on: Union[str, Sequence[str]],
+    by: Optional[Sequence[str]],
+    min_periods: Optional[int],
+    ddof: int,
+    stats: Sequence[str],
 ) -> DataFrame:
-    """Per-group weighted Pearson matrices, long form, single shuffle."""
-    _check_method(method)
-    cols = [c for c in wdf.numeric_columns() if c not in keys]
-    if not cols:
-        raise ValueError("no numeric columns to correlate")
-    df = wdf.df
-    if dropna:
-        for k in keys:
-            df = df.where(F.col(k).isNotNull())
-    moments = df.groupBy(*[F.col(k) for k in keys]).agg(
-        *_pair_moment_exprs(wdf, cols)
-    )
-    out = moments.select(
-        *keys, F.inline(F.array(*_pair_structs(cols, ddof, min_periods)))
-    )
-    if sort:
-        out = out.orderBy(*keys, "col_x", "col_y")
-    return out
+    """``stats`` of ``left[x_col]`` (weights already bound on ``left``
+    under ``WEIGHT_COL``) against ``other[y_col]``, aligned by inner join
+    on ``on`` — the engine's replacement for pandas label alignment
+    (series.py:238-239). Duplicate join keys fan out like duplicate
+    index labels (README.md:84-135). ``by`` adds per-group output
+    ``(by…, *stats)`` ordered by ``by`` (series.py:435-468); default
+    ``min_periods`` is 1 (series.py:246). One join, one aggregate.
 
-
-def frame_cov(
-    wdf: "WeightedDataFrame",
-    min_periods: int = 1,
-    ddof: int = 1,
-    subset: Optional[Sequence[str]] = None,
-) -> DataFrame:
-    """Weighted covariance matrix, long form ``(col_x, col_y, cov)``.
-
-    Same single-aggregate-pass plan as :func:`frame_corr` (the pair
-    moment set is a subset of corr's); extension beyond the reference,
-    which implements corr only.
+    At scale: if ``other`` is small it is broadcast automatically by AQE;
+    a skewed ``on`` key benefits from AQE skew handling.
     """
-    cols = list(subset) if subset is not None else wdf.numeric_columns()
-    if not cols:
-        raise ValueError("no numeric columns to covary")
-    moments = wdf.df.agg(*_pair_moment_exprs(wdf, cols, names=_COV_MOMENTS))
-    return moments.select(
-        F.inline(F.array(*_pair_structs(cols, ddof, min_periods, stat="cov")))
+    from pandas_weights_spark.frame import WEIGHT_COL
+
+    min_periods = 1 if min_periods is None else min_periods
+    on_cols = [on] if isinstance(on, str) else list(on)
+    by = list(by) if by else []
+
+    left_sel = left.select(
+        *dict.fromkeys(on_cols + by), F.col(x_col).alias("__pw_x__"), F.col(WEIGHT_COL)
     )
+    right_sel = other.select(*on_cols, F.col(y_col).alias("__pw_other__"))
+    joined = left_sel.join(right_sel, on=on_cols, how="inner")
 
-
-def grouped_cov(
-    wdf: "WeightedDataFrame",
-    keys: Sequence[str],
-    dropna: bool = True,
-    sort: bool = False,
-    min_periods: int = 1,
-    ddof: int = 1,
-) -> DataFrame:
-    """Per-group weighted covariance matrices, long form, single shuffle."""
-    cols = [c for c in wdf.numeric_columns() if c not in keys]
-    if not cols:
-        raise ValueError("no numeric columns to covary")
-    df = wdf.df
-    if dropna:
-        for k in keys:
-            df = df.where(F.col(k).isNotNull())
-    moments = df.groupBy(*[F.col(k) for k in keys]).agg(
-        *_pair_moment_exprs(wdf, cols, names=_COV_MOMENTS)
+    m = moment_sums(
+        F.col("__pw_x__").cast("double"),
+        F.col(WEIGHT_COL),
+        y=F.col("__pw_other__").cast("double"),
     )
-    out = moments.select(
-        *keys,
-        F.inline(F.array(*_pair_structs(cols, ddof, min_periods, stat="cov"))),
+    out = joined.groupBy(*by).agg(
+        *[assemble(s, m, ddof=ddof, min_periods=min_periods).alias(s) for s in stats]
     )
-    if sort:
-        out = out.orderBy(*keys, "col_x", "col_y")
-    return out
-
-
-def frame_corr_cov(
-    wdf: "WeightedDataFrame",
-    min_periods: int = 1,
-    ddof: int = 1,
-    subset: Optional[Sequence[str]] = None,
-) -> DataFrame:
-    """Correlation AND covariance matrices fused into one aggregate pass,
-    long form ``(col_x, col_y, corr, cov)``.
-
-    The cov moments are a subset of corr's, so computing both stats from
-    one moment aggregate is free relative to :func:`frame_corr` alone —
-    half the scans of running :func:`frame_corr` + :func:`frame_cov`
-    separately and joining. Values are bit-identical to the separate
-    paths (same moment expressions, same ``*_from_moments`` kernels).
-    """
-    cols = list(subset) if subset is not None else wdf.numeric_columns()
-    if not cols:
-        raise ValueError("no numeric columns to correlate")
-    moments = wdf.df.agg(*_pair_moment_exprs(wdf, cols))
-    structs = []
-    for i, cx in enumerate(cols):
-        for j, cy in enumerate(cols):
-            lo, hi = (i, j) if i <= j else (j, i)
-            structs.append(
-                F.struct(
-                    F.lit(cx).alias("col_x"),
-                    F.lit(cy).alias("col_y"),
-                    _pair_corr(lo, hi, ddof, min_periods).alias("corr"),
-                    _pair_cov(lo, hi, j < i, ddof, min_periods).alias("cov"),
-                )
-            )
-    return moments.select(F.inline(F.array(*structs)))
+    return out.orderBy(*by) if by else out
 
 
 def aligned_corr(
@@ -307,48 +203,10 @@ def aligned_corr(
     min_periods: Optional[int] = None,
     ddof: int = 1,
 ) -> DataFrame:
-    """Correlate ``left[x_col]`` (weights already bound on ``left`` under
-    ``WEIGHT_COL``) against ``other[y_col]``, aligned by inner join on
-    ``on`` — the engine's replacement for pandas label alignment
-    (series.py:238-239). Duplicate join keys fan out like duplicate index
-    labels (README.md:84-135). ``by`` adds per-group output
-    (series.py:435-468); default ``min_periods`` is 1 (series.py:246).
-
-    At scale: if ``other`` is small it is broadcast automatically by AQE;
-    a skewed ``on`` key benefits from AQE skew handling.
-    """
-    from pandas_weights_spark.frame import WEIGHT_COL
-
+    """Aligned weighted Pearson correlation, output ``(by…, corr)`` —
+    see :func:`_aligned`."""
     _check_method(method)
-    min_periods = 1 if min_periods is None else min_periods
-    on_cols = [on] if isinstance(on, str) else list(on)
-    by = list(by) if by else []
-
-    y_alias = "__pw_other__"
-    left_sel = left.select(
-        *dict.fromkeys(on_cols + by), F.col(x_col).alias("__pw_x__"), F.col(WEIGHT_COL)
-    )
-    right_sel = other.select(*on_cols, F.col(y_col).alias(y_alias))
-    joined = left_sel.join(right_sel, on=on_cols, how="inner")
-
-    x = F.col("__pw_x__").cast("double")
-    y = F.col(y_alias).cast("double")
-    w = F.col(WEIGHT_COL)
-    moments = {
-        name: expr.alias(f"__m_{name}")
-        for name, expr in corr_moment_exprs(x, y, w).items()
-    }
-    m = lambda name: F.col(f"__m_{name}")  # noqa: E731
-    corr = corr_from_moments(
-        m("n"), m("w"), m("wx"), m("wy"), m("wxy"), m("wxx"), m("wyy"),
-        ddof=ddof, min_periods=min_periods,
-    ).alias("corr")
-
-    if by:
-        return (
-            joined.groupBy(*by).agg(*moments.values()).select(*by, corr).orderBy(*by)
-        )
-    return joined.agg(*moments.values()).select(corr)
+    return _aligned(left, x_col, other, y_col, on, by, min_periods, ddof, ("corr",))
 
 
 def aligned_cov(
@@ -361,43 +219,10 @@ def aligned_cov(
     min_periods: Optional[int] = None,
     ddof: int = 1,
 ) -> DataFrame:
-    """Weighted covariance of ``left[x_col]`` against ``other[y_col]``
-    aligned by inner join on ``on`` — the cov analog of
-    :func:`aligned_corr` (extension: the reference aligns corr only).
-    Same join fan-out semantics; only the five cov moments are computed.
-    """
-    from pandas_weights_spark.frame import WEIGHT_COL
-
-    min_periods = 1 if min_periods is None else min_periods
-    on_cols = [on] if isinstance(on, str) else list(on)
-    by = list(by) if by else []
-
-    y_alias = "__pw_other__"
-    left_sel = left.select(
-        *dict.fromkeys(on_cols + by), F.col(x_col).alias("__pw_x__"), F.col(WEIGHT_COL)
-    )
-    right_sel = other.select(*on_cols, F.col(y_col).alias(y_alias))
-    joined = left_sel.join(right_sel, on=on_cols, how="inner")
-
-    x = F.col("__pw_x__").cast("double")
-    y = F.col(y_alias).cast("double")
-    w = F.col(WEIGHT_COL)
-    moments = {
-        name: expr.alias(f"__m_{name}")
-        for name, expr in corr_moment_exprs(x, y, w).items()
-        if name in _COV_MOMENTS
-    }
-    m = lambda name: F.col(f"__m_{name}")  # noqa: E731
-    cov = cov_from_moments(
-        m("n"), m("w"), m("wx"), m("wy"), m("wxy"),
-        ddof=ddof, min_periods=min_periods,
-    ).alias("cov")
-
-    if by:
-        return (
-            joined.groupBy(*by).agg(*moments.values()).select(*by, cov).orderBy(*by)
-        )
-    return joined.agg(*moments.values()).select(cov)
+    """Aligned weighted covariance, output ``(by…, cov)`` (extension:
+    the reference aligns corr only) — see :func:`_aligned`; only the
+    five sums cov reads are aggregated."""
+    return _aligned(left, x_col, other, y_col, on, by, min_periods, ddof, ("cov",))
 
 
 def aligned_corr_cov(
@@ -410,49 +235,72 @@ def aligned_corr_cov(
     min_periods: Optional[int] = None,
     ddof: int = 1,
 ) -> DataFrame:
-    """Aligned correlation AND covariance in one join + one aggregate —
-    the fused form of :func:`aligned_corr` / :func:`aligned_cov` (which
-    each re-run the alignment join). Output ``(by…, corr, cov)``; values
-    bit-identical to the separate paths (same moments, same kernels).
-    """
-    from pandas_weights_spark.frame import WEIGHT_COL
-
-    min_periods = 1 if min_periods is None else min_periods
-    on_cols = [on] if isinstance(on, str) else list(on)
-    by = list(by) if by else []
-
-    y_alias = "__pw_other__"
-    left_sel = left.select(
-        *dict.fromkeys(on_cols + by), F.col(x_col).alias("__pw_x__"), F.col(WEIGHT_COL)
+    """Aligned correlation AND covariance in one join + one aggregate,
+    output ``(by…, corr, cov)``; values bit-identical to
+    :func:`aligned_corr` / :func:`aligned_cov` (which each re-run the
+    alignment join)."""
+    return _aligned(
+        left, x_col, other, y_col, on, by, min_periods, ddof, ("corr", "cov")
     )
-    right_sel = other.select(*on_cols, F.col(y_col).alias(y_alias))
-    joined = left_sel.join(right_sel, on=on_cols, how="inner")
 
-    x = F.col("__pw_x__").cast("double")
-    y = F.col(y_alias).cast("double")
-    w = F.col(WEIGHT_COL)
-    moments = {
-        name: expr.alias(f"__m_{name}")
-        for name, expr in corr_moment_exprs(x, y, w).items()
-    }
-    m = lambda name: F.col(f"__m_{name}")  # noqa: E731
-    corr = corr_from_moments(
-        m("n"), m("w"), m("wx"), m("wy"), m("wxy"), m("wxx"), m("wyy"),
-        ddof=ddof, min_periods=min_periods,
-    ).alias("corr")
-    cov = cov_from_moments(
-        m("n"), m("w"), m("wx"), m("wy"), m("wxy"),
-        ddof=ddof, min_periods=min_periods,
-    ).alias("cov")
 
-    if by:
-        return (
-            joined.groupBy(*by)
-            .agg(*moments.values())
-            .select(*by, corr, cov)
-            .orderBy(*by)
-        )
-    return joined.agg(*moments.values()).select(corr, cov)
+def _band(c: Column, bounds, bands: int) -> Column:
+    """Linear band index of ``c`` over ``bounds = (lo, hi)``, clamped to
+    ``[0, bands)``; band 0 when the bounds are missing or degenerate.
+    Ranks are band-assignment-invariant (equal values always share a
+    band), so bound quality affects only load balance, never values."""
+    if bounds is None or not (bounds[1] > bounds[0]):
+        return F.lit(0)
+    lo, hi = float(bounds[0]), float(bounds[1])
+    return F.greatest(
+        F.lit(0),
+        F.least(
+            F.lit(bands - 1),
+            F.floor(
+                (c.cast("double") - F.lit(lo)) / F.lit(hi - lo)
+                * F.lit(float(bands))
+            ).cast("int"),
+        ),
+    )
+
+
+def _offmap(entries: Column) -> Column:
+    """Fold a (sorted) ``(band, n)`` list into an exclusive-running-sum
+    ``map<band, offset>`` — ≤ bands elements, all expression-side."""
+    zero = F.struct(
+        F.lit(0).cast("long").alias("s"),
+        F.map_from_arrays(
+            F.array().cast("array<int>"), F.array().cast("array<long>")
+        ).alias("m"),
+    )
+    return F.aggregate(
+        F.sort_array(entries),
+        zero,
+        lambda acc, e: F.struct(
+            (acc["s"] + e["n"]).alias("s"),
+            F.map_concat(acc["m"], F.create_map(e["band"], acc["s"])).alias("m"),
+        ),
+        lambda acc: acc["m"],
+    )
+
+
+def _rank(
+    val_col: str, band_col: str, off_col: str, keys: Sequence[Column] = ()
+) -> Column:
+    """Average-tie rank from two banded cumulative-count windows: a
+    tie-inclusive RANGE count within ``(keys, band)`` plus the band's
+    offset, minus half the ties — no distinct-value aggregate."""
+    win = Window.partitionBy(*keys, F.col(band_col)).orderBy(F.col(val_col))
+    cum = F.count(F.lit(1)).over(
+        win.rangeBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    tie = F.count(F.lit(1)).over(
+        win.rangeBetween(Window.currentRow, Window.currentRow)
+    )
+    return (
+        (cum + F.col(off_col)).cast("double")
+        - (tie - F.lit(1)).cast("double") / F.lit(2.0)
+    )
 
 
 def spearman_corr(
@@ -470,7 +318,7 @@ def spearman_corr(
     Semantics: average-tie ranks over the pairwise-complete mask
     (x, y, w all non-NULL — exactly the rows pandas
     ``.corr(method="spearman")`` ranks), then the weighted Pearson
-    kernel (:func:`~pandas_weights_spark._stats.corr_from_moments`) on
+    kernel (:func:`~pandas_weights_spark._stats.assemble`) on
     the ranks. At unit weights this reproduces pandas spearman.
 
     Plan: per-row average-tie ranks come straight from TWO banded
@@ -512,8 +360,6 @@ def spearman_corr(
     (keys, bandx, bandy) count would materialize up to keys·bands²
     groups (a shuffle as fat as the data) only to be re-marginalized.
     """
-    from pyspark.sql import Window
-
     from pandas_weights_spark.frame import WEIGHT_COL
     from pandas_weights_spark.groupby import _join_group_stats
 
@@ -551,23 +397,10 @@ def spearman_corr(
             return v.groupBy(*keys).agg(null_corr).select(*keys, "corr")
         return v.sparkSession.range(1).select(null_corr)
 
-    def _lit_band(col: str, lo: float, hi: float) -> Column:
-        c = F.col(col).cast("double")
-        if not (hi > lo):
-            return F.lit(0)
-        return F.greatest(
-            F.lit(0),
-            F.least(
-                F.lit(bands - 1),
-                F.floor((c - F.lit(float(lo))) / F.lit(float(hi - lo))
-                        * F.lit(float(bands))).cast("int"),
-            ),
-        )
-
     j = v.select(
         *keys, "__x__", "__y__", WEIGHT_COL,
-        _lit_band("__x__", *bounds["bx"]).alias("__bandx__"),
-        _lit_band("__y__", *bounds["by"]).alias("__bandy__"),
+        _band(F.col("__x__"), bounds["bx"], bands).alias("__bandx__"),
+        _band(F.col("__y__"), bounds["by"], bands).alias("__bandy__"),
     )
     gsets = j.groupingSets(
         [[*keys, "__bandx__"], [*keys, "__bandy__"]],
@@ -583,25 +416,6 @@ def spearman_corr(
     # branches (r4 first cut) let Catalyst push the grouping-flag
     # filter into each branch's Expand, defeating exchange reuse and
     # re-scanning the table per column.
-    def _offmap(entries: Column) -> Column:
-        zero = F.struct(
-            F.lit(0).cast("long").alias("s"),
-            F.map_from_arrays(
-                F.array().cast("array<int>"), F.array().cast("array<long>")
-            ).alias("m"),
-        )
-        return F.aggregate(
-            F.sort_array(entries),
-            zero,
-            lambda acc, e: F.struct(
-                (acc["s"] + e["n"]).alias("s"),
-                F.map_concat(
-                    acc["m"], F.create_map(e["band"], acc["s"])
-                ).alias("m"),
-            ),
-            lambda acc: acc["m"],
-        )
-
     def _entries(band_col: str, other_gone: int) -> Column:
         # when() without otherwise -> NULL for the other marginal's
         # rows, and collect_list drops NULLs
@@ -628,45 +442,16 @@ def spearman_corr(
         F.element_at("__my__", F.col("__bandy__")).alias("__off__bandy__"),
     )
 
-    def _rank(val_col: str, band_col: str) -> Column:
-        cum_win = (
-            Window.partitionBy(*kc, F.col(band_col))
-            .orderBy(F.col(val_col))
-            .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        tie_win = (
-            Window.partitionBy(*kc, F.col(band_col))
-            .orderBy(F.col(val_col))
-            .rangeBetween(Window.currentRow, Window.currentRow)
-        )
-        cum = F.count(F.lit(1)).over(cum_win)
-        tie = F.count(F.lit(1)).over(tie_win)
-        return (
-            (cum + F.col(f"__off{band_col}")).cast("double")
-            - (tie - F.lit(1)).cast("double") / F.lit(2.0)
-        )
-
     j = j.select(
         *keys,
         WEIGHT_COL,
-        _rank("__x__", "__bandx__").alias("__rx__"),
-        _rank("__y__", "__bandy__").alias("__ry__"),
+        _rank("__x__", "__bandx__", "__off__bandx__", kc).alias("__rx__"),
+        _rank("__y__", "__bandy__", "__off__bandy__", kc).alias("__ry__"),
     )
-
-    moments = {
-        name: expr.alias(f"__m_{name}")
-        for name, expr in corr_moment_exprs(
-            F.col("__rx__"), F.col("__ry__"), F.col(WEIGHT_COL)
-        ).items()
-    }
-    m = lambda name: F.col(f"__m_{name}")  # noqa: E731
-    corr = corr_from_moments(
-        m("n"), m("w"), m("wx"), m("wy"), m("wxy"), m("wxx"), m("wyy"),
-        ddof=ddof, min_periods=min_periods,
-    ).alias("corr")
-    if keys:
-        return j.groupBy(*keys).agg(*moments.values()).select(*keys, corr)
-    return j.agg(*moments.values()).select(corr)
+    m = moment_sums(F.col("__rx__"), F.col(WEIGHT_COL), y=F.col("__ry__"))
+    return j.groupBy(*kc).agg(
+        assemble("corr", m, ddof=ddof, min_periods=min_periods).alias("corr")
+    )
 
 
 def spearman_matrix(
@@ -696,8 +481,8 @@ def spearman_matrix(
     column's band counts → one k-map offset aggregate broadcast back →
     k banded rank windows (each partitioned by its own (band) — ranking
     parallelism k × bands, never a whole-table sort) → ONE moment
-    aggregate for all k(k+1)/2 pairs (the same fused shape as
-    :func:`frame_corr`).
+    aggregate for all k(k+1)/2 pairs (:func:`pair_matrix` over the
+    ranks).
 
     ``band_bounds`` (r6, ADVICE r5 — the same escape hatch
     :func:`spearman_corr` grew in r5): a ``{col: (lo, hi)}`` mapping
@@ -706,7 +491,7 @@ def spearman_matrix(
     band-assignment-invariant either way; only load balance varies).
     Columns absent from the mapping still probe.
     """
-    from pandas_weights_spark.frame import WEIGHT_COL
+    from pandas_weights_spark.frame import WEIGHT_COL, WeightedDataFrame
 
     cols = list(subset) if subset is not None else wdf.numeric_columns()
     if not cols:
@@ -744,24 +529,12 @@ def spearman_matrix(
             b = probe[f"b{i}"]
             bounds.append(None if b is None else (float(b[0]), float(b[1])))
 
-    def _lit_band(i: int) -> Column:
-        b = bounds[i]
-        c = F.col(f"__c{i}__").cast("double")
-        if b is None or not (b[1] > b[0]):
-            return F.lit(0)
-        lo, hi = b
-        return F.greatest(
-            F.lit(0),
-            F.least(
-                F.lit(bands - 1),
-                F.floor(
-                    (c - F.lit(lo)) / F.lit(hi - lo) * F.lit(float(bands))
-                ).cast("int"),
-            ),
-        )
-
     j = v.select(
-        "*", *[_lit_band(i).alias(f"__band{i}__") for i in range(k)]
+        "*",
+        *[
+            _band(F.col(f"__c{i}__"), bounds[i], bands).alias(f"__band{i}__")
+            for i in range(k)
+        ],
     )
     band_cols = [f"__band{i}__" for i in range(k)]
     gsets = j.groupingSets(
@@ -770,25 +543,6 @@ def spearman_matrix(
         F.count(F.lit(1)).alias("__bt__"),
         *[F.grouping(b).alias(f"__g{i}__") for i, b in enumerate(band_cols)],
     )
-
-    def _offmap(entries: Column) -> Column:
-        zero = F.struct(
-            F.lit(0).cast("long").alias("s"),
-            F.map_from_arrays(
-                F.array().cast("array<int>"), F.array().cast("array<long>")
-            ).alias("m"),
-        )
-        return F.aggregate(
-            F.sort_array(entries),
-            zero,
-            lambda acc, e: F.struct(
-                (acc["s"] + e["n"]).alias("s"),
-                F.map_concat(
-                    acc["m"], F.create_map(e["band"], acc["s"])
-                ).alias("m"),
-            ),
-            lambda acc: acc["m"],
-        )
 
     maps = gsets.agg(
         *[
@@ -816,39 +570,23 @@ def spearman_matrix(
         ],
     )
 
-    from pyspark.sql import Window
-
-    def _rank(i: int) -> Column:
-        cum_win = (
-            Window.partitionBy(F.col(band_cols[i]))
-            .orderBy(F.col(f"__c{i}__"))
-            .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        tie_win = (
-            Window.partitionBy(F.col(band_cols[i]))
-            .orderBy(F.col(f"__c{i}__"))
-            .rangeBetween(Window.currentRow, Window.currentRow)
-        )
-        cum = F.count(F.lit(1)).over(cum_win)
-        tie = F.count(F.lit(1)).over(tie_win)
-        return (
-            (cum + F.col(f"__off{i}__")).cast("double")
-            - (tie - F.lit(1)).cast("double") / F.lit(2.0)
-        )
-
+    # the ranks take their columns' names, so the rank frame is itself a
+    # weighted frame (double ranks, already-normalized weight: nothing
+    # to cast or nanvl) and the Pearson matrix comes from pair_matrix
     ranked = j.select(
-        WEIGHT_COL, *[_rank(i).alias(f"__r{i}__") for i in range(k)]
+        WEIGHT_COL,
+        *[
+            _rank(f"__c{i}__", band_cols[i], f"__off{i}__").alias(c)
+            for i, c in enumerate(cols)
+        ],
     )
-    exprs = []
-    for i in range(k):
-        for l in range(i, k):
-            for name, expr in corr_moment_exprs(
-                F.col(f"__r{i}__"), F.col(f"__r{l}__"), F.col(WEIGHT_COL)
-            ).items():
-                exprs.append(expr.alias(f"__m_{i}_{l}_{name}"))
-    moments = ranked.agg(*exprs)
-    return moments.select(
-        F.inline(F.array(*_pair_structs(cols, ddof, min_periods)))
+    return pair_matrix(
+        WeightedDataFrame(ranked, WEIGHT_COL, nan_as_null=False),
+        [],
+        ("corr",),
+        cols=cols,
+        min_periods=min_periods,
+        ddof=ddof,
     )
 
 
@@ -893,8 +631,6 @@ def weighted_autocorr(
     long (lag, corr) shape unpivots from that single row — two
     exchanges total, independent of the number of lags.
     """
-    from pyspark.sql import Window
-
     from pandas_weights_spark.frame import WEIGHT_COL
 
     lags = [int(k) for k in lags]
@@ -925,31 +661,22 @@ def weighted_autocorr(
         w.alias(WEIGHT_COL),
         *[F.lag(x, k).over(spec).alias(f"__xl_{k}__") for k in lags],
     )
-    moments = []
-    for k in lags:
-        for name, expr in corr_moment_exprs(
-            F.col("__x__"), F.col(f"__xl_{k}__"), F.col(WEIGHT_COL)
-        ).items():
-            moments.append(expr.alias(f"__m_{k}_{name}"))
-    agg = (
-        lagged.groupBy(*[F.col(k) for k in keys]).agg(*moments)
-        if keys
-        else lagged.agg(*moments)
-    )
-    rows = []
-    for k in lags:
-        m = lambda name, k=k: F.col(f"__m_{k}_{name}")  # noqa: E731
-        rows.append(
-            F.struct(
-                F.lit(k).alias("lag"),
-                corr_from_moments(
-                    m("n"), m("w"), m("wx"), m("wy"), m("wxy"),
-                    m("wxx"), m("wyy"),
-                    ddof=ddof, min_periods=min_periods,
-                ).alias("corr"),
-            )
+    rows = [
+        F.struct(
+            F.lit(k).alias("lag"),
+            assemble(
+                "corr",
+                moment_sums(
+                    F.col("__x__"), F.col(WEIGHT_COL), y=F.col(f"__xl_{k}__")
+                ),
+                ddof=ddof,
+                min_periods=min_periods,
+            ).alias("corr"),
         )
-    return agg.select(
-        *keys, F.explode(F.array(*rows)).alias("__p__")
-    ).select(*keys, F.col("__p__.lag").alias("lag"),
-             F.col("__p__.corr").alias("corr"))
+        for k in lags
+    ]
+    return (
+        lagged.groupBy(*[F.col(k) for k in keys])
+        .agg(F.array(*rows).alias("__lags__"))
+        .select(*keys, F.inline("__lags__"))
+    )

@@ -681,14 +681,14 @@ class WeightedDataFrame:
         self, min_count: int = 0, subset: Optional[Sequence[str]] = None
     ) -> DataFrame:
         return self._agg_1row(
-            lambda x, w: _stats.w_sum(x, w, min_count=min_count), subset
+            lambda x, w: _stats.w_stat("sum", x, w, min_count=min_count), subset
         )
 
     def mean(
         self, skipna: bool = True, subset: Optional[Sequence[str]] = None
     ) -> DataFrame:
         return self._agg_1row(
-            lambda x, w: _stats.w_mean(x, w, skipna=skipna), subset
+            lambda x, w: _stats.w_stat("mean", x, w, skipna=skipna), subset
         )
 
     def var(
@@ -698,7 +698,7 @@ class WeightedDataFrame:
         subset: Optional[Sequence[str]] = None,
     ) -> DataFrame:
         return self._agg_1row(
-            lambda x, w: _stats.w_var(x, w, ddof=ddof, skipna=skipna), subset
+            lambda x, w: _stats.w_stat("var", x, w, ddof=ddof, skipna=skipna), subset
         )
 
     def std(
@@ -741,7 +741,7 @@ class WeightedDataFrame:
         """Weighted skewness (population definition; extension beyond the
         reference). Single aggregate pass via raw power sums."""
         return self._agg_1row(
-            lambda x, w: _stats.w_skew(x, w, skipna=skipna), subset
+            lambda x, w: _stats.w_stat("skew", x, w, skipna=skipna), subset
         )
 
     def kurt(
@@ -750,7 +750,7 @@ class WeightedDataFrame:
         """Weighted excess kurtosis (population definition; extension
         beyond the reference)."""
         return self._agg_1row(
-            lambda x, w: _stats.w_kurt(x, w, skipna=skipna), subset
+            lambda x, w: _stats.w_stat("kurt", x, w, skipna=skipna), subset
         )
 
     def min(self, subset: Optional[Sequence[str]] = None) -> DataFrame:
@@ -776,14 +776,19 @@ class WeightedDataFrame:
         ``method="pearson"`` (default) or ``"spearman"`` (r5 extension
         beyond the reference, which raises: listwise-complete rank
         basis — :func:`~pandas_weights_spark.corr.spearman_matrix`)."""
-        from pandas_weights_spark.corr import frame_corr, spearman_matrix
+        from pandas_weights_spark.corr import (
+            _check_method,
+            pair_matrix,
+            spearman_matrix,
+        )
 
         if method == "spearman":
             return spearman_matrix(
                 self, subset=subset, min_periods=min_periods, ddof=ddof
             )
-        return frame_corr(
-            self, method=method, min_periods=min_periods, ddof=ddof, subset=subset
+        _check_method(method)
+        return pair_matrix(
+            self, [], ("corr",), cols=subset, min_periods=min_periods, ddof=ddof
         )
 
     def corr_matrix(self, **kwargs):
@@ -802,9 +807,11 @@ class WeightedDataFrame:
         """Pairwise weighted covariance matrix, long form
         ``(col_x, col_y, cov)`` — extension beyond the reference (corr
         only); same one-aggregate-pass plan."""
-        from pandas_weights_spark.corr import frame_cov
+        from pandas_weights_spark.corr import pair_matrix
 
-        return frame_cov(self, min_periods=min_periods, ddof=ddof, subset=subset)
+        return pair_matrix(
+            self, [], ("cov",), cols=subset, min_periods=min_periods, ddof=ddof
+        )
 
     def corr_cov(
         self,
@@ -815,10 +822,15 @@ class WeightedDataFrame:
         """Corr AND cov matrices in ONE aggregate pass, long form
         ``(col_x, col_y, corr, cov)`` — half the scans of calling
         :meth:`corr` + :meth:`cov` separately and joining."""
-        from pandas_weights_spark.corr import frame_corr_cov
+        from pandas_weights_spark.corr import pair_matrix
 
-        return frame_corr_cov(
-            self, min_periods=min_periods, ddof=ddof, subset=subset
+        return pair_matrix(
+            self,
+            [],
+            ("corr", "cov"),
+            cols=subset,
+            min_periods=min_periods,
+            ddof=ddof,
         )
 
     def groupby(self, *keys, dropna: bool = True, sort: bool = False):

@@ -3177,8 +3177,11 @@ def ngram_model_tables(
         )
         agg = rows.groupBy(*gram_cols).agg(F.sum("__w__").alias("mass"))
 
-    # the gram order is the struct's null pattern (tokens are never
-    # NULL or, for n >= 2, empty) — no per-occurrence tag shuffled
+    # the gram order is the struct's null pattern: detection relies only
+    # on the padded components being NULL. Empty-string tokens (possible
+    # from tab/newline padding) are non-NULL and count like any other
+    # token, exactly as in the standalone builders — no per-occurrence
+    # tag shuffled
     if maxn > 1:
         order_of = F.coalesce(
             *[

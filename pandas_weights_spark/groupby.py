@@ -30,26 +30,25 @@ if TYPE_CHECKING:
 
 __all__ = ["WeightedGroupBy"]
 
-#: statistic name → kernel builder (x, w, **kwargs) -> Column
+
+def _moment_kernel(stat: str) -> Callable[..., Column]:
+    def kernel(x, w, skipna=True, ddof=1, min_count=0, **_):
+        return _stats.w_stat(
+            stat, x, w, skipna=skipna, ddof=ddof, min_count=min_count
+        )
+
+    return kernel
+
+
+#: statistic name → kernel builder (x, w, **kwargs) -> Column; kwargs a
+#: statistic does not take are ignored, so one agg_all kwargs set serves
+#: every statistic in the list
 _KERNELS: dict[str, Callable[..., Column]] = {
-    "count": lambda x, w, **k: _stats.w_count(x, w, skipna=k.get("skipna", True)),
-    "sum": lambda x, w, **k: _stats.w_sum(x, w, min_count=k.get("min_count", 0)),
-    "mean": lambda x, w, **k: _stats.w_mean(x, w, skipna=k.get("skipna", True)),
-    "var": lambda x, w, **k: _stats.w_var(
-        x, w, ddof=k.get("ddof", 1), skipna=k.get("skipna", True)
-    ),
-    "std": lambda x, w, **k: _stats.w_std(
-        x, w, ddof=k.get("ddof", 1), skipna=k.get("skipna", True)
-    ),
-    "sem": lambda x, w, **k: _stats.w_sem(
-        x, w, ddof=k.get("ddof", 1), skipna=k.get("skipna", True)
-    ),
-    "skew": lambda x, w, **k: _stats.w_skew(x, w, skipna=k.get("skipna", True)),
-    "kurt": lambda x, w, **k: _stats.w_kurt(x, w, skipna=k.get("skipna", True)),
-    "min": lambda x, w, **k: _stats.w_min(x, w),
-    "max": lambda x, w, **k: _stats.w_max(x, w),
-    "gmean": lambda x, w, **k: _stats.w_gmean(x, w),
-    "hmean": lambda x, w, **k: _stats.w_hmean(x, w),
+    **{s: _moment_kernel(s) for s in _stats.MOMENT_STATS},
+    "min": lambda x, w, **_: _stats.w_min(x, w),
+    "max": lambda x, w, **_: _stats.w_max(x, w),
+    "gmean": lambda x, w, **_: _stats.w_gmean(x, w),
+    "hmean": lambda x, w, **_: _stats.w_hmean(x, w),
 }
 
 
@@ -162,13 +161,15 @@ class WeightedGroupBy:
         return self._agg(lambda x, w: _stats.w_count(x, w, skipna=skipna))
 
     def sum(self, min_count: int = 0) -> DataFrame:
-        return self._agg(lambda x, w: _stats.w_sum(x, w, min_count=min_count))
+        return self._agg(lambda x, w: _stats.w_stat("sum", x, w, min_count=min_count))
 
     def mean(self, skipna: bool = True) -> DataFrame:
-        return self._agg(lambda x, w: _stats.w_mean(x, w, skipna=skipna))
+        return self._agg(lambda x, w: _stats.w_stat("mean", x, w, skipna=skipna))
 
     def var(self, ddof: int = 1, skipna: bool = True) -> DataFrame:
-        return self._agg(lambda x, w: _stats.w_var(x, w, ddof=ddof, skipna=skipna))
+        return self._agg(
+            lambda x, w: _stats.w_stat("var", x, w, ddof=ddof, skipna=skipna)
+        )
 
     def std(self, ddof: int = 1, skipna: bool = True) -> DataFrame:
         return self._agg(lambda x, w: _stats.w_std(x, w, ddof=ddof, skipna=skipna))
@@ -270,11 +271,11 @@ class WeightedGroupBy:
 
     def skew(self, skipna: bool = True) -> DataFrame:
         """Per-group weighted skewness (extension beyond the reference)."""
-        return self._agg(lambda x, w: _stats.w_skew(x, w, skipna=skipna))
+        return self._agg(lambda x, w: _stats.w_stat("skew", x, w, skipna=skipna))
 
     def kurt(self, skipna: bool = True) -> DataFrame:
         """Per-group weighted excess kurtosis (extension)."""
-        return self._agg(lambda x, w: _stats.w_kurt(x, w, skipna=skipna))
+        return self._agg(lambda x, w: _stats.w_stat("kurt", x, w, skipna=skipna))
 
     def quantile(
         self,
@@ -692,25 +693,19 @@ class WeightedGroupBy:
             for k in self._keys:
                 df = df.where(F.col(k).isNotNull())
         w = self._wdf.weights
+        names = _stats.sums_read(("mean", "var"))
         aggs = []
         for c in cols:
-            x = self._wdf._value(c)
-            mask = F.when(x.isNotNull(), w) if skipna else w
-            aggs.append(
-                F.coalesce(F.sum(mask), F.lit(0.0)).alias(f"__pw_zW_{c}__")
-            )
-            aggs.append(F.sum(x * w).alias(f"__pw_z1_{c}__"))
-            aggs.append(F.sum(x * x * w).alias(f"__pw_z2_{c}__"))
+            m = _stats.moment_sums(self._wdf._value(c), w, skipna=skipna)
+            aggs += [m[k].alias(f"__pw_z{k}_{c}__") for k in names]
         moments = df.groupBy(*[F.col(k) for k in self._keys]).agg(*aggs)
         joined = _join_group_stats(df, moments, self._keys)
         out_cols = [F.col(c) for c in df.columns]
         for c in cols:
+            m = {k: F.col(f"__pw_z{k}_{c}__") for k in names}
+            var = _stats.assemble("var", m, ddof=ddof)
+            mu = _stats.assemble("mean", m)
             x = self._wdf._value(c)
-            W = F.col(f"__pw_zW_{c}__")
-            s1 = F.col(f"__pw_z1_{c}__")
-            s2 = F.col(f"__pw_z2_{c}__")
-            var = _stats.variance_from_weighted_moments(s1, s2, W, ddof=ddof)
-            mu = F.try_divide(s1, W)
             z = F.when(var > 0, F.try_divide(x - mu, F.sqrt(var)))
             out_cols.append(z.alias(f"{c}_z"))
         return joined.select(*out_cols)
@@ -937,15 +932,15 @@ class WeightedGroupBy:
 
         Stage 1 groups on ``(keys…, salt)`` where ``salt`` spreads each
         hot key over ``salt_buckets`` reducers and computes the *moment
-        sums* (Σw masked, Σwx, Σwx², valid count). Stage 2 re-groups on
-        the keys alone — at most ``|groups| × salt_buckets`` rows cross
-        the second exchange — sums the moments (they are associative),
-        and assembles the statistics. Use when a group key is so hot
+        sums* the statistics read (:func:`_stats.moment_sums`). Stage 2
+        re-groups on the keys alone — at most ``|groups| × salt_buckets``
+        rows cross the second exchange — sums the moments (they are
+        associative), and assembles the statistics. Use when a group key is so hot
         that AQE skew handling is not enough; for well-distributed keys
         prefer :meth:`agg_all` (one shuffle).
 
-        Supports ``count/sum/mean/var/std/skew/kurt``. ``min_count``/
-        ``min_periods`` guards need the *global* valid count, which is
+        Supports ``count/sum/mean/var/std/sem/skew/kurt``. The
+        ``min_count`` guard needs the *global* valid count, which is
         carried as a moment, so semantics match :meth:`agg_all` exactly.
         """
         if self._mode != "groupby":
@@ -953,13 +948,15 @@ class WeightedGroupBy:
         cols = self._value_cols()
         if not cols:
             raise ValueError("no numeric columns to aggregate")
-        bad = [s for s in stats if s not in _KERNELS]
+        bad = [s for s in stats if s not in _stats.MOMENT_STATS]
         if bad:
-            raise ValueError(f"unknown statistics: {bad}")
+            raise ValueError(
+                f"salted aggregation supports {_stats.MOMENT_STATS}, got {bad}"
+            )
         skipna = kwargs.get("skipna", True)
         ddof = kwargs.get("ddof", 1)
         min_count = kwargs.get("min_count", 0)
-        need4 = any(s in ("skew", "kurt") for s in stats)
+        names = _stats.sums_read(stats, min_count=min_count)
 
         df = self._wdf.df
         if self._dropna:
@@ -972,90 +969,26 @@ class WeightedGroupBy:
         # each hot key's load 1/salt_buckets of the rows per reducer
         partial = []
         for c in cols:
-            x = self._wdf._value(c)
-            wv = F.when(x.isNotNull(), w)
-            partial += [
-                F.sum(wv).alias(f"__{c}_cw"),  # Σw over valid x
-                F.sum(w).alias(f"__{c}_aw"),  # Σw over all rows
-                F.count(x * w).alias(f"__{c}_n"),  # valid (x, w) pairs
-                F.sum(x * w).alias(f"__{c}_s1"),
-                F.sum(x * x * w).alias(f"__{c}_s2"),
-            ]
-            if need4:
-                partial += [
-                    F.sum(x * x * x * w).alias(f"__{c}_s3"),
-                    F.sum(x * x * x * x * w).alias(f"__{c}_s4"),
-                ]
+            m = _stats.moment_sums(self._wdf._value(c), w, skipna=skipna)
+            partial += [m[k].alias(f"__{c}_{k}") for k in names]
         stage1 = df.withColumn("__salt__", salt).groupBy(
             *self._keys, "__salt__"
         ).agg(*partial)
 
-        # stage 2: merge moments per key, assemble statistics
+        # stage 2: merge the sums per key (associative), then assemble
         merged = stage1.groupBy(*self._keys).agg(
-            *[
-                F.sum(f"__{c}_{m}").alias(f"__{c}_{m}")
-                for c in cols
-                for m in (
-                    ("cw", "aw", "n", "s1", "s2", "s3", "s4")
-                    if need4
-                    else ("cw", "aw", "n", "s1", "s2")
-                )
-            ]
+            *[F.sum(f"__{c}_{k}").alias(f"__{c}_{k}") for c in cols for k in names]
         )
-        out_exprs = []
-        for c in cols:
-            cw = F.coalesce(F.col(f"__{c}_cw"), F.lit(0.0))
-            aw = F.coalesce(F.col(f"__{c}_aw"), F.lit(0.0))
-            n = F.col(f"__{c}_n")
-            s1 = F.col(f"__{c}_s1")
-            s2 = F.col(f"__{c}_s2")
-            W = cw if skipna else aw
-            # min_count applies to `sum` only; mean/var/skew/kurt always
-            # guard at 1 valid pair, exactly like the agg_all kernels
-            s1g = F.when(n >= F.lit(1), s1)
-            for s in stats:
-                if s == "count":
-                    e = W
-                elif s == "sum":
-                    e = (
-                        F.when(n >= F.lit(min_count), F.coalesce(s1, F.lit(0.0)))
-                        if min_count > 0
-                        else F.coalesce(s1, F.lit(0.0))
-                    )
-                elif s == "mean":
-                    e = F.try_divide(s1g, W)
-                elif s in ("var", "std"):
-                    v = _stats.variance_from_weighted_moments(
-                        s1g, F.when(n >= 1, s2), W, ddof=ddof
-                    )
-                    e = v if s == "var" else F.when(v >= 0, F.sqrt(v))
-                else:  # skew / kurt — population central moments
-                    mu = F.try_divide(s1g, W)
-                    s2w = F.try_divide(F.when(n >= 1, s2), W)
-                    m2 = s2w - mu * mu
-                    s3w = F.try_divide(F.col(f"__{c}_s3"), W)
-                    if s == "skew":
-                        m3 = (
-                            s3w - F.lit(3.0) * mu * s2w
-                            + F.lit(2.0) * mu * mu * mu
-                        )
-                        e = F.when(
-                            (W > 0) & (m2 > 0),
-                            F.try_divide(m3, m2 * F.sqrt(m2)),
-                        )
-                    else:
-                        s4w = F.try_divide(F.col(f"__{c}_s4"), W)
-                        m4 = (
-                            s4w
-                            - F.lit(4.0) * mu * s3w
-                            + F.lit(6.0) * mu * mu * s2w
-                            - F.lit(3.0) * mu * mu * mu * mu
-                        )
-                        e = F.when(
-                            (W > 0) & (m2 > 0),
-                            F.try_divide(m4, m2 * m2) - F.lit(3.0),
-                        )
-                out_exprs.append(e.alias(f"{c}_{s}"))
+        out_exprs = [
+            _stats.assemble(
+                s,
+                {k: F.col(f"__{c}_{k}") for k in names},
+                ddof=ddof,
+                min_count=min_count,
+            ).alias(f"{c}_{s}")
+            for c in cols
+            for s in stats
+        ]
         return self._finish(merged.select(*self._keys, *out_exprs))
 
     # -- correlation (frame.py:630-660) ----------------------------------------
@@ -1078,14 +1011,15 @@ class WeightedGroupBy:
             raise NotImplementedError(
                 "corr is not defined for cube/rollup grouping sets"
             )
-        from pandas_weights_spark.corr import grouped_corr
+        from pandas_weights_spark.corr import _check_method, pair_matrix
 
-        return grouped_corr(
+        _check_method(method)
+        return pair_matrix(
             self._wdf,
             self._keys,
+            ("corr",),
             dropna=self._dropna,
             sort=self._sort,
-            method=method,
             min_periods=min_periods,
             ddof=ddof,
         )
@@ -1098,11 +1032,12 @@ class WeightedGroupBy:
             raise NotImplementedError(
                 "cov is not defined for cube/rollup grouping sets"
             )
-        from pandas_weights_spark.corr import grouped_cov
+        from pandas_weights_spark.corr import pair_matrix
 
-        return grouped_cov(
+        return pair_matrix(
             self._wdf,
             self._keys,
+            ("cov",),
             dropna=self._dropna,
             sort=self._sort,
             min_periods=min_periods,

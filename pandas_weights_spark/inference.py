@@ -76,8 +76,8 @@ def weighted_ttest(
         wm = F.when(mask, w)
         aggs += [
             _stats.w_count(xm, wm).alias(f"n_{tag}"),
-            _stats.w_mean(xm, wm).alias(f"mean_{tag}"),
-            _stats.w_var(xm, wm, ddof=ddof).alias(f"var_{tag}"),
+            _stats.w_stat("mean", xm, wm).alias(f"mean_{tag}"),
+            _stats.w_stat("var", xm, wm, ddof=ddof).alias(f"var_{tag}"),
         ]
     g = (
         wdf.df.groupBy(*[F.col(k) for k in keys]).agg(*aggs)

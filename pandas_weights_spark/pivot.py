@@ -32,9 +32,9 @@ MAX_IMPLICIT_COLUMN_VALUES = 1000
 
 _STATS = {
     "count": lambda x, w: _stats.w_count(x, w),
-    "sum": lambda x, w: _stats.w_sum(x, w),
-    "mean": lambda x, w: _stats.w_mean(x, w),
-    "var": lambda x, w: _stats.w_var(x, w),
+    "sum": lambda x, w: _stats.w_stat("sum", x, w),
+    "mean": lambda x, w: _stats.w_stat("mean", x, w),
+    "var": lambda x, w: _stats.w_stat("var", x, w),
     "std": lambda x, w: _stats.w_std(x, w),
     "min": lambda x, w: _stats.w_min(x, w),
     "max": lambda x, w: _stats.w_max(x, w),

@@ -730,9 +730,6 @@ def weighted_mannwhitney(
     one task. ``z_stat`` is the large-sample normal approximation
     (no tie correction): (U − n_a·n_b/2)/√(n_a·n_b·(n_a+n_b+1)/12).
     """
-    from pandas_weights_spark.frame import WEIGHT_COL  # noqa: F401
-    from pandas_weights_spark.groupby import _join_group_stats  # noqa: F401
-
     w = wdf.weights
     x = wdf._value(col)
     ok = x.isNotNull() & w.isNotNull() & (w > 0)

@@ -4,7 +4,7 @@
 frequency-weights analog of ``np.polyfit(x, y, 1, w=w)``. The
 reference library has no regression surface (SURVEY.md §2.6); this is
 an engine extension built on the SAME seven aggregate moments the
-Pearson kernel uses (:func:`_stats.corr_moment_exprs`):
+Pearson kernel uses (:func:`_stats.moment_sums` with ``y``):
 
     slope     = (Σwxy − ΣwxΣwy/W) / (Σwxx − (Σwx)²/W)
     intercept = Σwy/W − slope·Σwx/W
@@ -26,7 +26,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pandas_weights_spark._stats import corr_moment_exprs
+from pandas_weights_spark._stats import moment_sums
 
 __all__ = ["weighted_linfit", "weighted_linfit_transform", "weighted_linreg"]
 
@@ -41,7 +41,7 @@ def _coeff_frame(
     w = F.col(WEIGHT_COL)
     moments = {
         name: expr.alias(f"__m_{name}")
-        for name, expr in corr_moment_exprs(x, y, w).items()
+        for name, expr in moment_sums(x, w, y=y).items()
     }
     g = (
         wdf.df.groupBy(*[F.col(k) for k in keys]).agg(*moments.values())

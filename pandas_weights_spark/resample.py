@@ -298,19 +298,20 @@ class WeightedResampler:
 
     def sum(self, min_count: int = 0, complete: bool = False) -> DataFrame:
         return self._agg(
-            lambda x, w: _stats.w_sum(x, w, min_count=min_count), complete=complete
+            lambda x, w: _stats.w_stat("sum", x, w, min_count=min_count),
+            complete=complete,
         )
 
     def mean(self, skipna: bool = True, complete: bool = False) -> DataFrame:
         return self._agg(
-            lambda x, w: _stats.w_mean(x, w, skipna=skipna), complete=complete
+            lambda x, w: _stats.w_stat("mean", x, w, skipna=skipna), complete=complete
         )
 
     def var(
         self, ddof: int = 1, skipna: bool = True, complete: bool = False
     ) -> DataFrame:
         return self._agg(
-            lambda x, w: _stats.w_var(x, w, ddof=ddof, skipna=skipna),
+            lambda x, w: _stats.w_stat("var", x, w, ddof=ddof, skipna=skipna),
             complete=complete,
         )
 
@@ -422,19 +423,15 @@ def hypertable_rollup(
     resampler's pandas-style first-timestamp origin).
 
     Output: one unioned DataFrame ``(grain, bucket, {col}_{stat}…)``
-    with a row per (rule, bucket). Supported stats: count, sum, mean,
-    var, std, skew, kurt (all derivable from moment sums).
+    with a row per (rule, bucket). Supported stats: the
+    ``_stats.MOMENT_STATS`` (all assembled from moment sums).
     """
     from pandas_weights_spark.frame import wt as _wt
 
-    _NEED = {
-        "count": 1, "sum": 1, "mean": 1, "var": 2, "std": 2,
-        "skew": 3, "kurt": 4,
-    }
-    bad = [s for s in stats if s not in _NEED]
+    bad = [s for s in stats if s not in _stats.MOMENT_STATS]
     if bad:
         raise ValueError(f"unsupported rollup statistics: {bad}")
-    order = max(_NEED[s] for s in stats)
+    names = _stats.sums_read(stats)
     parsed = [parse_rule(r) for r in rules]
     if not parsed:
         raise ValueError("need at least one rule")
@@ -485,18 +482,12 @@ def hypertable_rollup(
         raise ValueError("no numeric columns to aggregate")
     w = wdf.weights
 
-    # level 0: raw rows -> finest buckets, raw weighted power sums
+    # level 0: raw rows -> finest buckets, the weighted moment sums
     kind0, info0 = parsed[0]
     sums = []
     for c in cols:
-        x = wdf._value(c)
-        m = F.when(x.isNotNull() & w.isNotNull(), w).otherwise(F.lit(0.0))
-        xz = F.when(x.isNotNull() & w.isNotNull(), x).otherwise(F.lit(0.0))
-        sums.append(F.sum(m).alias(f"__c_{c}__"))
-        pw = xz
-        for k in range(1, order + 1):
-            sums.append(F.sum(m * pw).alias(f"__s{k}_{c}__"))
-            pw = pw * xz
+        m = _stats.moment_sums(wdf._value(c), w)
+        sums += [m[k].alias(f"__{k}_{c}__") for k in names]
     # persist the finest-level aggregate: every union branch (each
     # grain's _finalize, and each coarser level's re-aggregation)
     # re-derives its lineage, so without a cache boundary the RAW scan
@@ -512,49 +503,8 @@ def hypertable_rollup(
     def _finalize(lv: DataFrame, grain: str) -> DataFrame:
         out = [F.lit(grain).alias("grain"), F.col("bucket")]
         for c in cols:
-            C = F.col(f"__c_{c}__")
-            s1 = F.col(f"__s1_{c}__")
-            mu = F.try_divide(s1, C)
-            for st in stats:
-                if st == "count":
-                    e = C
-                elif st == "sum":
-                    e = s1
-                elif st == "mean":
-                    e = mu
-                elif st in ("var", "std"):
-                    s2 = F.col(f"__s2_{c}__")
-                    v = F.try_divide(s2 - F.try_divide(s1 * s1, C), C - 1)
-                    e = v if st == "var" else F.when(v >= 0, F.sqrt(v))
-                elif st == "skew":
-                    s2 = F.col(f"__s2_{c}__")
-                    s3 = F.col(f"__s3_{c}__")
-                    m2 = F.try_divide(s2, C) - mu * mu
-                    m3 = (
-                        F.try_divide(s3, C)
-                        - F.lit(3.0) * mu * F.try_divide(s2, C)
-                        + F.lit(2.0) * mu * mu * mu
-                    )
-                    e = F.when(
-                        (C > 0) & (m2 > 0),
-                        F.try_divide(m3, m2 * F.sqrt(m2)),
-                    )
-                else:  # kurt
-                    s2 = F.col(f"__s2_{c}__")
-                    s3 = F.col(f"__s3_{c}__")
-                    s4 = F.col(f"__s4_{c}__")
-                    m2 = F.try_divide(s2, C) - mu * mu
-                    m4 = (
-                        F.try_divide(s4, C)
-                        - F.lit(4.0) * mu * F.try_divide(s3, C)
-                        + F.lit(6.0) * mu * mu * F.try_divide(s2, C)
-                        - F.lit(3.0) * mu * mu * mu * mu
-                    )
-                    e = F.when(
-                        (C > 0) & (m2 > 0),
-                        F.try_divide(m4, m2 * m2) - F.lit(3.0),
-                    )
-                out.append(e.alias(f"{c}_{st}"))
+            m = {k: F.col(f"__{k}_{c}__") for k in names}
+            out += [_stats.assemble(st, m).alias(f"{c}_{st}") for st in stats]
         return lv.select(*out)
 
     results = [_finalize(level, rules[0])]

@@ -104,105 +104,54 @@ class WeightedRolling:
             return spec.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         return spec.rowsBetween(-(self._window - 1), Window.currentRow)
 
-    def _stat(self, builder) -> DataFrame:
-        """Evaluate ``builder(x, w, spec) -> Column`` per numeric column,
-        gated by ``min_periods`` valid observations in the frame.
-
-        Partition/order columns play the role of the pandas index: they are
-        carried through as plain columns and excluded from the value set
-        (mirroring groupby key exclusion, reference frame.py:486).
-        """
-        wdf = self._wdf
-        spec = self._spec()
-        w = wdf.weights
-        keys = [r for r in self._partition_by if isinstance(r, str)] + [
+    def _keys(self) -> list[str]:
+        """Partition/order columns play the role of the pandas index: they
+        are carried through as plain columns and excluded from the value
+        set (mirroring groupby key exclusion, reference frame.py:486)."""
+        return [r for r in self._partition_by if isinstance(r, str)] + [
             r for r in self._order_by if isinstance(r, str)
         ]
-        out = []
-        for c in wdf.numeric_columns():
-            if c in keys:
-                continue
-            x = wdf._value(c)
-            expr = builder(x, w, spec)
-            if self._min_periods > 0:
-                n_valid = F.count(x * w).over(spec)
-                expr = F.when(n_valid >= F.lit(self._min_periods), expr)
-            out.append(expr.alias(c))
-        if not out:
+
+    def _expr(
+        self, stat: str, column: str, ddof: int = 1, skipna: bool = True,
+        q: float = 0.5,
+    ) -> Column:
+        """One windowed statistic of one value column: the weighted
+        moment sums over the frame, assembled (``median`` / ``quantile``
+        take the frame's weighted ``q`` quantile instead) and NULL until
+        the frame holds ``min_periods`` valid observations."""
+        wdf = self._wdf
+        spec = self._spec()
+        x = wdf._value(column)
+        m = _stats.moment_sums(x, wdf.weights, skipna=skipna, over=spec)
+        if stat in ("median", "quantile"):
+            expr = self._quantile_expr(x, wdf.weights, spec, q)
+        elif stat in _stats.MOMENT_STATS:
+            expr = _stats.assemble(stat, m, ddof=ddof)
+        else:
+            raise ValueError(f"unknown rolling statistic {stat!r}")
+        if self._min_periods > 0:
+            expr = F.when(m["n"] >= F.lit(self._min_periods), expr)
+        return expr
+
+    def _select(self, named: list[tuple[str, Column]]) -> DataFrame:
+        if not named:
             raise ValueError("no numeric value columns outside the window keys")
-        return wdf.df.select(*keys, *out)
+        return self._wdf.df.select(
+            *self._keys(), *[e.alias(name) for name, e in named]
+        )
+
+    def _value_columns(self) -> list[str]:
+        keys = self._keys()
+        return [c for c in self._wdf.numeric_columns() if c not in keys]
+
+    def _stat(self, stat: str, **kwargs) -> DataFrame:
+        """One statistic for every numeric value column."""
+        return self._select(
+            [(c, self._expr(stat, c, **kwargs)) for c in self._value_columns()]
+        )
 
     # -- statistics ---------------------------------------------------------
-
-    def _builder(self, stat: str, ddof: int, skipna: bool):
-        """``builder(x, w, spec) -> Column`` for a named statistic."""
-
-        def cnt_of(x, w, spec):
-            if skipna:
-                return F.sum(F.when(x.isNotNull(), w)).over(spec)
-            return F.sum(w).over(spec)
-
-        if stat == "count":
-            return lambda x, w, spec: F.coalesce(cnt_of(x, w, spec), F.lit(0.0))
-        if stat == "sum":
-            return lambda x, w, spec: F.coalesce(
-                F.sum(x * w).over(spec), F.lit(0.0)
-            )
-        if stat == "mean":
-            return lambda x, w, spec: F.try_divide(
-                F.sum(x * w).over(spec), cnt_of(x, w, spec)
-            )
-        if stat == "var":
-            return lambda x, w, spec: _stats.variance_from_weighted_moments(
-                F.sum(x * w).over(spec),
-                F.sum((x * x) * w).over(spec),
-                cnt_of(x, w, spec),
-                ddof=ddof,
-            )
-        if stat == "std":
-
-            def b(x, w, spec):
-                v = _stats.variance_from_weighted_moments(
-                    F.sum(x * w).over(spec),
-                    F.sum((x * x) * w).over(spec),
-                    cnt_of(x, w, spec),
-                    ddof=ddof,
-                )
-                return F.when(v >= 0, F.sqrt(v))
-
-            return b
-        if stat in ("skew", "kurt"):
-            # windowed analog of _stats.w_skew / w_kurt: same raw power
-            # sums (left-associated product order) and the same
-            # population/biased central-moment algebra, evaluated over
-            # the frame instead of a full-table aggregate
-            def b(x, w, spec, _stat=stat):
-                W = cnt_of(x, w, spec)
-                mu = F.try_divide(F.sum(x * w).over(spec), W)
-                s2w = F.try_divide(F.sum((x * x) * w).over(spec), W)
-                m2 = s2w - mu * mu
-                s3w = F.try_divide(F.sum((x * x * x) * w).over(spec), W)
-                m3 = s3w - F.lit(3.0) * mu * s2w + F.lit(2.0) * mu * mu * mu
-                ok = (W > 0) & (m2 > 0)
-                if _stat == "skew":
-                    return F.when(
-                        ok, F.try_divide(m3, m2 * F.sqrt(m2))
-                    )
-                s4w = F.try_divide(
-                    F.sum((x * x * x * x) * w).over(spec), W
-                )
-                m4 = (
-                    s4w
-                    - F.lit(4.0) * mu * s3w
-                    + F.lit(6.0) * mu * mu * s2w
-                    - F.lit(3.0) * mu * mu * mu * mu
-                )
-                return F.when(
-                    ok, F.try_divide(m4, m2 * m2) - F.lit(3.0)
-                )
-
-            return b
-        raise ValueError(f"unknown rolling statistic {stat!r}")
 
     def col(
         self, stat: str, column: str, ddof: int = 1, skipna: bool = True
@@ -214,17 +163,7 @@ class WeightedRolling:
         WindowExec: one shuffle, one sort, instead of one pass per
         frame. Same min_periods gate as the DataFrame-returning stats.
         """
-        wdf = self._wdf
-        spec = self._spec()
-        x = wdf._value(column)
-        if stat == "median":
-            expr = self._quantile_expr(x, wdf.weights, spec, 0.5)
-        else:
-            expr = self._builder(stat, ddof, skipna)(x, wdf.weights, spec)
-        if self._min_periods > 0:
-            n_valid = F.count(x * wdf.weights).over(spec)
-            expr = F.when(n_valid >= F.lit(self._min_periods), expr)
-        return expr
+        return self._expr(stat, column, ddof, skipna)
 
     def agg_all(
         self, stats: Sequence[str], ddof: int = 1, skipna: bool = True
@@ -232,29 +171,13 @@ class WeightedRolling:
         """Several windowed statistics in ONE pass: all stats share the
         frame's WindowSpec, so they evaluate in a single WindowExec (one
         shuffle, one local sort) with columns ``{col}_{stat}``."""
-        wdf = self._wdf
-        spec = self._spec()
-        w = wdf.weights
-        keys = [r for r in self._partition_by if isinstance(r, str)] + [
-            r for r in self._order_by if isinstance(r, str)
-        ]
-        builders = {s: self._builder(s, ddof, skipna) for s in stats}
-        out = []
-        for c in wdf.numeric_columns():
-            if c in keys:
-                continue
-            x = wdf._value(c)
-            gate = None
-            if self._min_periods > 0:
-                gate = F.count(x * w).over(spec) >= F.lit(self._min_periods)
-            for s, b in builders.items():
-                expr = b(x, w, spec)
-                if gate is not None:
-                    expr = F.when(gate, expr)
-                out.append(expr.alias(f"{c}_{s}"))
-        if not out:
-            raise ValueError("no numeric value columns outside the window keys")
-        return wdf.df.select(*keys, *out)
+        return self._select(
+            [
+                (f"{c}_{s}", self._expr(s, c, ddof, skipna))
+                for c in self._value_columns()
+                for s in stats
+            ]
+        )
 
     # -- pairwise statistics ------------------------------------------------
 
@@ -274,46 +197,25 @@ class WeightedRolling:
 
         Pairwise NA rule: a row contributes mass only when ``x``, ``y``
         AND ``w`` are all non-null (reference _stats.py:36-73's aligned
-        mask, applied per frame). All six moment sums share this
-        window's spec, so stacking several ``pair_col``/``col`` exprs in
-        one select still evaluates in a SINGLE WindowExec — one shuffle,
-        one sort. Guard chain (NULL on failure) follows
-        corr_from_moments: W ≤ ddof, non-positive variance, and fewer
-        than ``min_periods`` pair-valid rows in the frame.
+        mask, applied per frame). All moment sums share this window's
+        spec, so stacking several ``pair_col``/``col`` exprs in one
+        select still evaluates in a SINGLE WindowExec — one shuffle,
+        one sort. Guard chain (NULL on failure) follows the aggregate
+        corr/cov: W ≤ ddof, non-positive variance, and fewer than
+        ``min_periods`` pair-valid rows in the frame.
         """
         if stat not in ("corr", "cov"):
             raise ValueError(f"pairwise statistic must be corr/cov, got {stat!r}")
         wdf = self._wdf
-        spec = self._spec()
-        w = wdf.weights
-        xv = wdf._value(x)
-        yv = wdf._value(y)
-        valid = xv.isNotNull() & yv.isNotNull() & w.isNotNull()
-        # products left-associated like the kernel / oracle SQL:
-        # (w*x), (w*x)*y, ... so float results match bit-for-bit
-        m = F.when(valid, w)
-        n = F.count(m).over(spec)
-        sw = F.sum(m).over(spec)
-        sx = F.sum(m * xv).over(spec)
-        sy = F.sum(m * yv).over(spec)
-        sxy = F.sum(m * xv * yv).over(spec)
-        mp = self._min_periods if min_periods is None else int(min_periods)
-        if stat == "cov":
-            return _stats.cov_from_moments(
-                n, sw, sx, sy, sxy, ddof=ddof, min_periods=mp
-            )
-        sxx = F.sum(m * xv * xv).over(spec)
-        syy = F.sum(m * yv * yv).over(spec)
-        return _stats.corr_from_moments(
-            n, sw, sx, sy, sxy, sxx, syy, ddof=ddof, min_periods=mp
+        m = _stats.moment_sums(
+            wdf._value(x), wdf.weights, y=wdf._value(y), over=self._spec()
         )
+        mp = self._min_periods if min_periods is None else int(min_periods)
+        return _stats.assemble(stat, m, ddof=ddof, min_periods=mp)
 
     def _pair_frame(self, stat, x, y, ddof, min_periods) -> DataFrame:
-        keys = [r for r in self._partition_by if isinstance(r, str)] + [
-            r for r in self._order_by if isinstance(r, str)
-        ]
         expr = self.pair_col(stat, x, y, ddof=ddof, min_periods=min_periods)
-        return self._wdf.df.select(*keys, expr.alias(f"{x}_{y}_{stat}"))
+        return self._select([(f"{x}_{y}_{stat}", expr)])
 
     def corr(
         self,
@@ -401,34 +303,32 @@ class WeightedRolling:
         mass) for every numeric column — see :meth:`_quantile_expr`."""
         if not 0.0 < q <= 1.0:
             raise ValueError(f"quantile must be in (0, 1], got {q}")
-        return self._stat(
-            lambda x, w, spec: self._quantile_expr(x, w, spec, q)
-        )
+        return self._stat("quantile", q=q)
 
     def median(self, skipna: bool = True) -> DataFrame:
         """Windowed weighted median (q=0.5)."""
         return self.quantile(0.5, skipna=skipna)
 
     def count(self, skipna: bool = True) -> DataFrame:
-        return self._stat(self._builder("count", 1, skipna))
+        return self._stat("count", skipna=skipna)
 
     def sum(self) -> DataFrame:
-        return self._stat(self._builder("sum", 1, True))
+        return self._stat("sum")
 
     def mean(self, skipna: bool = True) -> DataFrame:
-        return self._stat(self._builder("mean", 1, skipna))
+        return self._stat("mean", skipna=skipna)
 
     def var(self, ddof: int = 1, skipna: bool = True) -> DataFrame:
-        return self._stat(self._builder("var", ddof, skipna))
+        return self._stat("var", ddof=ddof, skipna=skipna)
 
     def std(self, ddof: int = 1, skipna: bool = True) -> DataFrame:
-        return self._stat(self._builder("std", ddof, skipna))
+        return self._stat("std", ddof=ddof, skipna=skipna)
 
     def skew(self, skipna: bool = True) -> DataFrame:
         """Windowed weighted skewness (population/biased m3/m2^1.5 —
-        the frame-local analog of _stats.w_skew)."""
-        return self._stat(self._builder("skew", 1, skipna))
+        the frame-local analog of the aggregate skew)."""
+        return self._stat("skew", skipna=skipna)
 
     def kurt(self, skipna: bool = True) -> DataFrame:
         """Windowed weighted excess kurtosis (population m4/m2^2 - 3)."""
-        return self._stat(self._builder("kurt", 1, skipna))
+        return self._stat("kurt", skipna=skipna)

@@ -30,6 +30,26 @@ class TestAggPlans:
         )
         P.assert_single_shuffle_agg(df)
 
+    def test_moment_partial_aggregate_counts(self, lineitem):
+        # each statistic aggregates only the moment sums it reads, with
+        # no min_count guard around Σw·x (already NULL when no row is
+        # valid): mean = Σw·x, W per column; mean/var/std/count share
+        # Σw·x, Σw·x², W per column
+        import re
+
+        cols = ["l_extendedprice", "l_discount", "l_tax"]
+        w = wt(lineitem, "l_quantity")
+
+        def partials(df):
+            return len(re.findall(r"partial_\w+\(", P.physical_plan(df)))
+
+        assert partials(w[cols].mean()) == 6
+        assert partials(
+            w.groupby("l_returnflag")[cols].agg_all(
+                ["mean", "var", "std", "count"]
+            )
+        ) == 9
+
     def test_global_agg_no_hash_exchange(self, lineitem):
         df = wt(lineitem, "l_quantity").mean(subset=["l_extendedprice"])
         plan = P.physical_plan(df)

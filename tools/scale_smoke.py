@@ -1269,7 +1269,7 @@ def main() -> int:
     from pandas_weights_spark.sources import fan_out
 
     if not name_filter or any(
-        t in "mkn score fan_out" for t in name_filter.split(",")
+        t in ("mkn", "score", "fan_out") for t in name_filter.split(",")
     ):
         docs1 = docs.repartition(1).localCheckpoint(eager=True)
         _tabs = ngram_model_tables(
