@@ -4051,9 +4051,10 @@ def _q_ewm_mean(spark, sf_dir):
 
 def _ewm_sql(alpha: float = 0.05) -> str:
     """DuckDB oracle for _q_ewm_mean: the banded-rescale prefix algebra
-    (ewm.py _stat_fast) expressed in SQL, with the engine's exact float
-    constants inlined so the only cross-engine divergence is libm exp()
-    and window-sum associativity (absorbed by ROUND 2)."""
+    (ewm.py, integer position bands) expressed in SQL, with the
+    engine's exact float constants inlined so the only cross-engine
+    divergence is libm exp() and window-sum associativity (absorbed by
+    ROUND 2)."""
     import math as _m
 
     rho = 1.0 - alpha
@@ -7917,8 +7918,9 @@ _ORACLE["group_transforms"] = """
 
 def _ewm_pair_sql(alpha: float = 0.2, halflife_secs: float = 3600.0) -> str:
     """DuckDB oracle for _q_ewm_pair: the banded pairwise cross-moment
-    algebra (ewm.py _pair_stat) and the real-valued-L times= banding
-    (_stat_times) in SQL, with the engine's exact float constants
+    algebra (ewm.py pair_stats, integer position bands) and the
+    real-valued-L times= banding (ewm.py log-decay bands) in SQL, with
+    the engine's exact float constants
     inlined. Residual cross-engine noise is libm exp() and window-sum
     associativity (all mass terms are positive, so the sums are
     well-conditioned: ~1e-13 relative), absorbed by ROUND 2/5/3."""

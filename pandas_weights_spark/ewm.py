@@ -19,11 +19,11 @@ Scale design — banded rescale, not a per-row geometric sum
 The naive formulations both fail: a sliding window re-sums O(n·depth)
 terms, and the classic prefix trick ``ρ^p · Σ ρ^(−p_j)·t_j`` overflows
 ``double`` once ``p·log10(1/ρ) > 308``. Instead rows are cut into bands
-of ``B = ⌊75 / log10(1/ρ)⌋`` rows, so every exponent that is ever
+spanning at most 75 decades of decay, so every exponent that is ever
 materialized stays within ±1e150 even for the squared-decay sum:
 
 1. position ``p`` via ``row_number`` per partition;
-2. in-band prefix sums of ``t_j · ρ^(−r_j)`` (``r`` = offset in band)
+2. in-band prefix sums of ``t_j · exp(k·r_j)`` (``r`` = offset in band)
    under a window partitioned by (keys, band);
 3. the previous band's total via a RANGE frame over the band index on
    the same sort — no join, no extra exchange.
@@ -32,36 +32,80 @@ The whole plan has ONE exchange, on the bare partition keys (pinned by
 test_ewm_one_exchange_bounded_windows): the ``row_number`` window needs
 every row of a key in one task, so a single giant key is still one
 sort task. What the (keys, band) sub-partitioning buys is *bounded
-window-operator state* — each prefix-sum frame holds ≤ B rows, so
-memory/spill per window partition is capped regardless of key size —
+window-operator state* — each prefix-sum frame holds one band of rows,
+so memory/spill per window partition is capped regardless of key size —
 not extra task parallelism.
 
 A row's value combines its in-band prefix with the previous band's
-total decayed by ``ρ^B ≤ 1e-37``; bands further back are dropped —
-their multiplier is ``ρ^2B ≤ 1e-75``, beneath double precision relative
-to the retained terms, so the result equals the exact sum to machine
-precision. No unbounded ordered window anywhere.
+total decayed by one band (``≤ 1e-37`` for position bands, ``1e-75``
+for log-decay bands); bands further back are dropped — their multiplier
+is beneath double precision relative to the retained terms, so the
+result equals the exact sum to machine precision. No unbounded ordered
+window anywhere.
 
-``var(bias=False)`` uses the pandas debias factor
-``D² / (D² − V)`` with ``V = Σ ρ^(2(p_i−p_j)) · w_j²`` — the same
-banded machinery at decay ``ρ²``.
+One builder, one assembler
+--------------------------
+Every statistic — mean/var/std under all four ``adjust × ignore_na``
+flags, pairwise cov/corr, and the ``times=`` mean — runs through
+:func:`_banded_totals` and :func:`_assemble`. A band group names a band
+column, an in-band offset column ``r``, a rescale rate ``k``
+(``up = exp(k·r)`` going in, ``down = exp(−k·r)`` coming out), the
+one-band carry ``c1`` of a plain-decay term and ``c2`` of a
+squared-decay term, and its mass terms. Each term has an order: 1 for
+plain decay (``D = Σ w``, ``Σ w·x``, ``Σ w·x·y``, ...), 2 for squared
+decay (``V = Σ ρ^(2(p_i−p_j)) · w_j²``, the pandas debias sum), 0 for
+an undecayed count (``min_periods``). The builder emits one in-band
+window and one carry window per group and a decayed total per term; the
+assembler turns totals into a statistic with the pair algebra, a
+univariate statistic being the pair with ``y = x`` (``var`` is
+``cov(x, x)``, ``var(bias=False)`` the pandas debias factor
+``D² / (D² − V)`` times the biased variance).
+
+The callers differ only in how they build the clock and the mass:
+
+* **Position bands** (default flags, pairwise stats, ``alpha == 1``):
+  ``band = p div B`` with ``B = ⌊75 / log10(1/ρ)⌋``, ``k = ln(1/ρ)``,
+  carries ``ρ^B`` and ``ρ^2B``; one band column shared by every value
+  column. ``alpha == 1`` is ``k = 0`` with zero carry
+  (``exp(0·r) = 1`` exactly): only the current row has mass.
+* **Log-decay bands** (``times=``, ``ignore_na=True``,
+  ``adjust=False``): a real-valued decay exponent ``L`` in decades,
+  ``band = ⌊L/75⌋``, ``r = L − 75·band``, ``k = ln 10``, carries
+  ``1e-75`` and ``1e-150``. ``times=`` shares one ``L`` (elapsed time)
+  across columns; the variants build one ``L`` per column, because
+  validity (and so the clock) is per column.
+
+Reserved names: Spark resolves column names case-insensitively, so every
+internal column is ``__pw_ewm_<family>[_<tag>][_<i>]__`` — families
+(``p``, ``band``, ``r``, ``term``, ``pre``, ``carry``, ...) and term tags
+(``D``, ``X``, ``Y``, ``XY``, ``XX``, ``YY``, ``V``, ``n``) are distinct
+in any letter case, and ``i`` is an index, never a user column name, so
+no internal column can shadow a user column or another internal one.
 """
 
 from __future__ import annotations
 
 import math
-from typing import Optional, Sequence, Union
+from typing import NamedTuple, Optional, Sequence, Union
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 __all__ = ["WeightedEWM"]
 
 _ColRef = Union[str, Column]
 
-_P = "__pw_ewm_p__"
-_BAND = "__pw_ewm_band__"
-_R = "__pw_ewm_r__"
+
+def _name(*parts) -> str:
+    """Reserved internal column name ``__pw_ewm_<parts joined by _>__``."""
+    return "__pw_ewm_" + "_".join(map(str, parts)) + "__"
+
+
+_P = _name("p")
+_BAND = _name("band")
+_R = _name("r")
+_DEC = 75.0  # decades of decay per log-decay band
+_LN10 = math.log(10.0)
 
 
 def resolve_alpha(
@@ -91,6 +135,100 @@ def resolve_alpha(
     if not 0.0 < a <= 1.0:
         raise ValueError(f"alpha must be in (0, 1], got {a}")
     return a
+
+
+class _Band(NamedTuple):
+    """A band clock: band index and in-band offset columns, the rescale
+    rate ``k`` and the one-band carries of a plain-decay (``c1``) and a
+    squared-decay (``c2``) term."""
+
+    band: str
+    r: str
+    k: float
+    c1: float
+    c2: float
+
+
+def _banded_totals(
+    df: DataFrame, pcols: list[Column], groups: dict
+) -> tuple[DataFrame, dict]:
+    """Decayed running totals of mass terms, as of each row.
+
+    ``groups`` maps each :class:`_Band` to its terms
+    ``{key: (mass, order)}`` (``key`` a tuple of name parts). Returns the
+    frame carrying the prefix and carry columns and ``{key: total}``.
+    """
+    scaled, prefix, carry, totals = [], [], [], {}
+    for (band, r, k, c1, c2), terms in groups.items():
+        up = {
+            1: F.exp(F.lit(k) * F.col(r)),
+            2: F.exp(F.lit(2.0 * k) * F.col(r)),
+        }
+        down = F.exp(F.lit(-k) * F.col(r))
+        in_band = (
+            Window.partitionBy(*pcols, F.col(band))
+            .orderBy(F.col(_P))
+            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        # The carry is a RANGE frame over the band index (band b−1 is
+        # empty when a log-decay clock jumped past it), and the
+        # (keys, band, p) sort of the in-band window already satisfies
+        # its (keys, band) order: no exchange, no sort, no self-join.
+        by_band = Window.partitionBy(*pcols).orderBy(F.col(band))
+        for key, (mass, order) in terms.items():
+            t, p, c = (_name(f, *key) for f in ("term", "pre", "carry"))
+            scaled.append((mass * up[order] if order else mass).alias(t))
+            prefix.append(F.sum(t).over(in_band).alias(p))
+            if order:  # decayed: bands before b−1 are beneath precision
+                frame, zero = by_band.rangeBetween(-1, -1), F.lit(0.0)
+                tot = (F.col(p) + F.lit(c2 if order == 2 else c1) * F.col(c))
+                tot = tot * down
+                totals[key] = tot * down if order == 2 else tot
+            else:  # counts don't decay: every earlier band, exactly
+                frame = by_band.rangeBetween(Window.unboundedPreceding, -1)
+                zero = F.lit(0)
+                totals[key] = F.col(p) + F.col(c)
+            carry.append(F.coalesce(F.sum(t).over(frame), zero).alias(c))
+    staged = df.select("*", *scaled).select("*", *prefix)
+    return staged.select("*", *carry), totals
+
+
+def _assemble(kind: str, t: dict, bias: bool, min_periods: int) -> Column:
+    """One statistic from its decayed totals ``t`` (tag → column): the
+    pair algebra, with ``t["Y"] is t["X"]`` for a univariate statistic."""
+    D = t["D"]
+    mx = F.try_divide(t["X"], D)
+    if kind == "mean":
+        expr = mx
+    else:
+        my = F.try_divide(t["Y"], D)
+        cov = F.try_divide(t["XY"], D) - mx * my
+        if "V" in t:
+            # D² − V is exactly 0 for a lone observation in exact math,
+            # but the banded exp() rescale leaves ~1e-16 relative garbage
+            # that the debias ratio then amplifies; a relative threshold
+            # restores the pandas denominator <= 0 -> NaN behavior.
+            denom = D * D - t["V"]
+            factor = F.when(
+                denom > F.lit(1e-10) * (D * D), F.try_divide(D * D, denom)
+            )
+        if kind == "corr":
+            var_x = F.try_divide(t["XX"], D) - mx * mx
+            var_y = F.try_divide(t["YY"], D) - my * my
+            # the debias factor cancels in the ratio; its guard (a lone
+            # effective observation) must still null the result
+            expr = F.when(
+                factor.isNotNull() & (var_x > 0) & (var_y > 0),
+                F.try_divide(cov, F.sqrt(var_x * var_y)),
+            )
+        else:
+            if not bias:
+                cov = factor * cov
+            expr = F.when(cov >= 0, F.sqrt(cov)) if kind == "std" else cov
+    expr = F.when(D > 0, expr)
+    if min_periods > 0:
+        expr = F.when(t["n"] >= F.lit(min_periods), expr)
+    return expr
 
 
 class WeightedEWM:
@@ -165,7 +303,7 @@ class WeightedEWM:
                 stacklevel=2,
             )
 
-    # -- banded prefix machinery -------------------------------------------
+    # -- band clocks --------------------------------------------------------
 
     def _band_size(self, rho: float) -> int:
         if rho == 0.0:  # alpha == 1: only the current row matters
@@ -176,40 +314,53 @@ class WeightedEWM:
         return max(1, int(75.0 / decades))
 
     def _key_cols(self) -> list[str]:
-        return [r for r in self._partition_by if isinstance(r, str)] + [
+        keys = [r for r in self._partition_by if isinstance(r, str)] + [
             r for r in self._order_by if isinstance(r, str)
         ]
+        if self._times is not None and self._times not in keys:
+            keys.append(self._times)
+        return keys
 
-    def _stat(self, kind: str, bias: bool = False) -> DataFrame:
-        if self._times is not None:
-            if kind != "mean":
-                raise NotImplementedError(
-                    "times= supports mean() only (pandas restriction)"
-                )
-            return self._stat_times()
-        # alpha == 1 degenerates identically for every flag combination
-        # (only the current row has mass), so the fast shared-band path
-        # covers it.
-        if (self._adjust and not self._ignore_na) or self._alpha == 1.0:
-            return self._stat_fast(kind, bias)
-        return self._stat_general(kind, bias)
+    def _pcols(self) -> list[Column]:
+        return [F.col(c) for c in self._partition_by]
 
-    def _stat_times(self) -> DataFrame:
-        """Time-decayed EWM mean (pandas ``ewm(halflife=..., times=...)``
+    def _pos_win(self) -> WindowSpec:
+        ocols = [F.col(c) if isinstance(c, str) else c for c in self._order_by]
+        return Window.partitionBy(*self._pcols()).orderBy(*ocols)
+
+    def _positions(self, *more: Column) -> DataFrame:
+        """The input plus position ``p`` (and ``more`` columns over the
+        same partition/order) — the one exchange of every EWM plan."""
+        return self._wdf.df.select(
+            "*", (F.row_number().over(self._pos_win()) - 1).alias(_P), *more
+        )
+
+    def _position_bands(self) -> tuple[DataFrame, _Band]:
+        """Integer bands of ``B`` positions, shared by every column."""
+        rho = 1.0 - self._alpha
+        B = self._band_size(rho)
+        df = self._positions().select(
+            "*",
+            F.expr(f"`{_P}` div {B}").alias(_BAND),
+            (F.col(_P) % F.lit(B)).cast("double").alias(_R),
+        )
+        # ln(1/rho)·r and ln(1/rho)·(B-1-r) both stay <= 75 decades
+        k = math.log(1.0 / rho) if rho > 0.0 else 0.0
+        return df, _Band(_BAND, _R, k, rho**B, rho ** (2 * B))
+
+    def _time_bands(self) -> tuple[DataFrame, _Band]:
+        """Time-decayed clock (pandas ``ewm(halflife=..., times=...)``
         generalized to per-row weights): weight of row j at row i is
         ``w_j · 0.5^((t_i − t_j)/halflife)`` — decay by ELAPSED TIME,
         so irregular sampling is handled exactly.
 
         The decay exponent in decades is the real-valued
-        ``L_j = (t_j/halflife)·log10(2)``; banding on ``floor(L/75)``
-        is exactly the machinery of the flag variants (constant offsets
-        cancel in N/D, so no anchor subtraction is needed). Bands here
-        bound the EXPONENT RANGE per band — a band holds whatever rows
-        fall inside 75·halflife/log10(2) of time, so window-state is
-        bounded by data density, not row count. ONE exchange on the
-        partition keys. Rows with NULL ``times`` carry no mass and
-        output NULL (pandas raises on NaT instead). Shared band
-        columns: all value columns ride one in-band WindowExec.
+        ``L_j = (t_j/halflife)·log10(2)``, banded on ``floor(L/75)``.
+        Bands here bound the EXPONENT RANGE per band — a band holds
+        whatever rows fall inside 75·halflife/log10(2) of time, so
+        window-state is bounded by data density, not row count. Rows
+        with NULL ``times`` carry no mass and output NULL (pandas raises
+        on NaT instead).
 
         Divergence at extreme gaps: after ~250 halflives with no
         observations the carried mass is < 1e-75 of a unit weight and
@@ -217,21 +368,6 @@ class WeightedEWM:
         echo the ancient mean — the weights there are far beneath
         double precision relative to any new observation.
         """
-        wdf = self._wdf
-        keys = self._key_cols()
-        pcols = [F.col(c) if isinstance(c, str) else c for c in self._partition_by]
-        ocols = [F.col(c) if isinstance(c, str) else c for c in self._order_by]
-        w = wdf.weights
-        tcol = self._times
-        cols = [
-            c
-            for c in wdf.numeric_columns()
-            if c not in keys and c != tcol
-        ]
-        if not cols:
-            raise ValueError("no numeric value columns outside the ewm keys")
-        LN10 = math.log(10.0)
-        DEC = 75.0
         # timestamp -> epoch seconds; numeric times pass through.
         # TIMESTAMP_NTZ / DATE cannot cast straight to double — route
         # through the session-zoned type (value-preserving under the
@@ -244,254 +380,29 @@ class WeightedEWM:
         # precision. The min rides the same exchange (unordered window).
         from pyspark.sql.types import DateType, TimestampNTZType
 
-        ttype = wdf.df.schema[tcol].dataType
+        tcol = self._times
         tsec = F.col(tcol)
-        if isinstance(ttype, (TimestampNTZType, DateType)):
+        if isinstance(
+            self._wdf.df.schema[tcol].dataType, (TimestampNTZType, DateType)
+        ):
             tsec = tsec.cast("timestamp")
         tsec = tsec.cast("double")
-        anchor_win = Window.partitionBy(*pcols)
-        tmin = F.min(tsec).over(anchor_win)
+        tmin = F.min(tsec).over(Window.partitionBy(*self._pcols()))
         L = (tsec - tmin) / F.lit(self._halflife_secs) * F.lit(
             math.log10(2.0)
         )
-
-        pos_win = Window.partitionBy(*pcols).orderBy(*ocols)
-        base = wdf.df.select(
+        df = self._positions().select(
             "*",
-            (F.row_number().over(pos_win) - 1).alias(_P),
-        ).select(
-            "*",
-            F.floor(L / F.lit(DEC)).cast("long").alias(_BAND),
-            (L - F.lit(DEC) * F.floor(L / F.lit(DEC))).alias(_R),
+            F.floor(L / F.lit(_DEC)).cast("long").alias(_BAND),
+            (L - F.lit(_DEC) * F.floor(L / F.lit(_DEC))).alias(_R),
         )
-        up = F.exp(F.lit(LN10) * F.col(_R))
-        down = F.exp(F.lit(-LN10) * F.col(_R))
-        carry1 = F.lit(10.0 ** -DEC)
+        return df, _Band(_BAND, _R, _LN10, 10.0**-_DEC, 10.0 ** (-2 * _DEC))
 
-        terms = []
-        names = []
-        for c in cols:
-            x = wdf._value(c)
-            valid = (
-                x.isNotNull() & w.isNotNull() & F.col(tcol).isNotNull()
-            )
-            m = F.when(valid, w).otherwise(F.lit(0.0))
-            xz = F.when(valid, x).otherwise(F.lit(0.0))
-            terms += [
-                (m * up).alias(f"__tD_{c}__"),
-                (m * xz * up).alias(f"__tN_{c}__"),
-            ]
-            names += [f"__tD_{c}__", f"__tN_{c}__"]
-            if self._min_periods > 0:
-                terms.append(valid.cast("long").alias(f"__tc_{c}__"))
-                names.append(f"__tc_{c}__")
-        staged = base.select("*", *terms)
-        in_win = (
-            Window.partitionBy(*pcols, F.col(_BAND))
-            .orderBy(F.col(_P))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        prefixed = staged.select(
-            "*", *[F.sum(n).over(in_win).alias(f"__p{n}") for n in names]
-        )
-        prev_win = (
-            Window.partitionBy(*pcols)
-            .orderBy(F.col(_BAND))
-            .rangeBetween(-1, -1)
-        )
-        all_prev_win = (
-            Window.partitionBy(*pcols)
-            .orderBy(F.col(_BAND))
-            .rangeBetween(Window.unboundedPreceding, -1)
-        )
-        carry_exprs = []
-        for n in names:
-            if n.startswith("__tc_"):
-                carry_exprs.append(
-                    F.coalesce(F.sum(n).over(all_prev_win), F.lit(0)).alias(
-                        f"__c{n}"
-                    )
-                )
-            else:
-                carry_exprs.append(
-                    F.coalesce(F.sum(n).over(prev_win), F.lit(0.0)).alias(
-                        f"__c{n}"
-                    )
-                )
-        j = prefixed.select("*", *carry_exprs)
-        out_cols = []
-        for c in cols:
-            D = (
-                F.col(f"__p__tD_{c}__") + carry1 * F.col(f"__c__tD_{c}__")
-            ) * down
-            N = (
-                F.col(f"__p__tN_{c}__") + carry1 * F.col(f"__c__tN_{c}__")
-            ) * down
-            expr = F.when(D > 0, F.try_divide(N, D))
-            if self._min_periods > 0:
-                n_valid = F.col(f"__p__tc_{c}__") + F.col(f"__c__tc_{c}__")
-                expr = F.when(n_valid >= F.lit(self._min_periods), expr)
-            out_cols.append(expr.alias(c))
-        sel_keys = [k for k in keys]
-        if tcol not in sel_keys:
-            sel_keys.append(tcol)
-        return j.select(*sel_keys, *out_cols)
-
-    def _stat_fast(self, kind: str, bias: bool = False) -> DataFrame:
-        wdf = self._wdf
-        alpha = self._alpha
-        rho = 1.0 - alpha
-        B = self._band_size(rho)
-        keys = self._key_cols()
-        pcols = [F.col(c) if isinstance(c, str) else c for c in self._partition_by]
-        ocols = [F.col(c) if isinstance(c, str) else c for c in self._order_by]
-        w = wdf.weights
-
-        cols = [c for c in wdf.numeric_columns() if c not in keys]
-        if not cols:
-            raise ValueError("no numeric value columns outside the ewm keys")
-
-        pos_win = Window.partitionBy(*pcols).orderBy(*ocols)
-        base = wdf.df.select(
-            "*",
-            (F.row_number().over(pos_win) - 1).alias(_P),
-        ).select(
-            "*",
-            F.expr(f"`{_P}` div {B}").alias(_BAND),
-            (F.col(_P) % F.lit(B)).cast("double").alias(_R),
-        )
-
-        # ln(1/rho)·r and ln(1/rho)·(B-1-r) both stay <= 75 decades.
-        if rho > 0.0:
-            ln_inv = math.log(1.0 / rho)
-            up = F.exp(F.lit(ln_inv) * F.col(_R))  # rho^(-r)
-            down = F.exp(F.lit(-ln_inv) * F.col(_R))  # rho^(+r)
-            up2 = F.exp(F.lit(2.0 * ln_inv) * F.col(_R))
-            carry1 = F.lit(rho**B)  # rho^B   (>= 1e-75 by band sizing)
-            carry2 = F.lit(rho ** (2 * B))  # rho^2B (>= 1e-150)
-        else:
-            up = down = up2 = F.lit(1.0)
-            carry1 = carry2 = F.lit(0.0)
-
-        part_keys = [*pcols, F.col(_BAND)]
-        in_win = (
-            Window.partitionBy(*part_keys)
-            .orderBy(F.col(_P))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-
-        # per-column scaled terms; NULL-safe mass rule of the kernels
-        need_var = kind in ("var", "std")
-        terms: list[Column] = []
-        names: list[str] = []
-        for c in cols:
-            x = wdf._value(c)
-            valid = x.isNotNull() & w.isNotNull()
-            m = F.when(valid, w).otherwise(F.lit(0.0))
-            # xz: x with invalid rows zeroed, NOT left NULL — `m * x` is
-            # 0 * NULL = NULL, and a NULL term makes the in-band prefix
-            # sum NULL whenever every row so far in the band is invalid,
-            # silently dropping the carried value at band starts.
-            xz = F.when(valid, x).otherwise(F.lit(0.0))
-            terms += [
-                (m * up).alias(f"__tD_{c}__"),
-                (m * xz * up).alias(f"__tN_{c}__"),
-            ]
-            names += [f"__tD_{c}__", f"__tN_{c}__"]
-            if need_var:
-                terms.append((m * xz * xz * up).alias(f"__tM_{c}__"))
-                names.append(f"__tM_{c}__")
-                if not bias:
-                    terms.append((m * m * up2).alias(f"__tV_{c}__"))
-                    names.append(f"__tV_{c}__")
-            if self._min_periods > 0:
-                terms.append(valid.cast("long").alias(f"__tc_{c}__"))
-                names.append(f"__tc_{c}__")
-
-        staged = base.select("*", *terms)
-        # one WindowExec for every in-band prefix (shared spec)
-        prefixed = staged.select(
-            "*", *[F.sum(n).over(in_win).alias(f"__p{n}") for n in names]
-        )
-
-        # Previous band's total as a RANGE frame over the band index —
-        # same partitioning, and the (keys, band, p) sort from the
-        # prefix window already satisfies the (keys, band) order, so
-        # this adds NO exchange, NO extra sort, and NO self-join (an
-        # earlier join formulation re-scanned the whole input for the
-        # carry branch). Bands are dense per partition (positions are
-        # contiguous), so band b−1 is the full previous band.
-        prev_win = (
-            Window.partitionBy(*pcols)
-            .orderBy(F.col(_BAND))
-            .rangeBetween(-1, -1)
-        )
-        all_prev_win = (
-            Window.partitionBy(*pcols)
-            .orderBy(F.col(_BAND))
-            .rangeBetween(Window.unboundedPreceding, -1)
-        )
-        carry_exprs = []
-        for n in names:
-            if n.startswith("__tc_"):  # counts don't decay: exact total
-                carry_exprs.append(
-                    F.coalesce(
-                        F.sum(n).over(all_prev_win), F.lit(0)
-                    ).alias(f"__c{n}")
-                )
-            else:
-                carry_exprs.append(
-                    F.coalesce(F.sum(n).over(prev_win), F.lit(0.0)).alias(
-                        f"__c{n}"
-                    )
-                )
-        j = prefixed.select("*", *carry_exprs)
-
-        out_cols: list[Column] = []
-        for c in cols:
-            D = (F.col(f"__p__tD_{c}__") + carry1 * F.col(f"__c__tD_{c}__")) * down
-            N = (F.col(f"__p__tN_{c}__") + carry1 * F.col(f"__c__tN_{c}__")) * down
-            mean = F.try_divide(N, D)
-            if kind == "mean":
-                expr = mean
-            else:
-                M = (
-                    F.col(f"__p__tM_{c}__") + carry1 * F.col(f"__c__tM_{c}__")
-                ) * down
-                biased = F.try_divide(M, D) - mean * mean
-                if bias:
-                    var = biased
-                else:
-                    V = (
-                        F.col(f"__p__tV_{c}__")
-                        + carry2 * F.col(f"__c__tV_{c}__")
-                    ) * down * down
-                    # D^2 - V is exactly 0 for a lone observation in
-                    # exact math, but the banded exp() rescale leaves
-                    # ~1e-16 relative garbage that the debias ratio
-                    # then amplifies; a relative threshold restores the
-                    # pandas denominator<=0 -> NaN behavior.
-                    denom = D * D - V
-                    var = F.when(
-                        denom > F.lit(1e-10) * (D * D),
-                        F.try_divide(D * D, denom) * biased,
-                    )
-                if kind == "var":
-                    expr = var
-                else:
-                    expr = F.when(var >= 0, F.sqrt(var))
-            expr = F.when(D > 0, expr)
-            if self._min_periods > 0:
-                n_valid = F.col(f"__p__tc_{c}__") + F.col(f"__c__tc_{c}__")
-                expr = F.when(n_valid >= F.lit(self._min_periods), expr)
-            out_cols.append(expr.alias(c))
-        return j.select(*keys, *out_cols)
-
-    def _stat_general(self, kind: str, bias: bool = False) -> DataFrame:
-        """``ignore_na=True`` and/or ``adjust=False`` — same banded
-        assembly as the fast path, with the decay exponent generalized
-        from a shared integer position to a per-column real log-decay
-        ``L``:
+    def _decay_bands(
+        self, valid: list[Column]
+    ) -> tuple[DataFrame, list[tuple[_Band, Column]]]:
+        """``ignore_na=True`` and/or ``adjust=False``: one log-decay clock
+        and kernel mass per column (``valid[i]`` masks column ``i``).
 
         * ``ignore_na=True``: the decay clock ticks only on valid rows
           (pandas relative positions), so ``L_j = q_j·log10(1/ρ)`` with
@@ -511,92 +422,53 @@ class WeightedEWM:
           (rows with ``w ≤ 0`` are treated as invalid) — the recursion
           renormalizes by running weight mass, which must not vanish.
 
-        Banding happens on ``floor(L/75)`` so every materialized power
-        of 10 stays within ±1e150 (±75 decades single decay, ±150 for
-        the squared-decay debias sum) — the fast path's guarantee,
-        band-local.
-
         Scale shape: still ONE exchange on the bare partition keys —
-        the per-column in-band windows partition by (keys, band_c) and
+        the per-column in-band windows partition by (keys, band_i) and
         the carry windows by (keys), and hash partitioning on (keys)
         satisfies both clusterings, so Catalyst adds sorts, not
-        shuffles. Per-column window passes replace the fast path's
-        single shared pass: the variants cost O(#columns) sorts.
+        shuffles: the variants cost O(#columns) sorts.
         """
-        wdf = self._wdf
         alpha = self._alpha
-        rho = 1.0 - alpha
-        keys = self._key_cols()
-        pcols = [F.col(c) if isinstance(c, str) else c for c in self._partition_by]
-        ocols = [F.col(c) if isinstance(c, str) else c for c in self._order_by]
-        w = wdf.weights
-        cols = [c for c in wdf.numeric_columns() if c not in keys]
-        if not cols:
-            raise ValueError("no numeric value columns outside the ewm keys")
-        need_var = kind in ("var", "std")
-
-        LN10 = math.log(10.0)
-        DEC = 75.0  # decades per band
-        d = -math.log10(rho)  # decades of decay per clock tick
-
-        pos_win = Window.partitionBy(*pcols).orderBy(*ocols)
+        w = self._wdf.weights
+        d = -math.log10(1.0 - alpha)  # decades of decay per clock tick
+        pos_win = self._pos_win()
         pos_cum = pos_win.rowsBetween(Window.unboundedPreceding, Window.currentRow)
         pos_prev = pos_win.rowsBetween(Window.unboundedPreceding, -1)
-
-        def _valid(x):
-            v = x.isNotNull() & w.isNotNull()
-            if not self._adjust:
-                v = v & (w > 0)
-            return v
+        idx = range(len(valid))
 
         # layer 1: position + per-column valid-row clock (one WindowExec)
-        lay1 = [(F.row_number().over(pos_win) - 1).alias(_P)]
-        for c in cols:
-            v = _valid(wdf._value(c))
-            if self._ignore_na:
-                lay1.append(
-                    F.sum(v.cast("double")).over(pos_cum).alias(f"__q_{c}__")
-                )
-        staged = wdf.df.select("*", *lay1)
-        q_of = {
-            c: (
-                F.col(f"__q_{c}__")
-                if self._ignore_na
-                else (F.col(_P) + F.lit(1.0))
+        if self._ignore_na:
+            df = self._positions(
+                *[
+                    F.sum(v.cast("double")).over(pos_cum).alias(_name("q", i))
+                    for i, v in enumerate(valid)
+                ]
             )
-            for c in cols
-        }
-
-        # layer 2 (adjust=False): previous valid row's weight and clock
-        if not self._adjust:
-            lay2 = []
-            for c in cols:
-                v = _valid(wdf._value(c))
-                lay2.append(
-                    F.last(F.when(v, w), ignorenulls=True)
-                    .over(pos_prev)
-                    .alias(f"__pw_{c}__")
-                )
-                lay2.append(
-                    F.last(F.when(v, q_of[c]), ignorenulls=True)
-                    .over(pos_prev)
-                    .alias(f"__pq_{c}__")
-                )
-            staged = staged.select("*", *lay2)
-
-        # layer 3: per-row log-decay step + kernel mass g
-        g_of: dict[str, Column] = {}
-        if self._adjust:
-            L_of = {c: q_of[c] * F.lit(d) for c in cols}
-            for c in cols:
-                v = _valid(wdf._value(c))
-                g_of[c] = F.when(v, w).otherwise(F.lit(0.0))
+            q = [F.col(_name("q", i)) for i in idx]
         else:
-            lay3 = []
-            for c in cols:
-                v = _valid(wdf._value(c))
-                pw = F.col(f"__pw_{c}__")
-                gap = q_of[c] - F.col(f"__pq_{c}__")
+            df = self._positions()
+            q = [F.col(_P) + F.lit(1.0) for _ in idx]
+
+        if self._adjust:
+            L = [qi * F.lit(d) for qi in q]
+            g = [F.when(v, w).otherwise(F.lit(0.0)) for v in valid]
+        else:
+            # layer 2: previous valid row's weight and clock
+            df = df.select(
+                "*",
+                *[
+                    F.last(F.when(v, e), ignorenulls=True)
+                    .over(pos_prev)
+                    .alias(_name(fam, i))
+                    for i, v in enumerate(valid)
+                    for fam, e in (("wprev", w), ("qprev", q[i]))
+                ],
+            )
+            # layer 3: per-row log-decay step + kernel mass g
+            steps, g = [], []
+            for i, v in enumerate(valid):
+                pw = F.col(_name("wprev", i))
+                gap = q[i] - F.col(_name("qprev", i))
                 # z = log10(α·w / (ρ^gap · w_prev)); computed in log
                 # space so century-long gaps can't underflow ρ^gap
                 z = (
@@ -609,12 +481,12 @@ class WeightedEWM:
                 step = F.greatest(z, F.lit(0.0)) + F.log10(
                     F.lit(1.0) + F.pow(F.lit(10.0), -F.abs(zc))
                 )
-                lay3.append(
+                steps.append(
                     F.when(v & pw.isNotNull(), step)
                     .otherwise(F.lit(0.0))
-                    .alias(f"__c_{c}__")
+                    .alias(_name("step", i))
                 )
-                g_of[c] = (
+                g.append(
                     F.when(v & pw.isNull(), F.lit(1.0))
                     .when(
                         v,
@@ -625,132 +497,108 @@ class WeightedEWM:
                     )
                     .otherwise(F.lit(0.0))
                 )
-            staged = staged.select("*", *lay3)
             # layer 4: L = running sum of the log-decay steps
-            staged = staged.select(
+            df = df.select("*", *steps).select(
                 "*",
                 *[
-                    F.sum(f"__c_{c}__").over(pos_cum).alias(f"__L_{c}__")
-                    for c in cols
+                    F.sum(_name("step", i)).over(pos_cum).alias(_name("L", i))
+                    for i in idx
                 ],
             )
-            L_of = {c: F.col(f"__L_{c}__") for c in cols}
+            L = [F.col(_name("L", i)) for i in idx]
 
-        # layer 5: band split + scaled terms (all pure row-local math)
-        lay5 = []
-        term_names: dict[str, list[str]] = {}
-        for c in cols:
-            x = wdf._value(c)
-            v = _valid(x)
-            band = F.floor(L_of[c] / F.lit(DEC)).cast("long")
-            rp = L_of[c] - F.lit(DEC) * band
-            up = F.exp(F.lit(LN10) * rp)
-            up2 = F.exp(F.lit(2.0 * LN10) * rp)
-            g = g_of[c]
-            xz = F.when(v, x).otherwise(F.lit(0.0))
-            lay5 += [
-                band.alias(f"__band_{c}__"),
-                rp.alias(f"__rp_{c}__"),
-                (g * up).alias(f"__tD_{c}__"),
-                (g * xz * up).alias(f"__tN_{c}__"),
+        # layer 5: band split (pure row-local math)
+        split, clocks = [], []
+        for i in idx:
+            band = F.floor(L[i] / F.lit(_DEC)).cast("long")
+            split += [
+                band.alias(_name("band", i)),
+                (L[i] - F.lit(_DEC) * band).alias(_name("r", i)),
             ]
-            names = [f"__tD_{c}__", f"__tN_{c}__"]
-            if need_var:
-                lay5.append((g * xz * xz * up).alias(f"__tM_{c}__"))
-                names.append(f"__tM_{c}__")
-                if not bias:
-                    lay5.append((g * g * up2).alias(f"__tV_{c}__"))
-                    names.append(f"__tV_{c}__")
-            if self._min_periods > 0:
-                lay5.append(v.cast("long").alias(f"__tc_{c}__"))
-                names.append(f"__tc_{c}__")
-            term_names[c] = names
-        staged = staged.select("*", *lay5)
+            clock = _Band(_name("band", i), _name("r", i), _LN10,
+                          10.0**-_DEC, 10.0 ** (-2 * _DEC))
+            clocks.append((clock, g[i]))
+        return df.select("*", *split), clocks
 
-        # layers 6+7 per column: in-band prefix + previous-band carry.
-        # hashpartitioning(keys) satisfies both (keys, band_c) and
-        # (keys) clustering, so these add sorts but no exchange.
-        carry1 = F.lit(10.0 ** -DEC)
-        carry2 = F.lit(10.0 ** (-2 * DEC))
-        exprs = []
-        for c in cols:
-            in_win = (
-                Window.partitionBy(*pcols, F.col(f"__band_{c}__"))
-                .orderBy(F.col(_P))
-                .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-            )
-            prev_win = (
-                Window.partitionBy(*pcols)
-                .orderBy(F.col(f"__band_{c}__"))
-                .rangeBetween(-1, -1)
-            )
-            all_prev_win = (
-                Window.partitionBy(*pcols)
-                .orderBy(F.col(f"__band_{c}__"))
-                .rangeBetween(Window.unboundedPreceding, -1)
-            )
-            for n in term_names[c]:
-                exprs.append(F.sum(n).over(in_win).alias(f"__p{n}"))
-                if n.startswith("__tc_"):
-                    exprs.append(
-                        F.coalesce(
-                            F.sum(n).over(all_prev_win), F.lit(0)
-                        ).alias(f"__c{n}")
-                    )
-                else:
-                    exprs.append(
-                        F.coalesce(F.sum(n).over(prev_win), F.lit(0.0)).alias(
-                            f"__c{n}"
-                        )
-                    )
-        j = staged.select("*", *exprs)
+    # -- the one kernel -----------------------------------------------------
 
-        out_cols: list[Column] = []
-        for c in cols:
-            down = F.exp(F.lit(-LN10) * F.col(f"__rp_{c}__"))
-            D = (F.col(f"__p__tD_{c}__") + carry1 * F.col(f"__c__tD_{c}__")) * down
-            N = (F.col(f"__p__tN_{c}__") + carry1 * F.col(f"__c__tN_{c}__")) * down
-            mean = F.try_divide(N, D)
-            if kind == "mean":
-                expr = mean
+    def _ewm(self, outs: list[tuple[str, str, str, str]], bias: bool) -> DataFrame:
+        """Statistics ``(alias, kind, x, y)`` — ``y == x`` for a
+        univariate one — over the banded totals of their pair sums.
+        Each (x, y) pair is masked pairwise-complete (x, y AND w
+        non-null); masked rows still advance the decay clock unless
+        ``ignore_na``."""
+        wdf = self._wdf
+        w = wdf.weights
+        pairs = list(dict.fromkeys((x, y) for _, _, x, y in outs))
+        valid = []
+        for x, y in pairs:
+            v = wdf._value(x).isNotNull()
+            if y != x:
+                v = v & wdf._value(y).isNotNull()
+            valid.append(v & w.isNotNull())
+        # alpha == 1 degenerates identically for every flag combination
+        # (only the current row has mass), so the shared position bands
+        # cover it.
+        if (self._adjust and not self._ignore_na) or self._alpha == 1.0:
+            if self._times is not None:
+                valid = [v & F.col(self._times).isNotNull() for v in valid]
+                df, band = self._time_bands()
             else:
-                M = (
-                    F.col(f"__p__tM_{c}__") + carry1 * F.col(f"__c__tM_{c}__")
-                ) * down
-                biased = F.try_divide(M, D) - mean * mean
-                if bias:
-                    var = biased
-                else:
-                    V = (
-                        F.col(f"__p__tV_{c}__")
-                        + carry2 * F.col(f"__c__tV_{c}__")
-                    ) * down * down
-                    # D^2 - V is exactly 0 for a lone observation in
-                    # exact math, but the banded exp() rescale leaves
-                    # ~1e-16 relative garbage that the debias ratio
-                    # then amplifies; a relative threshold restores the
-                    # pandas denominator<=0 -> NaN behavior.
-                    denom = D * D - V
-                    var = F.when(
-                        denom > F.lit(1e-10) * (D * D),
-                        F.try_divide(D * D, denom) * biased,
-                    )
-                if kind == "var":
-                    expr = var
-                else:
-                    expr = F.when(var >= 0, F.sqrt(var))
-            expr = F.when(D > 0, expr)
+                df, band = self._position_bands()
+            clocks = [(band, F.when(v, w).otherwise(F.lit(0.0))) for v in valid]
+        else:
+            if not self._adjust:
+                valid = [v & (w > 0) for v in valid]
+            df, clocks = self._decay_bands(valid)
+
+        groups: dict[_Band, dict] = {}
+        for i, ((x, y), v, (band, m)) in enumerate(zip(pairs, valid, clocks)):
+            kinds = {k for _, k, *xy in outs if tuple(xy) == (x, y)}
+            # x with invalid rows zeroed, NOT left NULL — `m * x` is
+            # 0 * NULL = NULL, and a NULL term makes the in-band prefix
+            # sum NULL whenever every row so far in the band is invalid,
+            # silently dropping the carried value at band starts.
+            xz = F.when(v, wdf._value(x)).otherwise(F.lit(0.0))
+            yz = xz if y == x else F.when(v, wdf._value(y)).otherwise(F.lit(0.0))
+            terms = groups.setdefault(band, {})
+            terms[("D", i)] = (m, 1)
+            terms[("X", i)] = (m * xz, 1)
+            if y != x:
+                terms[("Y", i)] = (m * yz, 1)
+            if kinds != {"mean"}:
+                terms[("XY", i)] = (m * xz * yz, 1)
+            if "corr" in kinds or (not bias and kinds != {"mean"}):
+                terms[("V", i)] = (m * m, 2)
+            if "corr" in kinds:
+                terms[("XX", i)] = (m * xz * xz, 1)
+                terms[("YY", i)] = (m * yz * yz, 1)
             if self._min_periods > 0:
-                n_valid = F.col(f"__p__tc_{c}__") + F.col(f"__c__tc_{c}__")
-                expr = F.when(n_valid >= F.lit(self._min_periods), expr)
-            out_cols.append(expr.alias(c))
-        return j.select(*keys, *out_cols)
+                terms[("n", i)] = (v.cast("long"), 0)
+        df, totals = _banded_totals(df, self._pcols(), groups)
+
+        out_cols = []
+        for alias, kind, x, y in outs:
+            i = pairs.index((x, y))
+            t = {tag: tot for (tag, j), tot in totals.items() if j == i}
+            t.setdefault("Y", t["X"])
+            out_cols.append(
+                _assemble(kind, t, bias, self._min_periods).alias(alias)
+            )
+        return df.select(*self._key_cols(), *out_cols)
+
+    def _stat(self, kind: str, bias: bool = False) -> DataFrame:
+        if self._times is not None and kind != "mean":
+            raise NotImplementedError(
+                "times= supports mean() only (pandas restriction)"
+            )
+        keys = self._key_cols()
+        cols = [c for c in self._wdf.numeric_columns() if c not in keys]
+        if not cols:
+            raise ValueError("no numeric value columns outside the ewm keys")
+        return self._ewm([(c, kind, c, c) for c in cols], bias)
 
     # -- pairwise statistics ------------------------------------------------
-
-    def _pair_stat(self, kind: str, x: str, y: str, bias: bool) -> DataFrame:
-        """Single-stat wrapper over :meth:`pair_stats`."""
-        return self.pair_stats(x, y, stats=(kind,), bias=bias)
 
     def pair_stats(
         self,
@@ -768,11 +616,9 @@ class WeightedEWM:
 
         Pairwise-complete mask (x, y AND w non-null — pandas aligns the
         pair before the recursion); masked rows still advance the decay
-        clock. Same banded-rescale machinery as :meth:`_stat_fast` with
-        cross-moment terms (Σρ^Δ·w·x·y etc.); ``bias=False`` applies
-        the pandas debias factor ``D²/(D²−V)`` to cov and both
-        variances (it cancels in corr). ONE exchange on the partition
-        keys, like every EWM statistic.
+        clock. ``bias=False`` applies the pandas debias factor
+        ``D²/(D²−V)`` to cov (it cancels in corr). ONE exchange on the
+        partition keys, like every EWM statistic.
         """
         stats = tuple(stats)
         bad = [s for s in stats if s not in ("cov", "corr")]
@@ -786,147 +632,17 @@ class WeightedEWM:
                 "ewm pairwise cov/corr supports the default "
                 "adjust=True, ignore_na=False flags (no times=)"
             )
-        wdf = self._wdf
-        alpha = self._alpha
-        rho = 1.0 - alpha
-        B = self._band_size(rho)
-        keys = self._key_cols()
-        pcols = [F.col(c) if isinstance(c, str) else c for c in self._partition_by]
-        ocols = [F.col(c) if isinstance(c, str) else c for c in self._order_by]
-        w = wdf.weights
-
-        pos_win = Window.partitionBy(*pcols).orderBy(*ocols)
-        base = wdf.df.select(
-            "*",
-            (F.row_number().over(pos_win) - 1).alias(_P),
-        ).select(
-            "*",
-            F.expr(f"`{_P}` div {B}").alias(_BAND),
-            (F.col(_P) % F.lit(B)).cast("double").alias(_R),
-        )
-        if rho > 0.0:
-            ln_inv = math.log(1.0 / rho)
-            up = F.exp(F.lit(ln_inv) * F.col(_R))
-            down = F.exp(F.lit(-ln_inv) * F.col(_R))
-            up2 = F.exp(F.lit(2.0 * ln_inv) * F.col(_R))
-            carry1 = F.lit(rho**B)
-            carry2 = F.lit(rho ** (2 * B))
-        else:
-            up = down = up2 = F.lit(1.0)
-            carry1 = carry2 = F.lit(0.0)
-
-        xv = wdf._value(x)
-        yv = wdf._value(y)
-        valid = xv.isNotNull() & yv.isNotNull() & w.isNotNull()
-        m = F.when(valid, w).otherwise(F.lit(0.0))
-        xz = F.when(valid, xv).otherwise(F.lit(0.0))
-        yz = F.when(valid, yv).otherwise(F.lit(0.0))
-        need_corr = "corr" in stats
-        terms = [
-            (m * up).alias("__tD__"),
-            (m * xz * up).alias("__tX__"),
-            (m * yz * up).alias("__tY__"),
-            (m * xz * yz * up).alias("__tXY__"),
-        ]
-        names = ["__tD__", "__tX__", "__tY__", "__tXY__"]
-        if need_corr or not bias:
-            # corr needs both variances; unbiased cov needs V
-            terms.append((m * m * up2).alias("__tV__"))
-            names.append("__tV__")
-        if need_corr:
-            terms += [
-                (m * xz * xz * up).alias("__tXX__"),
-                (m * yz * yz * up).alias("__tYY__"),
-            ]
-            names += ["__tXX__", "__tYY__"]
-        if self._min_periods > 0:
-            terms.append(valid.cast("long").alias("__tc__"))
-            names.append("__tc__")
-
-        staged = base.select("*", *terms)
-        in_win = (
-            Window.partitionBy(*pcols, F.col(_BAND))
-            .orderBy(F.col(_P))
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        prefixed = staged.select(
-            "*", *[F.sum(n).over(in_win).alias(f"__p{n}") for n in names]
-        )
-        prev_win = (
-            Window.partitionBy(*pcols)
-            .orderBy(F.col(_BAND))
-            .rangeBetween(-1, -1)
-        )
-        all_prev_win = (
-            Window.partitionBy(*pcols)
-            .orderBy(F.col(_BAND))
-            .rangeBetween(Window.unboundedPreceding, -1)
-        )
-        carry_exprs = []
-        for n in names:
-            if n == "__tc__":
-                carry_exprs.append(
-                    F.coalesce(F.sum(n).over(all_prev_win), F.lit(0)).alias(
-                        f"__c{n}"
-                    )
-                )
-            else:
-                carry_exprs.append(
-                    F.coalesce(F.sum(n).over(prev_win), F.lit(0.0)).alias(
-                        f"__c{n}"
-                    )
-                )
-        j = prefixed.select("*", *carry_exprs)
-
-        def tot(n: str, second_order: bool = False) -> Column:
-            c = carry2 if second_order else carry1
-            v = (F.col(f"__p{n}") + c * F.col(f"__c{n}")) * down
-            return v * down if second_order else v
-
-        D = tot("__tD__")
-        X = tot("__tX__")
-        Y = tot("__tY__")
-        XY = tot("__tXY__")
-        mx = F.try_divide(X, D)
-        my = F.try_divide(Y, D)
-        cov_b = F.try_divide(XY, D) - mx * my
-        if need_corr or not bias:
-            V = tot("__tV__", second_order=True)
-            denom = D * D - V
-            factor = F.when(
-                denom > F.lit(1e-10) * (D * D), F.try_divide(D * D, denom)
-            )
-        out_cols = []
-        for kind in stats:
-            if kind == "cov":
-                expr = cov_b if bias else factor * cov_b
-            else:
-                XX = tot("__tXX__")
-                YY = tot("__tYY__")
-                var_x = F.try_divide(XX, D) - mx * mx
-                var_y = F.try_divide(YY, D) - my * my
-                # the debias factor cancels in the ratio; the guard (a
-                # lone effective observation) must still null the result
-                expr = F.when(
-                    factor.isNotNull() & (var_x > 0) & (var_y > 0),
-                    F.try_divide(cov_b, F.sqrt(var_x * var_y)),
-                )
-            expr = F.when(D > 0, expr)
-            if self._min_periods > 0:
-                n_valid = F.col("__p__tc__") + F.col("__c__tc__")
-                expr = F.when(n_valid >= F.lit(self._min_periods), expr)
-            out_cols.append(expr.alias(f"{x}_{y}_{kind}"))
-        return j.select(*keys, *out_cols)
+        return self._ewm([(f"{x}_{y}_{k}", k, x, y) for k in stats], bias)
 
     def cov(self, x: str, y: str, bias: bool = False) -> DataFrame:
         """EWM weighted covariance of ``x`` vs ``y``; output column
         ``{x}_{y}_cov`` alongside the partition/order keys."""
-        return self._pair_stat("cov", x, y, bias)
+        return self.pair_stats(x, y, stats=("cov",), bias=bias)
 
     def corr(self, x: str, y: str) -> DataFrame:
         """EWM weighted Pearson correlation of ``x`` vs ``y``; output
         column ``{x}_{y}_corr`` (the pandas debias factor cancels)."""
-        return self._pair_stat("corr", x, y, bias=False)
+        return self.pair_stats(x, y, stats=("corr",), bias=False)
 
     # -- statistics ---------------------------------------------------------
 

@@ -120,25 +120,29 @@ def weighted_chi2(
         if c not in wdf.df.columns:
             raise KeyError(f"column {c!r} not in frame")
     w = wdf.weights
+    # reserved names: a user category column may be called m, o, g, ...
+    m, o, rt, ct, g, nr, nc = (
+        f"__pw_chi2_{s}__" for s in ("m", "o", "rt", "ct", "g", "nr", "nc")
+    )
     gs = wdf.df.groupingSets(
         [[row_col, col_col], [row_col], [col_col], []],
         row_col, col_col,
     ).agg(
-        F.sum(w).alias("m"),
+        F.sum(w).alias(m),
         F.grouping(row_col).alias("__pw_gr__"),
         F.grouping(col_col).alias("__pw_gc__"),
     )
     cells = gs.where((F.col("__pw_gr__") == 0) & (F.col("__pw_gc__") == 0)).select(
-        row_col, col_col, F.col("m").alias("o")
+        row_col, col_col, F.col(m).alias(o)
     )
     rtot = gs.where((F.col("__pw_gr__") == 0) & (F.col("__pw_gc__") == 1)).select(
-        row_col, F.col("m").alias("rt")
+        row_col, F.col(m).alias(rt)
     )
     ctot = gs.where((F.col("__pw_gr__") == 1) & (F.col("__pw_gc__") == 0)).select(
-        col_col, F.col("m").alias("ct")
+        col_col, F.col(m).alias(ct)
     )
     grand = gs.where((F.col("__pw_gr__") == 1) & (F.col("__pw_gc__") == 1)).select(
-        F.col("m").alias("g")
+        F.col(m).alias(g)
     )
     # the FULL R×C grid, not just observed combos: an empty cell has
     # O = 0 but E = rt·ct/g > 0 and still contributes E to the χ² sum
@@ -154,20 +158,20 @@ def weighted_chi2(
         ],
         how="left",
     ).crossJoin(F.broadcast(grand))
-    o = F.coalesce(F.col("o"), F.lit(0.0))
-    e = F.col("rt") * F.col("ct") / F.col("g")
-    term = F.try_divide((o - e) * (o - e), e)
+    obs = F.coalesce(F.col(o), F.lit(0.0))
+    e = F.col(rt) * F.col(ct) / F.col(g)
+    term = F.try_divide((obs - e) * (obs - e), e)
     agg = (
         j.agg(
             F.sum(term).alias("chi2"),
             # every grid row carries the same grand total
-            F.min("g").alias("n"),
+            F.min(g).alias("n"),
         )
-        .crossJoin(F.broadcast(rtot.agg(F.count(F.lit(1)).alias("_r"))))
-        .crossJoin(F.broadcast(ctot.agg(F.count(F.lit(1)).alias("_c"))))
+        .crossJoin(F.broadcast(rtot.agg(F.count(F.lit(1)).alias(nr))))
+        .crossJoin(F.broadcast(ctot.agg(F.count(F.lit(1)).alias(nc))))
     )
-    rr = F.col("_r") - F.lit(1)
-    cc = F.col("_c") - F.lit(1)
+    rr = F.col(nr) - F.lit(1)
+    cc = F.col(nc) - F.lit(1)
     return agg.select(
         "chi2",
         (rr * cc).cast("long").alias("dof"),

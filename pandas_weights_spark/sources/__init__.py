@@ -29,11 +29,12 @@ TABLES = (
 
 def _nanos_timestamp_cols(path: str) -> list[str]:
     """Columns stored as parquet TIMESTAMP(NANOS) — Spark 4 refuses them
-    unless read as long. Footer-only inspection (no data I/O)."""
-    import pyarrow.parquet as pq
+    unless read as long. Footer-only inspection (no data I/O); ``path``
+    is one parquet file or a directory of them."""
+    import pyarrow.dataset as ds
     import pyarrow.types as pt
 
-    schema = pq.read_schema(path)
+    schema = ds.dataset(path, format="parquet").schema
     return [
         f.name
         for f in schema

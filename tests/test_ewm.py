@@ -33,10 +33,12 @@ def _spark_ewm(spark, pdf, stat, weights="w", **ewm_kw):
     return out.sort_values(["g", "i"]).reset_index(drop=True)["x"].to_numpy()
 
 
-def _pandas_ewm(pdf, stat, alpha, adjust=True, ignore_na=False):
+def _pandas_ewm(pdf, stat, alpha, adjust=True, ignore_na=False, col="x",
+                min_periods=0):
     parts = []
     for g, grp in pdf.sort_values("i").groupby("g"):
-        e = grp["x"].ewm(alpha=alpha, adjust=adjust, ignore_na=ignore_na)
+        e = grp[col].ewm(alpha=alpha, adjust=adjust, ignore_na=ignore_na,
+                         min_periods=min_periods)
         s = getattr(e, stat[0])(**{k: v for k, v in stat[1].items()})
         parts.append(pd.DataFrame({"g": g, "i": grp["i"], "x": s}))
     got = pd.concat(parts).sort_values(["g", "i"]).reset_index(drop=True)
@@ -93,6 +95,81 @@ def test_flag_matrix_multi_band(spark, adjust, ignore_na):
     exp = _pandas_ewm(pdf, ("mean", {}), 0.99, adjust=adjust,
                       ignore_na=ignore_na)
     np.testing.assert_allclose(got, exp, rtol=1e-8, atol=1e-11, equal_nan=True)
+
+
+def _pdf_two(seed=24, n=300, n_keys=2):
+    # two value columns with independent NaN patterns: per-column
+    # validity gives the variants one decay clock (band group) each
+    pdf = _pdf(seed=seed, n=n, n_keys=n_keys, nan_frac=0.2)
+    y = np.random.default_rng(seed + 1).normal(size=n)
+    y[np.random.default_rng(seed + 2).random(n) < 0.1] = np.nan
+    pdf["y"] = y
+    return pdf
+
+
+@pytest.mark.parametrize("adjust", [True, False], ids=["adj", "noadj"])
+@pytest.mark.parametrize("ignore_na", [False, True], ids=["clock", "ignna"])
+@pytest.mark.parametrize(
+    "stat",
+    [("mean", {}), ("var", {"bias": False}), ("std", {"bias": True})],
+    ids=["mean", "var", "std_biased"],
+)
+def test_flag_matrix_two_columns_min_periods(spark, adjust, ignore_na, stat):
+    # alpha=0.9 -> a band per 75 valid rows: ~150 rows per key cross a
+    # band edge; min_periods=3 gates each column on its own count
+    alpha = 0.9
+    pdf = _pdf_two()
+    sdf = spark.createDataFrame(pdf)
+    e = wt(sdf, "w").ewm(
+        order_by=["i"], partition_by=["g"], alpha=alpha, min_periods=3,
+        adjust=adjust, ignore_na=ignore_na,
+    )
+    out = getattr(e, stat[0])(**stat[1]).toPandas()
+    out = out.sort_values(["g", "i"]).reset_index(drop=True)
+    for c in ("x", "y"):
+        exp = _pandas_ewm(pdf, stat, alpha, adjust=adjust,
+                          ignore_na=ignore_na, col=c, min_periods=3)
+        np.testing.assert_allclose(
+            out[c].to_numpy(dtype=float), exp, rtol=1e-8, atol=1e-11,
+            equal_nan=True, err_msg=c,
+        )
+
+
+@pytest.mark.parametrize(
+    "flags",
+    [{}, {"adjust": False, "ignore_na": True}],
+    ids=["default", "noadj_ignna"],
+)
+def test_value_columns_named_like_kernel_tags(spark, flags):
+    # value columns named after the kernel's term tags (any case: Spark
+    # resolves names case-insensitively) must give the same bits as
+    # plain names
+    pdf = _pdf_two(seed=25, n=120)
+    pdf["z"] = pdf["x"] * 0.5 + 1.0
+    pdf["u"] = pdf["y"] - 2.0
+    tags = {"x": "X", "y": "D", "z": "V", "u": "n"}
+    sdf = spark.createDataFrame(pdf)
+    tagged = sdf.select("g", "i", "w", *[F.col(a).alias(b) for a, b in tags.items()])
+
+    def run(frame, stat):
+        e = wt(frame, "w").ewm(
+            order_by=["i"], partition_by=["g"], alpha=0.3, min_periods=2,
+            **flags,
+        )
+        out = stat(e).toPandas().sort_values(["g", "i"])
+        return out.drop(columns=["g", "i"]).to_numpy(dtype=float)
+
+    def var(e):
+        return e.var(bias=False)
+
+    np.testing.assert_array_equal(
+        run(tagged, var), run(sdf.select("g", "i", "w", *tags), var)
+    )
+    if not flags:  # pairwise stats support the default flags only
+        np.testing.assert_array_equal(
+            run(tagged, lambda e: e.pair_stats("X", "D")),
+            run(sdf, lambda e: e.pair_stats("x", "y")),
+        )
 
 
 def test_noadjust_weighted_recursion(spark):

@@ -91,8 +91,11 @@ class TestPlanAuditGate:
     def _audit(self):
         import importlib.util
 
+        from pathlib import Path
+
         spec = importlib.util.spec_from_file_location(
-            "plan_audit", "/root/repo/tools/plan_audit.py"
+            "plan_audit",
+            Path(__file__).resolve().parents[1] / "tools" / "plan_audit.py",
         )
         mod = importlib.util.module_from_spec(spec)
         spec.loader.exec_module(mod)

@@ -134,6 +134,21 @@ class TestChi2:
         out = wt(df, "w").chi2("r", "c").collect()[0]
         assert out["chi2"] == pytest.approx(0.0, abs=1e-12)
 
+    @pytest.mark.parametrize("side", ["r", "c"])
+    @pytest.mark.parametrize("name", ["g", "m", "rt", "ct", "o", "_r", "_c", "G"])
+    def test_category_named_like_an_intermediate(self, spark, name, side):
+        # a category column named after an internal alias must give the
+        # same answer as the plain r/c names (no AMBIGUOUS_REFERENCE)
+        rows = [("a", "p", 1.0), ("a", "q", 2.0), ("b", "p", 3.0),
+                ("b", "q", 7.0), ("c", None, 4.0), (None, "q", 5.0)]
+        df = spark.createDataFrame(rows, "r string, c string, w double")
+        ref = wt(df, "w").chi2("r", "c").collect()[0]
+        renamed = df.withColumnRenamed(side, name)
+        cols = [name if s == side else s for s in ("r", "c")]
+        got = wt(renamed, "w").chi2(*cols).collect()[0]
+        # partial sums may merge in another order: compare to 1e-12
+        assert got.asDict() == pytest.approx(ref.asDict(), rel=1e-12)
+
     def test_one_scan_and_no_python(self, spark):
         import pandas_weights_spark.plans as P
 

@@ -383,6 +383,44 @@ class TestCdfAndVariantPlans:
             assert plan.count("Scan parquet") == 1, (kw, plan)
             assert not P.has_python_eval(df)
 
+    def test_ewm_pair_and_times_one_exchange(self, lineitem):
+        # pairwise cov+corr (shared position bands) and the times= mean
+        # (real-valued time bands) run through the same banded builder:
+        # one exchange on the partition keys, one scan
+        w = wt(
+            lineitem.select(
+                "l_orderkey", "l_linenumber", "l_extendedprice",
+                "l_discount", "l_quantity", "l_returnflag", "l_shipdate",
+            ),
+            "l_quantity",
+        )
+        pair = (
+            w[["l_extendedprice", "l_discount"]]
+            .ewm(
+                order_by=["l_orderkey", "l_linenumber"],
+                partition_by=["l_returnflag"],
+                alpha=0.1,
+                min_periods=2,
+            )
+            .pair_stats("l_extendedprice", "l_discount")
+        )
+        times = (
+            w[["l_extendedprice", "l_shipdate"]]
+            .ewm(
+                order_by=["l_shipdate", "l_orderkey", "l_linenumber"],
+                partition_by=["l_returnflag"],
+                halflife="7 days",
+                times="l_shipdate",
+            )
+            .mean()
+        )
+        for df in (pair, times):
+            plan = P.physical_plan(df)
+            assert P.count_exchanges(df) == 1, plan
+            assert plan.count("Scan parquet") == 1, plan
+            assert "__pw_ewm_band__" in plan, plan
+            assert not P.has_python_eval(df)
+
 
 class TestRound5Plans:
     def test_chunk_neardup_no_python_no_cartesian(self, spark):

@@ -86,3 +86,36 @@ class TestZOrder:
         df = spark.createDataFrame([(1.0, 5.0)] * 10, "x double, y double")
         keyed, name = zorder_value(df, ["x", "y"])
         assert keyed.select(name).distinct().count() == 1
+
+
+class TestLoadTable:
+    def test_multi_file_directory_with_nanos_timestamp(self, spark, tmp_path):
+        # a table stored as a directory of parquet files (the layout
+        # Spark itself writes) with a TIMESTAMP(NANOS) column
+        import pandas as pd
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        table_dir = tmp_path / "events.parquet"
+        table_dir.mkdir()
+        ts = pd.DatetimeIndex([
+            pd.Timestamp("2024-01-01 00:00:00.000001999"),
+            pd.Timestamp("2024-01-02 12:30:00"),
+            pd.Timestamp("2024-03-04 05:06:07.123456789"),
+        ])
+        for i, part in enumerate(([0, 1], [2])):
+            pq.write_table(
+                pa.table({
+                    "id": pa.array(part, pa.int64()),
+                    "ts": pa.array(ts[part], pa.timestamp("ns")),
+                }),
+                str(table_dir / f"part-{i}.parquet"),
+            )
+        df = load_table(spark, str(tmp_path), "events")
+        assert dict(df.dtypes)["ts"] == "timestamp"
+        got = sorted(
+            tuple(r)
+            for r in df.select("id", F.unix_micros("ts")).collect()
+        )
+        # microsecond truncation of the nanosecond values
+        assert got == [(i, t.value // 1000) for i, t in enumerate(ts)]

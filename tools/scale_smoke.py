@@ -19,9 +19,10 @@ are not gated — they always run (~1 min at rows_m=20).
 from __future__ import annotations
 
 import sys
+from pathlib import Path
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 
 def main() -> int:
