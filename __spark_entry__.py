@@ -195,8 +195,8 @@ def _q_resample_2d(spark, sf_dir):
     # pre-shift + label shift, resample.py) — in ONE scan: each row
     # explodes to its two (edge, bucket) labels and a single tagged
     # groupBy aggregates both closures (resample.agg_all and weighted
-    # groupby share the same _KERNELS, so values are identical to the
-    # per-closure passes the query previously unioned).
+    # groupby build the same expressions, so values are identical to
+    # the per-closure passes the query previously unioned).
     wdf = wt(_li(spark, sf_dir), _W)[["l_extendedprice", "l_discount"]]
     buckets = [
         F.struct(
@@ -3112,7 +3112,8 @@ def _q_weighted_tests(spark, sf_dir):
     # weighted inferential stats (inference.py), long format: Welch's
     # two-sample t (price: returnflag A vs R, one masked moment
     # aggregate) + chi-square independence of returnflag x linestatus
-    # (one grouping-sets pass, full-grid expected masses). Masses are
+    # (one cell aggregate feeding the margins, full-grid expected
+    # masses). Masses are
     # integral so the moment sums are exact; the statistic algebra is
     # mirrored term-for-term in the oracle and ROUND 6 absorbs the
     # engines' summation-order ulps in the 6-term chi2 sum.

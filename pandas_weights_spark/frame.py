@@ -292,7 +292,7 @@ class WeightedDataFrame:
         trivially cross-joined). Grouped variant:
         ``WeightedGroupBy.describe`` (with the binned 100 TB switch).
         """
-        from pandas_weights_spark.groupby import _KERNELS
+        from pandas_weights_spark.groupby import _stat_exprs
         from pandas_weights_spark.quantile import (
             quantile_col_name,
             weighted_quantiles,
@@ -302,14 +302,9 @@ class WeightedDataFrame:
         cols = list(subset) if subset is not None else self.numeric_columns()
         if not cols:
             raise ValueError("no numeric columns to aggregate")
-        w = self.weights
         stats = ["count", "mean", "std", "min", "max"]
         moments = self._df.agg(
-            *[
-                _KERNELS[s](self._value(c), w).alias(f"{c}_{s}")
-                for c in cols
-                for s in stats
-            ]
+            *[e for c in cols for e in _stat_exprs(self, c, stats)]
         )
         quants = weighted_quantiles(self, qs, subset=cols)
         joined = moments.crossJoin(quants)

@@ -31,25 +31,42 @@ if TYPE_CHECKING:
 __all__ = ["WeightedGroupBy"]
 
 
-def _moment_kernel(stat: str) -> Callable[..., Column]:
-    def kernel(x, w, skipna=True, ddof=1, min_count=0, **_):
-        return _stats.w_stat(
-            stat, x, w, skipna=skipna, ddof=ddof, min_count=min_count
-        )
-
-    return kernel
-
-
-#: statistic name → kernel builder (x, w, **kwargs) -> Column; kwargs a
-#: statistic does not take are ignored, so one agg_all kwargs set serves
-#: every statistic in the list
+#: non-moment statistic name → kernel builder (x, w) -> Column
 _KERNELS: dict[str, Callable[..., Column]] = {
-    **{s: _moment_kernel(s) for s in _stats.MOMENT_STATS},
-    "min": lambda x, w, **_: _stats.w_min(x, w),
-    "max": lambda x, w, **_: _stats.w_max(x, w),
-    "gmean": lambda x, w, **_: _stats.w_gmean(x, w),
-    "hmean": lambda x, w, **_: _stats.w_hmean(x, w),
+    "min": _stats.w_min,
+    "max": _stats.w_max,
+    "gmean": _stats.w_gmean,
+    "hmean": _stats.w_hmean,
 }
+#: every statistic agg_all / agg accept: the moment statistics
+#: :func:`_stats.assemble` builds, then the kernels
+_STATS = (*_stats.MOMENT_STATS, *_KERNELS)
+
+
+def _stat_exprs(
+    wdf: "WeightedDataFrame", col: str, stats: Sequence[str], **kwargs
+) -> list[Column]:
+    """``{col}_{stat}`` aggregate columns for ``stats`` of one column:
+    its normalized value and its moment sums are built once and every
+    moment statistic is assembled from them. ``kwargs`` are the
+    moment statistics' ``skipna``/``ddof``/``min_count``; others are
+    ignored."""
+    x = wdf._value(col)
+    w = wdf.weights
+    sums = _stats.moment_sums(x, w, skipna=kwargs.get("skipna", True))
+    return [
+        (
+            _stats.assemble(
+                s,
+                sums,
+                ddof=kwargs.get("ddof", 1),
+                min_count=kwargs.get("min_count", 0),
+            )
+            if s in _stats.MOMENT_STATS
+            else _KERNELS[s](x, w)
+        ).alias(f"{col}_{s}")
+        for s in stats
+    ]
 
 
 def _join_group_stats(
@@ -426,15 +443,10 @@ class WeightedGroupBy:
         cols = self._value_cols()
         if not cols:
             raise ValueError("no numeric columns to aggregate")
-        bad = [s for s in stats if s not in _KERNELS]
+        bad = [s for s in stats if s not in _STATS]
         if bad:
             raise ValueError(f"unknown statistics: {bad}")
-        w = self._wdf.weights
-        exprs = [
-            _KERNELS[s](self._wdf._value(c), w, **kwargs).alias(f"{c}_{s}")
-            for c in cols
-            for s in stats
-        ]
+        exprs = [e for c in cols for e in _stat_exprs(self._wdf, c, stats, **kwargs)]
         return self._finish(self._grouped().agg(*exprs))
 
     def agg(self, spec) -> DataFrame:
@@ -451,19 +463,15 @@ class WeightedGroupBy:
             raise ValueError(
                 "agg spec must be a non-empty dict / list / str"
             )
-        w = self._wdf.weights
         exprs = []
         for c, stats in spec.items():
             if c not in self._wdf.df.columns:
                 raise KeyError(f"column {c!r} not in frame")
             stats = [stats] if isinstance(stats, str) else list(stats)
-            bad = [st for st in stats if st not in _KERNELS]
+            bad = [st for st in stats if st not in _STATS]
             if bad:
                 raise ValueError(f"unknown statistics: {bad}")
-            for st in stats:
-                exprs.append(
-                    _KERNELS[st](self._wdf._value(c), w).alias(f"{c}_{st}")
-                )
+            exprs += _stat_exprs(self._wdf, c, stats)
         return self._finish(self._grouped().agg(*exprs))
 
     def describe(

@@ -18,11 +18,11 @@ Scale shapes:
   ``agg_all``), then the t statistic and Welch–Satterthwaite dof are
   row-local algebra on the 1-row-per-group result.
 * ``weighted_chi2`` — χ² independence of two categoricals. ONE
-  ``GROUPING SETS ((r,c),(r),(c),())`` aggregate emits observed cell
-  masses, row totals, column totals, and the grand total in a single
-  map-side-combining pass; expected masses and the χ² sum are then a
-  self-contained re-aggregation of the tiny cell table (R×C rows) —
-  the raw data is scanned exactly once.
+  ``groupBy(r, c)`` aggregate emits the observed cell masses in a
+  single map-side-combining pass; row totals, column totals, the grand
+  total, expected masses and the χ² sum are then re-aggregations of
+  the tiny cell table (R×C rows) — the raw data is scanned exactly
+  once.
 """
 
 from __future__ import annotations
@@ -113,65 +113,55 @@ def weighted_chi2(
     (R−1)(C−1), ``n`` (grand mass), and ``cramers_v`` =
     √(χ² / (n·min(R−1, C−1))). NULL categories are ordinary buckets.
 
-    The observed/marginal masses come from ONE grouping-sets pass over
-    the raw rows; everything after operates on the R×C cell table.
+    The raw rows are read once: ``groupBy(row, col).sum(w)`` gives the
+    observed cell table, the row and column totals re-aggregate it, the
+    grand total and R re-aggregate the row totals, and C is the size of
+    the R×C grid over R — so every consumer reuses the cell table's one
+    exchange.
     """
     for c in (row_col, col_col):
         if c not in wdf.df.columns:
             raise KeyError(f"column {c!r} not in frame")
     w = wdf.weights
-    # reserved names: a user category column may be called m, o, g, ...
-    m, o, rt, ct, g, nr, nc = (
-        f"__pw_chi2_{s}__" for s in ("m", "o", "rt", "ct", "g", "nr", "nc")
+    # reserved names: a user category column may be called o, rt, g, ...
+    o, rk, ck, rt, ct, g, nr, k = (
+        f"__pw_chi2_{s}__" for s in ("o", "rk", "ck", "rt", "ct", "g", "nr", "k")
     )
-    gs = wdf.df.groupingSets(
-        [[row_col, col_col], [row_col], [col_col], []],
-        row_col, col_col,
-    ).agg(
-        F.sum(w).alias(m),
-        F.grouping(row_col).alias("__pw_gr__"),
-        F.grouping(col_col).alias("__pw_gc__"),
-    )
-    cells = gs.where((F.col("__pw_gr__") == 0) & (F.col("__pw_gc__") == 0)).select(
-        row_col, col_col, F.col(m).alias(o)
-    )
-    rtot = gs.where((F.col("__pw_gr__") == 0) & (F.col("__pw_gc__") == 1)).select(
-        row_col, F.col(m).alias(rt)
-    )
-    ctot = gs.where((F.col("__pw_gr__") == 1) & (F.col("__pw_gc__") == 0)).select(
-        col_col, F.col(m).alias(ct)
-    )
-    grand = gs.where((F.col("__pw_gr__") == 1) & (F.col("__pw_gc__") == 1)).select(
-        F.col(m).alias(g)
-    )
+    cells = wdf.df.groupBy(row_col, col_col).agg(F.sum(w).alias(o))
+    rtot = cells.groupBy(F.col(row_col).alias(rk)).agg(F.sum(o).alias(rt))
+    ctot = cells.groupBy(F.col(col_col).alias(ck)).agg(F.sum(o).alias(ct))
+    grand = rtot.agg(F.sum(rt).alias(g), F.count(F.lit(1)).alias(nr))
     # the FULL R×C grid, not just observed combos: an empty cell has
     # O = 0 but E = rt·ct/g > 0 and still contributes E to the χ² sum
-    # (scipy/pandas semantics). Null-safe cell join: NULL categories
-    # are ordinary buckets. Everything below the grouping-sets pass is
-    # R×C rows — all joins broadcast.
-    grid = rtot.crossJoin(ctot)
-    j = grid.join(
-        cells,
-        on=[
-            grid[row_col].eqNullSafe(cells[row_col]),
-            grid[col_col].eqNullSafe(cells[col_col]),
-        ],
-        how="left",
-    ).crossJoin(F.broadcast(grand))
+    # (scipy/pandas semantics), so every term stays a non-negative
+    # (O−E)²/E. Null-safe cell join (cell keys are unique, so one row
+    # per grid point): NULL categories are ordinary buckets. Everything
+    # below the cell aggregate is R×C rows — all joins broadcast.
+    j = (
+        rtot.crossJoin(ctot)
+        .join(
+            cells,
+            F.col(rk).eqNullSafe(F.col(row_col))
+            & F.col(ck).eqNullSafe(F.col(col_col)),
+            how="left",
+        )
+        .crossJoin(F.broadcast(grand))
+    )
     obs = F.coalesce(F.col(o), F.lit(0.0))
     e = F.col(rt) * F.col(ct) / F.col(g)
     term = F.try_divide((obs - e) * (obs - e), e)
-    agg = (
-        j.agg(
-            F.sum(term).alias("chi2"),
-            # every grid row carries the same grand total
-            F.min(g).alias("n"),
-        )
-        .crossJoin(F.broadcast(rtot.agg(F.count(F.lit(1)).alias(nr))))
-        .crossJoin(F.broadcast(ctot.agg(F.count(F.lit(1)).alias(nc))))
+    agg = j.agg(
+        F.sum(term).alias("chi2"),
+        # every grid row carries the same grand total and R; an empty
+        # grid means an empty input, R = C = 0
+        F.min(g).alias("n"),
+        F.coalesce(F.min(nr), F.lit(0)).alias(nr),
+        F.count(F.lit(1)).alias(k),
     )
     rr = F.col(nr) - F.lit(1)
-    cc = F.col(nc) - F.lit(1)
+    cc = F.coalesce(
+        F.try_divide(F.col(k), F.col(nr)).cast("long"), F.lit(0)
+    ) - F.lit(1)
     return agg.select(
         "chi2",
         (rr * cc).cast("long").alias("dof"),
@@ -475,8 +465,8 @@ def weighted_mutual_information(
     (nats), marginal entropies ``h_x``/``h_y``, joint ``h_xy``,
     normalized ``nmi`` = mi/√(h_x·h_y), and ``n`` (grand mass).
 
-    Same single grouping-sets scan as :func:`weighted_chi2` — cells,
-    both marginals and the grand total in one map-side-combining pass;
+    One grouping-sets scan — cells, both marginals and the grand total
+    in one map-side-combining pass;
     the information sums then re-aggregate the R×C cell table using
     only entropies (MI = H(x) + H(y) − H(x,y), so no cell↔marginal
     join at all). Zero cells contribute nothing (lim p→0 p·ln p = 0).

@@ -18,6 +18,7 @@ __all__ = [
     "has_python_eval",
     "has_partial_aggregation",
     "pushed_filters",
+    "file_scans",
     "assert_single_shuffle_agg",
 ]
 
@@ -50,6 +51,15 @@ def pushed_filters(df: DataFrame) -> list[str]:
     """PushedFilters entries of every parquet scan in the plan."""
     plan = physical_plan(df)
     return re.findall(r"PushedFilters: \[([^\]]*)\]", plan)
+
+
+def file_scans(df: DataFrame) -> list[str]:
+    """The location of every file scan in ``df``'s plan, one entry per
+    scan node. Call it after an action: AQE's final plan then shows a
+    reused exchange as one line, so a table appears twice only when it
+    is really read twice."""
+    final = physical_plan(df).split("== Initial Plan ==")[0]
+    return re.findall(r"FileScan .*?Location: [^\[]*\[([^\]]*)\]", final)
 
 
 def assert_single_shuffle_agg(df: DataFrame) -> None:

@@ -9,9 +9,13 @@ partials (the same expressions run unchanged under Structured Streaming,
 see :mod:`pandas_weights_spark.streaming`).
 
 Origin semantics: pandas defaults to ``origin="start_day"`` (midnight of
-the first timestamp). Spark windows are epoch-aligned, so ``start_day``
-costs one tiny extra job — ``agg(min(ts))`` over a single pruned column —
-to derive the window phase. Use ``origin="epoch"`` to skip it.
+the first timestamp). Spark windows are epoch-aligned; midnight is a
+whole number of days past the epoch, so for a fixed rule whose period
+divides a day (``"1D"``, ``"1h"``, ``"15min"``…) the window phase is just
+the offset and ``start_day`` runs no job. Calendar rules and fixed
+rules that don't divide a day (``"7min"``, ``"2D"``) cost one tiny
+extra job — ``agg(min(ts))`` over a single pruned column — to anchor
+on the first timestamp; ``origin="epoch"`` skips it for fixed rules.
 
 Divergence (documented, SURVEY.md §3.3): only non-empty buckets are
 emitted. pandas emits the full bucket range with NA rows; use
@@ -155,6 +159,10 @@ class WeightedResampler:
         if self._origin == "epoch":
             base = 0
         elif self._origin == "start_day":
+            if 86400 % self._n == 0:
+                # midnight is a whole number of days, so a period that
+                # divides a day puts it at phase 0: no probe needed
+                return self._offset_secs % self._n
             # One extra tiny job: min over a single pruned column.
             first = self._wdf.df.agg(F.min(F.col(self._on))).collect()[0][0]
             if first is None:
@@ -375,17 +383,14 @@ class WeightedResampler:
         """Several statistics in one bucket-keyed aggregate pass.
         ``complete=True`` joins the generated bucket spine so empty
         buckets appear (NULL statistics), like the single-stat paths."""
-        from pandas_weights_spark.groupby import _KERNELS
+        from pandas_weights_spark.groupby import _STATS, _stat_exprs
 
         cols = [c for c in self._wdf.numeric_columns() if c != self._on]
-        bad = [s for s in stats if s not in _KERNELS]
+        bad = [s for s in stats if s not in _STATS]
         if bad:
             raise ValueError(f"unknown statistics: {bad}")
-        w = self._wdf.weights
         exprs = [
-            _KERNELS[s](self._wdf._value(c), w, **kwargs).alias(f"{c}_{s}")
-            for c in cols
-            for s in stats
+            e for c in cols for e in _stat_exprs(self._wdf, c, stats, **kwargs)
         ]
         out = (
             self._wdf.df.where(F.col(self._on).isNotNull())

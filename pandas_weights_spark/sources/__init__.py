@@ -27,40 +27,140 @@ TABLES = (
 )
 
 
-def _nanos_timestamp_cols(path: str) -> list[str]:
-    """Columns stored as parquet TIMESTAMP(NANOS) — Spark 4 refuses them
-    unless read as long. Footer-only inspection (no data I/O); ``path``
-    is one parquet file or a directory of them."""
-    import pyarrow.dataset as ds
-    import pyarrow.types as pt
+#: the footer key under which Spark's parquet writer stores its own
+#: serialized schema (``ParquetReadSupport.SPARK_METADATA_KEY``)
+_SPARK_SCHEMA_KEY = b"org.apache.spark.sql.parquet.row.metadata"
+#: summary files Spark's schema inference reads before any data file
+_SUMMARY_FILES = ("_metadata", "_common_metadata")
 
-    schema = ds.dataset(path, format="parquet").schema
-    return [
-        f.name
-        for f in schema
-        if pt.is_timestamp(f.type) and f.type.unit == "ns"
+
+def _hidden(name: str) -> bool:
+    """Names Spark's file listing skips (``shouldFilterOutPathName``):
+    ``_``/``.`` prefixes (but not ``k=v`` partition directories) and
+    in-flight ``._COPYING_`` copies. Summary files are kept."""
+    if name.startswith(_SUMMARY_FILES):
+        return False
+    return (
+        (name.startswith("_") and "=" not in name)
+        or name.startswith(".")
+        or name.endswith("._COPYING_")
+    )
+
+
+def _local_path(spark: SparkSession, path: str) -> str | None:
+    """``path`` as an absolute local path when Spark would resolve it on
+    the local file system without globbing; else None."""
+    if any(ch in path for ch in "{}[]*?\\"):
+        return None
+    if path.startswith("file:"):
+        path = path[len("file:"):]
+        if path.startswith("//"):  # file:///abs → /abs
+            path = path[2:]
+    elif "://" in path or ":" in path.split("/", 1)[0]:
+        return None
+    else:
+        conf = spark.sparkContext._jsc.hadoopConfiguration()
+        if not conf.get("fs.defaultFS", "file:///").startswith("file:"):
+            return None
+    return path if os.path.isabs(path) else None
+
+
+def _first_data_file(root: str) -> str | None:
+    """The file Spark's parquet schema inference reads without
+    ``mergeSchema``: the first listed leaf in path-string order. None
+    when the listing holds a summary file (inference reads that
+    instead), a symlink, or no file."""
+    if os.path.isfile(root):
+        return root
+    leaves = []
+    for d, dirs, files in os.walk(root):
+        dirs[:] = [x for x in dirs if not _hidden(x)]
+        names = [*dirs, *(f for f in files if not _hidden(f))]
+        if any(f in _SUMMARY_FILES for f in files) or any(
+            os.path.islink(os.path.join(d, x)) for x in names
+        ):
+            return None
+        leaves += [os.path.join(d, f) for f in files if not _hidden(f)]
+    return min(leaves, default=None)
+
+
+def _footer(spark: SparkSession, path: str):
+    """``(spark_schema, nanos_cols)`` from the parquet footer of the file
+    Spark's schema inference would read under ``path``, on the driver.
+
+    ``spark_schema`` is the schema Spark's own writer serialized into the
+    footer — exactly what inference returns for that file
+    (``ParquetFileFormat.readSchemaFromFooter``) — or None when the file
+    was written by another engine, the path is not a plain local path,
+    ``spark.sql.parquet.mergeSchema`` is on, or a footer field shares its
+    name with a partition directory. ``nanos_cols`` are the columns
+    stored as TIMESTAMP(NANOS), which Spark 4 refuses unless read as
+    long. ``(None, [])`` when no footer could be read."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    local = _local_path(spark, path)
+    first = _first_data_file(local) if local is not None else None
+    if first is None:
+        return None, []
+    try:
+        import pyarrow.parquet as pq
+
+        meta = pq.read_metadata(first)
+    except Exception:  # not parquet / unreadable: Spark reports it
+        return None, []
+    # the stored logical type, not the Arrow type: pyarrow reads Spark's
+    # INT96 timestamps as nanoseconds too
+    nanos = [
+        col.name
+        for col in map(meta.schema.column, range(meta.num_columns))
+        if col.path == col.name
+        and json.loads(col.logical_type.to_json()).get("timeUnit") == "nanoseconds"
     ]
+    raw = (meta.metadata or {}).get(_SPARK_SCHEMA_KEY)
+    if raw is None or spark.conf.get(
+        "spark.sql.parquet.mergeSchema", "false"
+    ).lower() == "true":
+        return None, nanos
+    try:
+        schema = StructType.fromJson(json.loads(raw))
+    except Exception:  # legacy schema string: inference parses it
+        return None, nanos
+    parts = {
+        seg.split("=", 1)[0].lower()
+        for seg in os.path.relpath(first, local).split(os.sep)[:-1]
+        if "=" in seg
+    }
+    if any(f.name.lower() in parts for f in schema.fields):
+        return None, nanos
+    return schema, nanos
+
+
+def _nanos_as_micros(df: DataFrame, cols) -> DataFrame:
+    from pyspark.sql import functions as F
+
+    for c in cols:
+        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one parquet table from a scale-factor directory.
+    """Read one parquet table (one file or a directory of them) from a
+    scale-factor directory; the schema comes from the footer as in
+    :func:`read_any`.
 
     Nanosecond-timestamp columns (e.g. ``events.ts``) are transparently
     read via ``spark.sql.legacy.parquet.nanosAsLong`` and truncated to
     microseconds (``ns div 1000`` — floor for post-1970 values), matching
     DuckDB's TIMESTAMP_NS → TIMESTAMP cast.
     """
-    from pyspark.sql import functions as F
-
     path = os.path.join(sf_dir, f"{name}.parquet")
-    ns_cols = _nanos_timestamp_cols(path)
-    if not ns_cols:
-        return spark.read.parquet(path)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
-    for c in ns_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
-    return df
+    schema, ns_cols = _footer(spark, path)
+    if ns_cols:
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return _nanos_as_micros(reader.parquet(path), ns_cols)
 
 
 def load_table_stream(
@@ -70,28 +170,29 @@ def load_table_stream(
     — the replay twin of :func:`load_table`, for driving the
     ``pandas_weights_spark.streaming`` operators over the test layout.
 
-    File streams need an explicit schema; it is taken from the parquet
-    footer via a batch reader (metadata-only, no data scan). Nanosecond
-    timestamps get the same long-read + microsecond truncation as the
-    batch path, so batch and stream see identical values.
+    File streams need an explicit schema; it comes from the footer of a
+    Spark-written table, and from a batch reader's inference otherwise.
+    Nanosecond timestamps get the same long-read + microsecond
+    truncation as the batch path, so batch and stream see identical
+    values.
     """
     from pyspark.sql import functions as F
 
     path = os.path.join(sf_dir, f"{name}.parquet")
-    ns_cols = _nanos_timestamp_cols(path)
+    schema, ns_cols = _footer(spark, path)
     if ns_cols:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    schema = spark.read.parquet(path).schema
+    if schema is None:
+        schema = spark.read.parquet(path).schema
     # FileStreamSource requires a *directory*; the test layout stores
     # each table as one file, so stream the directory and glob-filter to
     # the table's file.
-    df = (
+    df = _nanos_as_micros(
         spark.readStream.schema(schema)
         .option("pathGlobFilter", f"{name}.parquet")
-        .parquet(sf_dir)
+        .parquet(sf_dir),
+        ns_cols,
     )
-    for c in ns_cols:
-        df = df.withColumn(c, F.timestamp_micros(F.expr(f"`{c}` div 1000")))
     # Watermarks (EventTimeWatermark) require TIMESTAMP, not
     # TIMESTAMP_NTZ; parquet written with naive timestamps infers NTZ.
     # Cast NTZ event-time columns to the session-zoned type — with the
@@ -169,6 +270,18 @@ def read_any(
     strongly preferred; without one, CSV falls back to header +
     inference (correct, logged by Spark as a separate job). TSV sets
     the tab separator. All other reader options pass through.
+
+    Parquet without ``schema`` or reader options launches no job: when
+    the file Spark's schema inference would read (the first data file
+    in path order, ``_``/``.`` names skipped) carries the schema Spark's
+    own writer serialized into its footer, that schema is read on the
+    driver and passed as the reader schema — it is exactly what
+    inference returns. Spark's one-job inference stays for footers
+    from other writers (pandas, DuckDB, Arrow), any reader option,
+    ``spark.sql.parquet.mergeSchema`` on, glob or relative paths,
+    non-local URIs, summary files or symlinks in the listing, and
+    footer fields named like a partition directory; a ``schema=`` is
+    passed through as given.
     """
     fmt = format
     if fmt is None:
@@ -179,6 +292,8 @@ def read_any(
                 f"cannot infer format from {path!r}; pass format="
             )
     reader = spark.read
+    if schema is None and not options and fmt.lower() == "parquet":
+        schema = _footer(spark, path)[0]
     if schema is not None:
         reader = reader.schema(schema)
     if fmt == "csv":

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pandas_weights_spark.frame import WEIGHT_COL, wt
-from pandas_weights_spark.groupby import _KERNELS
+from pandas_weights_spark.groupby import _STATS, _stat_exprs
 from pandas_weights_spark.resample import parse_rule
 
 __all__ = [
@@ -75,7 +75,7 @@ def weighted_resample_stream(
     kind, secs = parse_rule(rule)
     if kind != "fixed":
         raise ValueError("streaming resample supports fixed-frequency rules only")
-    bad = [s for s in stats if s not in _KERNELS]
+    bad = [s for s in stats if s not in _STATS]
     if bad:
         raise ValueError(f"unknown statistics: {bad}")
 
@@ -83,12 +83,7 @@ def weighted_resample_stream(
     cols = value_cols or [c for c in wdf.numeric_columns() if c != on]
     if not cols:
         raise ValueError("no numeric columns to aggregate")
-    w = wdf.weights
-    exprs = [
-        _KERNELS[s](wdf._value(c), w, **stat_kwargs).alias(f"{c}_{s}")
-        for c in cols
-        for s in stats
-    ]
+    exprs = [e for c in cols for e in _stat_exprs(wdf, c, stats, **stat_kwargs)]
     return (
         wdf.df.withWatermark(on, watermark)
         .groupBy(F.window(F.col(on), f"{secs} seconds"))
@@ -119,12 +114,7 @@ def weighted_groupby_stream(
     ]
     if not cols:
         raise ValueError("no numeric columns to aggregate")
-    w = wdf.weights
-    exprs = [
-        _KERNELS[s](wdf._value(c), w, **stat_kwargs).alias(f"{c}_{s}")
-        for c in cols
-        for s in stats
-    ]
+    exprs = [e for c in cols for e in _stat_exprs(wdf, c, stats, **stat_kwargs)]
     return (
         wdf.df.withWatermark(on, watermark)
         .groupBy(*keys)
@@ -152,7 +142,7 @@ def weighted_session_stream(
 
     Works identically on a batch DataFrame (no watermark needed there).
     """
-    bad = [s for s in stats if s not in _KERNELS]
+    bad = [s for s in stats if s not in _STATS]
     if bad:
         raise ValueError(f"unknown statistics: {bad}")
     wdf = wt(stream, weights)
@@ -161,12 +151,7 @@ def weighted_session_stream(
     ]
     if not cols:
         raise ValueError("no numeric columns to aggregate")
-    w = wdf.weights
-    exprs = [
-        _KERNELS[s](wdf._value(c), w, **stat_kwargs).alias(f"{c}_{s}")
-        for c in cols
-        for s in stats
-    ]
+    exprs = [e for c in cols for e in _stat_exprs(wdf, c, stats, **stat_kwargs)]
     df = wdf.df
     if df.isStreaming:
         df = df.withWatermark(on, watermark)

@@ -1,3 +1,4 @@
+import itertools
 from pathlib import Path
 
 import pytest
@@ -35,6 +36,24 @@ def spark():
 
 def approx(x, rel=1e-12):
     return pytest.approx(x, rel=rel, abs=1e-12)
+
+
+_job_groups = itertools.count()
+
+
+def count_jobs(spark, fn):
+    """``(fn(), jobs)``: the Spark jobs ``fn`` submitted, counted in a
+    fresh job group through the status tracker."""
+    sc = spark.sparkContext
+    group = f"pws-test-{next(_job_groups)}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return out, jobs
 
 
 def pytest_configure(config):

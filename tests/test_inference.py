@@ -135,7 +135,9 @@ class TestChi2:
         assert out["chi2"] == pytest.approx(0.0, abs=1e-12)
 
     @pytest.mark.parametrize("side", ["r", "c"])
-    @pytest.mark.parametrize("name", ["g", "m", "rt", "ct", "o", "_r", "_c", "G"])
+    @pytest.mark.parametrize(
+        "name", ["g", "m", "rt", "ct", "o", "_r", "_c", "G", "rk", "ck", "k", "nr"]
+    )
     def test_category_named_like_an_intermediate(self, spark, name, side):
         # a category column named after an internal alias must give the
         # same answer as the plain r/c names (no AMBIGUOUS_REFERENCE)
@@ -148,6 +150,37 @@ class TestChi2:
         got = wt(renamed, "w").chi2(*cols).collect()[0]
         # partial sums may merge in another order: compare to 1e-12
         assert got.asDict() == pytest.approx(ref.asDict(), rel=1e-12)
+
+    def test_null_and_zero_weights_and_a_zero_mass_row(self, spark):
+        # (a, q) holds only a NULL weight: an empty cell; row z has zero
+        # mass, so its E = 0 terms drop out, but it still counts in R
+        rows = [("a", "p", 1.0), ("a", "q", None), ("b", "p", 3.0),
+                ("b", "q", 0.0), ("b", "q", 2.0), ("z", "p", 0.0),
+                ("z", "q", None)]
+        df = spark.createDataFrame(rows, "r string, c string, w double")
+        out = wt(df, "w").chi2("r", "c").collect()[0]
+        chi2, _, g = _chi2([[1.0, 0.0], [3.0, 2.0]])
+        assert out["chi2"] == pytest.approx(chi2, rel=1e-12)
+        assert out["dof"] == 2
+        assert out["n"] == g
+
+    @pytest.mark.parametrize("keep", ["r = 'a'", "c = 'p'"])
+    def test_single_category_has_zero_dof(self, spark, keep):
+        rows = [("a", "p", 1.5), ("a", "q", 2.0), ("b", "p", 3.0),
+                ("a", "p", 0.25)]
+        df = spark.createDataFrame(rows, "r string, c string, w double")
+        out = wt(df.where(keep), "w").chi2("r", "c").collect()[0]
+        assert out["dof"] == 0
+        assert out["chi2"] == pytest.approx(0.0, abs=1e-12)
+        assert out["cramers_v"] is None
+
+    def test_empty_input(self, spark):
+        df = spark.createDataFrame(
+            [("a", "p", 1.0)], "r string, c string, w double"
+        ).where("false")
+        out = wt(df, "w").chi2("r", "c").collect()
+        assert len(out) == 1
+        assert (out[0]["chi2"], out[0]["n"], out[0]["cramers_v"]) == (None,) * 3
 
     def test_one_scan_and_no_python(self, spark):
         import pandas_weights_spark.plans as P

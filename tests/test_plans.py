@@ -477,3 +477,75 @@ class TestRound5Plans:
         pc = bpe_pair_counts(bpe_word_table(docs, "text"))
         assert P.has_partial_aggregation(pc)
         assert not P.has_python_eval(pc)
+
+
+@pytest.fixture(scope="module")
+def fact2(spark, tmp_path_factory):
+    """A 2-file parquet fact table shaped like the interactive benchmark's:
+    keys k/seg/c, order column id, timestamps over 4 days, nullable
+    values x1..x3 and weight w."""
+    path = str(tmp_path_factory.mktemp("fact2") / "fact")
+    h = lambda tag: F.abs(F.xxhash64(F.lit(tag), "id")) % 1000 / 1000.0  # noqa: E731
+    spark.range(4000).select(
+        "id",
+        (F.col("id") % 50).cast("int").alias("k"),
+        (F.col("id") % 8).cast("int").alias("seg"),
+        F.concat(F.lit("c"), (F.col("id") % 5).cast("string")).alias("c"),
+        F.timestamp_seconds(F.lit(1_700_000_000) + F.col("id") * 86).alias("ts"),
+        F.when(F.col("id") % 97 != 0, h("x1")).alias("x1"),
+        F.when(F.col("id") % 89 != 0, h("x2") * 10).alias("x2"),
+        F.when(F.col("id") % 83 != 0, h("x3") - 0.5).alias("x3"),
+        F.when(F.col("id") % 79 != 0, 0.5 + 4.5 * h("w")).alias("w"),
+    ).repartition(2).write.parquet(path)
+    return path
+
+
+def _interactive_shapes(fact):
+    """The interactive benchmark's template shapes, frame.mean … rolling.mean."""
+    xs = ["x1", "x2", "x3"]
+    w = lambda df, cols=None: wt(df, "w")[cols] if cols else wt(df, "w")  # noqa: E731
+    rolled = (
+        w(fact.select("k", "id", "x1", "w"))
+        .rolling(5, order_by=["id"], partition_by=["k"])
+        .mean()
+    )
+    return {
+        "frame.mean": w(fact, xs).mean(),
+        "frame.value_counts": w(fact)["c"].value_counts(),
+        "groupby.mean": w(fact, xs).groupby("seg").mean(),
+        "groupby.agg_all": w(fact, xs).groupby("c").agg_all(
+            ["mean", "var", "std", "count"]
+        ),
+        "corr.corr_cov": w(fact, xs).corr_cov(),
+        "resample.1D": w(fact.select("ts", "x1", "x2", "w"))
+        .resample("1D", on="ts")
+        .mean(),
+        "resample.1H": w(fact.select("ts", "x1", "w")).resample("1h", on="ts").var(),
+        "quantile.quartiles": w(fact, ["x1", "x3"])
+        .groupby("seg")
+        .quantile([0.25, 0.5, 0.75]),
+        "pivot.crosstab": w(fact).groupby("seg").crosstab("c"),
+        "pivot.pivot": w(fact, ["x1"]).groupby("seg").pivot("c", values=["x1"]),
+        "inference.ttest": w(fact).ttest("x1", "seg", 1, 2),
+        "inference.chi2": w(fact).chi2("seg", "c"),
+        "rolling.mean": rolled.groupBy("k").agg(
+            F.count("x1"), F.min("x1"), F.max("x1"), F.sum("x1")
+        ),
+    }
+
+
+class TestOneScanPerTable:
+    def test_chi2_reads_the_table_once(self, spark, fact2):
+        df = wt(spark.read.parquet(fact2), "w").chi2("seg", "c")
+        df.collect()
+        assert len(P.file_scans(df)) == 1
+
+    def test_interactive_templates_have_no_redundant_scan(self, spark, fact2):
+        fact = spark.read.parquet(fact2).where(F.col("k").isin(3, 17))
+        redundant = {}
+        for name, df in _interactive_shapes(fact).items():
+            df.collect()
+            scans = P.file_scans(df)
+            assert scans, name
+            redundant[name] = len(scans) - len(set(scans))
+        assert redundant == {name: 0 for name in redundant}

@@ -7,7 +7,7 @@ import pytest
 
 from pandas_weights_spark import wt
 from pandas_weights_spark.resample import parse_rule
-from tests.conftest import approx
+from tests.conftest import approx, count_jobs
 
 
 @pytest.fixture(scope="module")
@@ -189,6 +189,47 @@ class TestClosedLabelRight:
         )
         with pytest.raises(ValueError):
             wt(df, "weights").resample("2D", on="ts", closed="both")
+
+
+class TestStartDayProbe:
+    @pytest.mark.parametrize("rule", ["1D", "1h", "15min"])
+    def test_period_dividing_a_day_plans_without_a_job(self, spark, rule):
+        # midnight is a whole number of days past the epoch, so the
+        # window phase needs no look at the data
+        rows = [(dt.datetime(2024, 1, 1, 5, 7), 1.0, 1.0)]
+        df = spark.createDataFrame(rows, "ts timestamp, Value double, weights double")
+        _, jobs = count_jobs(
+            spark,
+            lambda: wt(df, "weights").resample(rule, on="ts", offset="10min").var(),
+        )
+        assert jobs == 0
+
+    @pytest.mark.parametrize("rule", ["7min", "2D", "MS"])
+    def test_other_rules_still_anchor_on_the_data(self, spark, rule):
+        rows = [(dt.datetime(2024, 1, 1, 5, 7), 1.0, 1.0)]
+        df = spark.createDataFrame(rows, "ts timestamp, Value double, weights double")
+        _, jobs = count_jobs(
+            spark, lambda: wt(df, "weights").resample(rule, on="ts").var()
+        )
+        assert jobs >= 1
+
+    def test_offset_phase_matches_first_timestamp_anchor(self, spark):
+        # 15min windows offset by 10min from the first day's midnight
+        rows = [
+            (dt.datetime(2024, 1, 2, 0, 9), 1.0, 1.0),
+            (dt.datetime(2024, 1, 2, 0, 10), 2.0, 1.0),
+            (dt.datetime(2024, 1, 2, 0, 24), 4.0, 1.0),
+            (dt.datetime(2024, 1, 2, 0, 25), 8.0, 1.0),
+        ]
+        df = spark.createDataFrame(rows, "ts timestamp, Value double, weights double")
+        g = by_bucket(
+            wt(df, "weights").resample("15min", on="ts", offset="10min").sum()
+        )
+        assert {k: v["Value"] for k, v in g.items()} == {
+            dt.datetime(2024, 1, 1, 23, 55): 1.0,
+            dt.datetime(2024, 1, 2, 0, 10): 6.0,
+            dt.datetime(2024, 1, 2, 0, 25): 8.0,
+        }
 
 
 class TestStartDayTimezone:
