@@ -148,7 +148,7 @@ def grouped_apply(gb: "WeightedGroupBy", func: Callable, schema) -> DataFrame:
 
     # Weighted projection of keys + data columns (keys pass through intact,
     # numeric data gets multiplied — reference _weighted, frame.py:505-510).
-    wdf = gb._wdf
+    wdf = gb._kept()
     num = set(wdf.numeric_columns())
     data_cols = [c for c in wdf.columns if c not in keys]
     exprs = [F.col(k) for k in keys] + [
@@ -156,9 +156,6 @@ def grouped_apply(gb: "WeightedGroupBy", func: Callable, schema) -> DataFrame:
         for c in data_cols
     ]
     df = wdf.df.select(*exprs)
-    if gb._dropna:
-        for k in keys:
-            df = df.where(F.col(k).isNotNull())
     out = df.groupBy(*keys).applyInPandas(_run, schema)
     if gb._sort:
         out = out.orderBy(*keys)

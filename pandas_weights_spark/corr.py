@@ -33,6 +33,7 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pandas_weights_spark._stats import assemble, moment_sums
+from pandas_weights_spark.quantile import _band
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -244,24 +245,11 @@ def aligned_corr_cov(
     )
 
 
-def _band(c: Column, bounds, bands: int) -> Column:
-    """Linear band index of ``c`` over ``bounds = (lo, hi)``, clamped to
-    ``[0, bands)``; band 0 when the bounds are missing or degenerate.
-    Ranks are band-assignment-invariant (equal values always share a
-    band), so bound quality affects only load balance, never values."""
-    if bounds is None or not (bounds[1] > bounds[0]):
-        return F.lit(0)
-    lo, hi = float(bounds[0]), float(bounds[1])
-    return F.greatest(
-        F.lit(0),
-        F.least(
-            F.lit(bands - 1),
-            F.floor(
-                (c.cast("double") - F.lit(lo)) / F.lit(hi - lo)
-                * F.lit(float(bands))
-            ).cast("int"),
-        ),
-    )
+def _lit_band(c: Column, bounds, bands: int) -> Column:
+    """:func:`~pandas_weights_spark.quantile._band` over literal
+    ``bounds = (lo, hi)``; band 0 when the bounds are missing."""
+    lo, hi = (None, None) if bounds is None else map(float, bounds)
+    return _band(c, F.lit(lo), F.lit(hi), bands)
 
 
 def _offmap(entries: Column) -> Column:
@@ -399,8 +387,8 @@ def spearman_corr(
 
     j = v.select(
         *keys, "__x__", "__y__", WEIGHT_COL,
-        _band(F.col("__x__"), bounds["bx"], bands).alias("__bandx__"),
-        _band(F.col("__y__"), bounds["by"], bands).alias("__bandy__"),
+        _lit_band(F.col("__x__"), bounds["bx"], bands).alias("__bandx__"),
+        _lit_band(F.col("__y__"), bounds["by"], bands).alias("__bandy__"),
     )
     gsets = j.groupingSets(
         [[*keys, "__bandx__"], [*keys, "__bandy__"]],
@@ -432,10 +420,7 @@ def spearman_corr(
         _offmap(_entries("__bandx__", 1)).alias("__mx__"),
         _offmap(_entries("__bandy__", 0)).alias("__my__"),
     )
-    if keys:
-        j = _join_group_stats(j, maps, keys)
-    else:
-        j = j.crossJoin(F.broadcast(maps))
+    j = _join_group_stats(j, maps, keys)
     j = j.select(
         *keys, "__x__", "__y__", WEIGHT_COL, "__bandx__", "__bandy__",
         F.element_at("__mx__", F.col("__bandx__")).alias("__off__bandx__"),
@@ -532,7 +517,9 @@ def spearman_matrix(
     j = v.select(
         "*",
         *[
-            _band(F.col(f"__c{i}__"), bounds[i], bands).alias(f"__band{i}__")
+            _lit_band(F.col(f"__c{i}__"), bounds[i], bands).alias(
+                f"__band{i}__"
+            )
             for i in range(k)
         ],
     )

@@ -147,10 +147,17 @@ class WeightedDataFrame:
         missing = [c for c in cols if c not in self._data_cols]
         if missing:
             raise KeyError(f"columns not in data: {missing}")
+        return self._with_df(self._df, cols)
+
+    def _with_df(
+        self, df: DataFrame, cols: Optional[Sequence[str]] = None
+    ) -> "WeightedDataFrame":
+        """This frame over ``df`` — a derivation of :attr:`df` that
+        keeps the weight column — narrowed to ``cols`` if given."""
         out = object.__new__(WeightedDataFrame)
-        out._df = self._df
+        out._df = df
         out._nan_as_null = self._nan_as_null
-        out._data_cols = list(cols)
+        out._data_cols = list(self._data_cols if cols is None else cols)
         return out
 
     def __getitem__(

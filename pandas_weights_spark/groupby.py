@@ -85,7 +85,11 @@ def _join_group_stats(
     semantics, where NULL is an ordinary group key). The stats frame's
     key columns are renamed before the join and dropped after, so the
     output has exactly ``df``'s columns plus the statistic columns.
+
+    With no keys ``stats`` is one row, broadcast-crossjoined.
     """
+    if not keys:
+        return df.crossJoin(F.broadcast(stats))
     renamed = stats
     for k in keys:
         renamed = renamed.withColumnRenamed(k, f"__pw_sk_{k}__")
@@ -147,11 +151,18 @@ class WeightedGroupBy:
         keys are 'exclusions', never aggregated)."""
         return [c for c in self._wdf.numeric_columns() if c not in self._keys]
 
-    def _grouped(self):
+    def _kept(self) -> "WeightedDataFrame":
+        """The weighted frame over the rows the grouping keeps:
+        ``dropna=True`` drops the rows with a NULL key."""
+        if not self._dropna:
+            return self._wdf
         df = self._wdf.df
-        if self._dropna:
-            for k in self._keys:
-                df = df.where(F.col(k).isNotNull())
+        for k in self._keys:
+            df = df.where(F.col(k).isNotNull())
+        return self._wdf._with_df(df)
+
+    def _grouped(self):
+        df = self._kept().df
         keys = [F.col(k) for k in self._keys]
         if self._mode == "cube":
             return df.cube(*keys)
@@ -321,14 +332,7 @@ class WeightedGroupBy:
             weighted_quantiles_binned,
         )
 
-        wdf = self._wdf
-        if self._dropna:
-            sub = wdf._subset(wdf.columns)
-            df = wdf.df
-            for k in self._keys:
-                df = df.where(F.col(k).isNotNull())
-            sub._df = df
-            wdf = sub
+        wdf = self._kept()
         if exact:
             out = weighted_quantiles(
                 wdf, q, subset=self._value_cols(), keys=self._keys
@@ -381,14 +385,8 @@ class WeightedGroupBy:
         cols = self._value_cols()
         if not cols:
             raise ValueError("no numeric columns to aggregate")
-        wdf = self._wdf
+        wdf = self._kept()
         df = wdf.df
-        if self._dropna:
-            for k in self._keys:
-                df = df.where(F.col(k).isNotNull())
-            sub = wdf._subset(wdf.columns)
-            sub._df = df
-            wdf = sub
         if exact:
             med = weighted_quantiles(wdf, 0.5, subset=cols, keys=self._keys)
         else:
@@ -529,14 +527,7 @@ class WeightedGroupBy:
             raise NotImplementedError(
                 "cdf is not defined for cube/rollup grouping sets"
             )
-        wdf = self._wdf
-        if self._dropna:
-            df = wdf.df
-            for k in self._keys:
-                df = df.where(F.col(k).isNotNull())
-            sub = wdf._subset(wdf.columns)
-            sub._df = df
-            wdf = sub
+        wdf = self._kept()
         return weighted_cdf(
             wdf, subset=self._value_cols(), keys=self._keys, bands=bands
         )
@@ -600,14 +591,7 @@ class WeightedGroupBy:
             raise NotImplementedError(
                 "qcut is not defined for cube/rollup grouping sets"
             )
-        wdf = self._wdf
-        if self._dropna:
-            df = wdf.df
-            for k in self._keys:
-                df = df.where(F.col(k).isNotNull())
-            sub = wdf._subset(wdf.columns)
-            sub._df = df
-            wdf = sub
+        wdf = self._kept()
         return weighted_qcut(
             wdf, col, q, keys=self._keys, bands=bands, keep_cdf=keep_cdf
         )
@@ -630,14 +614,7 @@ class WeightedGroupBy:
             raise NotImplementedError(
                 "winsorize is not defined for cube/rollup grouping sets"
             )
-        wdf = self._wdf
-        if self._dropna:
-            df = wdf.df
-            for k in self._keys:
-                df = df.where(F.col(k).isNotNull())
-            sub = wdf._subset(wdf.columns)
-            sub._df = df
-            wdf = sub
+        wdf = self._kept()
         return weighted_winsorize(
             wdf, subset=subset, keys=self._keys, lower=lower, upper=upper,
             exact=exact, bands=bands, range_bounds=range_bounds,
@@ -659,14 +636,7 @@ class WeightedGroupBy:
             raise NotImplementedError(
                 "robust_zscore is not defined for cube/rollup grouping sets"
             )
-        wdf = self._wdf
-        if self._dropna:
-            df = wdf.df
-            for k in self._keys:
-                df = df.where(F.col(k).isNotNull())
-            sub = wdf._subset(wdf.columns)
-            sub._df = df
-            wdf = sub
+        wdf = self._kept()
         return weighted_robust_zscore(
             wdf, subset=subset, keys=self._keys, exact=exact, bands=bands,
             range_bounds=range_bounds,
@@ -696,10 +666,7 @@ class WeightedGroupBy:
         cols = self._value_cols()
         if not cols:
             raise ValueError("no numeric columns to standardize")
-        df = self._wdf.df
-        if self._dropna:
-            for k in self._keys:
-                df = df.where(F.col(k).isNotNull())
+        df = self._kept().df
         w = self._wdf.weights
         names = _stats.sums_read(("mean", "var"))
         aggs = []
@@ -750,10 +717,7 @@ class WeightedGroupBy:
         cols = self._value_cols()
         if not cols:
             raise ValueError("no numeric columns to impute")
-        df = self._wdf.df
-        if self._dropna:
-            for k in self._keys:
-                df = df.where(F.col(k).isNotNull())
+        df = self._kept().df
         if strategy == "zero":
             return df.select(
                 *[F.col(c) for c in df.columns],
@@ -851,10 +815,7 @@ class WeightedGroupBy:
                 f"value_counts output reserves column name(s) "
                 f"{sorted(clash)}; rename the input column(s) first"
             )
-        df = self._wdf.df
-        if self._dropna:
-            for kk in self._keys:
-                df = df.where(F.col(kk).isNotNull())
+        df = self._kept().df
         x = self._wdf._value(c)
         if dropna_values:
             df = df.where(x.isNotNull())
@@ -902,10 +863,7 @@ class WeightedGroupBy:
                 "grouped[['col']]"
             )
         c = cols[0]
-        df = self._wdf.df
-        if self._dropna:
-            for k in self._keys:
-                df = df.where(F.col(k).isNotNull())
+        df = self._kept().df
         if dropna_values:
             df = df.where(F.col(c).isNotNull())
         mass = df.groupBy(*self._keys, c).agg(
@@ -966,10 +924,7 @@ class WeightedGroupBy:
         min_count = kwargs.get("min_count", 0)
         names = _stats.sums_read(stats, min_count=min_count)
 
-        df = self._wdf.df
-        if self._dropna:
-            for k in self._keys:
-                df = df.where(F.col(k).isNotNull())
+        df = self._kept().df
         w = self._wdf.weights
         salt = F.pmod(F.monotonically_increasing_id(), F.lit(salt_buckets))
 
@@ -1084,7 +1039,6 @@ class WeightedGroupBy:
             for k in self._keys:
                 c = F.col(k).eqNullSafe(F.lit(row[k]))
                 cond = c if cond is None else (cond & c)
-            sub = self._wdf._subset(self._wdf.columns)
-            sub._df = self._wdf.df.where(cond)
+            sub = self._wdf._with_df(self._wdf.df.where(cond))
             key = row[self._keys[0]] if len(self._keys) == 1 else tuple(row)
             yield key, sub

@@ -322,7 +322,13 @@ def weighted_info_panel(
     the DataFrame is garbage-collected. Pass ``checkpoint=False`` to
     keep recoverable pure-lineage plans.
     """
-    from pandas_weights_spark.quantile import _banded_cums
+    from pandas_weights_spark.quantile import (
+        _banded_cums,
+        _gini,
+        _ks,
+        _mass,
+        _two_sample,
+    )
 
     for c in (value, cat_a, cat_b):
         if c not in wdf.df.columns:
@@ -331,9 +337,7 @@ def weighted_info_panel(
     w = wdf.weights
     xd = x.cast("double")
     m_ent = F.when(w.isNotNull() & (w > 0), w).otherwise(F.lit(0.0))
-    m_an = F.when(x.isNotNull() & w.isNotNull() & (w > 0), w).otherwise(
-        F.lit(0.0)
-    )
+    m_an = _mass(x, w)
     gs = wdf.df.groupingSets(
         [[cat_a, cat_b], [cat_a], [cat_b], []], cat_a, cat_b
     ).agg(
@@ -341,30 +345,26 @@ def weighted_info_panel(
         F.sum(m_an).alias("__wg__"),
         F.sum(m_an * xd).alias("__sg__"),
         F.sum(m_an * xd * xd).alias("__ssg__"),
-        # value range rides the SAME pass (r6): donated to the banded
-        # spine below as band bounds, shaving the separate min/max
-        # probe — the fifth raw read — from the plan
+        # the value range rides the same pass: donated to the banded
+        # spine below as its band bounds, so no separate min/max probe
+        # reads the raw data a fifth time
         F.min(xd).alias("__xlo__"),
         F.max(xd).alias("__xhi__"),
         F.grouping(cat_a).alias("__ga__"),
         F.grouping(cat_b).alias("__gb__"),
     )
-    # r15: LAZY lineage cut on the CELL table (guide §5) — `info`
-    # consumes it once and the donated `bounds` twice more (the
-    # banded frame references its broadcast from both sides of the
-    # offsets join, and exchange reuse does not fire across the
-    # differently-pruned subtrees), so without the cut the full
-    # grouping-sets raw pass executed three times. The table is
-    # |levels(a)|·|levels(b)|-sized; deterministic sums, rows
-    # unchanged (oracle-checked). Gated by ``checkpoint`` (r16,
-    # ADVICE r15): the cut trades executor-loss recompute and pinned
-    # executor storage for speed; checkpoint=False keeps pure-lineage
-    # plans.
+    # LAZY lineage cut on the CELL table — `info` consumes it once and
+    # the donated `bounds` twice more (the banded frame references its
+    # broadcast from both sides of the offsets join, and exchange reuse
+    # does not fire across the differently-pruned subtrees), so without
+    # the cut the full grouping-sets raw pass executed three times. The
+    # table is |levels(a)|·|levels(b)|-sized; deterministic sums, rows
+    # unchanged (oracle-checked). Gated by ``checkpoint``: the cut
+    # trades executor-loss recompute and pinned executor storage for
+    # speed; checkpoint=False keeps pure-lineage plans.
     if checkpoint:
         gs = gs.localCheckpoint(eager=False)
-    bounds = gs.agg(
-        F.min("__xlo__").alias("__lo__"), F.max("__xhi__").alias("__hi__")
-    )
+    bounds = gs.agg(F.min("__xlo__"), F.max("__xhi__"))
     ga, gb = F.col("__ga__"), F.col("__gb__")
     lvl_x = (ga == 0) & (gb == 1)
     lvl_y = (ga == 1) & (gb == 0)
@@ -412,40 +412,25 @@ def weighted_info_panel(
         .alias("v"),
     )
 
-    ok = x.isNotNull() & w.isNotNull() & (w > 0)
-    ma = F.when(
-        ok & F.col(cat_a).eqNullSafe(F.lit(ks_group_a)), w
-    ).otherwise(F.lit(0.0))
-    mb = F.when(
-        ok & F.col(cat_a).eqNullSafe(F.lit(ks_group_b)), w
-    ).otherwise(F.lit(0.0))
-    m_g = F.when(ok, w).otherwise(F.lit(0.0))
-    frame, cums, tots = _banded_cums(
-        wdf, value, [],
-        {"m": m_g, "s": m_g * xd, "a": ma, "b": mb}, bands=bands,
+    frame, spines = _banded_cums(
+        wdf,
+        {
+            value: {
+                "m": m_an,
+                "s": m_an * xd,
+                **_two_sample(x, w, cat_a, ks_group_a, ks_group_b),
+            }
+        },
+        [],
+        bands,
         bounds=bounds,
     )
-    fa = F.try_divide(F.col(cums["a"]), F.col(tots["a"]))
-    fb = F.try_divide(F.col(cums["b"]), F.col(tots["b"]))
-    d = F.when(x.isNotNull(), F.abs(fa - fb))
-    both = frame.agg(
-        F.sum(m_g * (xd * F.col(cums["m"]) - F.col(cums["s"]))).alias(
-            "__num__"
-        ),
-        F.min(F.col(tots["m"])).alias("__Wg__"),
-        F.min(F.col(tots["s"])).alias("__Sg__"),
-        F.max(d).alias("__ks__"),
-        F.min(F.col(tots["a"])).alias("__na__"),
-        F.min(F.col(tots["b"])).alias("__nb__"),
-    )
-    part2 = both.select(
+    gini_aggs, gini = _gini(x, m_an, spines[value])
+    ks_aggs, ks = _ks(x, spines[value])
+    part2 = frame.agg(*gini_aggs, *ks_aggs).select(
         F.expr("stack(2, 'gini', 0d, 'ks', 0d) AS (t, z)"),
-        F.try_divide(
-            F.col("__num__"), F.col("__Wg__") * F.col("__Sg__")
-        ).alias("__gini__"),
-        F.when(
-            (F.col("__na__") > 0) & (F.col("__nb__") > 0), F.col("__ks__")
-        ).alias("__k__"),
+        gini.alias("__gini__"),
+        ks.alias("__k__"),
     ).select(
         "t",
         F.when(F.col("t") == "gini", F.col("__gini__"))

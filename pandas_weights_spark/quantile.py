@@ -1,47 +1,35 @@
-"""Weighted quantiles / median (engine extension — the reference has no
-quantile support; this is the frequency-weights "inverted CDF" definition
-consistent with the engine's ddof convention).
+"""Weighted quantiles and the weighted CDF/rank family (engine
+extension — the reference has no quantile support).
 
-Definition: for the weighted distribution of a column x, the q-quantile
-is the smallest value whose cumulative weight reaches ``q × Σw``,
-cumulating in ascending-x order with ties merged (a RANGE frame: every
-row of equal value shares one cumulative weight). Rows with NULL x, or
-NULL/non-positive weight, are excluded — they carry no probability mass.
+Every statistic here weighs a row by the quantile family's **mass
+rule** (:func:`_mass`): ``w`` where the value and the weight are
+non-NULL and ``w > 0``, else 0 — excluded rows carry no probability
+mass.
 
-Plan shape: one hash exchange on the group keys, one sort per value
-column (RANGE-frame running sum + a whole-partition total in the same
-Window), then a reuse-partitioning groupBy — the agg rides the window's
-exchange, so grouped quantiles cost exactly one shuffle like every other
-grouped statistic.
-
-Scale note: *global* (ungrouped) quantiles order the whole table in a
-single window partition — exact but single-task, like any total order in
-Spark. **At scale, default to** :func:`weighted_quantiles_binned` (the
-same API surface via ``exact=False`` on the groupby/frame methods): its
-shuffle is ``groups × bins`` regardless of row count, with error bounded
-by ``range/bins``, and it is the documented 100 TB path for the whole
-quantile family (quantile, median, MAD). Reserve this exact path for
-bounded-size groups or small tables.
+* **Exact quantiles** (:func:`weighted_quantiles`): the frequency-weights
+  "inverted CDF" — the q-quantile is the smallest value whose
+  cumulative mass reaches ``q × Σw``, cumulating in ascending-x order
+  with ties merged (a RANGE frame: equal values share one cumulative
+  mass). One hash exchange on the group keys, one sort per value
+  column, then a groupBy that reuses the window's partitioning.
+  *Global* quantiles order the whole table in one window partition
+  (one task), so at scale use :func:`weighted_quantiles_binned`
+  (``exact=False`` on the groupby/frame methods): its shuffle is
+  ``groups × bins`` whatever the row count, with error ≤ range/bins.
+* **Per-row prefix sums** (:func:`weighted_cdf`, :func:`weighted_qcut`,
+  :func:`weighted_gini`, :func:`weighted_ks`,
+  :func:`weighted_mannwhitney`, and the inference module's info
+  panel): all read tie-inclusive cumulative masses from one kernel,
+  :func:`_banded_cums`. Its band totals merge into per-row prefix
+  sums, so no ordered window ever spans a whole group.
 """
 
 from __future__ import annotations
 
-from typing import Optional, Sequence, Union
+from typing import NamedTuple, Optional, Sequence, Union
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-
-#: lineage-cut the banded-prefix range probe (see _banded_cums).
-#: None = AUTO (r16): cut when the raw side scans >= 16 partitions
-#: (>~2 GB at the default 128 MB split), where re-running the pruned
-#: min/max scan under the second join side costs far more than one
-#: extra job submission — scale_smoke at 20 M rows measured
-#: qcut 28.5 -> 21.0 s and group_cdf 21.6 -> 17.0 s with the cut.
-#: On few-partition inputs (the sf0.1 bench's one-file tables) the
-#: extra job dominates instead (r15 iso: qcut 1.37 -> 1.71 s), so
-#: AUTO leaves those alone. True/False force either regime (the
-#: scale_smoke A/B rows set them explicitly).
-_CHECKPOINT_RANGE_PROBE: "bool | None" = None
 
 __all__ = [
     "weighted_quantiles",
@@ -64,6 +52,36 @@ def quantile_col_name(col: str, q: float) -> str:
     if float(int(pct)) == pct:
         return f"{col}_p{int(pct)}"
     return f"{col}_p{str(pct).replace('.', '_')}"
+
+
+def _mass(x: Column, w: Column, where: Optional[Column] = None) -> Column:
+    """The quantile family's mass rule: ``w`` where the value ``x`` and
+    the weight are non-NULL and ``w > 0`` (and ``where`` holds), else
+    0. A NULL weight fails ``w > 0``, so it needs no test of its own."""
+    ok = x.isNotNull() & (w > 0)
+    return F.when(ok if where is None else ok & where, w).otherwise(
+        F.lit(0.0)
+    )
+
+
+def _band(v: Column, lo: Column, hi: Column, bands: int) -> Column:
+    """Linear band index of ``v`` over ``[lo, hi]``, clamped to
+    ``[0, bands)``; band 0 when the bounds are NULL or degenerate.
+    Equal values always share a band, so the bounds decide only how
+    evenly rows spread over bands, never a prefix sum or a rank."""
+    v, lo, hi = v.cast("double"), lo.cast("double"), hi.cast("double")
+    return F.when(
+        hi > lo,
+        F.greatest(
+            F.lit(0),
+            F.least(
+                F.lit(bands - 1),
+                F.floor((v - lo) / (hi - lo) * F.lit(float(bands))).cast(
+                    "int"
+                ),
+            ),
+        ),
+    ).otherwise(F.lit(0))
 
 
 def weighted_quantiles(
@@ -104,8 +122,7 @@ def weighted_quantiles(
     aggs = []
     for c in cols:
         x = wdf._value(c)
-        # probability mass of this row for column c (0 ⇒ excluded)
-        mass = F.when(x.isNotNull() & (w > 0), w).otherwise(F.lit(0.0))
+        mass = _mass(x, w)
         cum = Window.partitionBy(*part).orderBy(x).rangeBetween(
             Window.unboundedPreceding, Window.currentRow
         )
@@ -130,6 +147,116 @@ def weighted_quantiles(
     return staged.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
 
 
+class _Spine(NamedTuple):
+    """Column names :func:`_banded_cums` adds for one value column."""
+
+    band: str  #: the row's band index
+    cum: dict  #: mass name → tie-inclusive cumulative sum in value order
+    tot: dict  #: mass name → the group's total
+
+
+def _banded_cums(
+    wdf,
+    masses: dict,
+    keys: Sequence[str],
+    bands: int = 256,
+    bounds: Optional[DataFrame] = None,
+):
+    """The banded prefix-sum kernel: for every row, the tie-inclusive
+    cumulative sum (ascending value order, within the row's ``keys``
+    group) of each named mass, and each mass's group total.
+
+    ``masses`` maps each value column to its masses, ``{name: Column}``.
+    Returns ``(frame, spines)``: ``frame`` is the input rows plus the
+    kernel's columns, whose names ``spines[col]`` (a :class:`_Spine`)
+    gives.
+
+    Plan, so no ordered window ever spans a whole group:
+
+    * one fused per-group min/max aggregate over every value column,
+      joined back (or, keyless only, ``bounds``: a one-row frame of
+      ``(lo, hi)`` column pairs in value-column order, donated by a
+      caller whose own aggregate already scanned the data);
+    * per value column: a linear band over the group's range
+      (:func:`_band`); one band-mass aggregate carrying every mass
+      (map-side combine); one small window over the band totals giving
+      each band's exclusive offset and the group total (one frame
+      partitioned by ``keys``, so the total needs no aggregate and join
+      of its own), joined back on ``(keys, band)``; and one RANGE-frame
+      cumulative window per ``(keys, band)`` straight over the rows.
+      RANGE includes ties, so no distinct-value aggregate or join-back
+      on the value is needed.
+    """
+    from pandas_weights_spark.groupby import _join_group_stats
+
+    keys = list(keys)
+    kcF = [F.col(k) for k in keys]
+    xs = {c: wdf._value(c) for c in masses}
+    lohi = [(f"__lo_{i}__", f"__hi_{i}__") for i in range(len(masses))]
+    if bounds is not None:
+        if keys:
+            raise ValueError("bounds= is only supported without keys")
+        rng = bounds.toDF(*[n for pair in lohi for n in pair])
+    else:
+        rng = wdf.df.groupBy(*kcF).agg(
+            *[
+                agg
+                for (lo, hi), x in zip(lohi, xs.values())
+                for agg in (F.min(x).alias(lo), F.max(x).alias(hi))
+            ]
+        )
+    base = _join_group_stats(wdf.df, rng, keys)
+    spines = {
+        c: _Spine(
+            f"__band__{i}__",
+            {n: f"__cum_{i}_{n}__" for n in ms},
+            {n: f"__tw_{i}_{n}__" for n in ms},
+        )
+        for i, (c, ms) in enumerate(masses.items())
+    }
+    base = base.select(
+        "*",
+        *[
+            _band(xs[c], F.col(lo), F.col(hi), bands).alias(spines[c].band)
+            for (lo, hi), c in zip(lohi, masses)
+        ],
+    )
+
+    cums = []
+    for i, (c, ms) in enumerate(masses.items()):
+        sp = spines[c]
+        bm = {n: f"__bm_{i}_{n}__" for n in ms}
+        off = {n: f"__off_{i}_{n}__" for n in ms}
+        btot = base.groupBy(*kcF, F.col(sp.band)).agg(
+            *[F.sum(m).alias(bm[n]) for n, m in ms.items()]
+        )
+        by_band = Window.partitionBy(*kcF).orderBy(sp.band)
+        before = by_band.rowsBetween(Window.unboundedPreceding, -1)
+        whole = by_band.rowsBetween(
+            Window.unboundedPreceding, Window.unboundedFollowing
+        )
+        offs = btot.select(
+            *keys,
+            sp.band,
+            *[
+                F.coalesce(F.sum(bm[n]).over(before), F.lit(0.0)).alias(off[n])
+                for n in ms
+            ],
+            *[F.sum(bm[n]).over(whole).alias(sp.tot[n]) for n in ms],
+        )
+        base = _join_group_stats(base, offs, [*keys, sp.band])
+        upto = (
+            Window.partitionBy(*kcF, F.col(sp.band))
+            .orderBy(xs[c])
+            .rangeBetween(Window.unboundedPreceding, Window.currentRow)
+        )
+        cums += [
+            (F.sum(m).over(upto) + F.col(off[n])).alias(sp.cum[n])
+            for n, m in ms.items()
+        ]
+    return base.select("*", *cums), spines
+
+
 def weighted_cdf(
     wdf,
     subset: Optional[Sequence[str]] = None,
@@ -140,114 +267,25 @@ def weighted_cdf(
     ``{col}_cdf = F(x) = Σ mass(value ≤ x) / Σ mass`` within the row's
     group for every selected column — the transform counterpart of
     :func:`weighted_quantiles` (``min x with F(x) ≥ q`` is exactly the
-    q-quantile; the invariant is pinned by tests). ``mass`` is the
-    quantile family's rule: ``w`` where value and weight are non-NULL
-    and ``w > 0``, else 0. Rows whose value is NULL keep a NULL cdf.
-
-    Scale shape — the banded prefix sum (same as spearman's ranks, NOT
-    an ordered window over ``Window.partitionBy(keys)``): range-band
-    via the group's min/max (one fused aggregate for every column),
-    per-band mass totals (map-side combine), per-band exclusive
-    offsets + the group total in one tiny ordered window, then a
-    tie-inclusive RANGE-frame cumulative sum per (group, band) DIRECTLY
-    over the rows — no distinct-value aggregate and no join back on
-    (group, value) (the r3 shape paid both; removing them halved the
-    fat shuffles).
-    """
-    from pandas_weights_spark.groupby import _join_group_stats
-
+    q-quantile). Rows whose value is NULL keep a NULL cdf. One
+    :func:`_banded_cums` pass over all columns."""
     cols = list(subset) if subset is not None else wdf.numeric_columns()
     cols = [c for c in cols if c not in keys]
     if not cols:
         raise ValueError("no numeric columns for cdf")
-    w = wdf.weights
-    kc = list(keys)
-    kcF = [F.col(k) for k in kc]
-    orig_cols = list(wdf.df.columns)
-
-    # per-group min/max for EVERY column in one aggregate, joined back
-    # null-safe (NULL-key groups keep their transform, dropna=False)
-    rng_aggs = []
+    frame, spines = _banded_cums(
+        wdf, {c: {"m": _mass(wdf._value(c), wdf.weights)} for c in cols},
+        keys, bands,
+    )
+    cdfs = []
     for c in cols:
-        x = wdf._value(c)
-        rng_aggs += [
-            F.min(x).alias(f"__lo_{c}__"), F.max(x).alias(f"__hi_{c}__")
-        ]
-    rng = wdf.df.groupBy(*kcF).agg(*rng_aggs)
-    if kc:
-        base = _join_group_stats(wdf.df, rng, kc)
-    else:
-        base = wdf.df.crossJoin(F.broadcast(rng))
-
-    def _mass(c: str):
-        x = wdf._value(c)
-        return F.when(x.isNotNull() & (w > 0), w).otherwise(F.lit(0.0))
-
-    band_sel = []
-    for c in cols:
-        v = wdf._value(c).cast("double")
-        lo = F.col(f"__lo_{c}__").cast("double")
-        hi = F.col(f"__hi_{c}__").cast("double")
-        band = F.when(
-            hi > lo,
-            F.least(
-                F.lit(bands - 1),
-                F.floor((v - lo) / (hi - lo) * F.lit(float(bands))).cast(
-                    "int"
-                ),
-            ),
-        ).otherwise(F.lit(0))
-        band_sel.append(band.alias(f"__band__{c}__"))
-    base = base.select("*", *band_sel)
-
-    for c in cols:
-        bcol = f"__band__{c}__"
-        btot = base.groupBy(*kcF, F.col(bcol)).agg(
-            F.sum(_mass(c)).alias("__bm__")
-        )
-        # exclusive band offset AND the group total in ONE WindowExec:
-        # both frames share the partitionBy(keys) spec, so the group
-        # total rides the same sort instead of costing a separate
-        # groupBy(keys) aggregate plus a join back (one fewer Exchange,
-        # pinned by test_plans).
-        off_win = (
-            Window.partitionBy(*kcF)
-            .orderBy(bcol)
-            .rowsBetween(Window.unboundedPreceding, -1)
-        )
-        tot_win = Window.partitionBy(*kcF).orderBy(bcol).rowsBetween(
-            Window.unboundedPreceding, Window.unboundedFollowing
-        )
-        off = btot.select(
-            *kc,
-            bcol,
-            F.coalesce(F.sum("__bm__").over(off_win), F.lit(0.0)).alias(
-                f"__off_{c}__"
-            ),
-            F.sum("__bm__").over(tot_win).alias(f"__tw_{c}__"),
-        )
-        base = _join_group_stats(base, off, kc + [bcol])
-
-    cdf_cols = []
-    for c in cols:
-        bcol = f"__band__{c}__"
-        x = wdf._value(c)
-        # RANGE frame: every row with value <= current (ties included)
-        # is in frame, so the cumulative mass IS F(x) — per-row, no
-        # distinct-value detour
-        cum_win = (
-            Window.partitionBy(*kcF, F.col(bcol))
-            .orderBy(x)
-            .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-        cw = F.sum(_mass(c)).over(cum_win) + F.col(f"__off_{c}__")
-        tw = F.col(f"__tw_{c}__")
-        cdf_cols.append(
+        cw, tw = F.col(spines[c].cum["m"]), F.col(spines[c].tot["m"])
+        cdfs.append(
             F.when(
-                x.isNotNull() & (tw > 0), F.try_divide(cw, tw)
+                wdf._value(c).isNotNull() & (tw > 0), F.try_divide(cw, tw)
             ).alias(f"{c}_cdf")
         )
-    return base.select(*orig_cols, *cdf_cols)
+    return frame.select(*wdf.df.columns, *cdfs)
 
 
 def weighted_qcut(
@@ -366,10 +404,7 @@ def weighted_winsorize(
             wdf, qs, range_bounds[0], range_bounds[1],
             bins=bands, subset=cols, keys=keys,
         )
-    if keys:
-        out = _join_group_stats(wdf.df, bounds, list(keys))
-    else:
-        out = wdf.df.crossJoin(F.broadcast(bounds))
+    out = _join_group_stats(wdf.df, bounds, keys)
     lo_of = {c: quantile_col_name(c, qlo) for c in cols}
     hi_of = {c: quantile_col_name(c, upper) for c in cols}
     for c in cols:
@@ -430,7 +465,7 @@ def weighted_quantiles_binned(
             F.lit(bins - 1),
             F.floor((clamped - F.lit(float(lo))) / F.lit(width)).cast("int"),
         )
-        mass = F.when(x.isNotNull() & (w > 0), w).otherwise(F.lit(0.0))
+        mass = _mass(x, w)
         sel += [
             F.when(mass > 0, b).alias(f"__b_{c}__"),
             mass.alias(f"__m_{c}__"),
@@ -505,114 +540,46 @@ def weighted_quantiles_binned(
     return cdf.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
 
 
-def _banded_cums(
-    wdf,
-    col: str,
-    keys: Sequence[str],
-    masses: dict,
-    bands: int = 256,
-    bounds=None,
-):
-    """Shared banded-prefix engine: per-row INCLUSIVE cumulative sums
-    (ties included, value order) of several named mass expressions over
-    ``col`` within each ``keys`` group, plus each mass's group total.
+def _two_sample(x: Column, w: Column, group_col: str, group_a, group_b):
+    """The per-side masses ``{"a": …, "b": …}`` of a two-sample
+    statistic: the mass rule on rows whose ``group_col`` equals
+    (null-safe) ``group_a`` / ``group_b``."""
+    g = F.col(group_col)
+    return {
+        "a": _mass(x, w, g.eqNullSafe(F.lit(group_a))),
+        "b": _mass(x, w, g.eqNullSafe(F.lit(group_b))),
+    }
 
-    Returns ``(frame, cums, tots)`` where ``cums[name]``/``tots[name]``
-    are column names on ``frame``. Same scale shape as
-    :func:`weighted_cdf` (range-banded windows; never an ordered window
-    over the whole group) generalized to N accumulators: band totals
-    for ALL masses ride one aggregate, offsets + totals one tiny
-    WindowExec, per-row cumulative sums one (keys, band) WindowExec.
 
-    ``bounds`` (r6, keyless only): a 1-row DataFrame carrying
-    ``__lo__``/``__hi__`` — lets a caller whose OWN aggregate already
-    scanned the data (e.g. :func:`~pandas_weights_spark.inference.
-    weighted_info_panel`'s grouping-sets pass) donate the min/max so
-    the band-range probe rides a ReusedExchange instead of a fifth
-    raw-relation read. Values are identical either way; only the plan
-    shrinks.
-    """
-    from pandas_weights_spark.groupby import _join_group_stats
-
-    kcF = [F.col(k) for k in keys]
-    x = wdf._value(col)
-    if bounds is not None:
-        if keys:
-            raise ValueError("bounds= is only supported without keys")
-        rng = bounds.select("__lo__", "__hi__")
-    else:
-        rng = wdf.df.groupBy(*kcF).agg(
-            F.min(x).alias("__lo__"), F.max(x).alias("__hi__")
-        )
-        # r16 (r15 "Not yet optimized" #2): the probe subtree executes
-        # under BOTH join sides when bounds are not donated; the
-        # lineage cut trades one extra Spark job for one fewer pruned
-        # column scan. Scale-adaptive via the input's partition count
-        # (the fan_out guard pattern — partitions track input bytes
-        # for file sources): ON at >= 16 scan partitions where
-        # scale_smoke measured it 1.27-1.36x at 20 M rows, OFF on the
-        # few-partition inputs where the extra job dominates instead
-        # (module flag _CHECKPOINT_RANGE_PROBE forces either regime;
-        # rows identical in both — the probe is deterministic).
-        cut = _CHECKPOINT_RANGE_PROBE
-        if cut is None:
-            cut = wdf.df.rdd.getNumPartitions() >= 16
-        if cut:
-            rng = rng.localCheckpoint(eager=False)
-    if keys:
-        base = _join_group_stats(wdf.df, rng, list(keys))
-    else:
-        base = wdf.df.crossJoin(F.broadcast(rng))
-    v = x.cast("double")
-    lo, hi = F.col("__lo__").cast("double"), F.col("__hi__").cast("double")
-    band = F.when(
-        hi > lo,
-        F.least(
-            F.lit(bands - 1),
-            F.floor((v - lo) / (hi - lo) * F.lit(float(bands))).cast("int"),
-        ),
-    ).otherwise(F.lit(0))
-    base = base.select("*", band.alias("__band__"))
-
-    btot = base.groupBy(*kcF, F.col("__band__")).agg(
-        *[F.sum(m).alias(f"__bm_{n}__") for n, m in masses.items()]
-    )
-    off_win = (
-        Window.partitionBy(*kcF)
-        .orderBy("__band__")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    tot_win = Window.partitionBy(*kcF).orderBy("__band__").rowsBetween(
-        Window.unboundedPreceding, Window.unboundedFollowing
-    )
-    off = btot.select(
-        *keys,
-        "__band__",
-        *[
-            F.coalesce(
-                F.sum(f"__bm_{n}__").over(off_win), F.lit(0.0)
-            ).alias(f"__off_{n}__")
-            for n in masses
-        ],
-        *[
-            F.sum(f"__bm_{n}__").over(tot_win).alias(f"__tot_{n}__")
-            for n in masses
-        ],
-    )
-    base = _join_group_stats(base, off, list(keys) + ["__band__"])
-    cum_win = (
-        Window.partitionBy(*kcF, F.col("__band__"))
-        .orderBy(x)
-        .rangeBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    sel = ["*"] + [
-        (F.sum(m).over(cum_win) + F.col(f"__off_{n}__")).alias(f"__cum_{n}__")
-        for n, m in masses.items()
+def _gini(x: Column, m: Column, sp: _Spine):
+    """Gini's aggregate columns over a :func:`_banded_cums` frame
+    carrying masses ``m`` (mass) and ``s`` (mass·x), and the statistic
+    read from them. ``__W__`` is the group's mass."""
+    cw, cs = F.col(sp.cum["m"]), F.col(sp.cum["s"])
+    aggs = [
+        F.sum(m * (x.cast("double") * cw - cs)).alias("__num__"),
+        F.min(F.col(sp.tot["m"])).alias("__W__"),
+        F.min(F.col(sp.tot["s"])).alias("__S__"),
     ]
-    out = base.select(*sel)
-    cums = {n: f"__cum_{n}__" for n in masses}
-    tots = {n: f"__tot_{n}__" for n in masses}
-    return out, cums, tots
+    return aggs, F.try_divide(
+        F.col("__num__"), F.col("__W__") * F.col("__S__")
+    )
+
+
+def _ks(x: Column, sp: _Spine):
+    """KS's aggregate columns over a :func:`_banded_cums` frame carrying
+    the :func:`_two_sample` masses, and the statistic read from them
+    (NULL unless both sides have mass). ``__na__``/``__nb__`` are the
+    sides' masses."""
+    fa = F.try_divide(F.col(sp.cum["a"]), F.col(sp.tot["a"]))
+    fb = F.try_divide(F.col(sp.cum["b"]), F.col(sp.tot["b"]))
+    aggs = [
+        F.max(F.when(x.isNotNull(), F.abs(fa - fb))).alias("__ks__"),
+        F.min(F.col(sp.tot["a"])).alias("__na__"),
+        F.min(F.col(sp.tot["b"])).alias("__nb__"),
+    ]
+    both = (F.col("__na__") > 0) & (F.col("__nb__") > 0)
+    return aggs, F.when(both, F.col("__ks__"))
 
 
 def weighted_gini(
@@ -633,27 +600,14 @@ def weighted_gini(
     pass + one aggregate; negative values are allowed (G is then not
     bounded by [0,1], as usual for the MAD form).
     """
-    w = wdf.weights
     x = wdf._value(col)
-    m = F.when(x.isNotNull() & w.isNotNull() & (w > 0), w).otherwise(
-        F.lit(0.0)
+    m = _mass(x, wdf.weights)
+    frame, spines = _banded_cums(
+        wdf, {col: {"m": m, "s": m * x.cast("double")}}, keys, bands
     )
-    frame, cums, tots = _banded_cums(
-        wdf, col, list(keys),
-        {"m": m, "s": m * x.cast("double")}, bands=bands,
-    )
-    cw, cs = F.col(cums["m"]), F.col(cums["s"])
-    W, S = F.col(tots["m"]), F.col(tots["s"])
-    num = F.sum(m * (x.cast("double") * cw - cs))
-    agg = frame.groupBy(*[F.col(k) for k in keys]).agg(
-        num.alias("__num__"), F.min(W).alias("__W__"), F.min(S).alias("__S__")
-    )
-    return agg.select(
-        *keys,
-        F.try_divide(
-            F.col("__num__"), F.col("__W__") * F.col("__S__")
-        ).alias("gini"),
-        F.col("__W__").alias("n"),
+    aggs, gini = _gini(x, m, spines[col])
+    return frame.groupBy(*[F.col(k) for k in keys]).agg(*aggs).select(
+        *keys, gini.alias("gini"), F.col("__W__").alias("n")
     )
 
 
@@ -677,33 +631,19 @@ def weighted_ks(
     is one banded-prefix pass + one max aggregate, no sort of the
     whole group on one task.
     """
-    w = wdf.weights
     x = wdf._value(col)
-    ok = x.isNotNull() & w.isNotNull() & (w > 0)
-    ma = F.when(ok & F.col(group_col).eqNullSafe(F.lit(group_a)), w).otherwise(
-        F.lit(0.0)
+    frame, spines = _banded_cums(
+        wdf,
+        {col: _two_sample(x, wdf.weights, group_col, group_a, group_b)},
+        keys,
+        bands,
     )
-    mb = F.when(ok & F.col(group_col).eqNullSafe(F.lit(group_b)), w).otherwise(
-        F.lit(0.0)
-    )
-    frame, cums, tots = _banded_cums(
-        wdf, col, list(keys), {"a": ma, "b": mb}, bands=bands
-    )
-    fa = F.try_divide(F.col(cums["a"]), F.col(tots["a"]))
-    fb = F.try_divide(F.col(cums["b"]), F.col(tots["b"]))
-    d = F.when(x.isNotNull(), F.abs(fa - fb))
-    agg = frame.groupBy(*[F.col(k) for k in keys]).agg(
-        F.max(d).alias("ks_stat"),
-        F.min(F.col(tots["a"])).alias("n_a"),
-        F.min(F.col(tots["b"])).alias("n_b"),
-    )
-    return agg.select(
+    aggs, ks = _ks(x, spines[col])
+    return frame.groupBy(*[F.col(k) for k in keys]).agg(*aggs).select(
         *keys,
-        F.when((F.col("n_a") > 0) & (F.col("n_b") > 0), F.col("ks_stat")).alias(
-            "ks_stat"
-        ),
-        "n_a",
-        "n_b",
+        ks.alias("ks_stat"),
+        F.col("__na__").alias("n_a"),
+        F.col("__nb__").alias("n_b"),
     )
 
 
@@ -730,32 +670,24 @@ def weighted_mannwhitney(
     one task. ``z_stat`` is the large-sample normal approximation
     (no tie correction): (U − n_a·n_b/2)/√(n_a·n_b·(n_a+n_b+1)/12).
     """
-    w = wdf.weights
     x = wdf._value(col)
-    ok = x.isNotNull() & w.isNotNull() & (w > 0)
-    ma = F.when(ok & F.col(group_col).eqNullSafe(F.lit(group_a)), w).otherwise(
-        F.lit(0.0)
-    )
-    mb = F.when(ok & F.col(group_col).eqNullSafe(F.lit(group_b)), w).otherwise(
-        F.lit(0.0)
-    )
-    frame, cums, tots = _banded_cums(
-        wdf, col, list(keys), {"a": ma, "b": mb}, bands=bands
-    )
+    masses = _two_sample(x, wdf.weights, group_col, group_a, group_b)
+    frame, spines = _banded_cums(wdf, {col: masses}, keys, bands)
+    sp = spines[col]
     kcF = [F.col(k) for k in keys]
     at_win = (
-        Window.partitionBy(*kcF, F.col("__band__"))
+        Window.partitionBy(*kcF, F.col(sp.band))
         .orderBy(x)
         .rangeBetween(Window.currentRow, Window.currentRow)
     )
-    b_at = F.sum(mb).over(at_win)
-    b_below = F.col(cums["b"]) - b_at  # inclusive cum minus ties at x
+    b_at = F.sum(masses["b"]).over(at_win)
+    b_below = F.col(sp.cum["b"]) - b_at  # inclusive cum minus ties at x
     # window exprs must materialize before the aggregate sees them
     staged = frame.select(
         *kcF,
-        (ma * (b_below + b_at / F.lit(2.0))).alias("__contrib__"),
-        F.col(tots["a"]).alias("__ta__"),
-        F.col(tots["b"]).alias("__tb__"),
+        (masses["a"] * (b_below + b_at / F.lit(2.0))).alias("__contrib__"),
+        F.col(sp.tot["a"]).alias("__ta__"),
+        F.col(sp.tot["b"]).alias("__tb__"),
     )
     agg = staged.groupBy(*kcF).agg(
         F.sum("__contrib__").alias("u_stat"),
@@ -816,10 +748,7 @@ def weighted_robust_zscore(
             wdf, qs, range_bounds[0], range_bounds[1],
             bins=bands, subset=cols, keys=keys,
         )
-    if keys:
-        out = _join_group_stats(wdf.df, stats, list(keys))
-    else:
-        out = wdf.df.crossJoin(F.broadcast(stats))
+    out = _join_group_stats(wdf.df, stats, keys)
     names = {
         c: [quantile_col_name(c, q) for q in qs] for c in cols
     }

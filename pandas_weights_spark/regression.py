@@ -128,10 +128,7 @@ def weighted_linfit_transform(
     keys = list(by) if by else []
     coef = _coeff_frame(wdf, x_col, y_col, keys, float(ddof), min_periods)
     coef = coef.select(*keys, "slope", "intercept")
-    if keys:
-        j = _join_group_stats(wdf.df, coef, keys)
-    else:
-        j = wdf.df.crossJoin(F.broadcast(coef))
+    j = _join_group_stats(wdf.df, coef, keys)
     x = wdf._value(x_col)
     y = wdf._value(y_col)
     fitted = F.when(

@@ -357,10 +357,12 @@ class WeightedResampler:
         cols = [c for c in self._wdf.numeric_columns() if c != self._on]
         if not cols:
             raise ValueError("no numeric columns to aggregate")
-        staged = self._wdf._subset(cols)
-        staged._df = self._wdf.df.where(
-            F.col(self._on).isNotNull()
-        ).withColumn(self._on, self.bucket())
+        staged = self._wdf._with_df(
+            self._wdf.df.where(F.col(self._on).isNotNull()).withColumn(
+                self._on, self.bucket()
+            ),
+            cols,
+        )
         if exact:
             out = weighted_quantiles(
                 staged, q, subset=cols, keys=[self._on]

@@ -486,33 +486,106 @@ class TestRobustZscore:
         assert "BatchEvalPython" not in plan
 
 
-class TestRangeProbeCutBothRegimes:
-    """r16: the banded-prefix range-probe lineage cut is
-    scale-adaptive (partition-count guard). Values must be identical
-    with the cut forced ON and OFF — the probe is deterministic, so
-    the cut may only change the plan, never the rows."""
+class TestBandedKernel:
+    """The CDF/rank family's one banded prefix-sum kernel
+    (``quantile._banded_cums``)."""
 
-    def test_qcut_rows_identical_both_regimes(self, spark):
-        from pandas_weights_spark import quantile as Q
-        from pandas_weights_spark import wt
-
-        df = spark.range(4000).select(
-            (F.col("id") % 7).alias("g"),
-            (F.col("id") % 97).cast("double").alias("x"),
-            ((F.col("id") % 5) + 1).cast("double").alias("w"),
+    def test_multi_column_cdf_equals_single_column(self, spark):
+        # one kernel pass over several columns must give every column
+        # the exact doubles its own single-column pass gives: NULL x,
+        # NULL and zero weights, a single-row group, a constant
+        # (hi == lo) group and a NULL-key group
+        rows = [
+            (0, "a", 1.0, 5.0, 1.0),
+            (1, "a", 2.0, None, 2.0),
+            (2, "a", None, 3.0, 1.5),
+            (3, "a", 2.0, 3.0, None),
+            (4, "a", 7.5, 1.0, 0.0),
+            (5, "a", 0.25, 4.0, 3.0),
+            (6, "one", 4.0, 4.0, 2.0),
+            (7, "k", 3.0, 3.0, 1.0),
+            (8, "k", 3.0, 3.0, 2.0),
+            (9, "k", 3.0, None, 0.0),
+            (10, None, 1.0, 2.0, 1.0),
+            (11, None, 6.0, -2.0, 4.0),
+        ]
+        df = spark.createDataFrame(
+            rows, "id int, g string, x double, y double, w double"
         )
         wdf = wt(df, "w")
 
-        def rows():
-            out = wdf.groupby("g")[["x"]].qcut("x", 4)
-            return sorted(tuple(r) for r in out.collect())
+        def cdfs(frame, col):
+            return {r["id"]: r[f"{col}_cdf"] for r in frame.collect()}
 
-        old = Q._CHECKPOINT_RANGE_PROBE
+        for grouped in (
+            wdf.groupby("g", dropna=False),
+            wdf.groupby("g"),
+        ):
+            multi = grouped[["x", "y"]].cdf(bands=4)
+            for c in ("x", "y"):
+                assert cdfs(multi, c) == cdfs(grouped[[c]].cdf(bands=4), c)
+        multi = wdf[["x", "y"]].cdf()
+        for c in ("x", "y"):
+            assert cdfs(multi, c) == cdfs(wdf[[c]].cdf(), c)
+        got = cdfs(wdf.groupby("g", dropna=False)[["x", "y"]].cdf(), "x")
+        assert got[2] is None  # NULL value keeps a NULL cdf
+        assert got[6] == 1.0  # single-row group
+        assert got[7] == got[8] == got[9] == 1.0  # constant group
+
+    def test_plan_independent_of_scan_partitions(self, spark, tmp_path):
+        # gini/ks plan the same over a many-partition scan as over a
+        # one-partition scan: no lineage cut (ExistingRDD), no extra
+        # exchange, window, sort or join
+        import re
+
+        import pandas_weights_spark.plans as P
+        from pandas_weights_spark.quantile import weighted_gini, weighted_ks
+
+        data = spark.range(4000).select(
+            (F.col("id") % 7).alias("g"),
+            (F.col("id") % 97).cast("double").alias("x"),
+            (F.col("id") % 2).alias("s"),
+            ((F.col("id") % 5) + 1).cast("double").alias("w"),
+        )
+        data.coalesce(1).write.parquet(str(tmp_path / "one"))
+        data.repartition(20).write.parquet(str(tmp_path / "many"))
+        nodes = {
+            "exchange": r"Exchange (?:hash|range|SinglePartition)",
+            "window": r"\bWindow \[",
+            "sort": r"\bSort \[",
+            "join": r"(?:SortMergeJoin|BroadcastHashJoin|ShuffledHashJoin"
+            r"|BroadcastNestedLoopJoin|CartesianProduct)",
+        }
+
+        def shape(df):
+            plan = P.physical_plan(df)
+            assert "ExistingRDD" not in plan, plan
+            return {n: len(re.findall(p, plan)) for n, p in nodes.items()}
+
+        # 20 files -> 20 scan partitions; no size-estimate broadcasts,
+        # so the larger file footprint of the 20-file table cannot
+        # switch a join strategy
+        confs = {
+            "spark.sql.files.minPartitionNum": "20",
+            "spark.sql.autoBroadcastJoinThreshold": "-1",
+        }
+        old = {k: spark.conf.get(k, None) for k in confs}
+        for k, v in confs.items():
+            spark.conf.set(k, v)
         try:
-            Q._CHECKPOINT_RANGE_PROBE = False
-            off = rows()
-            Q._CHECKPOINT_RANGE_PROBE = True
-            on = rows()
+            shapes = {}
+            for name in ("one", "many"):
+                t = spark.read.parquet(str(tmp_path / name))
+                assert (t.rdd.getNumPartitions() >= 16) == (name == "many")
+                wdf = wt(t, "w")
+                shapes[name] = (
+                    shape(weighted_gini(wdf, "x", keys=["g"])),
+                    shape(weighted_ks(wdf, "x", "s", 0, 1, keys=["g"])),
+                )
         finally:
-            Q._CHECKPOINT_RANGE_PROBE = old
-        assert off == on and len(off) == 4000
+            for k, v in old.items():
+                if v is None:
+                    spark.conf.unset(k)
+                else:
+                    spark.conf.set(k, v)
+        assert shapes["many"] == shapes["one"]

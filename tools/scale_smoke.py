@@ -1235,31 +1235,7 @@ def main() -> int:
             f"({vec_n / dt / 1e6:6.1f} M vecs/s)"
         )
 
-    # r16 (VERDICT r15 item 5): re-measure the two sf0.1-rejected
-    # changes at scale, recording keep-or-reject numbers.
-    # (a) banded-prefix RANGE-PROBE lineage cut (quantile.py
-    # _CHECKPOINT_RANGE_PROBE): the per-group min/max probe executes
-    # under both join sides when bounds are not donated; the cut
-    # trades one extra job for one fewer column scan.
-    from pandas_weights_spark import quantile as _Q
-
-    def _probe_pair(name, thunk):
-        _Q._CHECKPOINT_RANGE_PROBE = False
-        bench(f"{name} probe-cut OFF", thunk)
-        _Q._CHECKPOINT_RANGE_PROBE = True
-        bench(f"{name} probe-cut ON", thunk)
-        _Q._CHECKPOINT_RANGE_PROBE = False
-
-    _probe_pair(
-        "qcut q=4 200 groups",
-        lambda: wdf.groupby("g")[["x"]].qcut("x", 4),
-    )
-    _probe_pair(
-        "group_cdf 200 groups",
-        lambda: wdf.groupby("g")[["x"]].cdf(),
-    )
-
-    # (b) ccnet/mink SCORING fan_out over a one-task source (the
+    # ccnet/mink SCORING fan_out over a one-task source (the
     # sf0.1 docs table is one parquet file = one scan task; at scale
     # a few-files shard layout reproduces it). Tables precomputed +
     # eagerly checkpointed so both arms time ONLY the scoring pass.
