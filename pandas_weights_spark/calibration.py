@@ -342,14 +342,14 @@ def bootstrap_se(
     expression list; the serialized plan OOM'd executors at B=100 —
     the explode shape keeps the plan O(1) in B.)
     """
+    from pandas_weights_spark.quantile import _mass
     from pandas_weights_spark.sample import uniform_hash
 
     if n_replicates < 2:
         raise ValueError("n_replicates must be >= 2")
     w = F.col(weight) if isinstance(weight, str) else weight
     x = F.col(value)
-    ok = x.isNotNull() & w.isNotNull() & (w > 0)
-    m = F.when(ok, w.cast("double")).otherwise(F.lit(0.0))
+    m = _mass(x, w.cast("double"))
     rows = df.select(
         m.alias("__m__"),
         x.alias("__x__"),

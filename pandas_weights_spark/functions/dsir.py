@@ -325,10 +325,7 @@ def dsir_gumbel_topk(
     Returns ``df``'s columns plus ``key_col``; no output ordering is
     promised in the salted regime (samples are consumed as sets).
     """
-    from pandas_weights_spark.topk import (
-        _group_limit_threshold,
-        global_top_by_mass,
-    )
+    from pandas_weights_spark.topk import capped_top
 
     if k < 1:
         raise ValueError("k must be >= 1")
@@ -339,6 +336,4 @@ def dsir_gumbel_topk(
         *df.columns, (log_weight + g).alias(key_col)
     ).where(F.col(key_col).isNotNull())
     order = [F.col(key_col).desc(), *[F.col(c).asc() for c in ids]]
-    if int(k) <= _group_limit_threshold(df):
-        return keyed.orderBy(*order).limit(int(k))
-    return global_top_by_mass(keyed, key_col, order, int(k))
+    return capped_top(keyed, key_col, order, int(k))

@@ -18,6 +18,12 @@ from typing import Optional, Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from pandas_weights_spark.topk import (
+    capped_top,
+    global_top_by_mass,
+    partitioned_topk,
+)
+
 __all__ = [
     "tokens",
     "token_count",
@@ -637,8 +643,6 @@ def class_tfidf(
     (class, term) count table when vocab is huge — ``f(t)``, ``A``,
     and ranks are then statistics of the PRUNED table (documented;
     the default 1 prunes nothing)."""
-    from pandas_weights_spark.topk import partitioned_topk
-
     tok = df.select(
         F.col(class_col).alias("__c__"),
         F.explode(tokens(F.lower(F.col(text_col)))).alias("term"),
@@ -1453,41 +1457,14 @@ def bigram_counts(
     weight: Optional[Column] = None,
 ) -> DataFrame:
     """Corpus bigram table ``(w1, w2, mass)`` — the training aggregate
-    of :func:`bigram_lm_score`: one row-local ``word_ngrams(…, 2)``
-    fan-out + one map-side-combining aggregate, capped at the top
-    ``max_bigrams`` by (mass desc, w1, w2) via
-    ``topk.global_top_by_mass`` (driver state bounded at ~2·cap rows —
-    the dropped tail backs off to the unigram model anyway). The
-    SELECTED SET is exactly the top-``max_bigrams`` under that order,
-    but the output rows arrive in NO promised order — sort downstream
-    if ordering matters.
-    """
-    w = weight if weight is not None else F.lit(1.0)
-    t = F.col(text_col)
-    lowered = F.lower(t) if lowercase else t
-    toks = tokens(lowered)
-    grams = F.when(F.size(toks) >= 2, word_ngrams(lowered, 2, toks=toks)) \
-        .otherwise(F.array().cast("array<string>"))
-    rows = df.select(
-        w.cast("double").alias("__w__"), F.explode(grams).alias("g")
-    ).where(F.length("g") > 0)
-    split = F.split(F.col("g"), " ", 2)
-    from pandas_weights_spark.topk import global_top_by_mass
-
-    agg = (
-        rows.select(
-            F.get(split, 0).alias("w1"),
-            F.get(split, 1).alias("w2"),
-            "__w__",
-        )
-        .groupBy("w1", "w2")
-        .agg(F.sum("__w__").alias("mass"))
-    )
-    # exact histogram pre-filter: the driver TakeOrdered merge holds
-    # ~2·cap rows instead of partitions·cap (r7, same result set)
-    return global_top_by_mass(
-        agg, "mass", [F.col("mass").desc(), F.col("w1"), F.col("w2")],
-        max_bigrams,
+    of :func:`bigram_lm_score`: :func:`ngram_counts` at ``n=2`` (the
+    :func:`_gram_mass` count kernel), capped at the top
+    ``max_bigrams`` by (mass desc, w1, w2). The dropped tail backs off
+    to the unigram model anyway; the output rows arrive in no promised
+    order."""
+    return ngram_counts(
+        df, text_col, 2, max_ngrams=max_bigrams, lowercase=lowercase,
+        weight=weight,
     )
 
 
@@ -1570,42 +1547,15 @@ def trigram_counts(
     weight: Optional[Column] = None,
 ) -> DataFrame:
     """Corpus trigram table ``(w1, w2, w3, mass)`` — the training
-    aggregate of :func:`trigram_lm_score`: one row-local
-    ``word_ngrams(…, 3)`` fan-out + one map-side-combining aggregate,
-    capped at the top ``max_trigrams`` by (mass desc, w1, w2, w3) via
-    ``topk.global_top_by_mass`` (driver state bounded at ~2·cap rows —
-    the dropped tail backs off to the bigram/unigram orders anyway,
-    exactly the interpolation's job). The SELECTED SET is exactly the
-    top-``max_trigrams`` under that order, but the output rows arrive
-    in NO promised order — sort downstream if ordering matters.
-    """
-    w = weight if weight is not None else F.lit(1.0)
-    t = F.col(text_col)
-    lowered = F.lower(t) if lowercase else t
-    toks = tokens(lowered)
-    grams = F.when(
-        F.size(toks) >= 3, word_ngrams(lowered, 3, toks=toks)
-    ).otherwise(F.array().cast("array<string>"))
-    rows = df.select(
-        w.cast("double").alias("__w__"), F.explode(grams).alias("g")
-    ).where(F.length("g") > 0)
-    split = F.split(F.col("g"), " ", 3)
-    from pandas_weights_spark.topk import global_top_by_mass
-
-    agg = (
-        rows.select(
-            F.get(split, 0).alias("w1"),
-            F.get(split, 1).alias("w2"),
-            F.get(split, 2).alias("w3"),
-            "__w__",
-        )
-        .groupBy("w1", "w2", "w3")
-        .agg(F.sum("__w__").alias("mass"))
-    )
-    return global_top_by_mass(
-        agg, "mass",
-        [F.col("mass").desc(), F.col("w1"), F.col("w2"), F.col("w3")],
-        max_trigrams,
+    aggregate of :func:`trigram_lm_score`: :func:`ngram_counts` at
+    ``n=3`` (the :func:`_gram_mass` count kernel), capped at the top
+    ``max_trigrams`` by (mass desc, w1, w2, w3). The dropped tail
+    backs off to the bigram/unigram orders (exactly the
+    interpolation's job); the output rows arrive in no promised
+    order."""
+    return ngram_counts(
+        df, text_col, 3, max_ngrams=max_trigrams, lowercase=lowercase,
+        weight=weight,
     )
 
 
@@ -2072,28 +2022,6 @@ def split_sentences(text: Column) -> Column:
 _ABBREV_CAND_RE = r"^[A-Za-z][A-Za-z.]*\.$"
 
 
-def _capped_cut(df: DataFrame, order_cols, cap: int) -> DataFrame:
-    """Threshold-guarded EXACT top-``cap`` cut under ``order_cols``
-    (a total order — callers append tie-break columns): the
-    vocab/dsir discipline (r15). At or under the session's window
-    group-limit threshold, ``orderBy().limit`` compiles to
-    TakeOrdered whose driver merge is bounded by ``partitions ×
-    threshold`` rows; above it (the punkt trainers are called with
-    million-row caps) that merge is the driver OOM topk.py:50–54
-    documents, so the cut routes through the salted executor-side
-    :func:`~pandas_weights_spark.topk.global_top_by_mass`. Identical
-    row set either way; no output ordering is promised in the salted
-    regime (the model tables are consumed as sets)."""
-    from pandas_weights_spark.topk import (
-        _group_limit_threshold,
-        global_top_by_mass,
-    )
-
-    if int(cap) <= _group_limit_threshold(df):
-        return df.orderBy(*order_cols).limit(int(cap))
-    return global_top_by_mass(df, "score", list(order_cols), int(cap))
-
-
 def train_sentence_abbreviations(
     df: DataFrame,
     text_col: str,
@@ -2201,8 +2129,8 @@ def train_sentence_abbreviations(
         (F.round(score, 6) + F.lit(0.0)).alias("score"),
         (score >= F.lit(float(threshold))).alias("is_abbrev"),
     )
-    return _capped_cut(
-        scored, [F.col("score").desc(), F.col("abbrev")],
+    return capped_top(
+        scored, "score", [F.col("score").desc(), F.col("abbrev")],
         int(max_abbrevs),
     )
 
@@ -2394,8 +2322,8 @@ def train_sentence_collocations(
         (F.round(score, 6) + F.lit(0.0)).alias("score"),
         (score >= F.lit(float(threshold))).alias("is_collocation"),
     )
-    return _capped_cut(
-        out, [F.col("score").desc(), F.col("w1"), F.col("w2")],
+    return capped_top(
+        out, "score", [F.col("score").desc(), F.col("w1"), F.col("w2")],
         int(max_pairs),
     )
 
@@ -2504,8 +2432,8 @@ def train_sentence_starters(
         (F.round(score, 6) + F.lit(0.0)).alias("score"),
         (score >= F.lit(float(threshold))).alias("is_starter"),
     )
-    return _capped_cut(
-        out, [F.col("score").desc(), F.col("starter")],
+    return capped_top(
+        out, "score", [F.col("score").desc(), F.col("starter")],
         int(max_starters),
     )
 
@@ -2876,67 +2804,61 @@ def split_sentences_sql(expr: str) -> str:
     )
 
 
-def ngram_counts(
+def _gram_mass(
     df: DataFrame,
     text_col: str,
-    n: int,
-    max_ngrams: "Optional[int]" = 500_000,
-    lowercase: bool = True,
-    weight: Optional[Column] = None,
-    arrow: bool = False,
+    orders: "Sequence[int]",
+    lowercase: bool,
+    weight: Column,
+    arrow: bool,
 ) -> DataFrame:
-    """Corpus n-gram table ``(w1..wn, mass)`` for ANY order ``n >= 2``
-    — the general form of :func:`bigram_counts` / :func:`trigram_counts`
-    (same row-local fan-out + map-side-combining aggregate + exact
-    capped top-``max_ngrams`` by (mass desc, w1..wn) via
-    ``topk.global_top_by_mass``; output rows arrive in no promised
-    order). CCNet's KenLM is order 5 — ``ngram_counts(df, t, 5)`` is
-    that table.
+    """Per-gram weight mass of every word n-gram order in ``orders``
+    from ONE corpus pass: ``(w1..w_maxn, mass)``, the count stage of
+    every word n-gram table builder (:func:`ngram_counts` and so
+    :func:`bigram_counts` / :func:`trigram_counts`,
+    :func:`ngram_model_tables`, ``vocab.build_vocabulary`` and the
+    vocab word tables).
 
-    ``max_ngrams=None`` (r10) skips the top-k entirely and returns the
-    full distributed count table — the input :func:`mkn_discounts`
-    needs (any cap cuts the count-1 tail the count-of-counts estimate
-    lives on).  The uncapped table is one map-side-combined aggregate,
-    never collected; the estimator reduces it to four scalars.
+    A gram of order n fills ``w1..wn``; its higher components are
+    NULL, so the null pattern alone tells the orders apart. Grams
+    follow :func:`tokens`: order-1 grams drop empty tokens, higher
+    orders keep the empty edge tokens a tab-led or trailing-whitespace
+    text splits into, and a text shorter than n tokens has no order-n
+    gram. ``weight`` is summed exactly as passed (callers choose the
+    cast); a gram seen only under NULL weights keeps a NULL-mass row.
 
-    ``arrow=True`` (r11) counts (w1..wn) partials in a ``mapInPandas``
-    Counter instead of the interpreted zip-with fan-out + explode —
-    the LID-profile discipline; the final (w1..wn) sum and the capped
-    top-k are unchanged. Unweighted masses are exact integers, so the
-    table is IDENTICAL to the JVM path (pinned); weighted masses
-    differ only at partial-sum-order ulps, exactly like any grouped
-    float sum."""
-    n = int(n)
-    if n < 2:
-        raise ValueError("n must be >= 2 (use unigram_logprobs below)")
-    w = weight if weight is not None else F.lit(1.0)
+    The JVM form (default) builds one combined array of NULL-padded
+    gram structs per row, explodes it once and sums in one map-side-
+    combining aggregate. ``arrow=True`` counts per-batch partials in a
+    ``mapInPandas`` Counter instead (summed as doubles) and feeds them
+    to the same aggregate. Unweighted masses are exact integers, so
+    both forms give identical tables; weighted masses may differ at
+    partial-sum-order ulps, like any grouped float sum."""
+    orders = sorted(int(n) for n in orders)
+    maxn = orders[-1]
+    gram_cols = [f"w{i + 1}" for i in range(maxn)]
     t = F.col(text_col)
     lowered = F.lower(t) if lowercase else t
-    from pandas_weights_spark.topk import global_top_by_mass
 
-    gram_cols = [f"w{i + 1}" for i in range(n)]
     if arrow:
         from pyspark.sql import types as _T
 
-        nn = n
         part_schema = _T.StructType(
             [_T.StructField(c, _T.StringType()) for c in gram_cols]
-            + [_T.StructField("__c__", _T.DoubleType())]
-        )
-        src = df.select(
-            w.cast("double").alias("__w__"), lowered.alias("__t__")
+            + [_T.StructField("__w__", _T.DoubleType())]
         )
 
         def count_batches(batches):
             import re as _re
+            from collections import Counter
 
             import pandas as pd
-            from collections import Counter
 
             # EXACT mirror of tokens(): F.trim strips ASCII spaces
             # only; Java \s is [ \t\n\x0B\f\r] (NOT unicode spaces,
             # unlike Python's str.split)
             ws = _re.compile("[ \t\n\x0b\f\r]+")
+            pad = (None,) * maxn
             for pdf in batches:
                 c: Counter = Counter()
                 seen: set = set()
@@ -2944,161 +2866,11 @@ def ngram_counts(
                     if not isinstance(txt, str):
                         continue
                     # NULL weight (None, or NaN after the float cast):
-                    # the JVM twin's F.sum SKIPS the contribution but
-                    # still EMITS the gram — a gram seen only under
-                    # NULL weights gets a NULL-mass row (r12 ADVICE)
+                    # the JVM form's F.sum skips the contribution but
+                    # still emits the gram
                     null_w = wt_ is None or wt_ != wt_
                     toks_ = ws.split(txt.strip(" "))
-                    if len(toks_) < nn:
-                        continue
-                    for i in range(len(toks_) - nn + 1):
-                        g = tuple(toks_[i:i + nn])
-                        if null_w:
-                            seen.add(g)
-                        else:
-                            c[g] += wt_
-                if c or seen:
-                    null_only = [g for g in seen if g not in c]
-                    keys = list(c.keys()) + null_only
-                    out = {
-                        gc: [k[j] for k in keys]
-                        for j, gc in enumerate(gram_cols)
-                    }
-                    if null_only:
-                        # nullable Float64: a bare-float NaN would
-                        # reach the JVM as NaN, not SQL NULL
-                        out["__c__"] = pd.array(
-                            [c.get(k) for k in keys], dtype="Float64"
-                        )
-                    else:
-                        # fast path: plain float column, no nullable
-                        # conversion on NULL-free batches
-                        out["__c__"] = [c[k] for k in keys]
-                    yield pd.DataFrame(out)
-
-        agg = (
-            src.mapInPandas(count_batches, part_schema)
-            .groupBy(*gram_cols)
-            .agg(F.sum("__c__").alias("mass"))
-        )
-    else:
-        toks = tokens(lowered)
-        grams = F.when(
-            F.size(toks) >= n, word_ngrams(lowered, n, toks=toks)
-        ).otherwise(F.array().cast("array<string>"))
-        rows = df.select(
-            w.cast("double").alias("__w__"),
-            F.explode(grams).alias("g"),
-        ).where(F.length("g") > 0)
-        split = F.split(F.col("g"), " ", n)
-        cols = [
-            F.get(split, i).alias(f"w{i + 1}") for i in range(n)
-        ]
-        agg = (
-            rows.select(*cols, "__w__")
-            .groupBy(*gram_cols)
-            .agg(F.sum("__w__").alias("mass"))
-        )
-    if max_ngrams is None:
-        return agg
-    order = [F.col("mass").desc()] + [
-        F.col(f"w{i + 1}") for i in range(n)
-    ]
-    return global_top_by_mass(agg, "mass", order, max_ngrams)
-
-
-def ngram_model_tables(
-    df: DataFrame,
-    text_col: str,
-    caps: "dict[int, int]",
-    lowercase: bool = True,
-    weight: Optional[Column] = None,
-    min_mass: float = 1.0,
-    arrow: bool = False,
-    checkpoint: bool = True,
-) -> "dict[int, DataFrame]":
-    """All requested n-gram model tables from ONE corpus pass — the
-    fused form of ``build_vocabulary`` (order 1) / :func:`bigram_counts`
-    / :func:`trigram_counts` / :func:`ngram_counts` when a language
-    model needs SEVERAL orders of the same corpus (guide §1.2/§2.4:
-    the per-order builders each re-scan, re-tokenize and re-explode the
-    corpus — 2–3 full passes for the interpolated/MKN ladders; this
-    builder tokenizes once, explodes one combined gram array, runs ONE
-    map-side-combining aggregate and ONE salted grouped top-k).
-
-    ``caps`` maps order → cap, e.g. ``{1: 5000, 2: 5000, 3: 5000}``.
-    Returns ``{order: DataFrame}`` where each table is ROW-IDENTICAL to
-    its standalone builder (pinned by tests):
-
-    * order 1 — ``(term, term_id, mass)`` with ``build_vocabulary``'s
-      exact semantics: empty terms dropped, ``min_mass`` tail filter,
-      ``term_id`` by (mass desc, term) over the ≤cap result;
-    * order n ≥ 2 — ``(w1..wn, mass)``, the exact top-``caps[n]`` set
-      under (mass desc, w1..wn), no promised output order.
-
-    The grouped cut routes through
-    :func:`~pandas_weights_spark.topk.partitioned_topk` keyed on the
-    gram order: at or under the session's window group-limit threshold
-    the rank prefilter runs map-side (InferWindowGroupLimit); above it
-    the salted two-stage keeps everything executor-side — the same
-    scale guard as the standalone builders, never a driver merge.
-    Exactness per order is topk.py's invariant (total order via the
-    gram-text tie-break; the padded w-columns are NULL for every row of
-    a lower order, so they never affect that order's ranking).
-
-    ``weight`` follows the count builders (cast to double; a gram seen
-    only under NULL weights keeps its NULL-mass row). ``arrow=True``
-    counts partials for ALL orders in one ``mapInPandas`` Counter pass
-    (one Python crossing instead of one per order; order-1 terms ride
-    along). ``checkpoint=True`` (default) cuts lineage on the fused
-    ≤Σcaps-row result with a LAZY ``localCheckpoint`` — the per-order
-    tables are each consumed from several scoring subtrees, so without
-    the cut every consumer re-runs the corpus pass; the materialized
-    intermediate is model-sized (bounded by Σcaps), never data-sized.
-    Pass ``checkpoint=False`` where recompute-on-executor-loss matters
-    more than the re-run cost (the checkpointed blocks pin executor
-    storage until the DataFrame is garbage-collected).
-    """
-    orders = sorted(int(n) for n in caps)
-    if not orders or orders[0] < 1:
-        raise ValueError("caps must map orders >= 1 to caps")
-    if any(int(caps[n]) < 1 for n in orders):
-        raise ValueError("every cap must be >= 1")
-    maxn = orders[-1]
-    gram_cols = [f"w{i + 1}" for i in range(maxn)]
-    w = (weight if weight is not None else F.lit(1.0)).cast("double")
-    t = F.col(text_col)
-    lowered = F.lower(t) if lowercase else t
-
-    if arrow:
-        from pyspark.sql import types as _T
-
-        part_schema = _T.StructType(
-            [_T.StructField(c, _T.StringType()) for c in gram_cols]
-            + [_T.StructField("__c__", _T.DoubleType())]
-        )
-        src = df.select(w.alias("__w__"), lowered.alias("__t__"))
-        _orders = list(orders)
-        _maxn = maxn
-
-        def count_batches(batches):
-            import re as _re
-            from collections import Counter
-
-            import pandas as pd
-
-            # EXACT mirror of tokens(): Java \s, ASCII-space trim
-            ws = _re.compile("[ \t\n\x0b\f\r]+")
-            pad = (None,) * _maxn
-            for pdf in batches:
-                c: Counter = Counter()
-                seen: set = set()
-                for wt_, txt in zip(pdf["__w__"], pdf["__t__"]):
-                    if not isinstance(txt, str):
-                        continue
-                    null_w = wt_ is None or wt_ != wt_
-                    toks_ = ws.split(txt.strip(" "))
-                    for nn in _orders:
+                    for nn in orders:
                         if nn == 1:
                             gs = (
                                 (tok,) + pad[1:]
@@ -3108,8 +2880,7 @@ def ngram_model_tables(
                             continue
                         else:
                             gs = (
-                                tuple(toks_[i:i + nn])
-                                + pad[nn:]
+                                tuple(toks_[i:i + nn]) + pad[nn:]
                                 for i in range(len(toks_) - nn + 1)
                             )
                         if null_w:
@@ -3125,63 +2896,161 @@ def ngram_model_tables(
                         for j, gc in enumerate(gram_cols)
                     }
                     if null_only:
-                        out["__c__"] = pd.array(
+                        # nullable Float64: a bare-float NaN would
+                        # reach the JVM as NaN, not SQL NULL
+                        out["__w__"] = pd.array(
                             [c.get(k) for k in keys], dtype="Float64"
                         )
                     else:
-                        out["__c__"] = [c[k] for k in keys]
+                        out["__w__"] = [c[k] for k in keys]
                     yield pd.DataFrame(out)
 
-        rows = src.mapInPandas(count_batches, part_schema)
-        agg = rows.groupBy(*gram_cols).agg(F.sum("__c__").alias("mass"))
+        rows = df.select(
+            weight.cast("double").alias("__w__"), lowered.alias("__t__")
+        ).mapInPandas(count_batches, part_schema)
     else:
-        toks = tokens(lowered)
-        null_str = F.lit(None).cast("string")
+        # the token array gets its own projection: the explode's
+        # generator would otherwise re-split the text at every
+        # reference to it
+        rows = df.select(
+            weight.alias("__w__"), tokens(lowered).alias("__toks__")
+        )
+        toks = F.col("__toks__")
         empty = F.array().cast(
             "array<struct<" + ",".join(f"{c}:string" for c in gram_cols)
             + ">>"
         )
-
-        def _gram_struct(parts: "list[Column]") -> Column:
-            padded = parts + [null_str] * (maxn - len(parts))
-            return F.struct(
-                *[p.alias(c) for p, c in zip(padded, gram_cols)]
-            )
-
-        def _zip_lambda(n: int):
-            return lambda e: _gram_struct(
-                [e[str(i)] for i in range(n)]
-            )
-
+        pad = F.array().cast("array<string>")
         branches = []
         for n in orders:
-            if n == 1:
-                arr = F.transform(
-                    F.filter(toks, lambda s: F.length(s) > 0),
-                    lambda s: _gram_struct([s]),
-                )
-            else:
-                m = F.size(toks) - F.lit(n - 1)
-                slices = [F.slice(toks, i + 1, m) for i in range(n)]
-                zipped = F.arrays_zip(*slices)
-                arr = F.transform(zipped, _zip_lambda(n))
-                arr = F.when(F.size(toks) >= n, arr).otherwise(empty)
-            branches.append(F.coalesce(arr, empty))
+            # arrays_zip NULL-pads the empty arrays and names each
+            # field after its alias: no lambda, so the fan-out is
+            # code-generated
+            m = F.size(toks) - F.lit(n - 1)
+            parts = [toks] if n == 1 else [
+                F.slice(toks, i + 1, m) for i in range(n)
+            ]
+            parts += [pad] * (maxn - n)
+            arr = F.arrays_zip(
+                *[p.alias(c) for p, c in zip(parts, gram_cols)]
+            )
+            branches.append(F.coalesce(F.when(m >= 1, arr), empty))
         combined = (
             F.concat(*branches) if len(branches) > 1 else branches[0]
         )
-        rows = df.select(
-            w.alias("__w__"), F.explode(combined).alias("g")
-        ).select(
-            *[F.col(f"g.{c}").alias(c) for c in gram_cols], "__w__"
-        )
-        agg = rows.groupBy(*gram_cols).agg(F.sum("__w__").alias("mass"))
+        rows = rows.select(
+            "__w__", F.explode(combined).alias("g")
+        ).select(*[F.col(f"g.{c}").alias(c) for c in gram_cols], "__w__")
+        if 1 in orders:
+            # order-1 grams drop empty tokens (an order-1 row is the
+            # one whose w2 is NULL)
+            keep = F.length("w1") > 0
+            rows = rows.where(
+                keep if maxn == 1 else F.col("w2").isNotNull() | keep
+            )
+    return rows.groupBy(*gram_cols).agg(F.sum("__w__").alias("mass"))
 
-    # the gram order is the struct's null pattern: detection relies only
-    # on the padded components being NULL. Empty-string tokens (possible
-    # from tab/newline padding) are non-NULL and count like any other
-    # token, exactly as in the standalone builders — no per-occurrence
-    # tag shuffled
+
+def ngram_counts(
+    df: DataFrame,
+    text_col: str,
+    n: int,
+    max_ngrams: "Optional[int]" = 500_000,
+    lowercase: bool = True,
+    weight: Optional[Column] = None,
+    arrow: bool = False,
+) -> DataFrame:
+    """Corpus n-gram table ``(w1..wn, mass)`` for ANY order ``n >= 2``:
+    the :func:`_gram_mass` aggregate at order ``n`` (weight cast to
+    double, default 1 per occurrence), cut to the exact top
+    ``max_ngrams`` by (mass desc, w1..wn) via
+    ``topk.global_top_by_mass``; output rows arrive in no promised
+    order. CCNet's KenLM is order 5 — ``ngram_counts(df, t, 5)`` is
+    that table.
+
+    ``max_ngrams=None`` skips the top-k and returns the full
+    distributed count table — the input :func:`mkn_discounts` needs
+    (any cap cuts the count-1 tail the count-of-counts estimate lives
+    on). It is never collected; the estimator reduces it to four
+    scalars.
+
+    ``arrow=True`` selects the kernel's ``mapInPandas`` Counter form
+    instead of the JVM gram-struct explode; the table is identical for
+    unweighted masses (pinned)."""
+    n = int(n)
+    if n < 2:
+        raise ValueError("n must be >= 2 (use unigram_logprobs below)")
+    w = weight if weight is not None else F.lit(1.0)
+    agg = _gram_mass(df, text_col, [n], lowercase, w.cast("double"), arrow)
+    if max_ngrams is None:
+        return agg
+    order = [F.col("mass").desc()] + [F.col(c) for c in agg.columns[:n]]
+    return global_top_by_mass(agg, "mass", order, max_ngrams)
+
+
+def ngram_model_tables(
+    df: DataFrame,
+    text_col: str,
+    caps: "dict[int, int]",
+    lowercase: bool = True,
+    weight: Optional[Column] = None,
+    min_mass: float = 1.0,
+    arrow: bool = False,
+    checkpoint: bool = True,
+) -> "dict[int, DataFrame]":
+    """All requested n-gram model tables from ONE corpus pass: one
+    multi-order :func:`_gram_mass` aggregate and ONE grouped top-k,
+    where the per-order builders (``build_vocabulary`` /
+    :func:`bigram_counts` / :func:`trigram_counts` /
+    :func:`ngram_counts`) each re-scan and re-tokenize the corpus —
+    2–3 full passes for the interpolated/MKN ladders.
+
+    ``caps`` maps order → cap, e.g. ``{1: 5000, 2: 5000, 3: 5000}``.
+    Returns ``{order: DataFrame}`` where each table is ROW-IDENTICAL to
+    its standalone builder (pinned by tests):
+
+    * order 1 — ``(term, term_id, mass)`` with ``build_vocabulary``'s
+      semantics: empty terms dropped, ``min_mass`` tail filter,
+      ``term_id`` by (mass desc, term) over the ≤cap result (the mass
+      is always double here, where ``build_vocabulary`` sums an
+      integer weight as LONG);
+    * order n ≥ 2 — ``(w1..wn, mass)``, the exact top-``caps[n]`` set
+      under (mass desc, w1..wn), no promised output order.
+
+    The grouped cut routes through
+    :func:`~pandas_weights_spark.topk.partitioned_topk` keyed on the
+    gram order: at or under the session's window group-limit threshold
+    the rank prefilter runs map-side (InferWindowGroupLimit); above it
+    the salted two-stage keeps everything executor-side — the same
+    scale guard as the standalone builders, never a driver merge.
+    Exactness per order is topk.py's invariant (total order via the
+    gram-text tie-break; the padded w-columns are NULL for every row of
+    a lower order, so they never affect that order's ranking).
+
+    ``weight`` is cast to double, as in :func:`ngram_counts`.
+    ``arrow=True`` selects the kernel's Counter form (one Python
+    crossing for all orders). ``checkpoint=True`` (default) cuts
+    lineage on the fused ≤Σcaps-row result with a LAZY
+    ``localCheckpoint`` — the per-order tables are each consumed from
+    several scoring subtrees, so without the cut every consumer re-runs
+    the corpus pass; the materialized intermediate is model-sized
+    (bounded by Σcaps), never data-sized. Pass ``checkpoint=False``
+    where recompute-on-executor-loss matters more than the re-run cost
+    (the checkpointed blocks pin executor storage until the DataFrame
+    is garbage-collected).
+    """
+    orders = sorted(int(n) for n in caps)
+    if not orders or orders[0] < 1:
+        raise ValueError("caps must map orders >= 1 to caps")
+    if any(int(caps[n]) < 1 for n in orders):
+        raise ValueError("every cap must be >= 1")
+    maxn = orders[-1]
+    gram_cols = [f"w{i + 1}" for i in range(maxn)]
+    w = (weight if weight is not None else F.lit(1.0)).cast("double")
+    agg = _gram_mass(df, text_col, orders, lowercase, w, arrow)
+
+    # the gram order is the row's null pattern (see _gram_mass); empty
+    # tokens are non-NULL, so they never shift it
     if maxn > 1:
         order_of = F.coalesce(
             *[
@@ -3197,8 +3066,6 @@ def ngram_model_tables(
         if maxn > 1:
             keep = F.col(gram_cols[1]).isNotNull() | keep
         agg = agg.where(keep)
-
-    from pandas_weights_spark.topk import partitioned_topk
 
     top = partitioned_topk(
         agg.withColumn("__n__", order_of),

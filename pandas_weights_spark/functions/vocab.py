@@ -4,17 +4,15 @@ corpus mass, stable integer ids, OOV handling).
 
 Scale design:
 
-* :func:`build_vocabulary` — ONE explode + map-side-combining term
-  aggregate; the top-V cut is scale-guarded (:func:`_capped_top`):
-  at or under the session's window group-limit threshold it compiles
-  to TakeOrdered (per-partition heaps of V, driver merge bounded by
-  ``partitions × threshold`` rows), ABOVE it the cut routes through
-  the salted executor-side
-  :func:`~pandas_weights_spark.topk.global_top_by_mass` so nothing
-  cap-sized ever lands on the driver (r15 — the same guard as
-  dsir/weighted_sample/class_tfidf; identical row sets by topk.py's
-  exactness invariant). Ids come from one window over the V-row
-  result (V is vocabulary-sized: thousands, not data-sized).
+* :func:`build_vocabulary` — the order-1 word-gram mass kernel
+  (``text._gram_mass``: ONE explode + map-side-combining term
+  aggregate), then the threshold-guarded top-V cut
+  (:func:`~pandas_weights_spark.topk.capped_top`: TakeOrdered at or
+  under the session's window group-limit threshold, the salted
+  executor-side cut above it, so nothing cap-sized ever lands on the
+  driver; identical row sets by topk.py's exactness invariant). Ids
+  come from one window over the V-row result (V is vocabulary-sized:
+  thousands, not data-sized).
 * :func:`encode_documents` — posexplode + a BROADCAST join against the
   V-row vocabulary (map-side lookup), then one groupBy(doc) rebuilding
   the id sequence with ``sort_array`` on (position, id) structs. One
@@ -33,11 +31,8 @@ from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from pandas_weights_spark.functions.text import tokens
-from pandas_weights_spark.topk import (
-    _group_limit_threshold,
-    global_top_by_mass,
-)
+from pandas_weights_spark.functions.text import _gram_mass, tokens
+from pandas_weights_spark.topk import capped_top
 
 __all__ = [
     "build_vocabulary",
@@ -69,23 +64,33 @@ def _capped_top(df: DataFrame, mass_col: str, key_col: str,
                 cap: int) -> DataFrame:
     """EXACT top-``cap`` rows by ``(mass_col desc, key_col asc)`` — a
     total order (the key column is distinct by construction: these
-    are post-aggregate word/term/piece tables). Scale-guarded the way
-    dsir.py/sample.py guard selection (r15): at or under the
-    session's window group-limit threshold the cut is
-    ``orderBy().limit(cap)`` (TakeOrdered — per-partition heaps, a
-    driver merge bounded by ``partitions × threshold`` rows); ABOVE
-    it — the word-table defaults here are 50 k–1 M, far past the
-    1000-row default threshold — TakeOrdered's driver reduce would
-    hold ``partitions × cap`` rows (the driver OOM topk.py:50–54
-    documents), so the cut routes through the salted executor-side
-    :func:`~pandas_weights_spark.topk.global_top_by_mass` instead.
-    Identical row set either way (topk.py's exactness invariant); no
-    output ordering is promised in the salted regime — the capped
-    tables are consumed as sets (trainer state, broadcast joins)."""
+    are post-aggregate word/term/piece tables) — through the
+    threshold-guarded :func:`~pandas_weights_spark.topk.capped_top`.
+    The word-table defaults here (50 k–1 M) sit far past the 1000-row
+    default threshold, so they take its executor-side salted cut; no
+    output ordering is promised there — the capped tables are consumed
+    as sets (trainer state, broadcast joins)."""
     order = [F.col(mass_col).desc(), F.col(key_col).asc()]
-    if int(cap) <= _group_limit_threshold(df):
-        return df.orderBy(*order).limit(int(cap))
-    return global_top_by_mass(df, mass_col, order, int(cap))
+    return capped_top(df, mass_col, order, cap)
+
+
+def _top_words(
+    df: DataFrame,
+    text_col: str,
+    weight: Optional[Column],
+    lowercase: bool,
+    cap: int,
+) -> DataFrame:
+    """``(word, freq)``: the top-``cap`` words by (weighted) corpus
+    frequency, the word-table trainers' state — the order-1
+    ``text._gram_mass`` aggregate (weight summed uncast, default 1 per
+    occurrence) under the :func:`_capped_top` cut."""
+    w = weight if weight is not None else F.lit(1.0)
+    freqs = _gram_mass(df, text_col, [1], lowercase, w, arrow=False)
+    return _capped_top(
+        freqs.select(F.col("w1").alias("word"), F.col("mass").alias("freq")),
+        "freq", "word", cap,
+    )
 
 
 def build_vocabulary(
@@ -101,20 +106,19 @@ def build_vocabulary(
     by descending mass (ties by term text — fully deterministic).
 
     ``weight`` scales each document's token contributions (doc-level
-    quality/duplication weights); default 1 per occurrence.
-    ``min_mass`` drops the long tail before the cut.
+    quality/duplication weights); default 1 per occurrence. It is
+    summed uncast, so an integer weight gives a LONG mass.
+    ``min_mass`` drops the long tail before the cut. The masses are
+    the order-1 :func:`~pandas_weights_spark.functions.text._gram_mass`
+    aggregate in its JVM form (no Python in the plan, so the table
+    broadcasts into SQL scoring plans).
     """
     if max_size < 1:
         raise ValueError("max_size must be >= 1")
     w = weight if weight is not None else F.lit(1.0)
-    t = F.col(text_col)
-    toks = tokens(F.lower(t) if lowercase else t)
-    rows = df.select(
-        w.alias("__w__"), F.explode(toks).alias("term")
-    ).where(F.length("term") > 0)
+    masses = _gram_mass(df, text_col, [1], lowercase, w, arrow=False)
     masses = _capped_top(
-        rows.groupBy("term")
-        .agg(F.sum("__w__").alias("mass"))
+        masses.select(F.col("w1").alias("term"), "mass")
         .where(F.col("mass") >= float(min_mass)),
         "mass", "term", max_size,
     )
@@ -240,16 +244,7 @@ def bpe_word_table(
     top-k above the window group-limit threshold, r15); the dropped
     long tail is the standard practical bound on distributed BPE.
     """
-    w = weight if weight is not None else F.lit(1.0)
-    t = F.col(text_col)
-    toks = tokens(F.lower(t) if lowercase else t)
-    rows = df.select(w.alias("__w__"), F.explode(toks).alias("word")).where(
-        F.length("word") > 0
-    )
-    counted = _capped_top(
-        rows.groupBy("word").agg(F.sum("__w__").alias("freq")),
-        "freq", "word", max_words,
-    )
+    counted = _top_words(df, text_col, weight, lowercase, max_words)
     return counted.select(
         "word", "freq", _char_symbols(F.col("word"), end_of_word).alias("syms")
     )
@@ -801,16 +796,7 @@ def wordpiece_word_table(
     """WordPiece training state: ``(word, freq, syms)`` with the
     ``##``-marked character split; same scale-guarded
     :func:`_capped_top` cut as :func:`bpe_word_table`."""
-    w = weight if weight is not None else F.lit(1.0)
-    t = F.col(text_col)
-    toks = tokens(F.lower(t) if lowercase else t)
-    rows = df.select(
-        w.alias("__w__"), F.explode(toks).alias("word")
-    ).where(F.length("word") > 0)
-    counted = _capped_top(
-        rows.groupBy("word").agg(F.sum("__w__").alias("freq")),
-        "freq", "word", max_words,
-    )
+    counted = _top_words(df, text_col, weight, lowercase, max_words)
     return counted.select(
         "word", "freq", _wp_char_symbols(F.col("word")).alias("syms")
     )
@@ -1206,16 +1192,7 @@ def unigram_seed_table(
     """
     if max_piece_len < 1:
         raise ValueError("max_piece_len must be >= 1")
-    w = weight if weight is not None else F.lit(1.0)
-    t = F.col(text_col)
-    toks = tokens(F.lower(t) if lowercase else t)
-    rows = df.select(w.alias("__w__"), F.explode(toks).alias("word")).where(
-        F.length("word") > 0
-    )
-    counted = _capped_top(
-        rows.groupBy("word").agg(F.sum("__w__").alias("freq")),
-        "freq", "word", max_words,
-    )
+    counted = _top_words(df, text_col, weight, lowercase, max_words)
     n = F.length("word")
     subs = F.flatten(
         F.transform(
@@ -1373,16 +1350,7 @@ def train_unigram_lm(
         raise ValueError("vocab_size must be >= 1")
     if not 0.1 <= shrink_factor < 1.0:
         raise ValueError("shrink_factor must be in [0.1, 1)")
-    w = weight if weight is not None else F.lit(1.0)
-    t = F.col(text_col)
-    toks = tokens(F.lower(t) if lowercase else t)
-    rows = df.select(w.alias("__w__"), F.explode(toks).alias("word")).where(
-        F.length("word") > 0
-    )
-    counted = _capped_top(
-        rows.groupBy("word").agg(F.sum("__w__").alias("freq")),
-        "freq", "word", max_words,
-    )
+    counted = _top_words(df, text_col, weight, lowercase, max_words)
     word_freqs = sorted(
         (r["word"], float(r["freq"])) for r in counted.collect()
     )

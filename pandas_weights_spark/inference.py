@@ -31,10 +31,11 @@ import math
 
 from typing import Optional, Sequence
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pandas_weights_spark import _stats
+from pandas_weights_spark.quantile import _mass
 
 __all__ = [
     "weighted_ttest",
@@ -44,6 +45,14 @@ __all__ = [
     "weighted_mutual_information",
     "weighted_info_panel",
 ]
+
+
+def _entropy(total: Column, mlm: Column) -> Column:
+    """Shannon entropy in nats of a mass distribution from its total
+    ``W`` and ``Σ m·ln m``: ``−Σ p ln p = ln W − (Σ m ln m)/W``, so
+    each category needs only its own mass — no join of the total back
+    onto the categories."""
+    return F.log(total) - F.try_divide(mlm, total)
 
 
 def weighted_ttest(
@@ -200,11 +209,9 @@ def weighted_anova(
             raise KeyError(f"column {c!r} not in frame")
     x = wdf._value(value)
     w = wdf.weights
-    # mask matches every sibling kernel (entropy/gini/ks/mwu): NULL
+    # the quantile family's mass rule (entropy/gini/ks/mwu): NULL
     # value/weight AND non-positive weights contribute nothing
-    m = F.when(x.isNotNull() & w.isNotNull() & (w > 0), w).otherwise(
-        F.lit(0.0)
-    )
+    m = _mass(x, w)
     per = wdf.df.groupBy(*[F.col(k) for k in keys], F.col(group_col)).agg(
         F.sum(m).alias("__wg__"),
         F.sum(m * x).alias("__sg__"),
@@ -262,7 +269,7 @@ def weighted_entropy(
         if c not in wdf.df.columns:
             raise KeyError(f"column {c!r} not in frame")
     w = wdf.weights
-    m = F.when(w.isNotNull() & (w > 0), w).otherwise(F.lit(0.0))
+    m = _mass(None, w)
     per = wdf.df.groupBy(*[F.col(k) for k in keys], F.col(cat_col)).agg(
         F.sum(m).alias("__m__")
     ).where(F.col("__m__") > 0)
@@ -273,7 +280,7 @@ def weighted_entropy(
         F.count(F.lit(1)).alias("__k__"),
     )
     W = F.col("__W__")
-    h_nats = F.log(W) - F.try_divide(F.col("__mlm__"), W)
+    h_nats = _entropy(W, F.col("__mlm__"))
     h = h_nats if base is None else h_nats / F.lit(math.log(base))
     return agg.select(
         *keys,
@@ -326,7 +333,6 @@ def weighted_info_panel(
         _banded_cums,
         _gini,
         _ks,
-        _mass,
         _two_sample,
     )
 
@@ -336,7 +342,7 @@ def weighted_info_panel(
     x = wdf._value(value)
     w = wdf.weights
     xd = x.cast("double")
-    m_ent = F.when(w.isNotNull() & (w > 0), w).otherwise(F.lit(0.0))
+    m_ent = _mass(None, w)
     m_an = _mass(x, w)
     gs = wdf.df.groupingSets(
         [[cat_a, cat_b], [cat_a], [cat_b], []], cat_a, cat_b
@@ -390,7 +396,7 @@ def weighted_info_panel(
         F.sum(F.when(lvl_x & apos, F.lit(1))).alias("__k__"),
     )
     G = F.col("__G__")
-    h = lambda c: F.log(G) - F.try_divide(F.col(c), G)  # noqa: E731
+    h = lambda c: _entropy(G, F.col(c))  # noqa: E731
     mi = h("__xml__") + h("__yml__") - h("__jml__")
     W, S, SS = F.col("__W__"), F.col("__S__"), F.col("__SS__")
     ssw, k = F.col("__ssw__"), F.col("__k__").cast("double")
@@ -460,7 +466,7 @@ def weighted_mutual_information(
         if c not in wdf.df.columns:
             raise KeyError(f"column {c!r} not in frame")
     w = wdf.weights
-    m = F.when(w.isNotNull() & (w > 0), w).otherwise(F.lit(0.0))
+    m = _mass(None, w)
     gs = wdf.df.groupingSets(
         [[x_col, y_col], [x_col], [y_col], []], x_col, y_col
     ).agg(
@@ -483,7 +489,7 @@ def weighted_mutual_information(
         F.sum("__m__").alias("w"),
     )
     W = F.col("g_w")
-    h = lambda tag: F.log(W) - F.try_divide(F.col(f"{tag}_mlm"), W)  # noqa: E731
+    h = lambda tag: _entropy(W, F.col(f"{tag}_mlm"))  # noqa: E731
     hx, hy, hxy = h("x"), h("y"), h("xy")
     mi = hx + hy - hxy
     return agg.select(

@@ -54,14 +54,22 @@ def quantile_col_name(col: str, q: float) -> str:
     return f"{col}_p{str(pct).replace('.', '_')}"
 
 
-def _mass(x: Column, w: Column, where: Optional[Column] = None) -> Column:
-    """The quantile family's mass rule: ``w`` where the value ``x`` and
-    the weight are non-NULL and ``w > 0`` (and ``where`` holds), else
-    0. A NULL weight fails ``w > 0``, so it needs no test of its own."""
-    ok = x.isNotNull() & (w > 0)
-    return F.when(ok if where is None else ok & where, w).otherwise(
-        F.lit(0.0)
-    )
+def _carries_mass(
+    x: Optional[Column], w: Column, where: Optional[Column] = None
+) -> Column:
+    """The mass rule as a condition: ``w > 0``, the value ``x`` is
+    non-NULL (no value test when ``x`` is None) and ``where`` holds. A
+    NULL weight fails ``w > 0``, so it needs no test of its own."""
+    ok = w > 0 if x is None else x.isNotNull() & (w > 0)
+    return ok if where is None else ok & where
+
+
+def _mass(
+    x: Optional[Column], w: Column, where: Optional[Column] = None
+) -> Column:
+    """The quantile family's mass rule: ``w`` where
+    :func:`_carries_mass` holds, else 0."""
+    return F.when(_carries_mass(x, w, where), w).otherwise(F.lit(0.0))
 
 
 def _band(v: Column, lo: Column, hi: Column, bands: int) -> Column:

@@ -31,20 +31,16 @@ Semantics (pandas ``Rolling``/``Expanding`` over the *weighted* frame):
 
 from __future__ import annotations
 
-from typing import Optional, Sequence, Union
+from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
 from pandas_weights_spark import _stats
+from pandas_weights_spark.quantile import _carries_mass
+from pandas_weights_spark.topk import _ColRef, _cols
 
 __all__ = ["WeightedRolling"]
-
-_ColRef = Union[str, Column]
-
-
-def _cols(refs: Sequence[_ColRef]) -> list[Column]:
-    return [F.col(c) if isinstance(c, str) else c for c in refs]
 
 
 def _let(col: Column, body) -> Column:
@@ -255,8 +251,7 @@ class WeightedRolling:
         ``w ≤ 0``/NULL excluded), NOT pandas' linear interpolation —
         consistent with ``wt().quantile()``; documented divergence."""
         pair = F.when(
-            x.isNotNull() & w.isNotNull() & (w > 0),
-            F.struct(x.alias("x"), w.alias("w")),
+            _carries_mass(x, w), F.struct(x.alias("x"), w.alias("w"))
         )
 
         # r16 LET discipline: the sorted frame array and the q·W

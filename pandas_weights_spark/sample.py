@@ -133,10 +133,7 @@ def weighted_sample(
     consumed as sets). :func:`poisson_sample` is the map-only
     alternative when expected-size semantics suffice.
     """
-    from pandas_weights_spark.topk import (
-        _group_limit_threshold,
-        global_top_by_mass,
-    )
+    from pandas_weights_spark.topk import capped_top
 
     u = uniform_hash([F.col(c) for c in key_cols], seed)
     w = weight.cast("double")
@@ -144,11 +141,9 @@ def weighted_sample(
         "__pw_skey__", u / w
     )
     order = [F.col("__pw_skey__").asc(), *[F.col(c) for c in key_cols]]
-    if int(n) <= _group_limit_threshold(df):
-        out = ranked.orderBy(*order).limit(int(n))
-    else:
-        out = global_top_by_mass(ranked, "__pw_skey__", order, int(n))
-    return out.drop("__pw_skey__")
+    return capped_top(ranked, "__pw_skey__", order, int(n)).drop(
+        "__pw_skey__"
+    )
 
 
 def poisson_sample(

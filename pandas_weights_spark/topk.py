@@ -37,7 +37,7 @@ from typing import Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-__all__ = ["partitioned_topk", "global_top_by_mass"]
+__all__ = ["partitioned_topk", "global_top_by_mass", "capped_top"]
 
 
 def global_top_by_mass(
@@ -80,6 +80,26 @@ def global_top_by_mass(
         rank_col="__rk__",
     )
     return out.drop("__g__", "__rk__")
+
+
+def capped_top(
+    df: DataFrame,
+    mass_col: str,
+    order_cols: "Sequence[Column]",
+    cap: int,
+) -> DataFrame:
+    """EXACT top-``cap`` row SET under ``order_cols`` (a total order),
+    scale-guarded: at or under the session's window group-limit
+    threshold the cut is ``orderBy().limit(cap)`` — TakeOrdered, whose
+    per-partition heaps keep the driver merge at ``partitions ×
+    threshold`` rows; above it that merge would hold ``partitions ×
+    cap`` rows on the driver, so the cut routes through the
+    executor-side :func:`global_top_by_mass` instead. Identical row
+    set either way (the salted stage's exactness invariant); no output
+    ordering is promised in the salted regime."""
+    if int(cap) <= _group_limit_threshold(df):
+        return df.orderBy(*order_cols).limit(int(cap))
+    return global_top_by_mass(df, mass_col, order_cols, int(cap))
 
 
 def _hashable_type(dt) -> bool:

@@ -26,18 +26,14 @@ mass-carrying rows only (``w > 0``, matching ``_stats.w_min/w_max``).
 
 from __future__ import annotations
 
-from typing import Optional, Sequence, Union
+from typing import Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from pandas_weights_spark.topk import _ColRef, _cols
+
 __all__ = ["OrderedTransform"]
-
-_ColRef = Union[str, Column]
-
-
-def _cols(refs: Sequence[_ColRef]) -> list[Column]:
-    return [F.col(r) if isinstance(r, str) else r for r in refs]
 
 
 #: transform kind → needs a frame ("cum" running, "back" following) or

@@ -3074,7 +3074,7 @@ class TestPhraseHits:
 
 class TestPunktCappedCutScaleGuard:
     """r15: the punkt trainers' model-table caps route through the
-    threshold-guarded _capped_cut (the vocab/dsir discipline) — above
+    threshold-guarded topk.capped_top (the vocab/dsir discipline) — above
     the window group-limit threshold the cut salts executor-side
     instead of compiling to TakeOrdered's partitions x cap driver
     merge, with EXACTLY the same row set."""
@@ -3255,6 +3255,70 @@ class TestNgramModelTablesFused:
             trigram_counts(corpus, "text", max_trigrams=100,
                            weight=F.col("w"))
         )
+        # order 1 under NULL and zero weights, against build_vocabulary:
+        # a NULL-only term has NULL mass and fails every min_mass; a
+        # zero-weight term survives only min_mass <= 0
+        from pandas_weights_spark.functions.vocab import build_vocabulary
+
+        corpus = corpus.unionByName(spark.createDataFrame(
+            [(3, "a q r", 0.0), (4, "nul only", None)],
+            "doc_id long, text string, w double",
+        ))
+        for min_mass in (1.0, 0.0):
+            fused = TX.ngram_model_tables(
+                corpus, "text", {1: 100, 2: 100, 3: 100},
+                weight=F.col("w"), min_mass=min_mass,
+            )
+            vocab = build_vocabulary(
+                corpus, "text", max_size=100, min_mass=min_mass,
+                weight=F.col("w"),
+            )
+            assert self._rows(fused[1]) == self._rows(vocab)
+            terms = {r["term"]: r["mass"] for r in vocab.collect()}
+            assert "nul" not in terms and "only" not in terms
+            assert ("q" in terms) == (min_mass <= 0.0)
+            assert terms["a"] == 2.0 * 2 + 0.0
+
+    def test_integer_weight_schemas(self, spark):
+        # build_vocabulary sums an integer weight uncast (LONG mass);
+        # every other builder casts it to double
+        from pandas_weights_spark.functions.text import (
+            bigram_counts,
+            ngram_counts,
+            trigram_counts,
+        )
+        from pandas_weights_spark.functions.vocab import build_vocabulary
+
+        corpus = spark.createDataFrame(
+            [(0, "a b c a b", 2), (1, "a b c", None), (2, "b c", 0)],
+            "doc_id long, text string, w int",
+        )
+        w = F.col("w")
+
+        def mass_type(df):
+            return df.schema["mass"].dataType.simpleString()
+
+        vocab = build_vocabulary(corpus, "text", weight=w)
+        assert mass_type(vocab) == "bigint"
+        assert {r["term"]: r["mass"] for r in vocab.collect()} == {
+            "a": 4, "b": 4, "c": 2,
+        }
+        doubles = [
+            bigram_counts(corpus, "text", weight=w),
+            trigram_counts(corpus, "text", weight=w),
+            ngram_counts(corpus, "text", 2, weight=w),
+            ngram_counts(corpus, "text", 2, weight=w, arrow=True),
+            ngram_counts(corpus, "text", 4, max_ngrams=None, weight=w),
+            *TX.ngram_model_tables(
+                corpus, "text", {1: 10, 2: 10, 3: 10}, weight=w
+            ).values(),
+        ]
+        for df in doubles:
+            assert mass_type(df) == "double", df.columns
+        assert self._rows(doubles[0]) == self._rows(doubles[3])
+        assert {
+            (r["w1"], r["w2"]): r["mass"] for r in doubles[0].collect()
+        } == {("a", "b"): 4.0, ("b", "c"): 2.0, ("c", "a"): 2.0}
 
     def test_min_mass_drops_order1_tail_only(self, spark):
         corpus = spark.createDataFrame(

@@ -137,7 +137,7 @@ ALLOW = {
     # 1-row corpus-total frames over the CAPPED Punkt model tables
     # (text.py punkt training: totals attach to ≤ max_types rows).
     # r15: the trainers' million-row caps route through the salted
-    # executor-side _capped_cut above the group-limit threshold
+    # executor-side topk.capped_top above the group-limit threshold
     # (text.py → topk.py); its stage-2 re-rank is a global window
     # over ≤ salt_buckets × cap stage-1 survivors — bounded by
     # construction, spillable, the shape that replaced the
