@@ -2824,16 +2824,20 @@ def _gram_mass(
     follow :func:`tokens`: order-1 grams drop empty tokens, higher
     orders keep the empty edge tokens a tab-led or trailing-whitespace
     text splits into, and a text shorter than n tokens has no order-n
-    gram. ``weight`` is summed exactly as passed (callers choose the
-    cast); a gram seen only under NULL weights keeps a NULL-mass row.
+    gram. A gram seen only under NULL weights keeps a NULL-mass row.
 
     The JVM form (default) builds one combined array of NULL-padded
     gram structs per row, explodes it once and sums in one map-side-
-    combining aggregate. ``arrow=True`` counts per-batch partials in a
-    ``mapInPandas`` Counter instead (summed as doubles) and feeds them
-    to the same aggregate. Unweighted masses are exact integers, so
-    both forms give identical tables; weighted masses may differ at
-    partial-sum-order ulps, like any grouped float sum."""
+    combining aggregate. It sums ``weight`` exactly as passed, so the
+    mass has Spark's sum type: LONG for an integer weight, DOUBLE for
+    a double one. ``arrow=True`` counts per-batch partials in a
+    ``mapInPandas`` Counter instead and feeds them to the same
+    aggregate; it casts ``weight`` to double, so its mass is always
+    DOUBLE. Callers that pass ``arrow`` through cast their weight to
+    double first, so both forms give one schema. Unweighted masses are
+    exact integers, so both forms give identical tables; weighted
+    masses may differ at partial-sum-order ulps, like any grouped
+    float sum."""
     orders = sorted(int(n) for n in orders)
     maxn = orders[-1]
     gram_cols = [f"w{i + 1}" for i in range(maxn)]
