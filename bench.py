@@ -822,9 +822,10 @@ def build_queries(spark, sf_dir) -> dict:
     qs["semantic_decontam"] = _semantic_decontam_arrow
 
     # LID family: the oracle rows replay the JVM explode+join path
-    # exactly; the bench measures the Arrow path (Counter training
-    # partials + closure-model scoring kernel) — labels pinned equal
-    # to the JVM path by tests/test_text.py::TestLidArrow
+    # exactly; the bench measures the Arrow scoring kernel (closure
+    # model; the profile is counted by the one JVM explode whatever
+    # `arrow` says) — labels pinned equal to the JVM path by
+    # tests/test_text.py::TestLidArrow
     _LID_LABELS = ["de", "en", "es", "fr", "zh"]
 
     def _lang_id_arrow(spark_, sf_dir_):
@@ -863,8 +864,8 @@ def build_queries(spark, sf_dir) -> dict:
     qs["lang_mix"] = _lang_mix_arrow
 
     def _ccnet_arrow(spark_, sf_dir_):
-        # counting rides the Arrow Counter kernel (exact integer
-        # parity, pinned); MKN scoring + the per-shard ntile unchanged
+        # counting is the one JVM gram kernel (`arrow=True` below
+        # selects nothing); MKN scoring + the per-shard ntile unchanged
         # (r15 note: fan_out on the one-file docs scan was MEASURED
         # here and reverted — isolated median went 3.8 → 5.4 s; the
         # pipeline is bound by the capped-table joins and the extra
@@ -877,10 +878,10 @@ def build_queries(spark, sf_dir) -> dict:
         )
 
         docs = load_table(spark_, sf_dir_, "documents")
-        # r16: ONE fused Arrow Counter pass for both orders (one
-        # Python crossing + one aggregate + one grouped cap instead
-        # of one pipeline per order), mirroring the declared query's
-        # fusion; the lazy lineage cut rides inside the builder
+        # r16: ONE fused count pass for both orders (one explode +
+        # one aggregate + one grouped cap instead of one pipeline per
+        # order), mirroring the declared query's fusion; the lazy
+        # lineage cut rides inside the builder
         tabs = ngram_model_tables(
             docs, "text", {2: 5000, 3: 5000}, arrow=True
         )

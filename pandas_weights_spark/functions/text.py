@@ -214,62 +214,15 @@ def char_ngram_lang_profile(
     over the AGGREGATED table (bounded by the charset's n-gram space,
     never the corpus).
 
-    ``arrow=True`` swaps the interpreted char_ngrams explode for a
-    ``mapInPandas`` Counter emitting per-batch PARTIAL (label, gram)
-    counts — the map-side combine happens in Python, the final
-    (label, gram) sum and the top-k window are unchanged. Counts are
-    exact integers, so the result is IDENTICAL to the JVM path (the
-    oracle keeps replaying the same model)."""
-    if arrow:
-        from pyspark.sql import types as _T
-
-        nn = int(n)
-        part_schema = _T.StructType(
-            [
-                _T.StructField("label", _T.StringType()),
-                _T.StructField("gram", _T.StringType()),
-                _T.StructField("cnt", _T.LongType()),
-            ]
-        )
-        src = df.select(
-            F.col(label_col).alias("label"),
-            F.lower(F.col(text_col)).alias("__t__"),
-        )
-
-        def count_batches(batches):
-            import pandas as pd
-            from collections import Counter
-
-            for pdf in batches:
-                c: Counter = Counter()
-                for lab, t in zip(pdf["label"], pdf["__t__"]):
-                    if not isinstance(t, str):
-                        continue
-                    for i in range(max(len(t) - nn + 1, 0)):
-                        c[(lab, t[i:i + nn])] += 1
-                if c:
-                    labs, gs = zip(*c.keys())
-                    yield pd.DataFrame(
-                        {
-                            "label": labs,
-                            "gram": gs,
-                            "cnt": list(c.values()),
-                        }
-                    )
-
-        mass = (
-            src.mapInPandas(count_batches, part_schema)
-            .groupBy("label", "gram")
-            .agg(F.sum("cnt").cast("double").alias("mass"))
-        )
-    else:
-        grams = df.select(
-            F.col(label_col).alias("label"),
-            F.explode(char_ngrams(F.col(text_col), n)).alias("gram"),
-        ).where(F.length("gram") == n)
-        mass = grams.groupBy("label", "gram").agg(
-            F.count(F.lit(1)).cast("double").alias("mass")
-        )
+    ``arrow`` is still accepted and selects nothing: the profile
+    always comes from the one JVM explode."""
+    grams = df.select(
+        F.col(label_col).alias("label"),
+        F.explode(char_ngrams(F.col(text_col), n)).alias("gram"),
+    ).where(F.length("gram") == n)
+    mass = grams.groupBy("label", "gram").agg(
+        F.count(F.lit(1)).cast("double").alias("mass")
+    )
     from pyspark.sql import Window as _W
 
     rk = F.row_number().over(
@@ -1503,18 +1456,9 @@ def bigram_lm_score(
         "w1", "w2", (F.col("mass") / F.col("__m1__")).alias("__pb__")
     )
     t = F.col(text_col)
-    lowered = F.lower(t) if lowercase else t
-    toks = tokens(lowered)
-    grams = F.when(F.size(toks) >= 2, word_ngrams(lowered, 2, toks=toks)) \
-        .otherwise(F.array().cast("array<string>"))
-    pos = df.select(
-        F.col(id_col), F.explode(grams).alias("g")
-    ).where(F.length("g") > 0)
-    split = F.split(F.col("g"), " ", 2)
-    pairs = pos.select(
-        id_col,
-        F.get(split, 0).alias("w1"),
-        F.get(split, 1).alias("w2"),
+    pairs = _gram_rows(
+        df, [F.col(id_col)], tokens(F.lower(t) if lowercase else t),
+        [2], ["w1", "w2"],
     )
     joined = (
         pairs.join(F.broadcast(btab), ["w1", "w2"], "left")
@@ -1627,10 +1571,10 @@ def _trigram_logprob_rows(
     """Per-TRIPLE interpolated log-probabilities ``(id_col, __lp__)``
     — the shared pipeline behind :func:`trigram_lm_score` (mean →
     perplexity) and :func:`mink_prob_score` (mean of the k% lowest):
-    row-local triple fan-out → broadcast joins against the capped
-    trigram/bigram tables and the unigram log-prob table → the
-    Jelinek-Mercer mixture, one log per triple. Identical expression
-    tree to the r7 inline form (the lm3 oracle rows pin it)."""
+    row-local triple fan-out (:func:`_gram_rows`) → broadcast joins
+    against the capped trigram/bigram tables and the unigram log-prob
+    table → the Jelinek-Mercer mixture, one log per triple (the lm3
+    oracle rows pin it)."""
     l3, l2 = float(lambda3), float(lambda2)
     if l3 < 0 or l2 < 0 or l3 + l2 >= 1.0:
         raise ValueError(
@@ -1641,20 +1585,9 @@ def _trigram_logprob_rows(
         vocab, bigrams, trigrams, alpha
     )
     t = F.col(text_col)
-    lowered = F.lower(t) if lowercase else t
-    toks = tokens(lowered)
-    grams = F.when(
-        F.size(toks) >= 3, word_ngrams(lowered, 3, toks=toks)
-    ).otherwise(F.array().cast("array<string>"))
-    pos = df.select(
-        F.col(id_col), F.explode(grams).alias("g")
-    ).where(F.length("g") > 0)
-    split = F.split(F.col("g"), " ", 3)
-    triples = pos.select(
-        id_col,
-        F.get(split, 0).alias("w1"),
-        F.get(split, 1).alias("w2"),
-        F.get(split, 2).alias("w3"),
+    triples = _gram_rows(
+        df, [F.col(id_col)], tokens(F.lower(t) if lowercase else t),
+        [3], ["w1", "w2", "w3"],
     )
     joined = (
         triples.join(F.broadcast(ttab), ["w1", "w2", "w3"], "left")
@@ -2804,13 +2737,69 @@ def split_sentences_sql(expr: str) -> str:
     )
 
 
+def _gram_rows(
+    df: DataFrame,
+    keep: "Sequence[Column]",
+    toks: Column,
+    orders: "Sequence[int]",
+    names: "Sequence[str]",
+) -> DataFrame:
+    """``(keep..., names...)``: one row per word n-gram of every order
+    in ``orders`` of the token array ``toks`` — the package's one
+    definition of a word n-gram, behind the :func:`_gram_mass` count
+    kernel and the LM scorers.
+
+    A gram of order n fills the first n of ``names``; the rest are
+    NULL, so the null pattern alone tells the orders apart. Order-1
+    grams drop empty tokens; higher orders keep the empty edge tokens
+    a tab-led or trailing-whitespace text splits into (see
+    :func:`tokens`), and an array shorter than n (or NULL) has no
+    order-n gram.
+
+    The token array gets its own projection first: Spark does not
+    eliminate common subexpressions inside a Generate, so every
+    reference to an unprojected ``tokens(...)`` would re-run the
+    regex split. Each order's grams are then ``arrays_zip`` of n
+    aliased slices, NULL-padded by empty arrays and concatenated
+    across orders into one explode — no lambda, so the fan-out is
+    code-generated."""
+    rows = df.select(*keep, toks.alias("__toks__"))
+    kept = rows.columns[:-1]
+    toks = F.col("__toks__")
+    maxn = len(names)
+    empty = F.array().cast(
+        "array<struct<" + ",".join(f"{c}:string" for c in names) + ">>"
+    )
+    pad = F.array().cast("array<string>")
+    branches = []
+    for n in orders:
+        m = F.size(toks) - F.lit(n - 1)
+        parts = [toks] if n == 1 else [
+            F.slice(toks, i + 1, m) for i in range(n)
+        ]
+        parts += [pad] * (maxn - n)
+        arr = F.arrays_zip(*[p.alias(c) for p, c in zip(parts, names)])
+        branches.append(F.coalesce(F.when(m >= 1, arr), empty))
+    combined = F.concat(*branches) if len(branches) > 1 else branches[0]
+    rows = rows.select(*kept, F.explode(combined).alias("__g__")).select(
+        *kept, *[F.col(f"__g__.{c}").alias(c) for c in names]
+    )
+    if 1 in orders:
+        # an order-1 row is the one whose second component is NULL
+        nonempty = F.length(names[0]) > 0
+        rows = rows.where(
+            nonempty if maxn == 1
+            else F.col(names[1]).isNotNull() | nonempty
+        )
+    return rows
+
+
 def _gram_mass(
     df: DataFrame,
     text_col: str,
     orders: "Sequence[int]",
     lowercase: bool,
     weight: Column,
-    arrow: bool,
 ) -> DataFrame:
     """Per-gram weight mass of every word n-gram order in ``orders``
     from ONE corpus pass: ``(w1..w_maxn, mass)``, the count stage of
@@ -2819,139 +2808,19 @@ def _gram_mass(
     :func:`ngram_model_tables`, ``vocab.build_vocabulary`` and the
     vocab word tables).
 
-    A gram of order n fills ``w1..wn``; its higher components are
-    NULL, so the null pattern alone tells the orders apart. Grams
-    follow :func:`tokens`: order-1 grams drop empty tokens, higher
-    orders keep the empty edge tokens a tab-led or trailing-whitespace
-    text splits into, and a text shorter than n tokens has no order-n
-    gram. A gram seen only under NULL weights keeps a NULL-mass row.
-
-    The JVM form (default) builds one combined array of NULL-padded
-    gram structs per row, explodes it once and sums in one map-side-
-    combining aggregate. It sums ``weight`` exactly as passed, so the
-    mass has Spark's sum type: LONG for an integer weight, DOUBLE for
-    a double one. ``arrow=True`` counts per-batch partials in a
-    ``mapInPandas`` Counter instead and feeds them to the same
-    aggregate; it casts ``weight`` to double, so its mass is always
-    DOUBLE. Callers that pass ``arrow`` through cast their weight to
-    double first, so both forms give one schema. Unweighted masses are
-    exact integers, so both forms give identical tables; weighted
-    masses may differ at partial-sum-order ulps, like any grouped
-    float sum."""
+    The grams are :func:`_gram_rows` of the (optionally lowercased)
+    :func:`tokens`, exploded once and summed in one map-side-combining
+    aggregate. ``weight`` is summed as passed, so the mass has Spark's
+    sum type; the public builders cast it to double first, except
+    ``build_vocabulary``, which sums an integer weight as LONG. A gram
+    seen only under NULL weights keeps a NULL-mass row."""
     orders = sorted(int(n) for n in orders)
-    maxn = orders[-1]
-    gram_cols = [f"w{i + 1}" for i in range(maxn)]
+    gram_cols = [f"w{i + 1}" for i in range(orders[-1])]
     t = F.col(text_col)
-    lowered = F.lower(t) if lowercase else t
-
-    if arrow:
-        from pyspark.sql import types as _T
-
-        part_schema = _T.StructType(
-            [_T.StructField(c, _T.StringType()) for c in gram_cols]
-            + [_T.StructField("__w__", _T.DoubleType())]
-        )
-
-        def count_batches(batches):
-            import re as _re
-            from collections import Counter
-
-            import pandas as pd
-
-            # EXACT mirror of tokens(): F.trim strips ASCII spaces
-            # only; Java \s is [ \t\n\x0B\f\r] (NOT unicode spaces,
-            # unlike Python's str.split)
-            ws = _re.compile("[ \t\n\x0b\f\r]+")
-            pad = (None,) * maxn
-            for pdf in batches:
-                c: Counter = Counter()
-                seen: set = set()
-                for wt_, txt in zip(pdf["__w__"], pdf["__t__"]):
-                    if not isinstance(txt, str):
-                        continue
-                    # NULL weight (None, or NaN after the float cast):
-                    # the JVM form's F.sum skips the contribution but
-                    # still emits the gram
-                    null_w = wt_ is None or wt_ != wt_
-                    toks_ = ws.split(txt.strip(" "))
-                    for nn in orders:
-                        if nn == 1:
-                            gs = (
-                                (tok,) + pad[1:]
-                                for tok in toks_ if tok
-                            )
-                        elif len(toks_) < nn:
-                            continue
-                        else:
-                            gs = (
-                                tuple(toks_[i:i + nn]) + pad[nn:]
-                                for i in range(len(toks_) - nn + 1)
-                            )
-                        if null_w:
-                            seen.update(gs)
-                        else:
-                            for g in gs:
-                                c[g] += wt_
-                if c or seen:
-                    null_only = [g for g in seen if g not in c]
-                    keys = list(c.keys()) + null_only
-                    out = {
-                        gc: [k[j] for k in keys]
-                        for j, gc in enumerate(gram_cols)
-                    }
-                    if null_only:
-                        # nullable Float64: a bare-float NaN would
-                        # reach the JVM as NaN, not SQL NULL
-                        out["__w__"] = pd.array(
-                            [c.get(k) for k in keys], dtype="Float64"
-                        )
-                    else:
-                        out["__w__"] = [c[k] for k in keys]
-                    yield pd.DataFrame(out)
-
-        rows = df.select(
-            weight.cast("double").alias("__w__"), lowered.alias("__t__")
-        ).mapInPandas(count_batches, part_schema)
-    else:
-        # the token array gets its own projection: the explode's
-        # generator would otherwise re-split the text at every
-        # reference to it
-        rows = df.select(
-            weight.alias("__w__"), tokens(lowered).alias("__toks__")
-        )
-        toks = F.col("__toks__")
-        empty = F.array().cast(
-            "array<struct<" + ",".join(f"{c}:string" for c in gram_cols)
-            + ">>"
-        )
-        pad = F.array().cast("array<string>")
-        branches = []
-        for n in orders:
-            # arrays_zip NULL-pads the empty arrays and names each
-            # field after its alias: no lambda, so the fan-out is
-            # code-generated
-            m = F.size(toks) - F.lit(n - 1)
-            parts = [toks] if n == 1 else [
-                F.slice(toks, i + 1, m) for i in range(n)
-            ]
-            parts += [pad] * (maxn - n)
-            arr = F.arrays_zip(
-                *[p.alias(c) for p, c in zip(parts, gram_cols)]
-            )
-            branches.append(F.coalesce(F.when(m >= 1, arr), empty))
-        combined = (
-            F.concat(*branches) if len(branches) > 1 else branches[0]
-        )
-        rows = rows.select(
-            "__w__", F.explode(combined).alias("g")
-        ).select(*[F.col(f"g.{c}").alias(c) for c in gram_cols], "__w__")
-        if 1 in orders:
-            # order-1 grams drop empty tokens (an order-1 row is the
-            # one whose w2 is NULL)
-            keep = F.length("w1") > 0
-            rows = rows.where(
-                keep if maxn == 1 else F.col("w2").isNotNull() | keep
-            )
+    rows = _gram_rows(
+        df, [weight.alias("__w__")],
+        tokens(F.lower(t) if lowercase else t), orders, gram_cols,
+    )
     return rows.groupBy(*gram_cols).agg(F.sum("__w__").alias("mass"))
 
 
@@ -2978,14 +2847,13 @@ def ngram_counts(
     on). It is never collected; the estimator reduces it to four
     scalars.
 
-    ``arrow=True`` selects the kernel's ``mapInPandas`` Counter form
-    instead of the JVM gram-struct explode; the table is identical for
-    unweighted masses (pinned)."""
+    ``arrow`` is still accepted and selects nothing: the kernel has
+    one form."""
     n = int(n)
     if n < 2:
         raise ValueError("n must be >= 2 (use unigram_logprobs below)")
     w = weight if weight is not None else F.lit(1.0)
-    agg = _gram_mass(df, text_col, [n], lowercase, w.cast("double"), arrow)
+    agg = _gram_mass(df, text_col, [n], lowercase, w.cast("double"))
     if max_ngrams is None:
         return agg
     order = [F.col("mass").desc()] + [F.col(c) for c in agg.columns[:n]]
@@ -3032,8 +2900,8 @@ def ngram_model_tables(
     a lower order, so they never affect that order's ranking).
 
     ``weight`` is cast to double, as in :func:`ngram_counts`.
-    ``arrow=True`` selects the kernel's Counter form (one Python
-    crossing for all orders). ``checkpoint=True`` (default) cuts
+    ``arrow`` is still accepted and selects nothing: the kernel has
+    one form. ``checkpoint=True`` (default) cuts
     lineage on the fused ≤Σcaps-row result with a LAZY
     ``localCheckpoint`` — the per-order tables are each consumed from
     several scoring subtrees, so without the cut every consumer re-runs
@@ -3051,7 +2919,7 @@ def ngram_model_tables(
     maxn = orders[-1]
     gram_cols = [f"w{i + 1}" for i in range(maxn)]
     w = (weight if weight is not None else F.lit(1.0)).cast("double")
-    agg = _gram_mass(df, text_col, orders, lowercase, w, arrow)
+    agg = _gram_mass(df, text_col, orders, lowercase, w)
 
     # the gram order is the row's null pattern (see _gram_mass); empty
     # tokens are non-NULL, so they never shift it
@@ -3436,18 +3304,9 @@ def ngram_lm_score(
     N = max(orders)
 
     t = F.col(text_col)
-    lowered = F.lower(t) if lowercase else t
-    toks = tokens(lowered)
-    grams = F.when(
-        F.size(toks) >= N, word_ngrams(lowered, N, toks=toks)
-    ).otherwise(F.array().cast("array<string>"))
-    pos = df.select(
-        F.col(id_col), F.explode(grams).alias("g")
-    ).where(F.length("g") > 0)
-    split = F.split(F.col("g"), " ", N)
-    tuples = pos.select(
-        id_col,
-        *[F.get(split, i).alias(f"t{i + 1}") for i in range(N)],
+    tuples = _gram_rows(
+        df, [F.col(id_col)], tokens(F.lower(t) if lowercase else t),
+        [N], [f"t{i + 1}" for i in range(N)],
     )
     if smoothing in ("kn", "mkn"):
         return _kn_score(

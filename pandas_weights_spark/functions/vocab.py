@@ -86,7 +86,7 @@ def _top_words(
     ``text._gram_mass`` aggregate (weight summed uncast, default 1 per
     occurrence) under the :func:`_capped_top` cut."""
     w = weight if weight is not None else F.lit(1.0)
-    freqs = _gram_mass(df, text_col, [1], lowercase, w, arrow=False)
+    freqs = _gram_mass(df, text_col, [1], lowercase, w)
     return _capped_top(
         freqs.select(F.col("w1").alias("word"), F.col("mass").alias("freq")),
         "freq", "word", cap,
@@ -110,13 +110,13 @@ def build_vocabulary(
     summed uncast, so an integer weight gives a LONG mass.
     ``min_mass`` drops the long tail before the cut. The masses are
     the order-1 :func:`~pandas_weights_spark.functions.text._gram_mass`
-    aggregate in its JVM form (no Python in the plan, so the table
-    broadcasts into SQL scoring plans).
+    aggregate (no Python in the plan, so the table broadcasts into SQL
+    scoring plans).
     """
     if max_size < 1:
         raise ValueError("max_size must be >= 1")
     w = weight if weight is not None else F.lit(1.0)
-    masses = _gram_mass(df, text_col, [1], lowercase, w, arrow=False)
+    masses = _gram_mass(df, text_col, [1], lowercase, w)
     masses = _capped_top(
         masses.select(F.col("w1").alias("term"), "mass")
         .where(F.col("mass") >= float(min_mass)),
@@ -1351,14 +1351,23 @@ def train_unigram_lm(
     if not 0.1 <= shrink_factor < 1.0:
         raise ValueError("shrink_factor must be in [0.1, 1)")
     counted = _top_words(df, text_col, weight, lowercase, max_words)
+    # a word whose freq is NULL (seen only under NULL weights) or not
+    # positive carries no mass and has no log-probability: skip it, and
+    # the seed pieces found only in such words
     word_freqs = sorted(
-        (r["word"], float(r["freq"])) for r in counted.collect()
+        (r["word"], float(r["freq"]))
+        for r in counted.collect()
+        if r["freq"] is not None and r["freq"] > 0
     )
     seed = unigram_seed_table(
         df, text_col, max_piece_len=max_piece_len, seed_size=seed_size,
         weight=weight, lowercase=lowercase, max_words=max_words,
     )
-    masses = {r["piece"]: float(r["mass"]) for r in seed.collect()}
+    masses = {
+        r["piece"]: float(r["mass"])
+        for r in seed.collect()
+        if r["mass"] is not None and r["mass"] > 0
+    }
     # coverage floor: every character present in the word table gets a
     # piece even if the seed cut dropped it
     chars = {c for word, _ in word_freqs for c in word}

@@ -1,5 +1,7 @@
 """Tests for text-analysis operators (functions/text.py)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1435,6 +1437,77 @@ class TestGeneralOrderNgramLM:
                 corpus, "text", "doc_id", v, {2: t2}, {2: 1.0}
             )
 
+    # tab-led, trailing-tab, blank, NULL, one-token, exactly-2- and
+    # exactly-3-token and empty texts
+    EDGE = [
+        (10, "\tthe quick"), (11, "brown fox\t"), (12, "   "), (13, None),
+        (14, "fox"), (15, "the lazy"), (16, "the lazy dog"), (17, ""),
+    ]
+
+    def _edge_scores(self, spark, corpus):
+        from pandas_weights_spark.functions.text import (
+            bigram_counts,
+            bigram_lm_score,
+            ngram_lm_score,
+            trigram_counts,
+            trigram_lm_score,
+        )
+
+        edge = spark.createDataFrame(self.EDGE, "doc_id long, text string")
+        train = corpus.unionByName(edge)
+        v = self._vocab(train)
+        bg = bigram_counts(train, "text")
+        tg = trigram_counts(train, "text")
+        return {
+            "bigram": bigram_lm_score(edge, "text", "doc_id", v, bg),
+            "trigram": trigram_lm_score(
+                edge, "text", "doc_id", v, bg, tg
+            ),
+            "kn": ngram_lm_score(
+                edge, "text", "doc_id", None, {2: bg, 3: tg}, None,
+                smoothing="kn",
+            ),
+        }
+
+    def test_whitespace_edge_rows(self, spark, corpus):
+        # rows fixed from the join-then-split gram form the scorers
+        # used before they explode gram structs: the empty edge tokens
+        # of tab-led and trailing-tab texts are real gram components,
+        # and texts shorter than the order emit no row
+        want = {
+            "bigram": [
+                (10, 2, -0.7765000277665763, 2.1738505188721624),
+                (11, 2, -1.2379065366497053, 3.448386831606519),
+                (15, 1, -1.052997218065856, 2.8662289700451375),
+                (16, 2, -0.9355592915278206, 2.548638491112871),
+            ],
+            "trigram": [
+                (10, 1, -0.3316307187270821, 1.3932382567068913),
+                (11, 1, -1.5569052289263303, 4.744116548375048),
+                (16, 1, -0.4508496606388432, 1.5696452848844398),
+            ],
+            "kn": [
+                (10, 1, -1.1413893180241683, 3.131115459882584),
+                (11, 1, -2.1669075674611116, 8.731241473396997),
+                (16, 1, -0.49020633656325496, 1.6326530612244898),
+            ],
+        }
+        for name, df in self._edge_scores(spark, corpus).items():
+            got = sorted(tuple(r) for r in df.collect())
+            assert [r[:2] for r in got] == [r[:2] for r in want[name]]
+            for g, w in zip(got, want[name]):
+                assert g[2:] == pytest.approx(w[2:], rel=1e-12), name
+
+    def test_no_split_inside_generate(self, spark, corpus):
+        # the scorers explode gram structs of a token array projected
+        # once: no regex split is re-run inside the explode
+        for name, df in self._edge_scores(spark, corpus).items():
+            df.collect()
+            plan = df._jdf.queryExecution().executedPlan().toString()
+            gens = [ln for ln in plan.splitlines() if "Generate " in ln]
+            assert gens, (name, plan)
+            assert not any("split(" in ln for ln in gens), (name, plan)
+
 
 class TestKneserNey:
     """r10 (VERDICT r9 #2 carried item): smoothing='kn' — interpolated
@@ -2271,8 +2344,8 @@ class TestLuhnCreditCards:
 
 
 class TestLidArrow:
-    """arrow=True LID paths — exact model parity (integer counts) and
-    scoring parity (round-6 scores, identical labels) vs the JVM
+    """The char profile against a plain-Python oracle, and arrow=True
+    LID scoring parity (round-6 scores, identical labels) vs the JVM
     oracle-reference path, on the real sf0.01 documents."""
 
     def test_profile_arrow_equals_jvm(self, spark):
@@ -2283,23 +2356,28 @@ class TestLidArrow:
         docs = spark.read.parquet(
             "/root/testdata/sf0.01/documents.parquet"
         )
-        jvm = sorted(
-            map(
-                tuple,
-                char_ngram_lang_profile(
-                    docs, "text", "lang", n=3, top_k=40
-                ).collect(),
-            )
+        got = _sorted_rows(
+            char_ngram_lang_profile(docs, "text", "lang", n=3, top_k=40)
         )
-        arw = sorted(
-            map(
-                tuple,
-                char_ngram_lang_profile(
-                    docs, "text", "lang", n=3, top_k=40, arrow=True
-                ).collect(),
+        # per-label char 3-gram counts of Spark-lowercased text (code
+        # points, like Spark's substring), top 40 by (mass desc, gram)
+        counts = {}
+        for lab, t in docs.select("lang", F.lower("text")).collect():
+            if t is None:
+                continue
+            for i in range(len(t) - 2):
+                key = (lab, t[i:i + 3])
+                counts[key] = counts.get(key, 0.0) + 1.0
+        want = []
+        for lab in {k[0] for k in counts}:
+            mass = {(g,): m for (lb, g), m in counts.items() if lb == lab}
+            want += [(lab,) + r for r in _oracle_top(mass, 40)]
+        assert got == sorted(want, key=repr)
+        assert _sorted_rows(
+            char_ngram_lang_profile(
+                docs, "text", "lang", n=3, top_k=40, arrow=True
             )
-        )
-        assert jvm == arw
+        ) == got
 
     def test_classify_arrow_equals_jvm(self, spark):
         from pyspark.sql import functions as F
@@ -2341,7 +2419,67 @@ class TestLidArrow:
                 assert b == pytest.approx(a, abs=2e-6), i
 
 
+# Plain-Python oracles for the word/char n-gram tables, on collected
+# rows: the text is lowercased by Spark's ``lower`` before collection,
+# and tokens follow tokens()'s rule — F.trim strips ASCII spaces only,
+# then Java's \s+ split, which is [ \t\n\x0B\f\r]+ (not Unicode
+# spaces, unlike Python's str.split) and keeps empty edge tokens.
+_WS = re.compile("[ \t\n\x0b\f\r]+")
+
+
+def _oracle_tokens(text):
+    return _WS.split(text.strip(" "))
+
+
+def _oracle_gram_mass(rows, n):
+    """{gram tuple: mass} of order ``n`` over ``(text, weight)`` rows:
+    order 1 drops empty tokens, higher orders keep them; a NULL weight
+    adds nothing but still lists the gram (NULL mass when no weighted
+    occurrence exists), and a NULL text has no grams."""
+    mass = {}
+    for text, w in rows:
+        if text is None:
+            continue
+        toks = _oracle_tokens(text)
+        if n == 1:
+            grams = [(t,) for t in toks if t]
+        else:
+            grams = [tuple(toks[i:i + n]) for i in range(len(toks) - n + 1)]
+        for g in grams:
+            if w is None:
+                mass.setdefault(g, None)
+            else:
+                mass[g] = (mass.get(g) or 0.0) + w
+    return mass
+
+
+def _oracle_top(mass, cap):
+    """The exact top ``cap`` of ``{key: mass}`` by (mass desc NULLS
+    LAST, key asc) as sorted ``key + (mass,)`` tuples."""
+    ranked = sorted(
+        mass.items(), key=lambda kv: (kv[1] is None, -(kv[1] or 0.0), kv[0])
+    )
+    if cap is not None:
+        ranked = ranked[:cap]
+    return sorted((k + (m,) for k, m in ranked), key=repr)
+
+
+def _lowered_rows(df, weight=None):
+    w = F.lit(1.0) if weight is None else weight.cast("double")
+    return [
+        (r[0], r[1])
+        for r in df.select(F.lower(F.col("text")), w).collect()
+    ]
+
+
+def _sorted_rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
 class TestNgramCountsArrow:
+    """ngram_counts against the plain-Python gram oracle; ``arrow=True``
+    is still accepted and must return the default's rows."""
+
     @pytest.mark.parametrize("n,cap", [(2, 5000), (3, 5000), (2, None)])
     def test_arrow_equals_jvm(self, spark, n, cap):
         from pandas_weights_spark.functions.text import ngram_counts
@@ -2349,49 +2487,40 @@ class TestNgramCountsArrow:
         docs = spark.read.parquet(
             "/root/testdata/sf0.01/documents.parquet"
         )
-        jvm = sorted(
-            map(
-                tuple,
-                ngram_counts(
-                    docs, "text", n, max_ngrams=cap
-                ).collect(),
-            )
-        )
-        arw = sorted(
-            map(
-                tuple,
-                ngram_counts(
-                    docs, "text", n, max_ngrams=cap, arrow=True
-                ).collect(),
-            )
-        )
-        assert jvm == arw
+        got = _sorted_rows(ngram_counts(docs, "text", n, max_ngrams=cap))
+        want = _oracle_top(_oracle_gram_mass(_lowered_rows(docs), n), cap)
+        assert got == want
+        assert _sorted_rows(
+            ngram_counts(docs, "text", n, max_ngrams=cap, arrow=True)
+        ) == got
 
     def test_whitespace_edge_parity(self, spark):
         # tab-led token and trailing whitespace: F.trim strips only
         # ASCII spaces and F.split keeps the resulting empty edge
-        # tokens — the Arrow kernel must reproduce both
+        # tokens; blank, empty and NULL texts add no gram
         from pandas_weights_spark.functions.text import ngram_counts
 
         docs = spark.createDataFrame(
-            [("\ta b",), ("x y \t",), ("p q r",), ("   ",)],
+            [("\ta b",), ("x y \t",), ("p q r",), ("   ",), ("",),
+             (None,)],
             "text string",
         )
-        jvm = sorted(
-            map(tuple, ngram_counts(docs, "text", 2).collect())
-        )
-        arw = sorted(
-            map(
-                tuple,
-                ngram_counts(docs, "text", 2, arrow=True).collect(),
+        got = {}
+        for n in (2, 3):
+            got[n] = _sorted_rows(ngram_counts(docs, "text", n))
+            want = _oracle_top(
+                _oracle_gram_mass(_lowered_rows(docs), n), None
             )
-        )
-        assert jvm == arw
+            assert got[n] == want, n
+            assert _sorted_rows(
+                ngram_counts(docs, "text", n, arrow=True)
+            ) == got[n], n
+        assert ("", "a", 1.0) in got[2] and ("y", "", 1.0) in got[2]
+        assert ("x", "y", "", 1.0) in got[3]
 
     def test_null_weight_parity(self, spark):
-        # r12 ADVICE: NULL weights must be SKIPPED like the JVM
-        # F.sum skips NULL __w__ contributions — not crash the
-        # Counter with '+= None'
+        # NULL weights are SKIPPED like F.sum skips NULL contributions;
+        # a zero weight counts as a real 0.0 mass
         from pandas_weights_spark.functions.text import ngram_counts
 
         docs = spark.createDataFrame(
@@ -2400,34 +2529,25 @@ class TestNgramCountsArrow:
                 ("a b d", None),
                 ("a b c", 1.5),
                 ("e f", None),
+                ("e g", 0.0),
             ],
             "text string, w double",
         )
-        jvm = sorted(
-            map(
-                tuple,
-                ngram_counts(
-                    docs, "text", 2, weight=F.col("w")
-                ).collect(),
-            ),
-            key=str,
+        got = _sorted_rows(ngram_counts(docs, "text", 2, weight=F.col("w")))
+        want = _oracle_top(
+            _oracle_gram_mass(_lowered_rows(docs, F.col("w")), 2), None
         )
-        arw = sorted(
-            map(
-                tuple,
-                ngram_counts(
-                    docs, "text", 2, weight=F.col("w"), arrow=True
-                ).collect(),
-            ),
-            key=str,
-        )
-        assert jvm == arw
+        assert got == want
+        assert _sorted_rows(
+            ngram_counts(docs, "text", 2, weight=F.col("w"), arrow=True)
+        ) == got
         # mixed-weight grams sum the non-NULL mass; grams seen ONLY
-        # under NULL weights keep a NULL-mass row (JVM F.sum rule)
-        d = {(a, b): m for a, b, m in jvm}
+        # under NULL weights keep a NULL-mass row (F.sum rule)
+        d = {(a, b): m for a, b, m in got}
         assert d[("a", "b")] == 3.5
         assert d[("b", "d")] is None
         assert d[("e", "f")] is None
+        assert d[("e", "g")] == 0.0
 
 
 class TestCorpusLinesScoped:
@@ -3220,12 +3340,28 @@ class TestNgramModelTablesFused:
         self._assert_equal(corpus, {1: 5000, 2: 5000, 3: 5000})
 
     def test_arrow_matches_jvm(self, corpus):
-        fused_a = TX.ngram_model_tables(
-            corpus, "text", {2: 11, 3: 13}, arrow=True
-        )
-        ref = self._standalone(corpus, {2: 11, 3: 13})
+        # every order against the plain-Python oracle (order 1 with
+        # build_vocabulary's min_mass tail filter and term_id ranks);
+        # arrow=True must return the default's rows
+        caps = {1: 9, 2: 11, 3: 13}
+        fused = TX.ngram_model_tables(corpus, "text", caps)
+        rows = _lowered_rows(corpus)
         for n in (2, 3):
-            assert self._rows(fused_a[n]) == self._rows(ref[n]), n
+            assert _sorted_rows(fused[n]) == _oracle_top(
+                _oracle_gram_mass(rows, n), caps[n]
+            ), n
+        kept = {
+            g: m for g, m in _oracle_gram_mass(rows, 1).items() if m >= 1.0
+        }
+        ranked = sorted(
+            _oracle_top(kept, caps[1]), key=lambda r: (-r[1], r[0])
+        )
+        assert _sorted_rows(fused[1]) == sorted(
+            ((t, i, m) for i, (t, m) in enumerate(ranked)), key=repr
+        )
+        fused_a = TX.ngram_model_tables(corpus, "text", caps, arrow=True)
+        for n in caps:
+            assert _sorted_rows(fused_a[n]) == _sorted_rows(fused[n]), n
 
     def test_weighted_with_null_weights(self, spark):
         # NULL-weight rows: the gram still appears, with NULL mass
@@ -3307,7 +3443,6 @@ class TestNgramModelTablesFused:
             bigram_counts(corpus, "text", weight=w),
             trigram_counts(corpus, "text", weight=w),
             ngram_counts(corpus, "text", 2, weight=w),
-            ngram_counts(corpus, "text", 2, weight=w, arrow=True),
             ngram_counts(corpus, "text", 4, max_ngrams=None, weight=w),
             *TX.ngram_model_tables(
                 corpus, "text", {1: 10, 2: 10, 3: 10}, weight=w
@@ -3315,10 +3450,17 @@ class TestNgramModelTablesFused:
         ]
         for df in doubles:
             assert mass_type(df) == "double", df.columns
-        assert self._rows(doubles[0]) == self._rows(doubles[3])
+        # the integer weight cast to double, against the oracle
+        want = _oracle_top(
+            _oracle_gram_mass(_lowered_rows(corpus, w), 2), None
+        )
+        assert _sorted_rows(doubles[0]) == want
         assert {
             (r["w1"], r["w2"]): r["mass"] for r in doubles[0].collect()
         } == {("a", "b"): 4.0, ("b", "c"): 2.0, ("c", "a"): 2.0}
+        arrow = ngram_counts(corpus, "text", 2, weight=w, arrow=True)
+        assert mass_type(arrow) == "double"
+        assert _sorted_rows(arrow) == _sorted_rows(doubles[2])
 
     def test_min_mass_drops_order1_tail_only(self, spark):
         corpus = spark.createDataFrame(

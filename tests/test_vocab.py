@@ -202,6 +202,34 @@ class TestUnigramLM:
         assert chars <= {p for p, _ in a}
         assert len(a) <= max(12, len(chars))
 
+    def test_null_weight_only_word_skipped(self, spark):
+        # "qqq" is seen only under NULL weights and "zzz" only under a
+        # zero weight: their word-table freqs and their seed pieces'
+        # masses are NULL or 0.0, so they carry no mass and train
+        # exactly like the corpus without them
+        import math
+
+        from pandas_weights_spark.functions.vocab import train_unigram_lm
+
+        rows = [("low lower", 2.0), ("newest low", 1.5), ("qqq", None),
+                ("widest", None), ("widest low", 0.5), ("zzz", 0.0),
+                ("low", 0.0)]
+        df = spark.createDataFrame(rows, "text string, w double")
+        kw = dict(vocab_size=10, max_piece_len=3, seed_size=40)
+        got = sorted(
+            tuple(r) for r in train_unigram_lm(
+                df, "text", weight=F.col("w"), **kw
+            ).collect()
+        )
+        assert not {"q", "z"} & {p for p, _ in got}
+        assert sum(math.exp(lp) for _, lp in got) == pytest.approx(1.0)
+        ref = df.where(~F.col("text").isin("qqq", "zzz"))
+        assert got == sorted(
+            tuple(r) for r in train_unigram_lm(
+                ref, "text", weight=F.col("w"), **kw
+            ).collect()
+        )
+
     def test_round_trip_encode(self, corpus):
         from pandas_weights_spark.functions.vocab import (
             encode_unigram,

@@ -702,12 +702,9 @@ def main() -> int:
         labels=[str(i) for i in range(5)], n=3, arrow=True,
     ), int(docs_n / 5))
 
-    # r11: Arrow Counter training partials vs the explode+agg path
+    # the gram-mass count kernel (one form; `arrow=` selects nothing)
     from pandas_weights_spark.functions.text import ngram_counts
 
-    dbench("trigram counts arrow (capped 5k)", lambda: ngram_counts(
-        docs, "text", 3, max_ngrams=5000, arrow=True
-    ), docs_n)
     dbench("trigram counts jvm (capped 5k)", lambda: ngram_counts(
         docs, "text", 3, max_ngrams=5000
     ), docs_n)
