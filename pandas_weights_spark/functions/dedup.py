@@ -6,20 +6,35 @@ Design for 100 TB:
 
 * **Exact dedup** — hash-groupBy on a content digest: one shuffle keyed
   on md5(text), no full-text comparison, no driver involvement.
-* **MinHash signatures** — entirely *row-local* expressions: shingles via
-  ``transform``/``sequence`` (no explode), per-permutation minimum via
-  ``array_min`` over md5 of seeded shingles. md5 hex strings order
-  lexicographically the same everywhere, so the signature is engine- and
-  partitioning-independent (and therefore SQL-oracle-checkable).
-* **LSH banding** — signatures are split into bands; a self-join on
-  ``(band_index, band_hash)`` yields candidate pairs only — the join key
-  is short and uniformly distributed, so the shuffle is balanced; the
-  quadratic blow-up is confined to same-bucket collisions, which is the
-  point of LSH.
-* **Verification** — candidates are re-checked with exact shingle
-  Jaccard (``array_intersect``/``array_union`` on distinct shingles).
+* **MinHash near-dup** — one banded-LSH kernel of four steps, each
+  defined once here; :func:`minhash_near_duplicates`,
+  :func:`minhash_join`, :func:`chunk_near_duplicates`,
+  :func:`minhash_dedup_incremental`, :func:`lsh_candidate_pairs` and
+  the streaming candidates are compositions of them:
 
-All hot-path logic is JVM expressions; no Python UDFs anywhere.
+  1. *signature* — permutation *i* hashes every shingle with a seed
+     (:func:`_perm_hash`: md5 of ``"{i} " || shingle``, whose hex
+     strings order the same in every engine, or seeded ``xxhash64``
+     when ``portable=False``) and keeps the minimum. The pipelines use
+     the aggregation form (:func:`minhash_signatures_agg`: explode the
+     shingles, map-side partial MIN per document);
+     :func:`minhash_signature` is the row-local array form streams use.
+  2. *band keys* — :func:`_band_keys` hashes each band's ``r``
+     signature elements into one key.
+  3. *bucket join* — :func:`_banded` posexplodes each table's keys
+     into ``(band_idx, band_hash)`` rows and :func:`_bucket_pairs`
+     equi-joins them. The key is short and uniformly distributed, so
+     the shuffle is balanced and the quadratic term is confined to
+     same-bucket collisions.
+  4. *verify* — :func:`_verified` keeps the candidates whose exact
+     Jaccard over distinct shingle sets, rounded to 6 dp, reaches the
+     threshold.
+* **Embedding near-dup** — random-hyperplane buckets, then the rounded
+  cosine verify of :mod:`~pandas_weights_spark.functions.similarity`.
+
+The kernels are JVM expressions; ``mapInPandas`` runs only where a
+caller asks for it (``remove_duplicate_ngram_spans(portable=False)``,
+``semantic_dedup_incremental(arrow=True)``).
 """
 
 from __future__ import annotations
@@ -199,25 +214,163 @@ def duplicate_groups(
     )
 
 
+def _rows_per_band(num_hashes: int, bands: int) -> int:
+    """Signature rows per LSH band; ``bands`` must divide
+    ``num_hashes``."""
+    r = num_hashes // bands
+    if r * bands != num_hashes:
+        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
+    return r
+
+
+def _perm_hash(i: int, shingle: Column, portable: bool = True) -> Column:
+    """Permutation *i* of the MinHash family: md5 hex of
+    ``"{i} " || shingle`` — pure-ASCII string order, so the minimum is
+    engine-portable, unlike engine-specific 64-bit hashes — or, with
+    ``portable=False``, ``xxhash64`` seeded by *i*."""
+    if portable:
+        return F.md5(F.concat(F.lit(f"{i} "), shingle))
+    return F.xxhash64(F.lit(i), shingle)
+
+
+def _band_keys(sig: Column, bands: int, r: int, portable: bool) -> Column:
+    """Band bucket keys of a signature array: band *b* hashes elements
+    ``b·r … b·r+r−1`` — md5 of their '|'-joined strings (``concat_ws``
+    skips NULL elements) or, with ``portable=False``, xxhash64 of the
+    longs (no string materialized on the fast path). Signatures held as ``h0 … h{k-1}`` columns pass
+    ``F.array(*h)``; the optimizer folds the element reads back into
+    the columns."""
+    if portable:
+        return F.array(
+            *[
+                F.md5(
+                    F.concat_ws(
+                        "|", *[sig[b * r + j] for j in range(r)]
+                    )
+                )
+                for b in range(bands)
+            ]
+        )
+    return F.array(
+        *[
+            F.xxhash64(*[sig[b * r + j] for j in range(r)])
+            for b in range(bands)
+        ]
+    )
+
+
+def _banded(df: DataFrame, id_col: str, keys: Column) -> DataFrame:
+    """``(id_col, band_idx, band_hash)``: one row per band key."""
+    return df.select(
+        F.col(id_col), F.posexplode(keys).alias("band_idx", "band_hash")
+    )
+
+
+def _minhash_banded(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    shingle_size: int,
+    bands: int,
+    r: int,
+    portable: bool = True,
+) -> DataFrame:
+    """:func:`_banded` keys of ``df``'s aggregation-form signatures."""
+    sigs = minhash_signatures_agg(
+        df, text_col, id_col, bands * r, shingle_size, portable=portable
+    )
+    h = F.array(*[F.col(f"h{i}") for i in range(bands * r)])
+    return _banded(sigs, id_col, _band_keys(h, bands, r, portable))
+
+
+def _ordered(a: Column, b: Column) -> "list[Column]":
+    # self-join condition: each unordered pair once, never a row with
+    # itself
+    return [a < b]
+
+
+def _bucket_pairs(
+    left: DataFrame,
+    right: DataFrame,
+    left_id: str,
+    right_id: str,
+    out: "tuple[str, str]",
+    cond=None,
+) -> DataFrame:
+    """Distinct id pairs, named ``out``, of two :func:`_banded` tables
+    that share a ``(band_idx, band_hash)`` bucket — the LSH candidate
+    step. ``cond(left_id_col, right_id_col)`` returns further join
+    conditions (:func:`_ordered` for self-joins)."""
+    lid = F.col(f"__l__.{left_id}")
+    rid = F.col(f"__r__.{right_id}")
+    on = [
+        F.col("__l__.band_idx") == F.col("__r__.band_idx"),
+        F.col("__l__.band_hash") == F.col("__r__.band_hash"),
+    ]
+    if cond is not None:
+        on += cond(lid, rid)
+    return (
+        left.alias("__l__")
+        .join(right.alias("__r__"), on=on)
+        .select(lid.alias(out[0]), rid.alias(out[1]))
+        .distinct()
+    )
+
+
+def _shingle_sets(
+    df: DataFrame, text_col: str, id_col: str, shingle_size: int
+) -> DataFrame:
+    """``(id_col, distinct shingles)`` — the verify side of a
+    MinHash pipeline."""
+    return df.select(
+        F.col(id_col),
+        F.array_distinct(word_ngrams(F.col(text_col), shingle_size)),
+    )
+
+
+def _verified(
+    pairs: DataFrame,
+    left: DataFrame,
+    right: DataFrame,
+    a: str,
+    b: str,
+    threshold: float,
+) -> DataFrame:
+    """``(a, b, jaccard)``: the candidate pairs whose exact Jaccard
+    between ``left``'s set for ``a`` and ``right``'s set for ``b``
+    (two-column ``(id, set)`` tables), rounded to 6 dp, is at least
+    ``threshold``. Only candidate pairs meet their sets, so no set
+    travels through the bucket shuffle."""
+    return (
+        pairs.join(left.toDF(a, "__sa__"), a)
+        .join(right.toDF(b, "__sb__"), b)
+        .select(
+            a,
+            b,
+            F.round(jaccard(F.col("__sa__"), F.col("__sb__")), 6).alias(
+                "jaccard"
+            ),
+        )
+        .where(F.col("jaccard") >= F.lit(float(threshold)))
+    )
+
+
 def minhash_signature(
     text: Column, num_hashes: int = 16, shingle_size: int = 3
 ) -> Column:
-    """MinHash signature as array<string> of length ``num_hashes``.
-
-    Permutation *i* is simulated by hashing each shingle with a seed
-    prefix: ``md5(i || ' ' || shingle)``; the signature element is the
-    lexicographic minimum. String min over md5-hex is engine-portable
-    (pure ASCII compare), unlike engine-specific 64-bit hashes.
+    """MinHash signature as array<string> of length ``num_hashes``:
+    element *i* is the minimum of :func:`_perm_hash` *i* over the
+    shingles — the row-local form of :func:`minhash_signatures_agg`.
     """
     shingles = word_ngrams(text, shingle_size)
 
-    def seeded_md5(i: int):
+    def perm(i: int):
         # factory keeps the lambda unary — pyspark passes the array index
         # as a second argument to binary lambdas, which must not happen here
-        return lambda s: F.md5(F.concat(F.lit(f"{i} "), s))
+        return lambda s: _perm_hash(i, s)
 
     return F.array(
-        *[F.array_min(F.transform(shingles, seeded_md5(i))) for i in range(num_hashes)]
+        *[F.array_min(F.transform(shingles, perm(i))) for i in range(num_hashes)]
     )
 
 
@@ -242,30 +395,9 @@ def lsh_candidate_pairs(
     r = rows_per_band or n // bands
     if r * bands > n:
         raise ValueError(f"bands={bands} x rows={r} exceeds signature length {n}")
-    band_arr = F.array(
-        *[
-            F.md5(F.concat_ws("|", F.slice(sig, b * r + 1, r)))
-            for b in range(bands)
-        ]
-    )
-    banded = df.select(
-        F.col(id_col), F.posexplode(band_arr).alias("band_idx", "band_hash")
-    )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    return (
-        left.join(
-            right,
-            on=[
-                F.col("l.band_idx") == F.col("r.band_idx"),
-                F.col("l.band_hash") == F.col("r.band_hash"),
-                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-        )
-        .distinct()
+    banded = _banded(df, id_col, _band_keys(sig, bands, r, True))
+    return _bucket_pairs(
+        banded, banded, id_col, id_col, ("id_a", "id_b"), _ordered
     )
 
 
@@ -315,19 +447,12 @@ def minhash_signatures_agg(
         F.col(id_col),
         F.explode(word_ngrams(F.col(text_col), shingle_size)).alias("__s__"),
     )
-    if portable:
-        aggs = [
-            F.min(
-                F.md5(F.concat(F.lit(f"{i} "), F.col("__s__")))
-            ).alias(f"h{i}")
+    return exploded.groupBy(id_col).agg(
+        *[
+            F.min(_perm_hash(i, F.col("__s__"), portable)).alias(f"h{i}")
             for i in range(num_hashes)
         ]
-    else:
-        aggs = [
-            F.min(F.xxhash64(F.lit(i), F.col("__s__"))).alias(f"h{i}")
-            for i in range(num_hashes)
-        ]
-    return exploded.groupBy(id_col).agg(*aggs)
+    )
 
 
 def minhash_near_duplicates(
@@ -349,67 +474,15 @@ def minhash_near_duplicates(
     only on LSH candidates; shingle arrays are recomputed on the (small)
     candidate side rather than carried through the bucket shuffle.
     """
-    r = num_hashes // bands
-    if r * bands != num_hashes:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
-    sigs = minhash_signatures_agg(
-        df, text_col, id_col, num_hashes, shingle_size, portable=portable
+    r = _rows_per_band(num_hashes, bands)
+    banded = _minhash_banded(
+        df, text_col, id_col, shingle_size, bands, r, portable
     )
-    if portable:
-        band_arr = F.array(
-            *[
-                F.md5(
-                    F.concat_ws(
-                        "|", *[F.col(f"h{b * r + j}") for j in range(r)]
-                    )
-                )
-                for b in range(bands)
-            ]
-        )
-    else:
-        # int band keys: xxhash64 of the r signature longs — no string
-        # materialization anywhere on the fast path
-        band_arr = F.array(
-            *[
-                F.xxhash64(*[F.col(f"h{b * r + j}") for j in range(r)])
-                for b in range(bands)
-            ]
-        )
-    banded = sigs.select(
-        F.col(id_col), F.posexplode(band_arr).alias("band_idx", "band_hash")
+    pairs = _bucket_pairs(
+        banded, banded, id_col, id_col, ("id_a", "id_b"), _ordered
     )
-    left = banded.alias("l")
-    right = banded.alias("r")
-    pairs = (
-        left.join(
-            right,
-            on=[
-                F.col("l.band_idx") == F.col("r.band_idx"),
-                F.col("l.band_hash") == F.col("r.band_hash"),
-                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("id_a"), F.col(f"r.{id_col}").alias("id_b")
-        )
-        .distinct()
-    )
-    shingled = df.select(
-        F.col(id_col),
-        F.array_distinct(word_ngrams(F.col(text_col), shingle_size)).alias("sh"),
-    )
-    a = shingled.alias("a")
-    b = shingled.alias("b")
-    return (
-        pairs.join(a, pairs.id_a == F.col(f"a.{id_col}"))
-        .join(b, pairs.id_b == F.col(f"b.{id_col}"))
-        .select(
-            "id_a",
-            "id_b",
-            F.round(jaccard(F.col("a.sh"), F.col("b.sh")), 6).alias("jaccard"),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    sh = _shingle_sets(df, text_col, id_col, shingle_size)
+    return _verified(pairs, sh, sh, "id_a", "id_b", threshold)
 
 
 def minhash_join(
@@ -439,67 +512,23 @@ def minhash_join(
     candidates. Output column names are the caller's id columns (they
     must differ).
     """
-    r = num_hashes // bands
-    if r * bands != num_hashes:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
+    r = _rows_per_band(num_hashes, bands)
     if left_id == right_id:
         raise ValueError("left_id and right_id must have distinct names")
-
-    def banded(df, text_col, id_col):
-        sigs = minhash_signatures_agg(
-            df, text_col, id_col, num_hashes, shingle_size
-        )
-        band_arr = F.array(
-            *[
-                F.md5(
-                    F.concat_ws(
-                        "|", *[F.col(f"h{b * r + j}") for j in range(r)]
-                    )
-                )
-                for b in range(bands)
-            ]
-        )
-        return sigs.select(
-            F.col(id_col),
-            F.posexplode(band_arr).alias("band_idx", "band_hash"),
-        )
-
-    lb = banded(left, left_text, left_id).alias("l")
-    rb = banded(right, right_text, right_id).alias("r")
-    pairs = (
-        lb.join(
-            rb,
-            on=[
-                F.col("l.band_idx") == F.col("r.band_idx"),
-                F.col("l.band_hash") == F.col("r.band_hash"),
-            ],
-        )
-        .select(F.col(f"l.{left_id}"), F.col(f"r.{right_id}"))
-        .distinct()
+    pairs = _bucket_pairs(
+        _minhash_banded(left, left_text, left_id, shingle_size, bands, r),
+        _minhash_banded(right, right_text, right_id, shingle_size, bands, r),
+        left_id,
+        right_id,
+        (left_id, right_id),
     )
-    ls = left.select(
-        F.col(left_id),
-        F.array_distinct(word_ngrams(F.col(left_text), shingle_size)).alias(
-            "__lsh__"
-        ),
-    )
-    rs = right.select(
-        F.col(right_id),
-        F.array_distinct(word_ngrams(F.col(right_text), shingle_size)).alias(
-            "__rsh__"
-        ),
-    )
-    return (
-        pairs.join(ls, left_id)
-        .join(rs, right_id)
-        .select(
-            left_id,
-            right_id,
-            F.round(jaccard(F.col("__lsh__"), F.col("__rsh__")), 6).alias(
-                "jaccard"
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
+    return _verified(
+        pairs,
+        _shingle_sets(left, left_text, left_id, shingle_size),
+        _shingle_sets(right, right_text, right_id, shingle_size),
+        left_id,
+        right_id,
+        threshold,
     )
 
 
@@ -540,9 +569,7 @@ def chunk_near_duplicates(
     """
     from pandas_weights_spark.functions.packing import chunk_documents
 
-    r = num_hashes // bands
-    if r * bands != num_hashes:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
+    r = _rows_per_band(num_hashes, bands)
     chunks = chunk_documents(
         df, text_col, id_col, chunk_tokens, overlap
     ).select(
@@ -553,54 +580,21 @@ def chunk_near_duplicates(
         ).alias("__ck__"),
         "chunk_text",
     )
-    sigs = minhash_signatures_agg(
-        chunks, "chunk_text", "__ck__", num_hashes, shingle_size
-    )
-    band_arr = F.array(
-        *[
-            F.md5(
-                F.concat_ws("|", *[F.col(f"h{b * r + j}") for j in range(r)])
-            )
-            for b in range(bands)
-        ]
-    )
-    banded = sigs.select(
-        "__ck__", F.posexplode(band_arr).alias("band_idx", "band_hash")
+    banded = _minhash_banded(
+        chunks, "chunk_text", "__ck__", shingle_size, bands, r
     )
     doc_of = lambda c: F.substring_index(c, sep, 1)  # noqa: E731
-    conds = [
-        F.col("l.band_idx") == F.col("r.band_idx"),
-        F.col("l.band_hash") == F.col("r.band_hash"),
-        F.col("l.__ck__") < F.col("r.__ck__"),
-    ]
-    if cross_document_only:
-        conds.append(doc_of(F.col("l.__ck__")) != doc_of(F.col("r.__ck__")))
-    pairs = (
-        banded.alias("l")
-        .join(banded.alias("r"), on=conds)
-        .select(
-            F.col("l.__ck__").alias("ck_a"), F.col("r.__ck__").alias("ck_b")
-        )
-        .distinct()
+
+    def cond(a: Column, b: Column) -> "list[Column]":
+        if cross_document_only:
+            return [a < b, doc_of(a) != doc_of(b)]
+        return [a < b]
+
+    pairs = _bucket_pairs(
+        banded, banded, "__ck__", "__ck__", ("ck_a", "ck_b"), cond
     )
-    shingled = chunks.select(
-        "__ck__",
-        F.array_distinct(
-            word_ngrams(F.col("chunk_text"), shingle_size)
-        ).alias("sh"),
-    )
-    verified = (
-        pairs.join(shingled.alias("a"), pairs.ck_a == F.col("a.__ck__"))
-        .join(shingled.alias("b"), pairs.ck_b == F.col("b.__ck__"))
-        .select(
-            "ck_a",
-            "ck_b",
-            F.round(jaccard(F.col("a.sh"), F.col("b.sh")), 6).alias(
-                "jaccard"
-            ),
-        )
-        .where(F.col("jaccard") >= threshold)
-    )
+    sh = _shingle_sets(chunks, "chunk_text", "__ck__", shingle_size)
+    verified = _verified(pairs, sh, sh, "ck_a", "ck_b", threshold)
     return verified.select(
         F.substring_index("ck_a", sep, 1).alias("doc_a"),
         F.substring_index("ck_a", sep, -1).cast("long").alias("chunk_a"),
@@ -1023,6 +1017,24 @@ def hamming_distance(a: Column, b: Column, bits: int = 64) -> Column:
     return total
 
 
+def _vec_width(df: DataFrame, vec_col: str, what: str) -> int:
+    """Width of the widest non-NULL vector in ``df[vec_col]``. NULL
+    vectors are skipped, so a NULL first row cannot poison the probe;
+    ``what`` names the table in the error raised when it holds no
+    vector at all."""
+    d = (
+        df.where(F.col(vec_col).isNotNull())
+        .agg(F.max(F.size(F.col(vec_col))).alias("d"))
+        .first()["d"]
+    )
+    if d is None:
+        raise ValueError(
+            f"{what} has no non-NULL '{vec_col}' vectors — cannot "
+            "infer vector width"
+        )
+    return int(d)
+
+
 def embedding_near_duplicates(
     df: DataFrame,
     id_col: str,
@@ -1039,15 +1051,14 @@ def embedding_near_duplicates(
     banding does for text.
     """
     from pandas_weights_spark.functions.similarity import (
-        dot,
+        _rounded_cosine,
         hyperplane_bucket,
         l2_norm,
     )
 
-    dim = df.select(F.size(F.col(vec_col)).alias("d")).first()["d"]
+    dim = _vec_width(df, vec_col, "embedding_near_duplicates: table")
     # per-row norm computed ONCE before the self-join — the pair step then
-    # does a single dot per candidate instead of dot + two norm folds;
-    # float-identical to cosine_similarity's |a|·|b| order (oracle parity)
+    # does a single dot per candidate instead of dot + two norm folds
     bucketed = df.select(
         F.col(id_col),
         F.col(vec_col),
@@ -1067,12 +1078,9 @@ def embedding_near_duplicates(
         .select(
             F.col(f"a.{id_col}").alias("id_a"),
             F.col(f"b.{id_col}").alias("id_b"),
-            F.round(
-                F.try_divide(
-                    dot(F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}")),
-                    F.col("a.__n__") * F.col("b.__n__"),
-                ),
-                6,
+            _rounded_cosine(
+                F.col(f"a.{vec_col}"), F.col(f"b.{vec_col}"),
+                F.col("a.__n__"), F.col("b.__n__"),
             ).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)
@@ -1103,31 +1111,15 @@ def embedding_join(
     width. Never |L|×|R| — the join key is the sign-pattern bucket.
     """
     from pandas_weights_spark.functions.similarity import (
-        dot,
+        _rounded_cosine,
         hyperplane_bucket,
         l2_norm,
     )
 
     if left_id == right_id:
         raise ValueError("left_id and right_id must have distinct names")
-
-    # width probe skips NULL vectors and raises a clear error on an
-    # empty/all-NULL side (ADVICE r5: .first() on a NULL first row
-    # produced dim None and a confusing downstream failure)
-    def _dim(df, vec_col, side):
-        row = df.where(F.col(vec_col).isNotNull()).agg(
-            F.max(F.size(F.col(vec_col))).alias("d")
-        ).first()
-        d = row["d"] if row is not None else None
-        if d is None:
-            raise ValueError(
-                f"embedding_join: {side} table has no non-NULL "
-                f"'{vec_col}' vectors — cannot infer vector width"
-            )
-        return int(d)
-
-    dim = _dim(left, left_vec, "left")
-    rdim = _dim(right, right_vec, "right")
+    dim = _vec_width(left, left_vec, "embedding_join: left table")
+    rdim = _vec_width(right, right_vec, "embedding_join: right table")
     if dim != rdim:
         raise ValueError(f"vector widths differ: {dim} vs {rdim}")
 
@@ -1148,12 +1140,9 @@ def embedding_join(
         .select(
             F.col(f"a.{left_id}"),
             F.col(f"b.{right_id}"),
-            F.round(
-                F.try_divide(
-                    dot(F.col("a.__v__"), F.col("b.__v__")),
-                    F.col("a.__n__") * F.col("b.__n__"),
-                ),
-                6,
+            _rounded_cosine(
+                F.col("a.__v__"), F.col("b.__v__"),
+                F.col("a.__n__"), F.col("b.__n__"),
             ).alias("cosine"),
         )
         .where(F.col("cosine") >= threshold)
@@ -1343,30 +1332,6 @@ def lsh_tuning(
     return best[1], best[2]
 
 
-def _band_keys(sig: Column, bands: int, r: int, portable: bool) -> Column:
-    """Band bucket keys from a SIGNATURE ARRAY column — the same
-    per-band formula as :func:`minhash_near_duplicates` (md5 of the
-    '|'-joined row slice, or xxhash64 of the longs), array-indexed so
-    persisted state needs only one ``sig`` column."""
-    if portable:
-        return F.array(
-            *[
-                F.md5(
-                    F.concat_ws(
-                        "|", *[sig[b * r + j] for j in range(r)]
-                    )
-                )
-                for b in range(bands)
-            ]
-        )
-    return F.array(
-        *[
-            F.xxhash64(*[sig[b * r + j] for j in range(r)])
-            for b in range(bands)
-        ]
-    )
-
-
 def minhash_dedup_incremental(
     df: DataFrame,
     text_col: str,
@@ -1388,7 +1353,7 @@ def minhash_dedup_incremental(
 
     ``state`` rows are ``(id_col, sig array, sh array)`` — one row
     per historical document: its MinHash signature (band keys
-    recompute row-locally from slices, so persisted state is one
+    recompute row-locally from it, so persisted state is one
     compact table, not bands× bucket rows) and its distinct shingle
     DIGEST set for the exact-Jaccard verify — md5-prefix 16-char
     strings when ``portable`` (DuckDB-replayable), ``xxhash64``
@@ -1450,11 +1415,7 @@ def minhash_dedup_incremental(
     Pass ``checkpoint=False`` to keep recoverable pure-lineage
     plans.
     """
-    r = num_hashes // bands
-    if r * bands != num_hashes:
-        raise ValueError(
-            f"bands={bands} must divide num_hashes={num_hashes}"
-        )
+    r = _rows_per_band(num_hashes, bands)
     if state is not None and not store_shingles and portable:
         # state-format guard (ADVICE r13): r12 raw-shingle state and
         # md5-prefix digest state are both array<string>, so a stale
@@ -1522,48 +1483,20 @@ def minhash_dedup_incremental(
         packed = packed.localCheckpoint(eager=False)
 
     def banded(st: DataFrame) -> DataFrame:
-        return st.select(
-            F.col(id_col),
-            F.posexplode(
-                _band_keys(F.col("sig"), bands, r, portable)
-            ).alias("band_idx", "band_hash"),
-        )
+        keys = _band_keys(F.col("sig"), bands, r, portable)
+        return _banded(st, id_col, keys)
 
-    jac = F.round(jaccard(F.col("__nsh__"), F.col("__osh__")), 6)
+    sets = packed.select(id_col, "sh")
     bn = banded(packed)
     if state is not None:
-        bo = banded(state)
-        cross = (
-            bn.alias("n")
-            .join(
-                bo.alias("o"),
-                on=[
-                    F.col("n.band_idx") == F.col("o.band_idx"),
-                    F.col("n.band_hash") == F.col("o.band_hash"),
-                ],
-            )
-            .select(
-                F.col(f"n.{id_col}").alias("__nid__"),
-                F.col(f"o.{id_col}").alias("__oid__"),
-            )
-            .distinct()
+        cross = _bucket_pairs(
+            bn, banded(state), id_col, id_col, ("__nid__", "__oid__")
         )
         hist_dups = (
-            cross.join(
-                packed.select(
-                    F.col(id_col).alias("__nid__"),
-                    F.col("sh").alias("__nsh__"),
-                ),
-                "__nid__",
+            _verified(
+                cross, sets, state.select(id_col, "sh"),
+                "__nid__", "__oid__", threshold,
             )
-            .join(
-                state.select(
-                    F.col(id_col).alias("__oid__"),
-                    F.col("sh").alias("__osh__"),
-                ),
-                "__oid__",
-            )
-            .where(jac >= F.lit(float(threshold)))
             .select(F.col("__nid__").alias(id_col))
             .distinct()
         )
@@ -1572,38 +1505,12 @@ def minhash_dedup_incremental(
     else:
         fresh = df
         bn_fresh = bn
-    pairs = (
-        bn_fresh.alias("l")
-        .join(
-            bn_fresh.alias("r"),
-            on=[
-                F.col("l.band_idx") == F.col("r.band_idx"),
-                F.col("l.band_hash") == F.col("r.band_hash"),
-                F.col(f"l.{id_col}") < F.col(f"r.{id_col}"),
-            ],
-        )
-        .select(
-            F.col(f"l.{id_col}").alias("__aid__"),
-            F.col(f"r.{id_col}").alias("__bid__"),
-        )
-        .distinct()
+    pairs = _bucket_pairs(
+        bn_fresh, bn_fresh, id_col, id_col, ("__aid__", "__bid__"),
+        _ordered,
     )
     losers = (
-        pairs.join(
-            packed.select(
-                F.col(id_col).alias("__aid__"),
-                F.col("sh").alias("__nsh__"),
-            ),
-            "__aid__",
-        )
-        .join(
-            packed.select(
-                F.col(id_col).alias("__bid__"),
-                F.col("sh").alias("__osh__"),
-            ),
-            "__bid__",
-        )
-        .where(jac >= F.lit(float(threshold)))
+        _verified(pairs, sets, sets, "__aid__", "__bid__", threshold)
         .select(F.col("__bid__").alias(id_col))
         .distinct()
     )
@@ -1682,8 +1589,8 @@ def semantic_dedup_incremental(
     plans.
     """
     from pandas_weights_spark.functions.similarity import (
+        _rounded_cosine,
         assign_cells_arrow,
-        dot,
         l2_norm,
         nearest_cell,
     )
@@ -1714,14 +1621,9 @@ def semantic_dedup_incremental(
         assigned = assigned.localCheckpoint(eager=False)
 
     def cos(x: str, y: str) -> Column:
-        # the semantic_dedup verify shape, verbatim: one dot per
-        # candidate over pre-computed norms, 6-dp round-then-threshold
-        return F.round(
-            F.try_divide(
-                dot(F.col(f"{x}.v"), F.col(f"{y}.v")),
-                F.col(f"{x}.norm") * F.col(f"{y}.norm"),
-            ),
-            6,
+        return _rounded_cosine(
+            F.col(f"{x}.v"), F.col(f"{y}.v"),
+            F.col(f"{x}.norm"), F.col(f"{y}.norm"),
         )
 
     if state is not None:

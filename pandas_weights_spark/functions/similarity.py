@@ -101,6 +101,16 @@ def cosine_similarity(a: Column, b: Column) -> Column:
     return F.try_divide(dot(a, b), l2_norm(a) * l2_norm(b))
 
 
+def _rounded_cosine(a: Column, b: Column, na: Column, nb: Column) -> Column:
+    """The dedup family's pair-verify cosine: one dot per candidate
+    over the pre-computed norms ``na``/``nb`` (float-identical to
+    :func:`cosine_similarity`'s ``|a|·|b|`` order), rounded to 6 dp
+    before any threshold. Boundary decisions are therefore made on the
+    rounded value, so a SQL oracle whose reduction order differs by
+    ulps reaches the same keep/drop set."""
+    return F.round(F.try_divide(dot(a, b), na * nb), 6)
+
+
 def weighted_centroids(
     df: DataFrame, vec_col: str, weight: Column, by: Sequence[str]
 ) -> DataFrame:
@@ -769,18 +779,9 @@ def semantic_dedup(
             ],
         )
         .where(
-            # round-then-threshold (the dedup family's rule, same as
-            # embedding_near_duplicates): boundary decisions are made
-            # on the 6-dp cosine, so they are engine-portable — a SQL
-            # oracle computing the cosine with a different (but
-            # ulp-equivalent) reduction order reaches the identical
-            # keep/drop set
-            F.round(
-                F.try_divide(
-                    dot(F.col("a.__v__"), F.col("b.__v__")),
-                    F.col("a.__n__") * F.col("b.__n__"),
-                ),
-                6,
+            _rounded_cosine(
+                F.col("a.__v__"), F.col("b.__v__"),
+                F.col("a.__n__"), F.col("b.__n__"),
             )
             >= threshold
         )

@@ -1453,7 +1453,8 @@ def bigram_lm_score(
     lp, oov = unigram_logprobs(vocab, alpha)
     marg = bigrams.groupBy("w1").agg(F.sum("mass").alias("__m1__"))
     btab = bigrams.join(marg, "w1").select(
-        "w1", "w2", (F.col("mass") / F.col("__m1__")).alias("__pb__")
+        "w1", "w2",
+        F.try_divide(F.col("mass"), F.col("__m1__")).alias("__pb__"),
     )
     t = F.col(text_col)
     pairs = _gram_rows(
@@ -1627,7 +1628,7 @@ def _jm_mixture_tables(
     )
     ttab = trigrams.join(tmarg, ["w1", "w2"]).select(
         "w1", "w2", "w3",
-        (F.col("mass") / F.col("__m12__")).alias("__pt__"),
+        F.try_divide(F.col("mass"), F.col("__m12__")).alias("__pt__"),
     )
     bmarg = bigrams.groupBy("w1").agg(F.sum("mass").alias("__m1__"))
     btab = (
@@ -1635,7 +1636,7 @@ def _jm_mixture_tables(
         .select(
             F.col("w1").alias("w2"),
             F.col("w2").alias("w3"),
-            (F.col("mass") / F.col("__m1__")).alias("__pb__"),
+            F.try_divide(F.col("mass"), F.col("__m1__")).alias("__pb__"),
         )
     )
     return lp, oov, ttab, btab
@@ -3026,7 +3027,7 @@ def _mkn_num(c: Column, m: Column, d1, d2, d3) -> Column:
         .when(c == 2.0, F.lit(d2))
         .otherwise(F.lit(d3))
     )
-    return F.greatest(c - disc, F.lit(0.0)) / m
+    return F.try_divide(F.greatest(c - disc, F.lit(0.0)), m)
 
 
 def _mkn_bw_aggs(c: Column) -> "list[Column]":
@@ -3038,11 +3039,12 @@ def _mkn_bw_aggs(c: Column) -> "list[Column]":
 
 
 def _mkn_bw(m: Column, d1, d2, d3) -> Column:
-    return (
+    return F.try_divide(
         F.lit(d1) * F.col("__k1__")
         + F.lit(d2) * F.col("__k2__")
-        + F.lit(d3) * F.col("__k3__")
-    ) / m
+        + F.lit(d3) * F.col("__k3__"),
+        m,
+    )
 
 
 def _kn_score(
@@ -3100,8 +3102,10 @@ def _kn_score(
             num_expr = (
                 _mkn_num(F.col("mass"), F.col("__m__"), d1, d2, d3)
                 if mode == "mkn"
-                else F.greatest(F.col("mass") - F.lit(D), F.lit(0.0))
-                / F.col("__m__")
+                else F.try_divide(
+                    F.greatest(F.col("mass") - F.lit(D), F.lit(0.0)),
+                    F.col("__m__"),
+                )
             )
             cond = tab.join(marg, ctx).select(
                 *[
@@ -3113,7 +3117,9 @@ def _kn_score(
             bw_expr = (
                 _mkn_bw(F.col("__m__"), d1, d2, d3)
                 if mode == "mkn"
-                else F.lit(D) * F.col("__nd__") / F.col("__m__")
+                else F.try_divide(
+                    F.lit(D) * F.col("__nd__"), F.col("__m__")
+                )
             )
             bw = marg.select(
                 *[
@@ -3154,8 +3160,10 @@ def _kn_score(
                 (
                     _mkn_num(F.col("__cc__"), F.col("__cm__"), d1, d2, d3)
                     if mode == "mkn"
-                    else F.greatest(F.col("__cc__") - F.lit(D), F.lit(0.0))
-                    / F.col("__cm__")
+                    else F.try_divide(
+                        F.greatest(F.col("__cc__") - F.lit(D), F.lit(0.0)),
+                        F.col("__cm__"),
+                    )
                 ).alias(f"__num{k}__"),
             )
             bw = den.select(
@@ -3166,7 +3174,9 @@ def _kn_score(
                 (
                     _mkn_bw(F.col("__cm__"), d1, d2, d3)
                     if mode == "mkn"
-                    else F.lit(D) * F.col("__cnd__") / F.col("__cm__")
+                    else F.try_divide(
+                        F.lit(D) * F.col("__cnd__"), F.col("__cm__")
+                    )
                 ).alias(f"__bw{k}__"),
             )
             num_keys = [f"t{N - k + j + 1}" for j in range(k)]
@@ -3327,7 +3337,9 @@ def ngram_lm_score(
                 F.col(f"w{i + 1}").alias(f"t{N - k + i + 1}")
                 for i in range(k)
             ],
-            (F.col("mass") / F.col("__m__")).alias(f"__p{k}__"),
+            F.try_divide(F.col("mass"), F.col("__m__")).alias(
+                f"__p{k}__"
+            ),
         )
         joined = joined.join(
             F.broadcast(cond),

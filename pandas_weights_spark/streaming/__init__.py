@@ -1062,22 +1062,18 @@ def streaming_neardup_candidates(
         StructType,
     )
 
-    from pandas_weights_spark.functions.dedup import minhash_signature
+    from pandas_weights_spark.functions.dedup import (
+        _band_keys,
+        _rows_per_band,
+        minhash_signature,
+    )
 
     if per_bucket_capacity < 1:
         raise ValueError("per_bucket_capacity must be >= 1")
-    r = num_hashes // bands
-    if r * bands != num_hashes:
-        raise ValueError(f"bands={bands} must divide num_hashes={num_hashes}")
+    r = _rows_per_band(num_hashes, bands)
 
     sig = minhash_signature(
         F.col(text_col), num_hashes=num_hashes, shingle_size=shingle_size
-    )
-    band_arr = F.array(
-        *[
-            F.md5(F.concat_ws("|", F.slice(F.col("__sig__"), b * r + 1, r)))
-            for b in range(bands)
-        ]
     )
     keyed = (
         stream.select(
@@ -1086,7 +1082,9 @@ def streaming_neardup_candidates(
         )
         .select(
             "__id__", "__sig__",
-            F.posexplode(band_arr).alias("band_idx", "band_hash"),
+            F.posexplode(
+                _band_keys(F.col("__sig__"), bands, r, True)
+            ).alias("band_idx", "band_hash"),
         )
     )
 

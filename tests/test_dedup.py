@@ -178,6 +178,27 @@ class TestEmbeddingNearDup:
         assert pairs[(0, 1)] > 0.99
         assert not any(2 in p for p in pairs)
 
+    # the width probe skips NULL vectors: a NULL first row or an empty
+    # table used to fail with a TypeError
+    def test_null_first_vector(self, spark):
+        df = spark.createDataFrame(
+            [(1, None), (2, [1.0, 0.0]), (3, [1.0, 0.0])],
+            "vec_id long, embedding array<double>",
+        )
+        out = DD.embedding_near_duplicates(
+            df, "vec_id", "embedding", threshold=0.9, bucket_planes=2
+        ).collect()
+        assert [(r["id_a"], r["id_b"], r["cosine"]) for r in out] == [
+            (2, 3, 1.0)
+        ]
+
+    def test_empty_table_raises_clearly(self, spark):
+        df = spark.createDataFrame(
+            [], "vec_id long, embedding array<double>"
+        )
+        with pytest.raises(ValueError, match="no non-NULL"):
+            DD.embedding_near_duplicates(df, "vec_id", "embedding")
+
 
 class TestNgramJaccard:
     def test_exact_pairs(self, spark):
@@ -1283,3 +1304,156 @@ class TestMinhashDedupIncremental:
             batch, "text", "doc_id", state=st, **self.KW
         )
         assert s.count() == 0  # suppression actually ON
+
+
+class TestBandKernel:
+    """Every MinHash pipeline keys its bands with one formula
+    (``_band_keys``) and joins buckets with one join; the streaming
+    candidates, ``lsh_candidate_pairs`` over row-local signatures and
+    ``minhash_near_duplicates`` over aggregation-form signatures must
+    therefore see the same buckets."""
+
+    ROWS = [
+        (1, "the quick brown fox jumps over the lazy dog tonight again"),
+        (2, "quick brown fox jumps over the lazy dog tonight again"),
+        (3, "completely different content about spark engines here"),
+        (4, "tiny doc"),  # shorter than shingle_size: one shingle
+        (5, "the quick brown fox jumps over the lazy dog tonight again"),
+        (6, "unrelated zebra quantum lattice overture text words"),
+    ]
+
+    @pytest.fixture(scope="class")
+    def docs(self, spark):
+        return spark.createDataFrame(self.ROWS, "doc_id long, text string")
+
+    def test_one_band_formula(self, spark, docs, tmp_path):
+        from pandas_weights_spark.streaming import (
+            streaming_neardup_candidates,
+        )
+
+        sig = DD.minhash_signature(F.col("text"))
+
+        def sliced(a):
+            # the '|'-joined slice form streaming state was keyed with
+            return F.array(
+                *[
+                    F.md5(F.concat_ws("|", F.slice(a, b * 4 + 1, 4)))
+                    for b in range(4)
+                ]
+            )
+
+        # a signature column with NULL elements: concat_ws skips them
+        # in both forms
+        holey = F.when(
+            F.col("doc_id") == 3,
+            F.array(
+                *[F.lit(None).cast("string")] * 5,
+                *[F.lit(str(i)) for i in range(11)],
+            ),
+        ).otherwise(sig)
+        rows = docs.select(
+            "doc_id",
+            DD._band_keys(sig, 4, 4, True).alias("k"),
+            sliced(sig).alias("s"),
+            DD._band_keys(holey, 4, 4, True).alias("hk"),
+            sliced(holey).alias("hs"),
+        ).collect()
+        assert all(r["k"] == r["s"] and r["hk"] == r["hs"] for r in rows)
+        # aggregation-form signatures band to the same keys, the short
+        # doc's single whole-text shingle included
+        h = F.array(*[F.col(f"h{i}") for i in range(16)])
+        agg = {
+            r["doc_id"]: r["k"]
+            for r in DD.minhash_signatures_agg(docs, "text", "doc_id")
+            .select("doc_id", DD._band_keys(h, 4, 4, True).alias("k"))
+            .collect()
+        }
+        assert agg == {r["doc_id"]: r["k"] for r in rows}
+
+        lsh = {
+            (r["id_a"], r["id_b"])
+            for r in DD.lsh_candidate_pairs(
+                docs.select("doc_id", sig.alias("minhash")), "doc_id",
+                sig_len=16,
+            ).collect()
+        }
+        mnd = {
+            (r["id_a"], r["id_b"])
+            for r in DD.minhash_near_duplicates(
+                docs, "text", "doc_id", threshold=0.0
+            ).collect()
+        }
+        src = tmp_path / "src"
+        docs.coalesce(1).write.parquet(str(src))
+        stream = (
+            spark.readStream.schema("doc_id long, text string")
+            .parquet(str(src))
+        )
+        q = (
+            streaming_neardup_candidates(stream, "text", "doc_id")
+            .writeStream.format("memory")
+            .queryName("band_kernel_pin")
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(120)
+        streamed = {
+            tuple(sorted((int(r["id_new"]), int(r["id_old"]))))
+            for r in spark.sql("SELECT * FROM band_kernel_pin").collect()
+        }
+        assert (1, 5) in lsh
+        assert lsh == mnd == streamed
+
+    def test_plan_shapes(self, spark, docs):
+        # (hash exchanges, joins, aggregates) of each pipeline's
+        # physical plan, pinned at their values before the MinHash
+        # pipelines shared one kernel
+        import re
+
+        from pandas_weights_spark.plans import physical_plan
+
+        other = docs.select(
+            (F.col("doc_id") + 100).alias("pid"), F.col("text").alias("pt")
+        )
+        shapes = {
+            "neardup": DD.minhash_near_duplicates(docs, "text", "doc_id"),
+            "neardup_xxh": DD.minhash_near_duplicates(
+                docs, "text", "doc_id", portable=False
+            ),
+            "join": DD.minhash_join(
+                docs, other, "text", "pt", "doc_id", "pid"
+            ),
+            "chunk": DD.chunk_near_duplicates(
+                docs, "text", "doc_id", chunk_tokens=4, overlap=1
+            ),
+        }
+        for ck in (True, False):
+            s1, st1 = DD.minhash_dedup_incremental(
+                docs, "text", "doc_id", checkpoint=ck
+            )
+            s2, _ = DD.minhash_dedup_incremental(
+                other.toDF("doc_id", "text"), "text", "doc_id",
+                state=st1, checkpoint=ck,
+            )
+            shapes[f"incr1_ck{ck}"] = s1
+            shapes[f"incr2_ck{ck}"] = s2
+
+        def shape(df):
+            p = physical_plan(df)
+            return (
+                p.count("Exchange hashpartitioning"),
+                len(re.findall(r"\w+Join ", p)),
+                len(re.findall(r"\w*Aggregate\(", p)),
+            )
+
+        assert {k: shape(df) for k, df in shapes.items()} == {
+            "neardup": (9, 3, 6),
+            "neardup_xxh": (9, 3, 6),
+            "join": (9, 3, 6),
+            "chunk": (9, 3, 6),
+            "incr1_ckTrue": (8, 4, 4),
+            "incr2_ckTrue": (34, 16, 16),
+            "incr1_ckFalse": (14, 8, 12),
+            "incr2_ckFalse": (56, 32, 48),
+        }

@@ -1418,6 +1418,68 @@ class TestGeneralOrderNgramLM:
         )
         assert [r["doc_id"] for r in out.collect()] == [1]
 
+    @pytest.mark.parametrize("wtype", ["double", "int"])
+    def test_zero_mass_context_backs_off(self, spark, corpus, wtype):
+        # doc 2 weighs 0, so its contexts sum to zero mass in every
+        # table. Under ANSI the conditionals used to raise
+        # [DIVIDE_BY_ZERO]; such a context now backs off like an unseen
+        # one: JM scores equal those over the tables without the
+        # zero-mass rows, and KN / modified KN scores equal the legacy
+        # (non-ANSI) division's
+        from pandas_weights_spark.functions.text import (
+            bigram_lm_score,
+            ngram_counts,
+            ngram_lm_score,
+            trigram_lm_score,
+        )
+
+        w = F.when(F.col("doc_id") == 2, 0).otherwise(1).cast(wtype)
+        v = self._vocab(corpus)
+        tabs = {k: ngram_counts(corpus, "text", k, 100, weight=w)
+                for k in (2, 3)}
+        seen = {k: t.where(F.col("mass") > 0) for k, t in tabs.items()}
+        assert seen[2].count() < tabs[2].count()
+
+        def rows(df):
+            return sorted(
+                (r["doc_id"], r[1], r["logprob_mean"]) for r in df.collect()
+            )
+
+        def jm(t):
+            return [
+                rows(ngram_lm_score(
+                    corpus, "text", "doc_id", v, t, {2: 0.3, 3: 0.5}
+                )),
+                rows(bigram_lm_score(corpus, "text", "doc_id", v, t[2])),
+                rows(trigram_lm_score(
+                    corpus, "text", "doc_id", v, t[2], t[3]
+                )),
+            ]
+
+        assert jm(tabs) == jm(seen)
+
+        def kn():
+            return [
+                rows(ngram_lm_score(
+                    corpus, "text", "doc_id", v, tabs, None,
+                    smoothing="kn",
+                )),
+                rows(ngram_lm_score(
+                    corpus, "text", "doc_id", v, tabs, None,
+                    smoothing="mkn",
+                    discounts={2: (0.5, 1.0, 1.5), 3: (0.5, 1.0, 1.5)},
+                )),
+            ]
+
+        got = kn()
+        spark.conf.set("spark.sql.ansi.enabled", "false")
+        try:
+            legacy = kn()
+        finally:
+            spark.conf.unset("spark.sql.ansi.enabled")
+        assert got == legacy
+        assert 2 in {r[0] for r in got[0]}
+
     def test_guards(self, spark, corpus):
         from pandas_weights_spark.functions.text import (
             ngram_counts,
