@@ -1,23 +1,39 @@
-"""The weighted-moment algebra: one builder, one assembler.
+"""The weighted-moment algebra as SQL text: one builder, one assembler.
 
 This is the numerical heart of the engine — the PySpark analog of the
 reference's ``pandas_weights/_stats.py`` (lines 14-73). Every moment
 statistic and every corr/cov — global, grouped, salted, resampled,
 rolled up, windowed, streaming — is made of two pieces:
 
-* :func:`moment_sums` builds the *mergeable* moment sums of a column
-  (``W`` = masked weight sum, ``n`` = valid pair count, ``s1``..``s4``
-  = ``Σ w·xᵏ``) or of a column pair (the seven Pearson sums
-  ``n, w, wx, wy, wxy, wxx, wyy`` under the joint validity mask), as
-  aggregate expressions or over a given ``WindowSpec``. Sums are
+* :func:`moment_sums` names the *mergeable* moment sums a statistic
+  reads, and only those (``W`` = masked weight sum, ``n`` = valid pair
+  count, ``s1``..``s4`` = ``Σ w·xᵏ``; for a column pair the Pearson sums
+  ``n, w, wx, wy, wxy, wxx, wyy`` under the joint validity mask), each
+  as an aggregate or as a window over a given frame. Sums are
   associative, so salting, time rollups and windows merge them exactly.
-* :func:`assemble` turns those sums — or columns already holding them,
-  e.g. a previous stage's merged sums — into ``count/sum/mean/var/std/
-  sem/skew/kurt`` or ``corr/cov``.
+* :func:`assemble` renders ``count/sum/mean/var/std/sem/skew/kurt`` or
+  ``corr/cov`` over those named sums — the sums' own text, or the names
+  of columns already holding them (a previous stage's merged sums).
 
-Everything stays a lazy Column expression, so Catalyst compiles each
-statistic into one partial+final aggregate pass (one shuffle per
-grouping) with whole-stage codegen — no Python in the hot path.
+Both emit SQL text, not Columns: a caller hands every statistic of a
+call to Spark in one ``selectExpr`` / ``agg(F.expr(...))``, so building
+a plan costs a handful of JVM round trips instead of thousands of
+Column-API calls. Spark parses the text into the same expression trees
+the Column API builds, so the optimized plan is unchanged and Catalyst
+still compiles each statistic into one partial+final aggregate pass
+(one shuffle per grouping) with whole-stage codegen — no Python in the
+hot path.
+
+Text rules — each keeps the parsed tree equal to the Column form:
+
+* user column names are backquoted, a backtick inside a name doubled
+  (:func:`q`), so any name — spaces, dots, a leading digit, a name equal
+  to an internal sum — is one literal column;
+* doubles are written ``1.0D`` (a bare ``1.0`` parses as DECIMAL), a
+  double NULL ``CAST(NULL AS DOUBLE)``, infinity ``double('inf')``
+  (:func:`num`); other Python values through :func:`lit`;
+* every sub-expression is parenthesized where it is used, so operator
+  precedence never regroups a product or a sum.
 
 Semantics reproduced from the reference:
 
@@ -40,22 +56,32 @@ Semantics reproduced from the reference:
 Products keep one IEEE multiplication order everywhere (``x*w``,
 ``(x*x)*w``, ``((x*x)*x)*w``, ``(wv*x)*y``) — the SQL oracles replay it,
 so results are bit-identical. Divide-by-zero is expressed with
-``F.try_divide`` so the kernels behave identically under ANSI and
-legacy SQL modes (Spark 4 defaults ANSI on).
+``try_divide`` so the kernels behave identically under ANSI and legacy
+SQL modes (Spark 4 defaults ANSI on).
 """
 
 from __future__ import annotations
 
-from typing import Mapping, Optional
+import datetime as dt
+import decimal
+import math
+from typing import Mapping, Optional, Union
 
-from pyspark.sql import Column, WindowSpec
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 __all__ = [
     "MOMENT_STATS",
+    "q",
+    "num",
+    "lit",
+    "sql",
+    "aggregate",
     "moment_sums",
     "sums_read",
     "assemble",
+    "stat_sql",
+    "KERNELS",
     "w_stat",
     "w_count",
     "w_std",
@@ -63,61 +89,162 @@ __all__ = [
     "variance_from_weighted_moments",
 ]
 
-_INF = float("inf")
-
 #: statistics :func:`assemble` builds from the univariate sums
 MOMENT_STATS = ("count", "sum", "mean", "var", "std", "sem", "skew", "kurt")
 
+_UNIVARIATE = ("W", "n", "s1", "s2", "s3", "s4")
+_PAIR = ("n", "w", "wx", "wy", "wxy", "wxx", "wyy")
+
+
+# -- text primitives ----------------------------------------------------------
+
+
+def q(name: str) -> str:
+    """``name`` as one backquoted SQL identifier (a backtick doubled)."""
+    return "`" + name.replace("`", "``") + "`"
+
+
+def num(v: Optional[float]) -> str:
+    """A DOUBLE literal: ``1.0D``, ``double('inf')``, ``double('NaN')``
+    or ``CAST(NULL AS DOUBLE)``."""
+    if v is None:
+        return "CAST(NULL AS DOUBLE)"
+    v = float(v)
+    if math.isnan(v):
+        return "double('NaN')"
+    if math.isinf(v):
+        return "double('inf')" if v > 0 else "double('-inf')"
+    return f"{v!r}D"
+
+
+def lit(v) -> str:
+    """``v`` as the SQL literal ``F.lit(v)`` builds: ``NULL``, a boolean,
+    an INT/BIGINT, a DOUBLE, an escaped string, a DECIMAL, a DATE, a
+    TIMESTAMP (the instant PySpark's own converter gives a naive
+    datetime) or binary; a numpy scalar keeps its width (``3L`` for an
+    int64)."""
+    if type(v).__module__ == "numpy":  # a numpy scalar keeps its width
+        kind, size = v.dtype.kind, v.dtype.itemsize
+        if kind == "i":
+            return f"{int(v)}{ {8: 'L', 4: '', 2: 'S', 1: 'Y'}[size]}"
+        if kind == "f" and size == 4:
+            return f"CAST({num(float(v))} AS FLOAT)"
+        v = v.item()
+    if v is None:
+        return "NULL"
+    if isinstance(v, bool):
+        return "true" if v else "false"
+    if isinstance(v, int):
+        return str(v)
+    if isinstance(v, float):
+        return num(v)
+    if isinstance(v, str):
+        return "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+    if isinstance(v, decimal.Decimal):
+        return f"{v}BD"
+    if isinstance(v, dt.datetime):
+        from pyspark.sql.types import TimestampType
+
+        return f"timestamp_micros({TimestampType().toInternal(v)})"
+    if isinstance(v, dt.date):
+        return f"DATE '{v.isoformat()}'"
+    if isinstance(v, (bytes, bytearray)):
+        return f"X'{bytes(v).hex()}'"
+    raise TypeError(f"no SQL literal for {type(v).__name__} value {v!r}")
+
+
+def sql(c: Union[str, Column]) -> str:
+    """The SQL text of ``c``: text passes through; a Column made by
+    ``F.expr`` gives back its text, ``F.col(name)`` its quoted name, a
+    sort order its key and direction. Any other Column raises — it has
+    no faithful text form."""
+    if isinstance(c, str):
+        return c
+    return _node_sql(c._jc.node(), c)
+
+
+def _node_sql(node, c: Column) -> str:
+    kind = node.getClass().getSimpleName()
+    if kind == "SqlExpression":
+        return f"({node.expression()})"
+    if kind == "UnresolvedAttribute":
+        parts = node.nameParts()
+        return ".".join(q(parts.apply(i)) for i in range(parts.size()))
+    if kind == "SortOrder":
+        desc = "Desc" in node.sortDirection().getClass().getSimpleName()
+        last = "Last" in node.nullOrdering().getClass().getSimpleName()
+        return (
+            f"{_node_sql(node.child(), c)} {'DESC' if desc else 'ASC'} "
+            f"NULLS {'LAST' if last else 'FIRST'}"
+        )
+    raise TypeError(
+        f"cannot render {c} as SQL text; pass a column name, SQL text, "
+        "or a Column from F.col / F.expr"
+    )
+
+
+def aggregate(df: DataFrame, exprs, keys=()) -> DataFrame:
+    """The aliased aggregate SQL ``exprs`` per group of the ``keys``
+    columns, or as one row without keys (one ``selectExpr``)."""
+    if not keys:
+        return df.selectExpr(*exprs)
+    return df.groupBy(*[F.col(q(k)) for k in keys]).agg(*[F.expr(e) for e in exprs])
+
+
+# -- the algebra ----------------------------------------------------------------
+
 
 def moment_sums(
-    x: Column,
-    w: Column,
+    x: str,
+    w: str,
     *,
-    y: Optional[Column] = None,
+    y: Optional[str] = None,
     skipna: bool = True,
-    over: Optional[WindowSpec] = None,
-) -> dict[str, Column]:
+    over: Optional[str] = None,
+    names=None,
+) -> dict[str, str]:
     """The mergeable weighted moment sums of ``x`` (or of the pair
-    ``x, y``), as aggregate expressions — or window expressions over
-    ``over``.
+    ``x, y``) named in ``names`` (default: all), as aggregate SQL — or
+    window SQL over the frame text ``over`` (``PARTITION BY … ORDER BY
+    … ROWS …``). ``x``, ``y`` and ``w`` are SQL text.
 
-    Univariate keys: ``W`` = ``Σ w·1[x IS NOT NULL]`` (``Σ w`` with
+    Univariate names: ``W`` = ``Σ w·1[x IS NOT NULL]`` (``Σ w`` with
     ``skipna=False``), ``n`` = count of valid ``x·w``, and ``s1``..``s4``
     = ``Σ w·xᵏ`` with the power left-associated (``((x*x)*x)*w``).
 
-    Pair keys (``y`` given): ``n, w, wx, wy, wxy, wxx, wyy``, all under
+    Pair names (``y`` given): ``n, w, wx, wy, wxy, wxx, wyy``, all under
     the joint mask ``x, y, w NOT NULL`` (_stats.py:44), so every pair is
     "pairwise complete" exactly like the reference.
 
-    Every sum is NULL when no row is valid. The dict is lazy — only the
-    sums a statistic references enter the plan.
+    Every sum is NULL when no row is valid.
     """
     if y is not None:
-        wv = F.when(x.isNotNull() & y.isNotNull() & w.isNotNull(), w)
-        sums = {
-            "n": F.count(wv),
-            "w": F.sum(wv),
-            "wx": F.sum(wv * x),
-            "wy": F.sum(wv * y),
-            "wxy": F.sum(wv * x * y),
-            "wxx": F.sum(wv * x * x),
-            "wyy": F.sum(wv * y * y),
+        wv = (
+            f"CASE WHEN ((({x}) IS NOT NULL AND ({y}) IS NOT NULL) "
+            f"AND ({w}) IS NOT NULL) THEN ({w}) END"
+        )
+        body = {
+            "n": f"count({wv})",
+            "w": f"sum({wv})",
+            "wx": f"sum((({wv}) * ({x})))",
+            "wy": f"sum((({wv}) * ({y})))",
+            "wxy": f"sum(((({wv}) * ({x})) * ({y})))",
+            "wxx": f"sum(((({wv}) * ({x})) * ({x})))",
+            "wyy": f"sum(((({wv}) * ({y})) * ({y})))",
         }
     else:
-        sums = {
-            "W": F.sum(F.when(x.isNotNull(), w) if skipna else w),
-            "n": F.count(x * w),
-        }
-        p = x
+        mask = f"CASE WHEN ({x}) IS NOT NULL THEN ({w}) END" if skipna else w
+        power = f"({x})"
+        body = {"W": f"sum({mask})", "n": f"count((({x}) * ({w})))"}
         for k in range(1, 5):
-            sums[f"s{k}"] = F.sum(p * w)
-            p = p * x
-    if over is not None:
-        sums = {k: v.over(over) for k, v in sums.items()}
-    return sums
+            body[f"s{k}"] = f"sum(({power} * ({w})))"
+            power = f"({power} * ({x}))"
+    keys = body if names is None else names
+    window = "" if over is None else f" OVER ({over})"
+    return {k: f"({body[k]}{window})" for k in keys}
 
 
-#: the univariate sums each statistic reads in :func:`assemble`
+#: the sums each statistic reads in :func:`assemble`
 _READS = {
     "count": ("W",),
     "sum": ("s1",),
@@ -127,37 +254,48 @@ _READS = {
     "sem": ("W", "s1", "s2"),
     "skew": ("W", "s1", "s2", "s3"),
     "kurt": ("W", "s1", "s2", "s3", "s4"),
+    "cov": ("n", "w", "wx", "wy", "wxy"),
+    "corr": _PAIR,
 }
 
 
 def sums_read(stats, *, min_count: int = 0) -> list[str]:
-    """The univariate sums :func:`assemble` reads for ``stats`` — the
-    state a merge stage (salting, rollup) must carry. ``n`` joins only
-    when a ``sum`` is gated by ``min_count``."""
+    """The sums :func:`assemble` reads for ``stats`` — the state a merge
+    stage (salting, rollup) must carry. ``n`` joins only when a ``sum``
+    is gated by ``min_count``."""
     keys = {k for s in stats for k in _READS[s]}
     if min_count > 0 and "sum" in stats:
         keys.add("n")
-    return [k for k in ("W", "n", "s1", "s2", "s3", "s4") if k in keys]
+    order = _PAIR if {"corr", "cov"} & set(stats) else _UNIVARIATE
+    return [k for k in order if k in keys]
 
 
-def variance_from_weighted_moments(
-    ws: Column, wss: Column, wc: Column, *, ddof: int = 1
-) -> Column:
+def _comoment(a: str, b: str, ab: str, w: str, ddof: int) -> str:
+    """``(Σab − Σa·Σb/W) / (W − ddof)``: the variance (``a = b``) or
+    covariance form of the moment sums."""
+    return (
+        f"try_divide((({ab}) - try_divide((({a}) * ({b})), ({w}))), "
+        f"(({w}) - {num(ddof)}))"
+    )
+
+
+def variance_from_weighted_moments(ws: str, wss: str, wc: str, *, ddof: int = 1) -> str:
     """``(Σwx² − (Σwx)²/W) / (W − ddof)`` (_stats.py:24-33)."""
-    return F.try_divide(wss - F.try_divide(ws * ws, wc), wc - F.lit(float(ddof)))
+    return _comoment(ws, ws, wss, wc, ddof)
 
 
 def assemble(
     stat: str,
-    m: Mapping[str, Column],
+    m: Mapping[str, str],
     *,
     ddof: int = 1,
     min_count: int = 0,
     min_periods: int = 1,
-) -> Column:
-    """Build one statistic from moment sums ``m`` — the dict
-    :func:`moment_sums` returns, or Columns holding those sums after a
-    merge stage (any NULL-for-empty sum merges by plain ``F.sum``).
+) -> str:
+    """Render one statistic over the moment sums ``m`` — the dict
+    :func:`moment_sums` returns, or the quoted names of columns holding
+    those sums after a merge stage (any NULL-for-empty sum merges by
+    plain ``sum``).
 
     * ``count`` = ``W`` (0.0 when empty); ``sum`` = ``s1`` with pandas
       ``min_count`` gated on ``n``; ``mean`` = ``s1 / W``.
@@ -174,128 +312,156 @@ def assemble(
     """
     if stat in ("corr", "cov"):
         n, w = m["n"], m["w"]
-        denom = w - F.lit(float(ddof))
-        cov = F.try_divide(m["wxy"] - F.try_divide(m["wx"] * m["wy"], w), denom)
+        cov = _comoment(m["wx"], m["wy"], m["wxy"], w, ddof)
         ok = (
-            (n >= F.lit(min_periods))
-            & w.isNotNull()
-            & ~F.isnan(w)
-            & (F.abs(w) != F.lit(_INF))
-            & (w > F.lit(float(ddof)))
+            f"((((({n}) >= {min_periods}) AND (({w}) IS NOT NULL)) "
+            f"AND (NOT isnan({w}))) AND (abs({w}) != {num(math.inf)})) "
+            f"AND (({w}) > {num(ddof)})"
         )
         if stat == "cov":
-            return F.when(ok, cov)
-        var_x = F.try_divide(m["wxx"] - F.try_divide(m["wx"] * m["wx"], w), denom)
-        var_y = F.try_divide(m["wyy"] - F.try_divide(m["wy"] * m["wy"], w), denom)
-        return F.when(
-            ok & (var_x > 0) & (var_y > 0),
-            F.try_divide(cov, F.sqrt(var_x * var_y)),
+            return f"CASE WHEN {ok} THEN {cov} END"
+        var_x = _comoment(m["wx"], m["wx"], m["wxx"], w, ddof)
+        var_y = _comoment(m["wy"], m["wy"], m["wyy"], w, ddof)
+        return (
+            f"CASE WHEN ((({ok}) AND ({var_x} > 0)) AND ({var_y} > 0)) "
+            f"THEN try_divide({cov}, sqrt(({var_x} * {var_y}))) END"
         )
     if stat not in MOMENT_STATS:
         raise ValueError(f"unknown moment statistic {stat!r}")
     if stat == "count":
-        return F.coalesce(m["W"], F.lit(0.0))
+        return f"coalesce({m['W']}, {num(0.0)})"
     s1 = m["s1"]
     if stat == "sum":
-        total = F.coalesce(s1, F.lit(0.0))
+        total = f"coalesce({s1}, {num(0.0)})"
         if min_count > 0:
-            return F.when(m["n"] >= F.lit(min_count), total)
+            return f"CASE WHEN (({m['n']}) >= {min_count}) THEN {total} END"
         return total
     W = m["W"]
     if stat == "mean":
-        return F.try_divide(s1, W)
+        return f"try_divide({s1}, {W})"
     if stat in ("var", "std", "sem"):
         v = variance_from_weighted_moments(s1, m["s2"], W, ddof=ddof)
         if stat == "var":
             return v
-        sd = F.when(v >= 0, F.sqrt(v))
+        sd = f"CASE WHEN ({v} >= 0) THEN sqrt({v}) END"
         if stat == "std":
             return sd
-        return F.when(W > 0, F.try_divide(sd, F.sqrt(W)))
-    mu = F.try_divide(s1, W)
-    s2w = F.try_divide(m["s2"], W)
-    m2 = s2w - mu * mu
-    s3w = F.try_divide(m["s3"], W)
-    ok = (W > 0) & (m2 > 0)
+        return f"CASE WHEN (({W}) > 0) THEN try_divide(({sd}), sqrt({W})) END"
+    mu = f"try_divide({s1}, {W})"
+    s2w = f"try_divide({m['s2']}, {W})"
+    m2 = f"({s2w} - ({mu} * {mu}))"
+    s3w = f"try_divide({m['s3']}, {W})"
+    ok = f"((({W}) > 0) AND ({m2} > 0))"
     if stat == "skew":
-        m3 = s3w - F.lit(3.0) * mu * s2w + F.lit(2.0) * mu * mu * mu
-        return F.when(ok, F.try_divide(m3, m2 * F.sqrt(m2)))
-    s4w = F.try_divide(m["s4"], W)
+        m3 = (
+            f"(({s3w} - (({num(3.0)} * {mu}) * {s2w})) "
+            f"+ ((({num(2.0)} * {mu}) * {mu}) * {mu}))"
+        )
+        return f"CASE WHEN {ok} THEN try_divide({m3}, ({m2} * sqrt({m2}))) END"
+    s4w = f"try_divide({m['s4']}, {W})"
     m4 = (
-        s4w
-        - F.lit(4.0) * mu * s3w
-        + F.lit(6.0) * mu * mu * s2w
-        - F.lit(3.0) * mu * mu * mu * mu
+        f"((({s4w} - (({num(4.0)} * {mu}) * {s3w})) "
+        f"+ ((({num(6.0)} * {mu}) * {mu}) * {s2w})) "
+        f"- (((({num(3.0)} * {mu}) * {mu}) * {mu}) * {mu}))"
     )
-    return F.when(ok, F.try_divide(m4, m2 * m2) - F.lit(3.0))
+    return (
+        f"CASE WHEN {ok} THEN "
+        f"(try_divide({m4}, ({m2} * {m2})) - {num(3.0)}) END"
+    )
+
+
+def stat_sql(
+    stat: str, x: str, w: str, *, skipna: bool = True, ddof: int = 1, min_count: int = 0
+) -> str:
+    """One aggregate statistic of ``x`` as SQL text: a mass-rule kernel
+    (:data:`KERNELS`) or :func:`assemble` over the sums it reads."""
+    if stat in KERNELS:
+        return KERNELS[stat](x, w)
+    m = moment_sums(x, w, skipna=skipna, names=sums_read((stat,), min_count=min_count))
+    return assemble(stat, m, ddof=ddof, min_count=min_count)
 
 
 def w_stat(
     stat: str,
-    x: Column,
-    w: Column,
+    x: Union[str, Column],
+    w: Union[str, Column],
     *,
     skipna: bool = True,
     ddof: int = 1,
     min_count: int = 0,
 ) -> Column:
-    """One aggregate moment statistic of ``x``: :func:`assemble` over
-    :func:`moment_sums`. ``skipna=False`` counts every row's weight in
+    """One aggregate moment statistic of ``x`` as a Column: :func:`assemble`
+    over :func:`moment_sums`. ``x`` and ``w`` are SQL text or Columns
+    :func:`sql` can render. ``skipna=False`` counts every row's weight in
     ``W``; ``ddof`` applies to var/std/sem, ``min_count`` to sum."""
-    return assemble(
-        stat, moment_sums(x, w, skipna=skipna), ddof=ddof, min_count=min_count
+    return F.expr(
+        stat_sql(stat, sql(x), sql(w), skipna=skipna, ddof=ddof, min_count=min_count)
     )
 
 
-def w_count(x: Column, w: Column, *, skipna: bool = True) -> Column:
+def w_count(x: Union[str, Column], w: Union[str, Column], *, skipna: bool = True) -> Column:
     """Weighted count ``Σ w · 1[x IS NOT NULL]`` (frame.py:189-213)."""
     return w_stat("count", x, w, skipna=skipna)
 
 
-def w_std(x: Column, w: Column, *, ddof: int = 1, skipna: bool = True) -> Column:
+def w_std(
+    x: Union[str, Column], w: Union[str, Column], *, ddof: int = 1, skipna: bool = True
+) -> Column:
     """Weighted standard deviation = ``sqrt(var)`` (frame.py:243-251)."""
     return w_stat("std", x, w, ddof=ddof, skipna=skipna)
 
 
-def w_sem(x: Column, w: Column, *, ddof: int = 1, skipna: bool = True) -> Column:
+def w_sem(
+    x: Union[str, Column], w: Union[str, Column], *, ddof: int = 1, skipna: bool = True
+) -> Column:
     """Weighted standard error of the mean ``std / sqrt(W)`` (the
     ``DataFrame.sem`` analog; unit weights reproduce pandas)."""
     return w_stat("sem", x, w, ddof=ddof, skipna=skipna)
 
 
-def w_min(x: Column, w: Column) -> Column:
+# -- the mass-rule kernels (SQL text over x, w) ---------------------------------
+
+
+def w_min(x: str, w: str) -> str:
     """Minimum observed value carrying probability mass: rows with NULL
     ``x`` or NULL/non-positive weight are excluded — the same mass rule
     as the weighted-quantile family (quantile.py), of which min is the
     q→0⁺ limit. Extension beyond the reference (used by describe())."""
-    return F.min(F.when(w.isNotNull() & (w > 0), x))
+    return f"min(CASE WHEN ((({w}) IS NOT NULL) AND (({w}) > 0)) THEN ({x}) END)"
 
 
-def w_max(x: Column, w: Column) -> Column:
+def w_max(x: str, w: str) -> str:
     """Maximum observed value carrying probability mass (the q=1
     weighted quantile); same mass rule as :func:`w_min`."""
-    return F.max(F.when(w.isNotNull() & (w > 0), x))
+    return f"max(CASE WHEN ((({w}) IS NOT NULL) AND (({w}) > 0)) THEN ({x}) END)"
 
 
-def w_gmean(x: Column, w: Column) -> Column:
+def _positive_mass(x: str, w: str) -> str:
+    return (
+        f"CASE WHEN (((({x}) IS NOT NULL AND ({w}) IS NOT NULL) "
+        f"AND (({x}) > 0)) AND (({w}) > 0)) THEN ({w}) END"
+    )
+
+
+def w_gmean(x: str, w: str) -> str:
     """Weighted geometric mean ``exp(Σ w·ln x / Σ w)`` over rows with
     positive value AND positive weight (the only domain where the
     geometric mean is defined; scipy ``gmean`` analog under frequency
     weights — unit weights reproduce it exactly). NULL when no mass
     qualifies."""
-    ok = x.isNotNull() & w.isNotNull() & (x > 0) & (w > 0)
-    m = F.when(ok, w)
-    W = F.coalesce(F.sum(m), F.lit(0.0))
-    s = F.sum(m * F.log(x))
-    return F.when(W > 0, F.exp(F.try_divide(s, W)))
+    m = _positive_mass(x, w)
+    W = f"coalesce(sum({m}), {num(0.0)})"
+    return f"CASE WHEN ({W} > 0) THEN exp(try_divide(sum((({m}) * ln({x}))), {W})) END"
 
 
-def w_hmean(x: Column, w: Column) -> Column:
+def w_hmean(x: str, w: str) -> str:
     """Weighted harmonic mean ``Σw / Σ(w/x)`` over rows with positive
     value and weight (rates/speeds aggregation; scipy ``hmean`` analog
     under frequency weights). NULL when no mass qualifies."""
-    ok = x.isNotNull() & w.isNotNull() & (x > 0) & (w > 0)
-    m = F.when(ok, w)
-    W = F.coalesce(F.sum(m), F.lit(0.0))
-    s = F.sum(m / x)
-    return F.when(W > 0, F.try_divide(W, s))
+    m = _positive_mass(x, w)
+    W = f"coalesce(sum({m}), {num(0.0)})"
+    return f"CASE WHEN ({W} > 0) THEN try_divide({W}, sum((({m}) / ({x})))) END"
+
+
+#: non-moment statistic name → SQL text builder ``(x, w)``
+KERNELS = {"min": w_min, "max": w_max, "gmean": w_gmean, "hmean": w_hmean}

@@ -32,7 +32,15 @@ from typing import TYPE_CHECKING, Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from pandas_weights_spark._stats import assemble, moment_sums
+from pandas_weights_spark._stats import (
+    aggregate,
+    assemble,
+    lit,
+    moment_sums,
+    q,
+    sums_read,
+)
+from pandas_weights_spark.frame import WEIGHT_COL
 from pandas_weights_spark.quantile import _band
 
 if TYPE_CHECKING:
@@ -92,36 +100,34 @@ def pair_matrix(
     if not cols:
         raise ValueError("no numeric columns to correlate")
     df = wdf.df
-    if dropna:
-        for k in keys:
-            df = df.where(F.col(k).isNotNull())
-    w = wdf.weights
-    cells = {}
-    for i, cx in enumerate(cols):
+    if dropna and keys:
+        df = df.where(" AND ".join(f"{q(k)} IS NOT NULL" for k in keys))
+    w = q(WEIGHT_COL)
+    names = sums_read(stats)
+    vals = [wdf._value_sql(c) for c in cols]
+    # stage 1 aggregates each pair's sums under a name; stage 2 renders
+    # every cell over those names — the cell text stays small, where
+    # inlining the sums would repeat each one a dozen times per cell
+    sums, cells = [], {}
+    for i in range(len(cols)):
         for j in range(i, len(cols)):
-            m = moment_sums(wdf._value(cx), w, y=wdf._value(cols[j]))
-            cells[i, j] = [
-                assemble(s, m, ddof=ddof, min_periods=min_periods).alias(s)
+            m = moment_sums(vals[i], w, y=vals[j], names=names)
+            named = {k: f"__pw_{i}_{j}_{k}__" for k in names}
+            sums += [f"{m[k]} AS {named[k]}" for k in names]
+            cells[i, j] = ", ".join(
+                f"{assemble(s, named, ddof=ddof, min_periods=min_periods)} AS {s}"
                 for s in stats
-            ]
-    pairs = F.array(
-        *[
-            F.struct(
-                F.lit(cx).alias("col_x"),
-                F.lit(cy).alias("col_y"),
-                *cells[min(i, j), max(i, j)],
             )
-            for i, cx in enumerate(cols)
-            for j, cy in enumerate(cols)
-        ]
+    pairs = ", ".join(
+        f"struct({lit(cx)} AS col_x, {lit(cy)} AS col_y, {cells[min(i, j), max(i, j)]})"
+        for i, cx in enumerate(cols)
+        for j, cy in enumerate(cols)
     )
-    out = (
-        df.groupBy(*[F.col(k) for k in keys])
-        .agg(pairs.alias("__pairs__"))
-        .select(*keys, F.inline("__pairs__"))
+    out = aggregate(df, sums, keys).selectExpr(
+        *[q(k) for k in keys], f"inline(array({pairs}))"
     )
     if sort:
-        out = out.orderBy(*keys, "col_x", "col_y")
+        out = out.orderBy(*[F.col(q(k)) for k in keys], "col_x", "col_y")
     return out
 
 
@@ -142,9 +148,14 @@ def corr_pair(
     Output: one row ``(corr)``.
     """
     _check_method(method)
-    m = moment_sums(wdf._value(x_col), wdf.weights, y=wdf._value(y_col))
-    return wdf.df.agg(
-        assemble("corr", m, ddof=ddof, min_periods=min_periods).alias("corr")
+    m = moment_sums(
+        wdf._value_sql(x_col),
+        q(WEIGHT_COL),
+        y=wdf._value_sql(y_col),
+        names=sums_read(("corr",)),
+    )
+    return wdf.df.selectExpr(
+        f"{assemble('corr', m, ddof=ddof, min_periods=min_periods)} AS corr"
     )
 
 
@@ -170,8 +181,6 @@ def _aligned(
     At scale: if ``other`` is small it is broadcast automatically by AQE;
     a skewed ``on`` key benefits from AQE skew handling.
     """
-    from pandas_weights_spark.frame import WEIGHT_COL
-
     min_periods = 1 if min_periods is None else min_periods
     on_cols = [on] if isinstance(on, str) else list(on)
     by = list(by) if by else []
@@ -183,12 +192,16 @@ def _aligned(
     joined = left_sel.join(right_sel, on=on_cols, how="inner")
 
     m = moment_sums(
-        F.col("__pw_x__").cast("double"),
-        F.col(WEIGHT_COL),
-        y=F.col("__pw_other__").cast("double"),
+        "CAST(__pw_x__ AS DOUBLE)",
+        q(WEIGHT_COL),
+        y="CAST(__pw_other__ AS DOUBLE)",
+        names=sums_read(stats),
     )
     out = joined.groupBy(*by).agg(
-        *[assemble(s, m, ddof=ddof, min_periods=min_periods).alias(s) for s in stats]
+        *[
+            F.expr(f"{assemble(s, m, ddof=ddof, min_periods=min_periods)} AS {s}")
+            for s in stats
+        ]
     )
     return out.orderBy(*by) if by else out
 
@@ -348,7 +361,6 @@ def spearman_corr(
     (keys, bandx, bandy) count would materialize up to keys·bands²
     groups (a shuffle as fat as the data) only to be re-marginalized.
     """
-    from pandas_weights_spark.frame import WEIGHT_COL
     from pandas_weights_spark.groupby import _join_group_stats
 
     bands = 256
@@ -433,9 +445,9 @@ def spearman_corr(
         _rank("__x__", "__bandx__", "__off__bandx__", kc).alias("__rx__"),
         _rank("__y__", "__bandy__", "__off__bandy__", kc).alias("__ry__"),
     )
-    m = moment_sums(F.col("__rx__"), F.col(WEIGHT_COL), y=F.col("__ry__"))
+    m = moment_sums("__rx__", q(WEIGHT_COL), y="__ry__", names=sums_read(("corr",)))
     return j.groupBy(*kc).agg(
-        assemble("corr", m, ddof=ddof, min_periods=min_periods).alias("corr")
+        F.expr(f"{assemble('corr', m, ddof=ddof, min_periods=min_periods)} AS corr")
     )
 
 
@@ -476,7 +488,7 @@ def spearman_matrix(
     band-assignment-invariant either way; only load balance varies).
     Columns absent from the mapping still probe.
     """
-    from pandas_weights_spark.frame import WEIGHT_COL, WeightedDataFrame
+    from pandas_weights_spark.frame import WeightedDataFrame
 
     cols = list(subset) if subset is not None else wdf.numeric_columns()
     if not cols:
@@ -618,8 +630,6 @@ def weighted_autocorr(
     long (lag, corr) shape unpivots from that single row — two
     exchanges total, independent of the number of lags.
     """
-    from pandas_weights_spark.frame import WEIGHT_COL
-
     lags = [int(k) for k in lags]
     if not lags or any(k < 1 for k in lags):
         raise ValueError(f"lags must be positive ints, got {lags!r}")
@@ -638,32 +648,27 @@ def weighted_autocorr(
             stacklevel=2,
         )
     x = wdf._value(col)
-    w = F.col(WEIGHT_COL)
     spec = Window.partitionBy(*[F.col(k) for k in keys]).orderBy(
         *[F.col(c) for c in order_by]
     )
     lagged = wdf.df.select(
         *keys,
         x.alias("__x__"),
-        w.alias(WEIGHT_COL),
+        F.col(WEIGHT_COL),
         *[F.lag(x, k).over(spec).alias(f"__xl_{k}__") for k in lags],
     )
-    rows = [
-        F.struct(
-            F.lit(k).alias("lag"),
-            assemble(
-                "corr",
-                moment_sums(
-                    F.col("__x__"), F.col(WEIGHT_COL), y=F.col(f"__xl_{k}__")
-                ),
-                ddof=ddof,
-                min_periods=min_periods,
-            ).alias("corr"),
-        )
+    w = q(WEIGHT_COL)
+    rows = ", ".join(
+        f"struct({k} AS lag, " + assemble(
+            "corr",
+            moment_sums("__x__", w, y=q(f"__xl_{k}__"), names=sums_read(("corr",))),
+            ddof=ddof,
+            min_periods=min_periods,
+        ) + " AS corr)"
         for k in lags
-    ]
+    )
     return (
         lagged.groupBy(*[F.col(k) for k in keys])
-        .agg(F.array(*rows).alias("__lags__"))
-        .select(*keys, F.inline("__lags__"))
+        .agg(F.expr(f"array({rows}) AS __lags__"))
+        .selectExpr(*[q(k) for k in keys], "inline(__lags__)")
     )

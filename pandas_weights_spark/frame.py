@@ -174,22 +174,36 @@ class WeightedDataFrame:
         by_name = {f.name: f for f in self._df.schema.fields}
         return [c for c in self._data_cols if _is_numeric(by_name[c])]
 
-    def _value(self, name: str) -> Column:
-        """A data column normalized for weighted math: cast to double,
-        NaN→NULL for float inputs (pandas treats NaN as missing; Spark
-        aggregates skip only NULL)."""
+    def _value_sql(self, name: str) -> str:
+        """SQL text of a data column normalized for weighted math: cast
+        to double, NaN→NULL for float inputs (pandas treats NaN as
+        missing; Spark aggregates skip only NULL)."""
         field = next(f for f in self._df.schema.fields if f.name == name)
-        col = F.col(name).cast("double")
+        col = f"CAST({_stats.q(name)} AS DOUBLE)"
         if self._nan_as_null and _is_float(field):
-            col = F.nanvl(col, F.lit(None).cast("double"))
+            col = f"nanvl({col}, {_stats.num(None)})"
         return col
 
-    def _agg_1row(self, builder, subset: Optional[Sequence[str]]) -> DataFrame:
+    def _value(self, name: str) -> Column:
+        """:meth:`_value_sql` as a Column."""
+        return F.expr(self._value_sql(name))
+
+    def _agg_1row(
+        self, stat: str, subset: Optional[Sequence[str]], **kwargs
+    ) -> DataFrame:
+        """One row: the aggregate ``stat`` (:func:`_stats.stat_sql`,
+        ``kwargs`` its skipna/ddof/min_count) of every column."""
         cols = list(subset) if subset is not None else self.numeric_columns()
         if not cols:
             raise ValueError("no numeric columns to aggregate")
-        w = self.weights
-        return self._df.agg(*[builder(self._value(c), w).alias(c) for c in cols])
+        w = _stats.q(WEIGHT_COL)
+        return self._df.selectExpr(
+            *[
+                f"{_stats.stat_sql(stat, self._value_sql(c), w, **kwargs)} "
+                f"AS {_stats.q(c)}"
+                for c in cols
+            ]
+        )
 
     # -- row-wise (axis=1) statistics ----------------------------------------
     #
@@ -199,7 +213,7 @@ class WeightedDataFrame:
     # an array of the numeric columns — no aggregation, no shuffle.
 
     def _row_moments(self, subset: Optional[Sequence[str]], skipna: bool):
-        """Row-local moments: (n_valid, count, w·Σx, w·Σx²).
+        """Row-local moments as SQL text: (n_valid, count, w·Σx, w·Σx²).
 
         ``n_valid`` counts cells that are valid in the *weighted* frame —
         i.e. 0 whenever the row's weight is NULL, matching pandas where a
@@ -208,18 +222,20 @@ class WeightedDataFrame:
         cols = list(subset) if subset is not None else self.numeric_columns()
         if not cols:
             raise ValueError("no numeric columns to aggregate")
-        vals = F.array(*[self._value(c) for c in cols])
-        valid = F.filter(vals, lambda v: v.isNotNull())
-        w = self.weights
-        n_valid = F.when(w.isNotNull(), F.size(valid)).otherwise(0).cast("double")
-        n_all = F.lit(float(len(cols)))
-        s = F.aggregate(valid, F.lit(0.0), lambda acc, v: acc + v)
-        ss = F.aggregate(valid, F.lit(0.0), lambda acc, v: acc + v * v)
-        cnt = F.coalesce(w, F.lit(0.0)) * (n_valid if skipna else n_all)
-        return n_valid, cnt, w * s, w * ss
+        vals = f"array({', '.join(self._value_sql(c) for c in cols)})"
+        valid = f"filter({vals}, v -> (v IS NOT NULL))"
+        w = _stats.q(WEIGHT_COL)
+        n_valid = f"CAST(CASE WHEN ({w} IS NOT NULL) THEN size({valid}) ELSE 0 END AS DOUBLE)"
+        n_all = _stats.num(len(cols))
+        s = f"aggregate({valid}, {_stats.num(0.0)}, (acc, v) -> (acc + v))"
+        ss = f"aggregate({valid}, {_stats.num(0.0)}, (acc, v) -> (acc + (v * v)))"
+        cnt = f"(coalesce({w}, {_stats.num(0.0)}) * {n_valid if skipna else n_all})"
+        return n_valid, cnt, f"({w} * {s})", f"({w} * {ss})"
 
-    def _rowwise(self, stat: str, expr: Column) -> DataFrame:
-        return self._df.select(*self._data_cols, expr.alias(f"row_{stat}"))
+    def _rowwise(self, stat: str, expr: str) -> DataFrame:
+        return self._df.selectExpr(
+            *[_stats.q(c) for c in self._data_cols], f"{expr} AS row_{stat}"
+        )
 
     def row_count(
         self, skipna: bool = True, subset: Optional[Sequence[str]] = None
@@ -232,16 +248,18 @@ class WeightedDataFrame:
     ) -> DataFrame:
         n_valid, _cnt, ws, _wss = self._row_moments(subset, True)
         if min_count > 0:
-            expr = F.when(n_valid >= min_count, ws)
+            expr = f"CASE WHEN ({n_valid} >= {int(min_count)}) THEN {ws} END"
         else:
-            expr = F.coalesce(ws, F.lit(0.0))
+            expr = f"coalesce({ws}, {_stats.num(0.0)})"
         return self._rowwise("sum", expr)
 
     def row_mean(
         self, skipna: bool = True, subset: Optional[Sequence[str]] = None
     ) -> DataFrame:
         n_valid, cnt, ws, _wss = self._row_moments(subset, skipna)
-        return self._rowwise("mean", F.try_divide(F.when(n_valid >= 1, ws), cnt))
+        return self._rowwise(
+            "mean", f"try_divide(CASE WHEN ({n_valid} >= 1) THEN {ws} END, {cnt})"
+        )
 
     def row_var(
         self,
@@ -251,7 +269,10 @@ class WeightedDataFrame:
     ) -> DataFrame:
         n_valid, cnt, ws, wss = self._row_moments(subset, skipna)
         expr = _stats.variance_from_weighted_moments(
-            F.when(n_valid >= 1, ws), F.when(n_valid >= 1, wss), cnt, ddof=ddof
+            f"CASE WHEN ({n_valid} >= 1) THEN {ws} END",
+            f"CASE WHEN ({n_valid} >= 1) THEN {wss} END",
+            cnt,
+            ddof=ddof,
         )
         return self._rowwise("var", expr)
 
@@ -262,10 +283,9 @@ class WeightedDataFrame:
         subset: Optional[Sequence[str]] = None,
     ) -> DataFrame:
         var_df = self.row_var(ddof=ddof, skipna=skipna, subset=subset)
-        v = F.col("row_var")
-        return var_df.select(
-            *[c for c in var_df.columns if c != "row_var"],
-            F.when(v >= 0, F.sqrt(v)).alias("row_std"),
+        return var_df.selectExpr(
+            *[_stats.q(c) for c in var_df.columns if c != "row_var"],
+            "CASE WHEN (row_var >= 0) THEN sqrt(row_var) END AS row_std",
         )
 
     # -- quantiles ------------------------------------------------------------
@@ -310,7 +330,7 @@ class WeightedDataFrame:
         if not cols:
             raise ValueError("no numeric columns to aggregate")
         stats = ["count", "mean", "std", "min", "max"]
-        moments = self._df.agg(
+        moments = self._df.selectExpr(
             *[e for c in cols for e in _stat_exprs(self, c, stats)]
         )
         quants = weighted_quantiles(self, qs, subset=cols)
@@ -322,7 +342,7 @@ class WeightedDataFrame:
             for q in qs:
                 order.append(quantile_col_name(c, q))
             order.append(f"{c}_max")
-        return joined.select(*order)
+        return joined.select(*[F.col(_stats.q(n)) for n in order])
 
     def cdf(
         self, subset: Optional[Sequence[str]] = None, bands: int = 256
@@ -676,21 +696,21 @@ class WeightedDataFrame:
         self, skipna: bool = True, subset: Optional[Sequence[str]] = None
     ) -> DataFrame:
         return self._agg_1row(
-            lambda x, w: _stats.w_count(x, w, skipna=skipna), subset
+            "count", subset, skipna=skipna
         )
 
     def sum(
         self, min_count: int = 0, subset: Optional[Sequence[str]] = None
     ) -> DataFrame:
         return self._agg_1row(
-            lambda x, w: _stats.w_stat("sum", x, w, min_count=min_count), subset
+            "sum", subset, min_count=min_count
         )
 
     def mean(
         self, skipna: bool = True, subset: Optional[Sequence[str]] = None
     ) -> DataFrame:
         return self._agg_1row(
-            lambda x, w: _stats.w_stat("mean", x, w, skipna=skipna), subset
+            "mean", subset, skipna=skipna
         )
 
     def var(
@@ -700,7 +720,7 @@ class WeightedDataFrame:
         subset: Optional[Sequence[str]] = None,
     ) -> DataFrame:
         return self._agg_1row(
-            lambda x, w: _stats.w_stat("var", x, w, ddof=ddof, skipna=skipna), subset
+            "var", subset, ddof=ddof, skipna=skipna
         )
 
     def std(
@@ -710,7 +730,7 @@ class WeightedDataFrame:
         subset: Optional[Sequence[str]] = None,
     ) -> DataFrame:
         return self._agg_1row(
-            lambda x, w: _stats.w_std(x, w, ddof=ddof, skipna=skipna), subset
+            "std", subset, ddof=ddof, skipna=skipna
         )
 
     def sem(
@@ -724,18 +744,18 @@ class WeightedDataFrame:
         ``n`` (frequency-weights convention; unit weights reproduce
         pandas exactly)."""
         return self._agg_1row(
-            lambda x, w: _stats.w_sem(x, w, ddof=ddof, skipna=skipna), subset
+            "sem", subset, ddof=ddof, skipna=skipna
         )
 
     def gmean(self, subset: Optional[Sequence[str]] = None) -> DataFrame:
         """Weighted geometric mean over positive values/weights
         (extension; scipy gmean analog under frequency weights)."""
-        return self._agg_1row(lambda x, w: _stats.w_gmean(x, w), subset)
+        return self._agg_1row("gmean", subset)
 
     def hmean(self, subset: Optional[Sequence[str]] = None) -> DataFrame:
         """Weighted harmonic mean over positive values/weights
         (extension; scipy hmean analog under frequency weights)."""
-        return self._agg_1row(lambda x, w: _stats.w_hmean(x, w), subset)
+        return self._agg_1row("hmean", subset)
 
     def skew(
         self, skipna: bool = True, subset: Optional[Sequence[str]] = None
@@ -743,7 +763,7 @@ class WeightedDataFrame:
         """Weighted skewness (population definition; extension beyond the
         reference). Single aggregate pass via raw power sums."""
         return self._agg_1row(
-            lambda x, w: _stats.w_stat("skew", x, w, skipna=skipna), subset
+            "skew", subset, skipna=skipna
         )
 
     def kurt(
@@ -752,17 +772,17 @@ class WeightedDataFrame:
         """Weighted excess kurtosis (population definition; extension
         beyond the reference)."""
         return self._agg_1row(
-            lambda x, w: _stats.w_stat("kurt", x, w, skipna=skipna), subset
+            "kurt", subset, skipna=skipna
         )
 
     def min(self, subset: Optional[Sequence[str]] = None) -> DataFrame:
         """Minimum over mass-carrying rows (the q→0⁺ weighted quantile;
         rows with NULL/non-positive weight are excluded)."""
-        return self._agg_1row(lambda x, w: _stats.w_min(x, w), subset)
+        return self._agg_1row("min", subset)
 
     def max(self, subset: Optional[Sequence[str]] = None) -> DataFrame:
         """Maximum over mass-carrying rows (the q=1 weighted quantile)."""
-        return self._agg_1row(lambda x, w: _stats.w_max(x, w), subset)
+        return self._agg_1row("max", subset)
 
     # -- correlation / grouping / resample / apply (separate modules) --------
 

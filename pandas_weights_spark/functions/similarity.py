@@ -409,10 +409,15 @@ def train_ivf_centroids(
             seed,
         )
     else:
+        # a NULL vector carries no direction: seed from the lowest-id
+        # non-NULL vectors, as the k-means|| path does
         rows = (
-            corpus.orderBy(id_col).limit(n_cells).select(corpus_vec)
+            corpus.where(F.col(corpus_vec).isNotNull())
+            .orderBy(id_col).limit(n_cells).select(corpus_vec)
             .collect()
         )
+        if not rows:
+            raise ValueError("train_ivf_centroids needs at least one non-null vector")
         cents = [list(map(float, r[corpus_vec])) for r in rows]
     for _ in range(iters):
         # assign first, explode second: a generator in the same select as

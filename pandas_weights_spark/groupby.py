@@ -18,12 +18,13 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
-from typing import TYPE_CHECKING, Callable, Optional, Sequence
+from typing import TYPE_CHECKING, Optional, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pandas_weights_spark import _stats
+from pandas_weights_spark.frame import WEIGHT_COL
 
 if TYPE_CHECKING:
     from pandas_weights_spark.frame import WeightedDataFrame
@@ -31,42 +32,29 @@ if TYPE_CHECKING:
 __all__ = ["WeightedGroupBy"]
 
 
-#: non-moment statistic name → kernel builder (x, w) -> Column
-_KERNELS: dict[str, Callable[..., Column]] = {
-    "min": _stats.w_min,
-    "max": _stats.w_max,
-    "gmean": _stats.w_gmean,
-    "hmean": _stats.w_hmean,
-}
 #: every statistic agg_all / agg accept: the moment statistics
-#: :func:`_stats.assemble` builds, then the kernels
-_STATS = (*_stats.MOMENT_STATS, *_KERNELS)
+#: :func:`_stats.assemble` builds, then the mass-rule kernels
+_STATS = (*_stats.MOMENT_STATS, *_stats.KERNELS)
 
 
 def _stat_exprs(
     wdf: "WeightedDataFrame", col: str, stats: Sequence[str], **kwargs
-) -> list[Column]:
-    """``{col}_{stat}`` aggregate columns for ``stats`` of one column:
-    its normalized value and its moment sums are built once and every
-    moment statistic is assembled from them. ``kwargs`` are the
-    moment statistics' ``skipna``/``ddof``/``min_count``; others are
-    ignored."""
-    x = wdf._value(col)
-    w = wdf.weights
-    sums = _stats.moment_sums(x, w, skipna=kwargs.get("skipna", True))
+) -> list[str]:
+    """``{col}_{stat}`` aggregate SQL for ``stats`` of one column
+    (:func:`_stats.stat_sql`). ``kwargs`` are the moment statistics'
+    ``skipna``/``ddof``/``min_count``; others are ignored."""
+    x = wdf._value_sql(col)
+    w = _stats.q(WEIGHT_COL)
+    opts = {k: kwargs[k] for k in ("skipna", "ddof", "min_count") if k in kwargs}
     return [
-        (
-            _stats.assemble(
-                s,
-                sums,
-                ddof=kwargs.get("ddof", 1),
-                min_count=kwargs.get("min_count", 0),
-            )
-            if s in _stats.MOMENT_STATS
-            else _KERNELS[s](x, w)
-        ).alias(f"{col}_{s}")
+        f"{_stats.stat_sql(s, x, w, **opts)} AS {_stats.q(f'{col}_{s}')}"
         for s in stats
     ]
+
+
+def _key_cols(keys: Sequence[str]) -> list[Column]:
+    """Key columns by literal name (a dot is part of the name)."""
+    return [F.col(_stats.q(k)) for k in keys]
 
 
 def _join_group_stats(
@@ -95,7 +83,7 @@ def _join_group_stats(
         renamed = renamed.withColumnRenamed(k, f"__pw_sk_{k}__")
     cond = None
     for k in keys:
-        c = df[k].eqNullSafe(renamed[f"__pw_sk_{k}__"])
+        c = df[_stats.q(k)].eqNullSafe(renamed[_stats.q(f"__pw_sk_{k}__")])
         cond = c if cond is None else (cond & c)
     out = df.join(renamed, cond, "left")
     return out.drop(*[f"__pw_sk_{k}__" for k in keys])
@@ -156,14 +144,14 @@ class WeightedGroupBy:
         ``dropna=True`` drops the rows with a NULL key."""
         if not self._dropna:
             return self._wdf
-        df = self._wdf.df
-        for k in self._keys:
-            df = df.where(F.col(k).isNotNull())
+        df = self._wdf.df.where(
+            " AND ".join(f"{_stats.q(k)} IS NOT NULL" for k in self._keys)
+        )
         return self._wdf._with_df(df)
 
     def _grouped(self):
         df = self._kept().df
-        keys = [F.col(k) for k in self._keys]
+        keys = _key_cols(self._keys)
         if self._mode == "cube":
             return df.cube(*keys)
         if self._mode == "rollup":
@@ -172,45 +160,47 @@ class WeightedGroupBy:
 
     def _finish(self, out: DataFrame) -> DataFrame:
         if self._sort:
-            out = out.orderBy(*self._keys)
+            out = out.orderBy(*_key_cols(self._keys))
         return out
 
-    def _agg(self, builder: Callable[[Column, Column], Column]) -> DataFrame:
+    def _agg(self, stat: str, **kwargs) -> DataFrame:
+        """The aggregate ``stat`` of every value column, named after it."""
         cols = self._value_cols()
         if not cols:
             raise ValueError("no numeric columns to aggregate")
-        w = self._wdf.weights
-        exprs = [builder(self._wdf._value(c), w).alias(c) for c in cols]
-        return self._finish(self._grouped().agg(*exprs))
+        w = _stats.q(WEIGHT_COL)
+        exprs = [
+            f"{_stats.stat_sql(stat, self._wdf._value_sql(c), w, **kwargs)} AS {_stats.q(c)}"
+            for c in cols
+        ]
+        return self._finish(self._grouped().agg(*map(F.expr, exprs)))
 
     # -- statistics (frame.py:512-628) -----------------------------------------
 
     def count(self, skipna: bool = True) -> DataFrame:
-        return self._agg(lambda x, w: _stats.w_count(x, w, skipna=skipna))
+        return self._agg("count", skipna=skipna)
 
     def sum(self, min_count: int = 0) -> DataFrame:
-        return self._agg(lambda x, w: _stats.w_stat("sum", x, w, min_count=min_count))
+        return self._agg("sum", min_count=min_count)
 
     def mean(self, skipna: bool = True) -> DataFrame:
-        return self._agg(lambda x, w: _stats.w_stat("mean", x, w, skipna=skipna))
+        return self._agg("mean", skipna=skipna)
 
     def var(self, ddof: int = 1, skipna: bool = True) -> DataFrame:
-        return self._agg(
-            lambda x, w: _stats.w_stat("var", x, w, ddof=ddof, skipna=skipna)
-        )
+        return self._agg("var", ddof=ddof, skipna=skipna)
 
     def std(self, ddof: int = 1, skipna: bool = True) -> DataFrame:
-        return self._agg(lambda x, w: _stats.w_std(x, w, ddof=ddof, skipna=skipna))
+        return self._agg("std", ddof=ddof, skipna=skipna)
 
     def min(self) -> DataFrame:
         """Per-group minimum over mass-carrying rows (the q→0⁺ weighted
         quantile; rows with NULL/non-positive weight are excluded)."""
-        return self._agg(lambda x, w: _stats.w_min(x, w))
+        return self._agg("min")
 
     def max(self) -> DataFrame:
         """Per-group maximum over mass-carrying rows (the q=1 weighted
         quantile)."""
-        return self._agg(lambda x, w: _stats.w_max(x, w))
+        return self._agg("max")
 
     def first(self, order_by: Sequence[str]) -> DataFrame:
         """Per-group FIRST non-NULL value of each column along
@@ -285,25 +275,23 @@ class WeightedGroupBy:
     def sem(self, ddof: int = 1, skipna: bool = True) -> DataFrame:
         """Per-group weighted standard error of the mean (``std/sqrt(W)``,
         frequency-weights convention)."""
-        return self._agg(
-            lambda x, w: _stats.w_sem(x, w, ddof=ddof, skipna=skipna)
-        )
+        return self._agg("sem", ddof=ddof, skipna=skipna)
 
     def gmean(self) -> DataFrame:
         """Per-group weighted geometric mean (positive values/weights)."""
-        return self._agg(lambda x, w: _stats.w_gmean(x, w))
+        return self._agg("gmean")
 
     def hmean(self) -> DataFrame:
         """Per-group weighted harmonic mean (positive values/weights)."""
-        return self._agg(lambda x, w: _stats.w_hmean(x, w))
+        return self._agg("hmean")
 
     def skew(self, skipna: bool = True) -> DataFrame:
         """Per-group weighted skewness (extension beyond the reference)."""
-        return self._agg(lambda x, w: _stats.w_stat("skew", x, w, skipna=skipna))
+        return self._agg("skew", skipna=skipna)
 
     def kurt(self, skipna: bool = True) -> DataFrame:
         """Per-group weighted excess kurtosis (extension)."""
-        return self._agg(lambda x, w: _stats.w_stat("kurt", x, w, skipna=skipna))
+        return self._agg("kurt", skipna=skipna)
 
     def quantile(
         self,
@@ -445,7 +433,7 @@ class WeightedGroupBy:
         if bad:
             raise ValueError(f"unknown statistics: {bad}")
         exprs = [e for c in cols for e in _stat_exprs(self._wdf, c, stats, **kwargs)]
-        return self._finish(self._grouped().agg(*exprs))
+        return self._finish(self._grouped().agg(*map(F.expr, exprs)))
 
     def agg(self, spec) -> DataFrame:
         """pandas dict-style aggregation in ONE pass: ``agg({"price":
@@ -470,7 +458,7 @@ class WeightedGroupBy:
             if bad:
                 raise ValueError(f"unknown statistics: {bad}")
             exprs += _stat_exprs(self._wdf, c, stats)
-        return self._finish(self._grouped().agg(*exprs))
+        return self._finish(self._grouped().agg(*map(F.expr, exprs)))
 
     def describe(
         self,
@@ -498,22 +486,24 @@ class WeightedGroupBy:
         qs = [float(q) for q in qs]
         moments = self.agg_all(["count", "mean", "std", "min", "max"])
         quants = self.quantile(qs, exact=exact, lo=lo, hi=hi, bins=bins)
-        cond = [
-            moments[k].eqNullSafe(quants[k]) for k in self._keys
-        ]  # null-safe: dropna=False keeps NULL-key groups
+        q = _stats.q
         from pandas_weights_spark.quantile import quantile_col_name
 
-        joined = moments.join(quants, on=cond, how="inner")
-        order = []
+        # null-safe key join (dropna=False keeps NULL-key groups); the
+        # quantile side's keys are renamed, so every name is one column
+        renamed = quants.withColumnsRenamed(
+            {k: f"__pw_dk{i}__" for i, k in enumerate(self._keys)}
+        )
+        cond = " AND ".join(
+            f"({q(k)} <=> __pw_dk{i}__)" for i, k in enumerate(self._keys)
+        )
+        joined = moments.join(renamed, on=F.expr(cond), how="inner")
+        order = list(self._keys)
         for c in self._value_cols():
-            order.append(moments[f"{c}_count"])
-            order.append(moments[f"{c}_mean"])
-            order.append(moments[f"{c}_std"])
-            order.append(moments[f"{c}_min"])
-            for q in qs:
-                order.append(quants[quantile_col_name(c, q)])
-            order.append(moments[f"{c}_max"])
-        return joined.select(*[moments[k] for k in self._keys], *order)
+            order += [f"{c}_{s}" for s in ("count", "mean", "std", "min")]
+            order += [quantile_col_name(c, p) for p in qs]
+            order.append(f"{c}_max")
+        return joined.select(*[F.col(q(n)) for n in order])
 
     def cdf(self, bands: int = 256) -> DataFrame:
         """Per-row weighted CDF (percentile-rank) transform against the
@@ -667,23 +657,27 @@ class WeightedGroupBy:
         if not cols:
             raise ValueError("no numeric columns to standardize")
         df = self._kept().df
-        w = self._wdf.weights
+        w = _stats.q(WEIGHT_COL)
         names = _stats.sums_read(("mean", "var"))
         aggs = []
         for c in cols:
-            m = _stats.moment_sums(self._wdf._value(c), w, skipna=skipna)
-            aggs += [m[k].alias(f"__pw_z{k}_{c}__") for k in names]
-        moments = df.groupBy(*[F.col(k) for k in self._keys]).agg(*aggs)
+            m = _stats.moment_sums(
+                self._wdf._value_sql(c), w, skipna=skipna, names=names
+            )
+            aggs += [f"{m[k]} AS {_stats.q(f'__pw_z{k}_{c}__')}" for k in names]
+        moments = _stats.aggregate(df, aggs, self._keys)
         joined = _join_group_stats(df, moments, self._keys)
-        out_cols = [F.col(c) for c in df.columns]
+        out_cols = [_stats.q(c) for c in df.columns]
         for c in cols:
-            m = {k: F.col(f"__pw_z{k}_{c}__") for k in names}
+            m = {k: _stats.q(f"__pw_z{k}_{c}__") for k in names}
             var = _stats.assemble("var", m, ddof=ddof)
             mu = _stats.assemble("mean", m)
-            x = self._wdf._value(c)
-            z = F.when(var > 0, F.try_divide(x - mu, F.sqrt(var)))
-            out_cols.append(z.alias(f"{c}_z"))
-        return joined.select(*out_cols)
+            x = self._wdf._value_sql(c)
+            out_cols.append(
+                f"CASE WHEN ({var} > 0) THEN try_divide(({x} - {mu}), sqrt({var})) "
+                f"END AS {_stats.q(f'{c}_z')}"
+            )
+        return joined.selectExpr(*out_cols)
 
     def impute(
         self,
@@ -751,27 +745,25 @@ class WeightedGroupBy:
                     ).alias(f"{c}_imp")
                 )
             return joined.select(*out_cols)
-        w = self._wdf.weights
+        w = _stats.q(WEIGHT_COL)
+        names = _stats.sums_read(("mean",))
         aggs = []
         for c in cols:
-            x = self._wdf._value(c)
-            mask = F.when(x.isNotNull(), w) if skipna else w
-            aggs.append(
-                F.coalesce(F.sum(mask), F.lit(0.0)).alias(f"__pw_iW_{c}__")
+            m = _stats.moment_sums(
+                self._wdf._value_sql(c), w, skipna=skipna, names=names
             )
-            aggs.append(F.sum(x * w).alias(f"__pw_i1_{c}__"))
-        moments = df.groupBy(*[F.col(k) for k in self._keys]).agg(*aggs)
+            aggs += [f"{m[k]} AS {_stats.q(f'__pw_i{k}_{c}__')}" for k in names]
+        moments = _stats.aggregate(df, aggs, self._keys)
         joined = _join_group_stats(df, moments, self._keys)
-        out_cols = [F.col(c) for c in df.columns]
+        out_cols = [_stats.q(c) for c in df.columns]
         for c in cols:
-            x = self._wdf._value(c)
-            mu = F.try_divide(
-                F.col(f"__pw_i1_{c}__"), F.col(f"__pw_iW_{c}__")
+            mu = _stats.assemble(
+                "mean", {k: _stats.q(f"__pw_i{k}_{c}__") for k in names}
             )
             out_cols.append(
-                F.coalesce(x.cast("double"), mu).alias(f"{c}_imp")
+                f"coalesce({self._wdf._value_sql(c)}, {mu}) AS {_stats.q(f'{c}_imp')}"
             )
-        return joined.select(*out_cols)
+        return joined.selectExpr(*out_cols)
 
     def value_counts(
         self,
@@ -925,34 +917,40 @@ class WeightedGroupBy:
         names = _stats.sums_read(stats, min_count=min_count)
 
         df = self._kept().df
-        w = self._wdf.weights
-        salt = F.pmod(F.monotonically_increasing_id(), F.lit(salt_buckets))
+        w = _stats.q(WEIGHT_COL)
+        salt = F.expr(f"pmod(monotonically_increasing_id(), {int(salt_buckets)})")
 
         # stage 1: per-(keys, salt) moment sums — map-side partials make
         # each hot key's load 1/salt_buckets of the rows per reducer
         partial = []
         for c in cols:
-            m = _stats.moment_sums(self._wdf._value(c), w, skipna=skipna)
-            partial += [m[k].alias(f"__{c}_{k}") for k in names]
-        stage1 = df.withColumn("__salt__", salt).groupBy(
-            *self._keys, "__salt__"
-        ).agg(*partial)
+            m = _stats.moment_sums(
+                self._wdf._value_sql(c), w, skipna=skipna, names=names
+            )
+            partial += [f"{m[k]} AS {_stats.q(f'__{c}_{k}')}" for k in names]
+        stage1 = _stats.aggregate(
+            df.withColumn("__salt__", salt), partial, [*self._keys, "__salt__"]
+        )
 
         # stage 2: merge the sums per key (associative), then assemble
-        merged = stage1.groupBy(*self._keys).agg(
-            *[F.sum(f"__{c}_{k}").alias(f"__{c}_{k}") for c in cols for k in names]
+        sums = [_stats.q(f"__{c}_{k}") for c in cols for k in names]
+        merged = _stats.aggregate(
+            stage1, [f"sum({n}) AS {n}" for n in sums], self._keys
         )
         out_exprs = [
             _stats.assemble(
                 s,
-                {k: F.col(f"__{c}_{k}") for k in names},
+                {k: _stats.q(f"__{c}_{k}") for k in names},
                 ddof=ddof,
                 min_count=min_count,
-            ).alias(f"{c}_{s}")
+            )
+            + f" AS {_stats.q(f'{c}_{s}')}"
             for c in cols
             for s in stats
         ]
-        return self._finish(merged.select(*self._keys, *out_exprs))
+        return self._finish(
+            merged.selectExpr(*[_stats.q(k) for k in self._keys], *out_exprs)
+        )
 
     # -- correlation (frame.py:630-660) ----------------------------------------
 

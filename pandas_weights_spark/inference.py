@@ -35,6 +35,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pandas_weights_spark import _stats
+from pandas_weights_spark.frame import WEIGHT_COL
 from pandas_weights_spark.quantile import _mass
 
 __all__ = [
@@ -75,40 +76,33 @@ def weighted_ttest(
     for c in [value, group_col, *keys]:
         if c not in wdf.df.columns:
             raise KeyError(f"column {c!r} not in frame")
-    x = wdf._value(value)
-    w = wdf.weights
-    sides = {"a": group_a, "b": group_b}
+    x = wdf._value_sql(value)
+    w = _stats.q(WEIGHT_COL)
     aggs = []
-    for tag, gv in sides.items():
-        mask = F.col(group_col).eqNullSafe(F.lit(gv))
-        xm = F.when(mask, x)
-        wm = F.when(mask, w)
+    for tag, gv in (("a", group_a), ("b", group_b)):
+        mask = f"({_stats.q(group_col)} <=> {_stats.lit(gv)})"
+        xm = f"CASE WHEN {mask} THEN {x} END"
+        wm = f"CASE WHEN {mask} THEN {w} END"
         aggs += [
-            _stats.w_count(xm, wm).alias(f"n_{tag}"),
-            _stats.w_stat("mean", xm, wm).alias(f"mean_{tag}"),
-            _stats.w_stat("var", xm, wm, ddof=ddof).alias(f"var_{tag}"),
+            f"{_stats.stat_sql('count', xm, wm)} AS n_{tag}",
+            f"{_stats.stat_sql('mean', xm, wm)} AS mean_{tag}",
+            f"{_stats.stat_sql('var', xm, wm, ddof=ddof)} AS var_{tag}",
         ]
-    g = (
-        wdf.df.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
-        if keys
-        else wdf.df.agg(*aggs)
+    g = _stats.aggregate(wdf.df, aggs, keys)
+    se2a = "try_divide(var_a, n_a)"
+    se2b = "try_divide(var_b, n_b)"
+    se2 = f"({se2a} + {se2b})"
+    t = f"try_divide((mean_a - mean_b), sqrt({se2}))"
+    one = _stats.num(1.0)
+    df_w = (
+        f"try_divide(({se2} * {se2}), (try_divide(({se2a} * {se2a}), (n_a - {one}))"
+        f" + try_divide(({se2b} * {se2b}), (n_b - {one}))))"
     )
-    na, nb = F.col("n_a"), F.col("n_b")
-    va, vb = F.col("var_a"), F.col("var_b")
-    se2a = F.try_divide(va, na)
-    se2b = F.try_divide(vb, nb)
-    se2 = se2a + se2b
-    t = F.try_divide(F.col("mean_a") - F.col("mean_b"), F.sqrt(se2))
-    df_w = F.try_divide(
-        se2 * se2,
-        F.try_divide(se2a * se2a, na - F.lit(1.0))
-        + F.try_divide(se2b * se2b, nb - F.lit(1.0)),
-    )
-    return g.select(
-        *keys,
+    return g.selectExpr(
+        *[_stats.q(k) for k in keys],
         "n_a", "mean_a", "var_a", "n_b", "mean_b", "var_b",
-        F.when(se2 > 0, t).alias("t_stat"),
-        F.when(se2 > 0, df_w).alias("df"),
+        f"CASE WHEN ({se2} > 0) THEN {t} END AS t_stat",
+        f"CASE WHEN ({se2} > 0) THEN {df_w} END AS df",
     )
 
 
@@ -131,15 +125,17 @@ def weighted_chi2(
     for c in (row_col, col_col):
         if c not in wdf.df.columns:
             raise KeyError(f"column {c!r} not in frame")
-    w = wdf.weights
+    r, c = _stats.q(row_col), _stats.q(col_col)
     # reserved names: a user category column may be called o, rt, g, ...
     o, rk, ck, rt, ct, g, nr, k = (
         f"__pw_chi2_{s}__" for s in ("o", "rk", "ck", "rt", "ct", "g", "nr", "k")
     )
-    cells = wdf.df.groupBy(row_col, col_col).agg(F.sum(w).alias(o))
-    rtot = cells.groupBy(F.col(row_col).alias(rk)).agg(F.sum(o).alias(rt))
-    ctot = cells.groupBy(F.col(col_col).alias(ck)).agg(F.sum(o).alias(ct))
-    grand = rtot.agg(F.sum(rt).alias(g), F.count(F.lit(1)).alias(nr))
+    cells = wdf.df.groupBy(F.col(r), F.col(c)).agg(
+        F.expr(f"sum({_stats.q(WEIGHT_COL)}) AS {o}")
+    )
+    rtot = cells.groupBy(F.expr(f"{r} AS {rk}")).agg(F.expr(f"sum({o}) AS {rt}"))
+    ctot = cells.groupBy(F.expr(f"{c} AS {ck}")).agg(F.expr(f"sum({o}) AS {ct}"))
+    grand = rtot.selectExpr(f"sum({rt}) AS {g}", f"count(1) AS {nr}")
     # the FULL R×C grid, not just observed combos: an empty cell has
     # O = 0 but E = rt·ct/g > 0 and still contributes E to the χ² sum
     # (scipy/pandas semantics), so every term stays a non-negative
@@ -148,39 +144,26 @@ def weighted_chi2(
     # below the cell aggregate is R×C rows — all joins broadcast.
     j = (
         rtot.crossJoin(ctot)
-        .join(
-            cells,
-            F.col(rk).eqNullSafe(F.col(row_col))
-            & F.col(ck).eqNullSafe(F.col(col_col)),
-            how="left",
-        )
+        .join(cells, F.expr(f"({rk} <=> {r}) AND ({ck} <=> {c})"), how="left")
         .crossJoin(F.broadcast(grand))
     )
-    obs = F.coalesce(F.col(o), F.lit(0.0))
-    e = F.col(rt) * F.col(ct) / F.col(g)
-    term = F.try_divide((obs - e) * (obs - e), e)
-    agg = j.agg(
-        F.sum(term).alias("chi2"),
+    obs = f"coalesce({o}, {_stats.num(0.0)})"
+    e = f"(({rt} * {ct}) / {g})"
+    agg = j.selectExpr(
+        f"sum(try_divide((({obs} - {e}) * ({obs} - {e})), {e})) AS chi2",
         # every grid row carries the same grand total and R; an empty
         # grid means an empty input, R = C = 0
-        F.min(g).alias("n"),
-        F.coalesce(F.min(nr), F.lit(0)).alias(nr),
-        F.count(F.lit(1)).alias(k),
+        f"min({g}) AS n",
+        f"coalesce(min({nr}), 0) AS {nr}",
+        f"count(1) AS {k}",
     )
-    rr = F.col(nr) - F.lit(1)
-    cc = F.coalesce(
-        F.try_divide(F.col(k), F.col(nr)).cast("long"), F.lit(0)
-    ) - F.lit(1)
-    return agg.select(
+    rr = f"({nr} - 1)"
+    cc = f"(coalesce(CAST(try_divide({k}, {nr}) AS BIGINT), 0) - 1)"
+    return agg.selectExpr(
         "chi2",
-        (rr * cc).cast("long").alias("dof"),
+        f"CAST(({rr} * {cc}) AS BIGINT) AS dof",
         "n",
-        F.sqrt(
-            F.try_divide(
-                F.col("chi2"),
-                F.col("n") * F.least(rr, cc).cast("double"),
-            )
-        ).alias("cramers_v"),
+        f"sqrt(try_divide(chi2, (n * CAST(least({rr}, {cc}) AS DOUBLE)))) AS cramers_v",
     )
 
 

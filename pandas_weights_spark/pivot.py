@@ -24,21 +24,16 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from pandas_weights_spark import _stats
+from pandas_weights_spark._stats import lit, num, q
+from pandas_weights_spark.frame import WEIGHT_COL
 
 __all__ = ["weighted_pivot", "weighted_crosstab"]
 
 #: pivot-domain guard for the implicit distinct().collect() path
 MAX_IMPLICIT_COLUMN_VALUES = 1000
 
-_STATS = {
-    "count": lambda x, w: _stats.w_count(x, w),
-    "sum": lambda x, w: _stats.w_stat("sum", x, w),
-    "mean": lambda x, w: _stats.w_stat("mean", x, w),
-    "var": lambda x, w: _stats.w_stat("var", x, w),
-    "std": lambda x, w: _stats.w_std(x, w),
-    "min": lambda x, w: _stats.w_min(x, w),
-    "max": lambda x, w: _stats.w_max(x, w),
-}
+#: the cell statistics (:func:`_stats.stat_sql`)
+_STATS = ("count", "sum", "mean", "var", "std", "min", "max")
 
 
 def _slug(v) -> str:
@@ -80,9 +75,9 @@ def weighted_pivot(
             raise KeyError(f"column {c!r} not in frame")
     if column_values is None:
         rows = (
-            wdf.df.select(columns)
+            wdf.df.select(F.col(q(columns)))
             .distinct()
-            .orderBy(F.col(columns).asc_nulls_last())
+            .orderBy(F.col(q(columns)).asc_nulls_last())
             .limit(MAX_IMPLICIT_COLUMN_VALUES + 1)
             .collect()
         )
@@ -93,20 +88,20 @@ def weighted_pivot(
                 "column_values= explicitly"
             )
         column_values = [r[0] for r in rows]
-    w = wdf.weights
+    w = q(WEIGHT_COL)
     aggs = []
     single = len(stats) == 1
     for v in column_values:
-        cond = F.col(columns).eqNullSafe(F.lit(v))
-        wv = F.when(cond, w)
+        cond = f"({q(columns)} <=> {lit(v)})"
+        wv = f"CASE WHEN {cond} THEN {w} END"
         for c in values:
-            xv = F.when(cond, wdf._value(c))
+            xv = f"CASE WHEN {cond} THEN {wdf._value_sql(c)} END"
             for s in stats:
                 name = (
                     f"{c}_{_slug(v)}" if single else f"{c}_{_slug(v)}_{s}"
                 )
-                aggs.append(_STATS[s](xv, wv).alias(name))
-    return wdf.df.groupBy(*[F.col(k) for k in index]).agg(*aggs)
+                aggs.append(F.expr(f"{_stats.stat_sql(s, xv, wv)} AS {q(name)}"))
+    return wdf.df.groupBy(*[F.col(q(k)) for k in index]).agg(*aggs)
 
 
 def weighted_crosstab(
@@ -147,9 +142,9 @@ def weighted_crosstab(
             raise KeyError(f"column {c!r} not in frame")
     if column_values is None:
         rows = (
-            wdf.df.select(columns)
+            wdf.df.select(F.col(q(columns)))
             .distinct()
-            .orderBy(F.col(columns).asc_nulls_last())
+            .orderBy(F.col(q(columns)).asc_nulls_last())
             .limit(MAX_IMPLICIT_COLUMN_VALUES + 1)
             .collect()
         )
@@ -164,30 +159,32 @@ def weighted_crosstab(
     dup = {c for c in cells if cells.count(c) > 1} | (set(cells) & set(index))
     if dup:
         raise ValueError(f"crosstab cell name collision: {sorted(dup)}")
-    w = wdf.weights
+    w = q(WEIGHT_COL)
 
     base = wdf.df.groupBy(
-        *[F.col(k).cast("string").alias(k) for k in index]
+        *[F.expr(f"CAST({q(k)} AS STRING) AS {q(k)}") for k in index]
     ).agg(
         *[
-            F.coalesce(
-                F.sum(F.when(F.col(columns).eqNullSafe(F.lit(v)), w)),
-                F.lit(0.0),
-            ).alias(n)
+            F.expr(
+                f"coalesce(sum(CASE WHEN ({q(columns)} <=> {lit(v)}) THEN {w} END), "
+                f"{num(0.0)}) AS {q(n)}"
+            )
             for v, n in zip(column_values, cells)
         ]
     )
 
-    row_tot = sum((F.col(n) for n in cells[1:]), F.col(cells[0]))
+    def total(names) -> str:
+        out = q(names[0])
+        for n in names[1:]:
+            out = f"({out} + {q(n)})"
+        return out
+
+    row_tot = total(cells)
     # 1-row totals frame, re-aggregated from `base` (index-cardinality
     # rows) — the grand/column totals never touch the raw data again
-    tot = base.agg(
-        *[F.sum(n).alias(f"__ct_{n}__") for n in cells]
-    ).withColumn(
-        "__ct_grand__",
-        sum((F.col(f"__ct_{n}__") for n in cells[1:]),
-            F.col(f"__ct_{cells[0]}__")),
-    )
+    tot = base.selectExpr(
+        *[f"sum({q(n)}) AS {q(f'__ct_{n}__')}" for n in cells]
+    ).withColumn("__ct_grand__", F.expr(total([f"__ct_{n}__" for n in cells])))
 
     want_all_row = margins and norm in (False, "index", "all")
     want_all_col = margins and norm in (False, "columns", "all")
@@ -196,41 +193,39 @@ def weighted_crosstab(
     out = base.crossJoin(F.broadcast(tot)) if need_tot else base
 
     def cell_expr(n):
-        c = F.col(n)
+        c = q(n)
         if norm == "index":
-            return F.try_divide(c, row_tot)
+            return f"try_divide({c}, {row_tot})"
         if norm == "columns":
-            return F.try_divide(c, F.col(f"__ct_{n}__"))
+            return f"try_divide({c}, {q(f'__ct_{n}__')})"
         if norm == "all":
-            return F.try_divide(c, F.col("__ct_grand__"))
+            return f"try_divide({c}, __ct_grand__)"
         return c
 
-    sel = [*[F.col(k) for k in index],
-           *[cell_expr(n).alias(n) for n in cells]]
+    sel = [*[q(k) for k in index], *[f"{cell_expr(n)} AS {q(n)}" for n in cells]]
     if want_all_col:
         mcol = (
             row_tot if norm is False
-            else F.try_divide(row_tot, F.col("__ct_grand__"))
+            else f"try_divide({row_tot}, __ct_grand__)"
         )
-        sel.append(mcol.alias(margins_name))
-    out = out.select(*sel)
+        sel.append(f"{mcol} AS {q(margins_name)}")
+    out = out.selectExpr(*sel)
 
     if want_all_row:
         def tot_expr(n):
-            c = F.col(f"__ct_{n}__")
+            c = q(f"__ct_{n}__")
             if norm in ("index", "all"):
-                return F.try_divide(c, F.col("__ct_grand__"))
+                return f"try_divide({c}, __ct_grand__)"
             return c
 
         rsel = [
-            F.lit(margins_name).alias(index[0]),
-            *[F.lit(None).cast("string").alias(k) for k in index[1:]],
-            *[tot_expr(n).alias(n) for n in cells],
+            f"{lit(margins_name)} AS {q(index[0])}",
+            *[f"CAST(NULL AS STRING) AS {q(k)}" for k in index[1:]],
+            *[f"{tot_expr(n)} AS {q(n)}" for n in cells],
         ]
         if want_all_col:
             rsel.append(
-                (F.lit(1.0) if norm == "all" else F.col("__ct_grand__"))
-                .alias(margins_name)
+                f"{num(1.0) if norm == 'all' else '__ct_grand__'} AS {q(margins_name)}"
             )
-        out = out.unionByName(tot.select(*rsel))
+        out = out.unionByName(tot.selectExpr(*rsel))
     return out

@@ -29,12 +29,13 @@ def physical_plan(df: DataFrame) -> str:
 
 
 def count_exchanges(df: DataFrame) -> int:
-    """Number of shuffle exchanges in the plan (broadcast exchanges
-    excluded — those are the cheap kind)."""
-    plan = physical_plan(df)
-    return len(re.findall(r"^\s*\+?-?\s*Exchange hashpartitioning|Exchange rangepartitioning", plan, re.M)) + plan.count(
-        "Exchange SinglePartition"
-    )
+    """Number of shuffle exchange nodes in the plan, each counted once
+    whatever its tree prefix (``+-``, ``:-``, ``:  +-``). Broadcast
+    exchanges are excluded — those are the cheap kind — and so are
+    ``ReusedExchange`` lines, which shuffle nothing. After an action
+    only AQE's final plan is read, as in :func:`file_scans`."""
+    final = physical_plan(df).split("== Initial Plan ==")[0]
+    return len(re.findall(r"^[\s:+\-]*Exchange ", final, re.M))
 
 
 def has_python_eval(df: DataFrame) -> bool:

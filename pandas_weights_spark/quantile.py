@@ -64,6 +64,11 @@ def _carries_mass(
     return ok if where is None else ok & where
 
 
+def _carries_mass_sql(x: str, w: str) -> str:
+    """:func:`_carries_mass` of a value as SQL text."""
+    return f"(({x}) IS NOT NULL AND (({w}) > 0))"
+
+
 def _mass(
     x: Optional[Column], w: Column, where: Optional[Column] = None
 ) -> Column:
@@ -123,36 +128,31 @@ def weighted_quantiles(
             stacklevel=2,
         )
 
-    w = wdf.weights
-    df = wdf.df
-    sel = [F.col(k) for k in keys]
-    part = [F.col(k) for k in keys]
+    from pandas_weights_spark._stats import aggregate, num, q
+    from pandas_weights_spark.frame import WEIGHT_COL
+
+    w = q(WEIGHT_COL)
+    part = f"PARTITION BY {', '.join(q(k) for k in keys)} " if keys else ""
+    sel = [q(k) for k in keys]
     aggs = []
     for c in cols:
-        x = wdf._value(c)
-        mass = _mass(x, w)
-        cum = Window.partitionBy(*part).orderBy(x).rangeBetween(
-            Window.unboundedPreceding, Window.currentRow
+        x = wdf._value_sql(c)
+        mass = f"CASE WHEN {_carries_mass_sql(x, w)} THEN {w} ELSE {num(0.0)} END"
+        cum = (
+            f"{part}ORDER BY {x} RANGE BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW"
         )
-        total = Window.partitionBy(*part)
-        cw = F.sum(mass).over(cum)
-        tw = F.sum(mass).over(total)
+        xn, cwn, twn = (q(f"__{s}_{c}__") for s in ("x", "cw", "tw"))
         sel += [
-            x.alias(f"__x_{c}__"),
-            F.when(mass > 0, cw).alias(f"__cw_{c}__"),
-            tw.alias(f"__tw_{c}__"),
+            f"{x} AS {xn}",
+            f"CASE WHEN ({mass} > 0) THEN sum({mass}) OVER ({cum}) END AS {cwn}",
+            f"sum({mass}) OVER ({part.strip()}) AS {twn}",
         ]
-        for q in qs:
+        for p in qs:
             aggs.append(
-                F.min(
-                    F.when(
-                        F.col(f"__cw_{c}__") >= F.lit(q) * F.col(f"__tw_{c}__"),
-                        F.col(f"__x_{c}__"),
-                    )
-                ).alias(quantile_col_name(c, q))
+                f"min(CASE WHEN ({cwn} >= ({num(p)} * {twn})) THEN {xn} END)"
+                f" AS {q(quantile_col_name(c, p))}"
             )
-    staged = df.select(*sel)
-    return staged.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
+    return aggregate(wdf.df.selectExpr(*sel), aggs, keys)
 
 
 class _Spine(NamedTuple):

@@ -26,7 +26,7 @@ from typing import Optional, Sequence
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pandas_weights_spark._stats import moment_sums
+from pandas_weights_spark._stats import aggregate, moment_sums, q
 
 __all__ = ["weighted_linfit", "weighted_linfit_transform", "weighted_linreg"]
 
@@ -34,20 +34,15 @@ __all__ = ["weighted_linfit", "weighted_linfit_transform", "weighted_linreg"]
 def _coeff_frame(
     wdf, x_col: str, y_col: str, keys: list, ddof: float, min_periods: int
 ) -> DataFrame:
-    x = wdf._value(x_col)
-    y = wdf._value(y_col)
     from pandas_weights_spark.frame import WEIGHT_COL
 
-    w = F.col(WEIGHT_COL)
-    moments = {
-        name: expr.alias(f"__m_{name}")
-        for name, expr in moment_sums(x, w, y=y).items()
-    }
-    g = (
-        wdf.df.groupBy(*[F.col(k) for k in keys]).agg(*moments.values())
-        if keys
-        else wdf.df.agg(*moments.values())
-    )
+    moments = [
+        f"{expr} AS __m_{name}"
+        for name, expr in moment_sums(
+            wdf._value_sql(x_col), q(WEIGHT_COL), y=wdf._value_sql(y_col)
+        ).items()
+    ]
+    g = aggregate(wdf.df, moments, keys)
     n = F.col("__m_n")
     W = F.col("__m_w")
     wx = F.col("__m_wx")

@@ -27,12 +27,13 @@ from __future__ import annotations
 
 import datetime as dt
 import re
-from typing import TYPE_CHECKING, Callable, Optional, Sequence, Union
+from typing import TYPE_CHECKING, Optional, Sequence, Union
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from pandas_weights_spark import _stats
+from pandas_weights_spark.frame import WEIGHT_COL
 
 if TYPE_CHECKING:
     from pandas_weights_spark.frame import WeightedDataFrame
@@ -211,55 +212,63 @@ class WeightedResampler:
         verified differentially). ``closed``/``label`` are fixed by the
         anchor side for calendar rules, as in pandas.
         """
-        ts = F.col(self._on)
+        return F.expr(self._bucket_sql())
+
+    def _bucket_sql(self) -> str:
+        """:meth:`bucket` as SQL text."""
+        ts = _stats.q(self._on)
         if self._kind == "fixed":
             if self._closed == "right":
-                ts = ts - F.expr("INTERVAL 1 MICROSECOND")
+                ts = f"({ts} - INTERVAL 1 MICROSECOND)"
             phase = self._start_time_seconds()
-            start = F.window(
-                ts, f"{self._n} seconds", startTime=f"{phase} seconds"
-            ).start
+            n = f"'{self._n} seconds'"
+            start = f"window({ts}, {n}, {n}, '{phase} seconds').start"
             if self._label == "right":
-                start = start + F.expr(f"INTERVAL {self._n} SECOND")
+                start = f"({start} + INTERVAL {self._n} SECOND)"
             return start
         anchor, u, total = self._cal
         m_first = self._anchor_month_index()
-        m = F.year(ts) * F.lit(12) + F.month(ts) - F.lit(1)
+        m = f"(((year({ts}) * 12) + month({ts})) - 1)"
         if anchor == "start":
             p = m_first - (m_first % u)
-            lm = F.lit(p) + F.floor((m - F.lit(p)) / F.lit(total)).cast(
-                "long"
-            ) * F.lit(total)
+            lm = f"({p} + (CAST(floor((({m} - {p}) / {total})) AS BIGINT) * {total}))"
         else:
             a = m_first - (m_first % u) + (u - 1)
-            lm = F.lit(a) + F.ceil((m - F.lit(a)) / F.lit(total)).cast(
-                "long"
-            ) * F.lit(total)
-        day = F.make_date(
-            F.floor(lm / F.lit(12)).cast("int"),
-            (F.pmod(lm, F.lit(12)) + F.lit(1)).cast("int"),
-            F.lit(1),
+            lm = f"({a} + (CAST(ceil((({m} - {a}) / {total})) AS BIGINT) * {total}))"
+        day = (
+            f"make_date(CAST(floor(({lm} / 12)) AS INT), "
+            f"CAST((pmod({lm}, 12) + 1) AS INT), 1)"
         )
         if anchor == "end":
-            day = F.last_day(day)
-        return day.cast("timestamp")
+            day = f"last_day({day})"
+        return f"CAST({day} AS TIMESTAMP)"
 
-    def _agg(
-        self, builder: Callable[[Column, Column], Column], complete: bool = False
-    ) -> DataFrame:
-        cols = [c for c in self._wdf.numeric_columns() if c != self._on]
-        if not cols:
-            raise ValueError("no numeric columns to aggregate")
-        w = self._wdf.weights
-        exprs = [builder(self._wdf._value(c), w).alias(c) for c in cols]
+    def _aggregated(self, exprs: Sequence[str], complete: bool) -> DataFrame:
+        """``exprs`` (aliased aggregate SQL) per non-empty bucket, in
+        bucket order; ``complete`` adds the empty buckets."""
+        on = _stats.q(self._on)
         out = (
-            self._wdf.df.where(F.col(self._on).isNotNull())
-            .groupBy(self.bucket().alias(self._on))
-            .agg(*exprs)
+            self._wdf.df.where(f"{on} IS NOT NULL")
+            .groupBy(F.expr(f"{self._bucket_sql()} AS {on}"))
+            .agg(*[F.expr(e) for e in exprs])
         )
         if complete:
             out = self._complete(out)
-        return out.orderBy(self._on)
+        return out.orderBy(F.col(on))
+
+    def _agg(self, stat: str, complete: bool = False, **kwargs) -> DataFrame:
+        cols = [c for c in self._wdf.numeric_columns() if c != self._on]
+        if not cols:
+            raise ValueError("no numeric columns to aggregate")
+        w = _stats.q(WEIGHT_COL)
+        return self._aggregated(
+            [
+                f"{_stats.stat_sql(stat, self._wdf._value_sql(c), w, **kwargs)}"
+                f" AS {_stats.q(c)}"
+                for c in cols
+            ],
+            complete,
+        )
 
     def _complete(self, out: DataFrame) -> DataFrame:
         """Left-join against a generated bucket spine so empty buckets are
@@ -300,36 +309,23 @@ class WeightedResampler:
     # -- statistics (frame.py:381-446) -------------------------------------------
 
     def count(self, skipna: bool = True, complete: bool = False) -> DataFrame:
-        return self._agg(
-            lambda x, w: _stats.w_count(x, w, skipna=skipna), complete=complete
-        )
+        return self._agg("count", complete, skipna=skipna)
 
     def sum(self, min_count: int = 0, complete: bool = False) -> DataFrame:
-        return self._agg(
-            lambda x, w: _stats.w_stat("sum", x, w, min_count=min_count),
-            complete=complete,
-        )
+        return self._agg("sum", complete, min_count=min_count)
 
     def mean(self, skipna: bool = True, complete: bool = False) -> DataFrame:
-        return self._agg(
-            lambda x, w: _stats.w_stat("mean", x, w, skipna=skipna), complete=complete
-        )
+        return self._agg("mean", complete, skipna=skipna)
 
     def var(
         self, ddof: int = 1, skipna: bool = True, complete: bool = False
     ) -> DataFrame:
-        return self._agg(
-            lambda x, w: _stats.w_stat("var", x, w, ddof=ddof, skipna=skipna),
-            complete=complete,
-        )
+        return self._agg("var", complete, ddof=ddof, skipna=skipna)
 
     def std(
         self, ddof: int = 1, skipna: bool = True, complete: bool = False
     ) -> DataFrame:
-        return self._agg(
-            lambda x, w: _stats.w_std(x, w, ddof=ddof, skipna=skipna),
-            complete=complete,
-        )
+        return self._agg("std", complete, ddof=ddof, skipna=skipna)
 
     def quantile(
         self,
@@ -391,17 +387,10 @@ class WeightedResampler:
         bad = [s for s in stats if s not in _STATS]
         if bad:
             raise ValueError(f"unknown statistics: {bad}")
-        exprs = [
-            e for c in cols for e in _stat_exprs(self._wdf, c, stats, **kwargs)
-        ]
-        out = (
-            self._wdf.df.where(F.col(self._on).isNotNull())
-            .groupBy(self.bucket().alias(self._on))
-            .agg(*exprs)
+        return self._aggregated(
+            [e for c in cols for e in _stat_exprs(self._wdf, c, stats, **kwargs)],
+            complete,
         )
-        if complete:
-            out = self._complete(out)
-        return out.orderBy(self._on)
 
 
 def hypertable_rollup(
@@ -487,14 +476,14 @@ def hypertable_rollup(
     cols = value_cols or [c for c in wdf.numeric_columns() if c != on]
     if not cols:
         raise ValueError("no numeric columns to aggregate")
-    w = wdf.weights
+    w = _stats.q(WEIGHT_COL)
 
     # level 0: raw rows -> finest buckets, the weighted moment sums
     kind0, info0 = parsed[0]
     sums = []
     for c in cols:
-        m = _stats.moment_sums(wdf._value(c), w)
-        sums += [m[k].alias(f"__{k}_{c}__") for k in names]
+        m = _stats.moment_sums(wdf._value_sql(c), w, names=names)
+        sums += [F.expr(f"{m[k]} AS {_stats.q(f'__{k}_{c}__')}") for k in names]
     # persist the finest-level aggregate: every union branch (each
     # grain's _finalize, and each coarser level's re-aggregation)
     # re-derives its lineage, so without a cache boundary the RAW scan
@@ -508,11 +497,14 @@ def hypertable_rollup(
     )
 
     def _finalize(lv: DataFrame, grain: str) -> DataFrame:
-        out = [F.lit(grain).alias("grain"), F.col("bucket")]
+        out = [f"{_stats.lit(grain)} AS grain", "bucket"]
         for c in cols:
-            m = {k: F.col(f"__{k}_{c}__") for k in names}
-            out += [_stats.assemble(st, m).alias(f"{c}_{st}") for st in stats]
-        return lv.select(*out)
+            m = {k: _stats.q(f"__{k}_{c}__") for k in names}
+            out += [
+                f"{_stats.assemble(st, m)} AS {_stats.q(f'{c}_{st}')}"
+                for st in stats
+            ]
+        return lv.selectExpr(*out)
 
     results = [_finalize(level, rules[0])]
     for rule, (kind, info) in zip(rules[1:], parsed[1:]):

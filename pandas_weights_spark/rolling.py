@@ -33,24 +33,29 @@ from __future__ import annotations
 
 from typing import Optional, Sequence
 
-from pyspark.sql import Column, DataFrame, Window, WindowSpec
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pandas_weights_spark import _stats
-from pandas_weights_spark.quantile import _carries_mass
-from pandas_weights_spark.topk import _ColRef, _cols
+from pandas_weights_spark.frame import WEIGHT_COL
+from pandas_weights_spark.quantile import _carries_mass_sql
+from pandas_weights_spark.topk import _ColRef
 
 __all__ = ["WeightedRolling"]
 
 
-def _let(col: Column, body) -> Column:
-    """LET-bind ``col`` so ``body`` (a Column→Column function) sees it
-    as a lambda variable evaluated ONCE — the 1-element ``transform``
-    binding (the html.py/quality.py interpreted-HOF LET discipline,
-    r15/r16). Higher-order-function folds run interpreted with no
+def _let(name: str, value: str, body: str) -> str:
+    """LET-bind ``value`` to the lambda variable ``name`` in ``body`` so
+    it is evaluated ONCE — the 1-element ``transform`` binding (the
+    html.py/quality.py interpreted-HOF LET discipline, r15/r16).
+    Higher-order-function folds run interpreted with no
     common-subexpression elimination, so an expression referenced
     twice is otherwise computed twice."""
-    return F.get(F.transform(F.array(col), body), 0)
+    return f"get(transform(array({value}), {name} -> {body}), 0)"
+
+
+def _ref_sql(ref: _ColRef) -> str:
+    return _stats.q(ref) if isinstance(ref, str) else _stats.sql(ref)
 
 
 class WeightedRolling:
@@ -92,13 +97,19 @@ class WeightedRolling:
 
     # -- plumbing -----------------------------------------------------------
 
-    def _spec(self) -> WindowSpec:
-        spec = Window.partitionBy(*_cols(self._partition_by)).orderBy(
-            *_cols(self._order_by)
-        )
+    def _spec(self) -> str:
+        """The window frame as SQL text (``PARTITION BY … ORDER BY …
+        ROWS …``)."""
+        part = ", ".join(_ref_sql(r) for r in self._partition_by)
+        order = ", ".join(_ref_sql(r) for r in self._order_by)
         if self._window is None:
-            return spec.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        return spec.rowsBetween(-(self._window - 1), Window.currentRow)
+            start = "UNBOUNDED PRECEDING"
+        elif self._window == 1:
+            start = "CURRENT ROW"
+        else:
+            start = f"{self._window - 1} PRECEDING"
+        head = f"PARTITION BY {part} " if part else ""
+        return f"{head}ORDER BY {order} ROWS BETWEEN {start} AND CURRENT ROW"
 
     def _keys(self) -> list[str]:
         """Partition/order columns play the role of the pandas index: they
@@ -111,30 +122,35 @@ class WeightedRolling:
     def _expr(
         self, stat: str, column: str, ddof: int = 1, skipna: bool = True,
         q: float = 0.5,
-    ) -> Column:
-        """One windowed statistic of one value column: the weighted
-        moment sums over the frame, assembled (``median`` / ``quantile``
-        take the frame's weighted ``q`` quantile instead) and NULL until
-        the frame holds ``min_periods`` valid observations."""
-        wdf = self._wdf
-        spec = self._spec()
-        x = wdf._value(column)
-        m = _stats.moment_sums(x, wdf.weights, skipna=skipna, over=spec)
+    ) -> str:
+        """One windowed statistic of one value column as SQL text: the
+        weighted moment sums over the frame, assembled (``median`` /
+        ``quantile`` take the frame's weighted ``q`` quantile instead)
+        and NULL until the frame holds ``min_periods`` valid
+        observations."""
+        over = self._spec()
+        x = self._wdf._value_sql(column)
+        w = _stats.q(WEIGHT_COL)
         if stat in ("median", "quantile"):
-            expr = self._quantile_expr(x, wdf.weights, spec, q)
+            expr = self._quantile_expr(x, w, over, q)
         elif stat in _stats.MOMENT_STATS:
+            m = _stats.moment_sums(
+                x, w, skipna=skipna, over=over, names=_stats.sums_read((stat,))
+            )
             expr = _stats.assemble(stat, m, ddof=ddof)
         else:
             raise ValueError(f"unknown rolling statistic {stat!r}")
         if self._min_periods > 0:
-            expr = F.when(m["n"] >= F.lit(self._min_periods), expr)
+            n = _stats.moment_sums(x, w, over=over, names=("n",))["n"]
+            expr = f"CASE WHEN ({n} >= {self._min_periods}) THEN {expr} END"
         return expr
 
-    def _select(self, named: list[tuple[str, Column]]) -> DataFrame:
+    def _select(self, named: list[tuple[str, str]]) -> DataFrame:
         if not named:
             raise ValueError("no numeric value columns outside the window keys")
-        return self._wdf.df.select(
-            *self._keys(), *[e.alias(name) for name, e in named]
+        return self._wdf.df.selectExpr(
+            *[_stats.q(k) for k in self._keys()],
+            *[f"{e} AS {_stats.q(name)}" for name, e in named],
         )
 
     def _value_columns(self) -> list[str]:
@@ -159,7 +175,7 @@ class WeightedRolling:
         WindowExec: one shuffle, one sort, instead of one pass per
         frame. Same min_periods gate as the DataFrame-returning stats.
         """
-        return self._expr(stat, column, ddof, skipna)
+        return F.expr(self._expr(stat, column, ddof, skipna))
 
     def agg_all(
         self, stats: Sequence[str], ddof: int = 1, skipna: bool = True
@@ -200,17 +216,24 @@ class WeightedRolling:
         corr/cov: W ≤ ddof, non-positive variance, and fewer than
         ``min_periods`` pair-valid rows in the frame.
         """
+        return F.expr(self._pair_expr(stat, x, y, ddof, min_periods))
+
+    def _pair_expr(self, stat, x, y, ddof, min_periods) -> str:
         if stat not in ("corr", "cov"):
             raise ValueError(f"pairwise statistic must be corr/cov, got {stat!r}")
         wdf = self._wdf
         m = _stats.moment_sums(
-            wdf._value(x), wdf.weights, y=wdf._value(y), over=self._spec()
+            wdf._value_sql(x),
+            _stats.q(WEIGHT_COL),
+            y=wdf._value_sql(y),
+            over=self._spec(),
+            names=_stats.sums_read((stat,)),
         )
         mp = self._min_periods if min_periods is None else int(min_periods)
         return _stats.assemble(stat, m, ddof=ddof, min_periods=mp)
 
     def _pair_frame(self, stat, x, y, ddof, min_periods) -> DataFrame:
-        expr = self.pair_col(stat, x, y, ddof=ddof, min_periods=min_periods)
+        expr = self._pair_expr(stat, x, y, ddof, min_periods)
         return self._select([(f"{x}_{y}_{stat}", expr)])
 
     def corr(
@@ -236,7 +259,7 @@ class WeightedRolling:
         return self._pair_frame("cov", x, y, ddof, min_periods)
 
     @staticmethod
-    def _quantile_expr(x: Column, w: Column, spec: WindowSpec, q: float) -> Column:
+    def _quantile_expr(x: str, w: str, over: str, q: float) -> str:
         """Inverted-CDF weighted quantile of the frame, as pure JVM
         array expressions: collect the frame's mass-carrying (x, w)
         pairs, sort by value, scan for the smallest value whose
@@ -250,10 +273,9 @@ class WeightedRolling:
         Follows the engine's quantile-family definition (ties merged,
         ``w ≤ 0``/NULL excluded), NOT pandas' linear interpolation —
         consistent with ``wt().quantile()``; documented divergence."""
-        pair = F.when(
-            _carries_mass(x, w), F.struct(x.alias("x"), w.alias("w"))
-        )
-
+        # collect_list drops NULLs, so excluded rows never enter the
+        # frame; struct sort orders by x first
+        pair = f"CASE WHEN {_carries_mass_sql(x, w)} THEN struct(({x}) AS x, ({w}) AS w) END"
         # r16 LET discipline: the sorted frame array and the q·W
         # target are each bound ONCE. Unbound, the interpreted HOF
         # path re-sorted the collected frame per reference (tot fold,
@@ -261,36 +283,22 @@ class WeightedRolling:
         # whole tot fold PER SCAN ELEMENT (`target` was embedded in
         # the scan lambda's body), an O(frame²) term per row. Same
         # float operations in the same order — values bit-identical.
-        def _with_arr(arr: Column) -> Column:
-            tot = F.aggregate(
-                arr, F.lit(0.0), lambda acc, s: acc + s["w"]
-            )
-
-            def _with_target(target: Column) -> Column:
-                scan = F.aggregate(
-                    arr,
-                    F.struct(
-                        F.lit(0.0).alias("cum"),
-                        F.lit(None).cast("double").alias("ans"),
-                    ),
-                    lambda acc, s: F.struct(
-                        (acc["cum"] + s["w"]).alias("cum"),
-                        F.when(acc["ans"].isNotNull(), acc["ans"])
-                        .when(
-                            acc["cum"] + s["w"] >= target,
-                            s["x"].cast("double"),
-                        )
-                        .alias("ans"),
-                    ),
-                )
-                return F.when(F.size(arr) > 0, scan["ans"])
-
-            return _let(F.lit(float(q)) * tot, _with_target)
-
-        # collect_list drops NULLs, so excluded rows never enter the
-        # frame; struct sort orders by x first
+        tot = f"aggregate(__arr, {_stats.num(0.0)}, (__acc, __s) -> (__acc + __s.w))"
+        scan = (
+            f"aggregate(__arr, struct({_stats.num(0.0)} AS cum, "
+            f"{_stats.num(None)} AS ans), (__acc, __s) -> struct("
+            f"(__acc.cum + __s.w) AS cum, "
+            f"CASE WHEN (__acc.ans IS NOT NULL) THEN __acc.ans "
+            f"WHEN ((__acc.cum + __s.w) >= __target) THEN CAST(__s.x AS DOUBLE) "
+            f"END AS ans))"
+        )
+        body = _let(
+            "__target",
+            f"({_stats.num(q)} * {tot})",
+            f"CASE WHEN (size(__arr) > 0) THEN {scan}.ans END",
+        )
         return _let(
-            F.sort_array(F.collect_list(pair).over(spec)), _with_arr
+            "__arr", f"sort_array(collect_list({pair}) OVER ({over}))", body
         )
 
     def quantile(self, q: float, skipna: bool = True) -> DataFrame:

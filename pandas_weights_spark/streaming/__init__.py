@@ -87,7 +87,7 @@ def weighted_resample_stream(
     return (
         wdf.df.withWatermark(on, watermark)
         .groupBy(F.window(F.col(on), f"{secs} seconds"))
-        .agg(*exprs)
+        .agg(*[F.expr(e) for e in exprs])
         .withColumn("window_start", F.col("window.start"))
         .drop("window")
     )
@@ -118,7 +118,7 @@ def weighted_groupby_stream(
     return (
         wdf.df.withWatermark(on, watermark)
         .groupBy(*keys)
-        .agg(*exprs)
+        .agg(*[F.expr(e) for e in exprs])
     )
 
 
@@ -157,7 +157,7 @@ def weighted_session_stream(
         df = df.withWatermark(on, watermark)
     return (
         df.groupBy(*keys, F.session_window(F.col(on), gap))
-        .agg(*exprs)
+        .agg(*[F.expr(e) for e in exprs])
         .withColumn("session_start", F.col("session_window.start"))
         .withColumn("session_end", F.col("session_window.end"))
         .drop("session_window")

@@ -56,6 +56,30 @@ def count_jobs(spark, fn):
     return out, jobs
 
 
+def count_jvm_calls(spark, fn):
+    """``(fn(), calls)``: the py4j commands ``fn`` sent to the JVM —
+    every ``send_command`` round trip on the session's gateway client
+    except py4j's garbage-collection notices, which Python's collector
+    sends for whatever objects it happens to free meanwhile."""
+    from py4j.protocol import MEMORY_COMMAND_NAME
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = 0
+
+    def counting(command, *args, **kwargs):
+        nonlocal calls
+        calls += not command.startswith(MEMORY_COMMAND_NAME)
+        return send(command, *args, **kwargs)
+
+    client.send_command = counting
+    try:
+        out = fn()
+    finally:
+        del client.send_command
+    return out, calls
+
+
 def pytest_configure(config):
     config.addinivalue_line(
         "markers",

@@ -549,3 +549,30 @@ class TestOneScanPerTable:
             assert scans, name
             redundant[name] = len(scans) - len(set(scans))
         assert redundant == {name: 0 for name in redundant}
+
+
+class TestCountExchanges:
+    """``plans.count_exchanges`` counts every shuffle exchange node once,
+    whatever its tree prefix — the left child of a join prints under
+    ``:`` — and reads only AQE's final plan once the query ran."""
+
+    def test_join_children_counted(self, spark):
+        key = "spark.sql.autoBroadcastJoinThreshold"
+        old = spark.conf.get(key)
+        spark.conf.set(key, "-1")
+        try:
+            a = spark.range(200).select((F.col("id") % 7).alias("k"))
+            b = spark.range(200).select((F.col("id") % 5).alias("k"))
+            j = a.groupBy("k").count().join(
+                b.groupBy("k").count().withColumnRenamed("count", "c2"), "k"
+            )
+            plan = P.physical_plan(j)
+            assert any(
+                line.lstrip().startswith(":") and "+- Exchange " in line
+                for line in plan.splitlines()
+            ), plan
+            assert P.count_exchanges(j) == 2, plan
+            j.collect()
+            assert P.count_exchanges(j) == 2, P.physical_plan(j)
+        finally:
+            spark.conf.set(key, old)

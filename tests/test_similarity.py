@@ -395,6 +395,51 @@ class TestSemanticDedup:
         assert all(r["is_survivor"] for r in out)
 
 
+class TestFirstInitNullVectors:
+    """``init='first'`` seeds from the lowest-id NON-NULL vectors: a NULL
+    vector among the ``n_cells`` lowest ids carries no direction (and
+    used to crash the seeding with ``float(None)``)."""
+
+    ROWS = [
+        (1, None),
+        (2, [1.0, 0.0, 0.0]),
+        (3, [0.0, 1.0, 0.0]),
+        (4, [0.98, 0.02, 0.0]),
+        (5, [0.01, 0.99, 0.0]),
+    ]
+
+    @pytest.mark.parametrize("arrow", [False, True])
+    def test_train_skips_null_seed(self, spark, arrow):
+        df = spark.createDataFrame(self.ROWS, "vid long, embedding array<double>")
+        cents = SIM.train_ivf_centroids(
+            df, "embedding", 2, "vid", iters=0, arrow=arrow
+        )
+        assert cents == [[1.0, 0.0, 0.0], [0.0, 1.0, 0.0]]
+        trained = SIM.train_ivf_centroids(
+            df, "embedding", 2, "vid", iters=2, arrow=arrow
+        )
+        assert len(trained) == 2 and all(len(c) == 3 for c in trained)
+
+    @pytest.mark.parametrize("arrow", [False, True])
+    def test_semantic_dedup_with_null_lowest_id(self, spark, arrow):
+        df = spark.createDataFrame(self.ROWS, "vid long, embedding array<double>")
+        out = {
+            r["vid"]: r["is_survivor"]
+            for r in SIM.semantic_dedup(
+                df, "embedding", "vid", n_cells=2, threshold=0.99, arrow=arrow
+            ).collect()
+        }
+        # 4 duplicates 2 and 5 duplicates 3 (cosine > 0.99); 2, 3 survive
+        assert out[2] and out[3] and not out[4] and not out[5]
+
+    def test_all_null_vectors_raise(self, spark):
+        df = spark.createDataFrame(
+            [(1, None), (2, None)], "vid long, embedding array<double>"
+        )
+        with pytest.raises(ValueError, match="non-null vector"):
+            SIM.train_ivf_centroids(df, "embedding", 2, "vid")
+
+
 class TestKmeansParallelInit:
     """init='kmeans||' (Bahmani 2012) — deterministic scalable-k-means++
     seeding for the coarse IVF quantizer."""
