@@ -188,7 +188,7 @@ def aggregate(df: DataFrame, exprs, keys=()) -> DataFrame:
     columns, or as one row without keys (one ``selectExpr``)."""
     if not keys:
         return df.selectExpr(*exprs)
-    return df.groupBy(*[F.col(q(k)) for k in keys]).agg(*[F.expr(e) for e in exprs])
+    return df.groupBy(*[F.expr(q(k)) for k in keys]).agg(*[F.expr(e) for e in exprs])
 
 
 # -- the algebra ----------------------------------------------------------------

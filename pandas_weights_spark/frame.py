@@ -4,10 +4,11 @@ PySpark-native re-expression of the reference's accessors
 (``/root/reference/src/pandas_weights/frame.py:47-367`` and
 ``series.py:44-264``). A ``WeightedDataFrame`` is a *logical* pair
 ``(DataFrame, weight Column)`` — no data is copied or materialized at bind
-time; every statistic compiles to one ``df.agg(...)`` (a single
-partial+final aggregate, no shuffle for global stats beyond the final
-reduce) that Catalyst optimizes with full column pruning and predicate
-pushdown intact.
+time; every whole-table statistic is the zero-key group of
+:class:`~pandas_weights_spark.groupby.WeightedGroupBy` and compiles to
+one ``selectExpr`` aggregate (a single partial+final aggregate, no
+shuffle beyond the final reduce) that Catalyst optimizes with full
+column pruning and predicate pushdown intact.
 
 Documented divergences from the reference (see SURVEY.md §7):
 
@@ -188,22 +189,13 @@ class WeightedDataFrame:
         """:meth:`_value_sql` as a Column."""
         return F.expr(self._value_sql(name))
 
-    def _agg_1row(
-        self, stat: str, subset: Optional[Sequence[str]], **kwargs
-    ) -> DataFrame:
-        """One row: the aggregate ``stat`` (:func:`_stats.stat_sql`,
-        ``kwargs`` its skipna/ddof/min_count) of every column."""
-        cols = list(subset) if subset is not None else self.numeric_columns()
-        if not cols:
-            raise ValueError("no numeric columns to aggregate")
-        w = _stats.q(WEIGHT_COL)
-        return self._df.selectExpr(
-            *[
-                f"{_stats.stat_sql(stat, self._value_sql(c), w, **kwargs)} "
-                f"AS {_stats.q(c)}"
-                for c in cols
-            ]
-        )
+    def _whole(self, subset: Optional[Sequence[str]]):
+        """The whole table as the zero-key group over ``subset`` (named
+        verbatim) or the numeric columns: every whole-table statistic is
+        that group's."""
+        from pandas_weights_spark.groupby import WeightedGroupBy
+
+        return WeightedGroupBy._whole(self, subset)
 
     # -- row-wise (axis=1) statistics ----------------------------------------
     #
@@ -299,9 +291,7 @@ class WeightedDataFrame:
         (engine extension; see pandas_weights_spark.quantile). Global
         form is a total order: exact but single-task — prefer grouped
         quantiles at scale."""
-        from pandas_weights_spark.quantile import weighted_quantiles
-
-        return weighted_quantiles(self, q, subset=subset)
+        return self._whole(subset).quantile(q)
 
     def median(self, subset: Optional[Sequence[str]] = None) -> DataFrame:
         return self.quantile(0.5, subset=subset)
@@ -316,33 +306,10 @@ class WeightedDataFrame:
         _min``, a ``{col}_p{q}`` per requested quantile, and
         ``{col}_max``. One fused aggregate pass for the five moment/
         extremum statistics plus the quantile pass (both 1-row frames,
-        trivially cross-joined). Grouped variant:
-        ``WeightedGroupBy.describe`` (with the binned 100 TB switch).
+        broadcast-crossjoined): ``WeightedGroupBy.describe`` of the
+        zero-key group.
         """
-        from pandas_weights_spark.groupby import _stat_exprs
-        from pandas_weights_spark.quantile import (
-            quantile_col_name,
-            weighted_quantiles,
-        )
-
-        qs = [float(q) for q in qs]
-        cols = list(subset) if subset is not None else self.numeric_columns()
-        if not cols:
-            raise ValueError("no numeric columns to aggregate")
-        stats = ["count", "mean", "std", "min", "max"]
-        moments = self._df.selectExpr(
-            *[e for c in cols for e in _stat_exprs(self, c, stats)]
-        )
-        quants = weighted_quantiles(self, qs, subset=cols)
-        joined = moments.crossJoin(quants)
-        order = []
-        for c in cols:
-            for s in ("count", "mean", "std", "min"):
-                order.append(f"{c}_{s}")
-            for q in qs:
-                order.append(quantile_col_name(c, q))
-            order.append(f"{c}_max")
-        return joined.select(*[F.col(_stats.q(n)) for n in order])
+        return self._whole(subset).describe(qs=qs)
 
     def cdf(
         self, subset: Optional[Sequence[str]] = None, bands: int = 256
@@ -417,32 +384,10 @@ class WeightedDataFrame:
     ) -> DataFrame:
         """Whole-table weighted median absolute deviation per column
         (extension): ``scale · median_w(|x − median_w(x)|)``. The 1-row
-        median frame broadcast-crossjoins back onto the rows; see
-        ``WeightedGroupBy.mad`` for the grouped variant.
+        median frame broadcast-crossjoins back onto the rows:
+        ``WeightedGroupBy.mad`` of the zero-key group.
         """
-        from pandas_weights_spark.quantile import (
-            quantile_col_name,
-            weighted_quantiles,
-        )
-
-        cols = list(subset) if subset is not None else self.numeric_columns()
-        if not cols:
-            raise ValueError("no numeric columns to aggregate")
-        med = weighted_quantiles(self, 0.5, subset=cols, keys=())
-        dev = self._df.crossJoin(F.broadcast(med)).select(
-            F.col(WEIGHT_COL),
-            *[
-                F.abs(self._value(c) - F.col(quantile_col_name(c, 0.5))).alias(c)
-                for c in cols
-            ],
-        )
-        out = weighted_quantiles(wt(dev, WEIGHT_COL), 0.5, subset=cols, keys=())
-        return out.select(
-            *[
-                (F.col(quantile_col_name(c, 0.5)) * F.lit(float(scale))).alias(c)
-                for c in cols
-            ]
-        )
+        return self._whole(subset).mad(scale=scale)
 
     def rolling(
         self,
@@ -685,33 +630,30 @@ class WeightedDataFrame:
         frame.py:505-510)."""
         num = set(self.numeric_columns())
         exprs = [
-            (self._value(c) * self.weights).alias(c) if c in num else F.col(c)
+            (self._value(c) * self.weights).alias(c) if c in num else F.col(_stats.q(c))
             for c in self._data_cols
         ]
         return self._df.select(*exprs)
 
     # -- whole-table aggregates (frame.py:189-251) ---------------------------
+    #
+    # The whole table is the group with no key: each statistic is the
+    # zero-key WeightedGroupBy's over ``subset`` — one selectExpr.
 
     def count(
         self, skipna: bool = True, subset: Optional[Sequence[str]] = None
     ) -> DataFrame:
-        return self._agg_1row(
-            "count", subset, skipna=skipna
-        )
+        return self._whole(subset).count(skipna=skipna)
 
     def sum(
         self, min_count: int = 0, subset: Optional[Sequence[str]] = None
     ) -> DataFrame:
-        return self._agg_1row(
-            "sum", subset, min_count=min_count
-        )
+        return self._whole(subset).sum(min_count=min_count)
 
     def mean(
         self, skipna: bool = True, subset: Optional[Sequence[str]] = None
     ) -> DataFrame:
-        return self._agg_1row(
-            "mean", subset, skipna=skipna
-        )
+        return self._whole(subset).mean(skipna=skipna)
 
     def var(
         self,
@@ -719,9 +661,7 @@ class WeightedDataFrame:
         skipna: bool = True,
         subset: Optional[Sequence[str]] = None,
     ) -> DataFrame:
-        return self._agg_1row(
-            "var", subset, ddof=ddof, skipna=skipna
-        )
+        return self._whole(subset).var(ddof=ddof, skipna=skipna)
 
     def std(
         self,
@@ -729,9 +669,7 @@ class WeightedDataFrame:
         skipna: bool = True,
         subset: Optional[Sequence[str]] = None,
     ) -> DataFrame:
-        return self._agg_1row(
-            "std", subset, ddof=ddof, skipna=skipna
-        )
+        return self._whole(subset).std(ddof=ddof, skipna=skipna)
 
     def sem(
         self,
@@ -743,46 +681,40 @@ class WeightedDataFrame:
         the weighted count in the role pandas ``DataFrame.sem`` gives
         ``n`` (frequency-weights convention; unit weights reproduce
         pandas exactly)."""
-        return self._agg_1row(
-            "sem", subset, ddof=ddof, skipna=skipna
-        )
+        return self._whole(subset).sem(ddof=ddof, skipna=skipna)
 
     def gmean(self, subset: Optional[Sequence[str]] = None) -> DataFrame:
         """Weighted geometric mean over positive values/weights
         (extension; scipy gmean analog under frequency weights)."""
-        return self._agg_1row("gmean", subset)
+        return self._whole(subset).gmean()
 
     def hmean(self, subset: Optional[Sequence[str]] = None) -> DataFrame:
         """Weighted harmonic mean over positive values/weights
         (extension; scipy hmean analog under frequency weights)."""
-        return self._agg_1row("hmean", subset)
+        return self._whole(subset).hmean()
 
     def skew(
         self, skipna: bool = True, subset: Optional[Sequence[str]] = None
     ) -> DataFrame:
         """Weighted skewness (population definition; extension beyond the
         reference). Single aggregate pass via raw power sums."""
-        return self._agg_1row(
-            "skew", subset, skipna=skipna
-        )
+        return self._whole(subset).skew(skipna=skipna)
 
     def kurt(
         self, skipna: bool = True, subset: Optional[Sequence[str]] = None
     ) -> DataFrame:
         """Weighted excess kurtosis (population definition; extension
         beyond the reference)."""
-        return self._agg_1row(
-            "kurt", subset, skipna=skipna
-        )
+        return self._whole(subset).kurt(skipna=skipna)
 
     def min(self, subset: Optional[Sequence[str]] = None) -> DataFrame:
         """Minimum over mass-carrying rows (the q→0⁺ weighted quantile;
         rows with NULL/non-positive weight are excluded)."""
-        return self._agg_1row("min", subset)
+        return self._whole(subset).min()
 
     def max(self, subset: Optional[Sequence[str]] = None) -> DataFrame:
         """Maximum over mass-carrying rows (the q=1 weighted quantile)."""
-        return self._agg_1row("max", subset)
+        return self._whole(subset).max()
 
     # -- correlation / grouping / resample / apply (separate modules) --------
 
@@ -999,7 +931,7 @@ class WeightedSeries:
         ``sort`` when feeding another operator at scale.
         """
         d = self._wdf.df
-        v = F.col(self._value_col)
+        v = F.col(_stats.q(self._value_col))
         if dropna:
             d = d.where(v.isNotNull())
         out = d.groupBy(v.alias(self._value_col)).agg(
@@ -1008,7 +940,7 @@ class WeightedSeries:
         if sort:
             out = out.orderBy(
                 F.col("count").asc() if ascending else F.col("count").desc(),
-                self._value_col,
+                v,
             )
         return out
 
@@ -1023,7 +955,7 @@ class WeightedSeries:
         """
         vc = self.value_counts(dropna=dropna, sort=False)
         return vc.orderBy(
-            F.col("count").desc(), F.col(self._value_col).asc()
+            F.col("count").desc(), F.col(_stats.q(self._value_col)).asc()
         ).limit(1)
 
     def histogram(self, lo: float, hi: float, bins: int) -> DataFrame:
@@ -1039,7 +971,7 @@ class WeightedSeries:
         if not lo < hi:
             raise ValueError("need lo < hi")
         width = (hi - lo) / bins
-        v = F.col(self._value_col).cast("double")
+        v = F.col(_stats.q(self._value_col)).cast("double")
         b = F.least(
             F.lit(bins - 1),
             F.floor((v - F.lit(float(lo))) / F.lit(width)).cast("int"),

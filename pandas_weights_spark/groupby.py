@@ -1,5 +1,6 @@
 """Weighted grouped aggregation (reference ``frame.py:449-679``,
-``series.py:341-481``).
+``series.py:341-481``) — the one home of the statistics of value
+columns per group, with zero or more keys.
 
 Each statistic compiles to exactly one ``df.groupBy(keys).agg(...)`` —
 a single shuffle with map-side partial aggregation — versus the
@@ -7,6 +8,11 @@ reference's three independent grouped passes for ``var``
 (frame.py:599-609). ``agg_all`` fuses several statistics over the same
 grouping into that same single shuffle, which the reference cannot do
 at all.
+
+A zero-key group is the whole table: the grand total of the same
+mergeable sums, one ``selectExpr`` instead of a ``groupBy``. The frame's
+whole-table statistics are that group over their ``subset``, and a
+resample is a group on its bucket column.
 
 Scale notes (100 TB posture):
 * The shuffle is keyed on the grouping columns; AQE handles skewed keys
@@ -53,14 +59,15 @@ def _stat_exprs(
 
 
 def _key_cols(keys: Sequence[str]) -> list[Column]:
-    """Key columns by literal name (a dot is part of the name)."""
+    """Columns by literal name (a dot is part of the name)."""
     return [F.col(_stats.q(k)) for k in keys]
 
 
 def _join_group_stats(
     df: DataFrame, stats: DataFrame, keys: Sequence[str]
 ) -> DataFrame:
-    """Left-join per-group statistics back onto the row frame.
+    """Left-join per-group statistics onto ``df`` (the row frame, or
+    another per-group frame of the same keys).
 
     The scale-safe shape for per-row transforms: the statistics frame is
     one row per group (tiny relative to ``df``), so AQE broadcast-joins
@@ -119,6 +126,20 @@ class WeightedGroupBy:
         self._dropna = dropna
         self._sort = sort
         self._mode = mode
+        self._cols: Optional[list[str]] = None
+
+    @classmethod
+    def _whole(
+        cls, wdf: "WeightedDataFrame", cols: Optional[Sequence[str]] = None
+    ) -> "WeightedGroupBy":
+        """The zero-key group: the whole table as one group. ``cols``
+        names the value columns verbatim (each is aggregated, numeric or
+        not); default: the numeric columns."""
+        out = object.__new__(cls)
+        out._wdf, out._keys, out._dropna, out._sort = wdf, [], True, False
+        out._mode = "groupby"
+        out._cols = None if cols is None else list(cols)
+        return out
 
     # -- plumbing -------------------------------------------------------------
 
@@ -136,13 +157,16 @@ class WeightedGroupBy:
 
     def _value_cols(self) -> list[str]:
         """Numeric data columns minus the group keys (frame.py:496-503:
-        keys are 'exclusions', never aggregated)."""
+        keys are 'exclusions', never aggregated), or the zero-key
+        group's named columns."""
+        if self._cols is not None:
+            return list(self._cols)
         return [c for c in self._wdf.numeric_columns() if c not in self._keys]
 
     def _kept(self) -> "WeightedDataFrame":
         """The weighted frame over the rows the grouping keeps:
         ``dropna=True`` drops the rows with a NULL key."""
-        if not self._dropna:
+        if not (self._dropna and self._keys):
             return self._wdf
         df = self._wdf.df.where(
             " AND ".join(f"{_stats.q(k)} IS NOT NULL" for k in self._keys)
@@ -163,17 +187,28 @@ class WeightedGroupBy:
             out = out.orderBy(*_key_cols(self._keys))
         return out
 
+    def _aggregate(self, exprs: Sequence[str]) -> DataFrame:
+        """The aliased aggregate SQL ``exprs`` per group
+        (:func:`_stats.aggregate`: one ``selectExpr`` without keys);
+        cube and rollup group through :meth:`_grouped`."""
+        if self._mode == "groupby":
+            out = _stats.aggregate(self._kept().df, exprs, self._keys)
+        else:
+            out = self._grouped().agg(*map(F.expr, exprs))
+        return self._finish(out)
+
     def _agg(self, stat: str, **kwargs) -> DataFrame:
         """The aggregate ``stat`` of every value column, named after it."""
         cols = self._value_cols()
         if not cols:
             raise ValueError("no numeric columns to aggregate")
         w = _stats.q(WEIGHT_COL)
-        exprs = [
-            f"{_stats.stat_sql(stat, self._wdf._value_sql(c), w, **kwargs)} AS {_stats.q(c)}"
-            for c in cols
-        ]
-        return self._finish(self._grouped().agg(*map(F.expr, exprs)))
+        return self._aggregate(
+            [
+                f"{_stats.stat_sql(stat, self._wdf._value_sql(c), w, **kwargs)} AS {_stats.q(c)}"
+                for c in cols
+            ]
+        )
 
     # -- statistics (frame.py:512-628) -----------------------------------------
 
@@ -226,11 +261,11 @@ class WeightedGroupBy:
         for c in order_by:
             if c not in wdf.df.columns:
                 raise KeyError(f"column {c!r} not in frame")
-        ord_expr = F.struct(*[F.col(c) for c in order_by])
+        cols = [c for c in self._value_cols() if c not in order_by]
+        if not cols:
+            raise ValueError("no numeric columns to aggregate")
+        ord_expr = F.struct(*_key_cols(order_by))
         pick = F.max_by if last else F.min_by
-        cols = [
-            c for c in self._value_cols() if c not in order_by
-        ]
         aggs = []
         for c in cols:
             x = wdf._value(c)
@@ -247,24 +282,19 @@ class WeightedGroupBy:
         along ``order_by`` — pandas ``groupby.nth``: the whole row at
         that position, NULLs and all. One window shuffle on the group
         keys (row_number), then a row-local filter."""
-        from pyspark.sql import Window
-
         order_by = list(order_by)
         if not order_by:
             raise ValueError("nth requires order_by columns")
         n = int(n)
         wdf = self._wdf
-        cols = [F.col(c) for c in order_by]
+        cols = _key_cols(order_by)
+        part = _key_cols(self._keys)
         if n >= 0:
-            spec = Window.partitionBy(*self._keys).orderBy(*cols)
+            spec = Window.partitionBy(*part).orderBy(*cols)
             target = n + 1
         else:
-            spec = Window.partitionBy(*self._keys).orderBy(
-                *[c.desc() for c in cols]
-            )
+            spec = Window.partitionBy(*part).orderBy(*[c.desc() for c in cols])
             target = -n
-        from pandas_weights_spark.frame import WEIGHT_COL
-
         rn = F.row_number().over(spec)
         return (
             wdf.df.withColumn("__pw_rn__", rn)
@@ -361,7 +391,7 @@ class WeightedGroupBy:
             raise NotImplementedError(
                 "mad is not defined for cube/rollup grouping sets"
             )
-        from pandas_weights_spark.frame import WEIGHT_COL, wt as _wt
+        from pandas_weights_spark.frame import wt as _wt
         from pandas_weights_spark.quantile import (
             quantile_col_name,
             weighted_quantiles,
@@ -390,11 +420,11 @@ class WeightedGroupBy:
         # dropna=False).
         joined = _join_group_stats(df, med, self._keys)
         dev = joined.select(
-            *self._keys,
+            *_key_cols(self._keys),
             F.col(WEIGHT_COL),
             *[
                 F.abs(
-                    wdf._value(c) - F.col(quantile_col_name(c, 0.5))
+                    wdf._value(c) - F.col(_stats.q(quantile_col_name(c, 0.5)))
                 ).alias(c)
                 for c in cols
             ],
@@ -410,9 +440,9 @@ class WeightedGroupBy:
                 subset=cols, keys=self._keys,
             )
         renamed = out.select(
-            *self._keys,
+            *_key_cols(self._keys),
             *[
-                (F.col(quantile_col_name(c, 0.5)) * F.lit(float(scale))).alias(c)
+                (F.col(_stats.q(quantile_col_name(c, 0.5))) * F.lit(float(scale))).alias(c)
                 for c in cols
             ],
         )
@@ -432,8 +462,9 @@ class WeightedGroupBy:
         bad = [s for s in stats if s not in _STATS]
         if bad:
             raise ValueError(f"unknown statistics: {bad}")
-        exprs = [e for c in cols for e in _stat_exprs(self._wdf, c, stats, **kwargs)]
-        return self._finish(self._grouped().agg(*map(F.expr, exprs)))
+        return self._aggregate(
+            [e for c in cols for e in _stat_exprs(self._wdf, c, stats, **kwargs)]
+        )
 
     def agg(self, spec) -> DataFrame:
         """pandas dict-style aggregation in ONE pass: ``agg({"price":
@@ -458,7 +489,7 @@ class WeightedGroupBy:
             if bad:
                 raise ValueError(f"unknown statistics: {bad}")
             exprs += _stat_exprs(self._wdf, c, stats)
-        return self._finish(self._grouped().agg(*map(F.expr, exprs)))
+        return self._aggregate(exprs)
 
     def describe(
         self,
@@ -472,12 +503,14 @@ class WeightedGroupBy:
         weighted distribution: ``{col}_count/_mean/_std/_min``, one
         ``{col}_p{q}`` per requested quantile, and ``{col}_max``.
 
-        Two passes joined on the group keys: the five moment/extremum
-        statistics fuse into ONE aggregate (:meth:`agg_all`), and the
-        quantiles ride the usual inverted-CDF window (``exact=False``
-        switches to the binned approximation — the 100 TB default, see
-        :meth:`quantile`). min/max use the quantile family's mass rule
-        (rows with NULL/non-positive weight carry no mass).
+        Two passes joined on the group keys (:func:`_join_group_stats`;
+        with no keys, a broadcast cross join of two one-row frames): the
+        five moment/extremum statistics fuse into ONE aggregate
+        (:meth:`agg_all`), and the quantiles ride the usual inverted-CDF
+        window (``exact=False`` switches to the binned approximation —
+        the 100 TB default, see :meth:`quantile`). min/max use the
+        quantile family's mass rule (rows with NULL/non-positive weight
+        carry no mass).
         """
         if self._mode != "groupby":
             raise NotImplementedError(
@@ -486,24 +519,15 @@ class WeightedGroupBy:
         qs = [float(q) for q in qs]
         moments = self.agg_all(["count", "mean", "std", "min", "max"])
         quants = self.quantile(qs, exact=exact, lo=lo, hi=hi, bins=bins)
-        q = _stats.q
         from pandas_weights_spark.quantile import quantile_col_name
 
-        # null-safe key join (dropna=False keeps NULL-key groups); the
-        # quantile side's keys are renamed, so every name is one column
-        renamed = quants.withColumnsRenamed(
-            {k: f"__pw_dk{i}__" for i, k in enumerate(self._keys)}
-        )
-        cond = " AND ".join(
-            f"({q(k)} <=> __pw_dk{i}__)" for i, k in enumerate(self._keys)
-        )
-        joined = moments.join(renamed, on=F.expr(cond), how="inner")
+        joined = _join_group_stats(moments, quants, self._keys)
         order = list(self._keys)
         for c in self._value_cols():
             order += [f"{c}_{s}" for s in ("count", "mean", "std", "min")]
             order += [quantile_col_name(c, p) for p in qs]
             order.append(f"{c}_max")
-        return joined.select(*[F.col(q(n)) for n in order])
+        return joined.select(*_key_cols(order))
 
     def cdf(self, bands: int = 256) -> DataFrame:
         """Per-row weighted CDF (percentile-rank) transform against the
@@ -714,7 +738,7 @@ class WeightedGroupBy:
         df = self._kept().df
         if strategy == "zero":
             return df.select(
-                *[F.col(c) for c in df.columns],
+                *_key_cols(df.columns),
                 *[
                     F.coalesce(
                         self._wdf._value(c).cast("double"), F.lit(0.0)
@@ -727,21 +751,21 @@ class WeightedGroupBy:
 
             med = self.quantile(0.5, **quantile_kwargs)
             stats = med.select(
-                *self._keys,
+                *_key_cols(self._keys),
                 *[
-                    F.col(quantile_col_name(c, 0.5)).alias(
+                    F.col(_stats.q(quantile_col_name(c, 0.5))).alias(
                         f"__pw_imed_{c}__"
                     )
                     for c in cols
                 ],
             )
             joined = _join_group_stats(df, stats, self._keys)
-            out_cols = [F.col(c) for c in df.columns]
+            out_cols = _key_cols(df.columns)
             for c in cols:
                 x = self._wdf._value(c)
                 out_cols.append(
                     F.coalesce(
-                        x.cast("double"), F.col(f"__pw_imed_{c}__")
+                        x.cast("double"), F.col(_stats.q(f"__pw_imed_{c}__"))
                     ).alias(f"{c}_imp")
                 )
             return joined.select(*out_cols)
@@ -813,23 +837,23 @@ class WeightedGroupBy:
             df = df.where(x.isNotNull())
         w = self._wdf.weights
         m = F.when(w > 0, w).otherwise(F.lit(0.0))
-        agg = df.groupBy(*[F.col(kk) for kk in self._keys], x.alias(c)).agg(
-            F.sum(m).alias("count")
-        )
+        keys = _key_cols(self._keys)
+        agg = df.groupBy(*keys, x.alias(c)).agg(F.sum(m).alias("count"))
         if normalize:
-            tot = Window.partitionBy(*[F.col(kk) for kk in self._keys])
+            tot = Window.partitionBy(*keys)
             agg = agg.withColumn(
                 "share", F.try_divide(F.col("count"), F.sum("count").over(tot))
             )
         if k is not None:
             from pandas_weights_spark.topk import partitioned_topk
 
+            xc = F.col(_stats.q(c))
             agg = partitioned_topk(
                 agg,
-                part_by=self._keys,
-                order_by=[F.col("count").desc(), F.col(c).asc()],
+                part_by=keys,
+                order_by=[F.col("count").desc(), xc.asc()],
                 k=int(k),
-                salt_by=[F.col(c)],
+                salt_by=[xc],
             ).drop("__pw_rank__")
         return self._finish(agg)
 
@@ -855,27 +879,29 @@ class WeightedGroupBy:
                 "grouped[['col']]"
             )
         c = cols[0]
+        xc = F.col(_stats.q(c))
+        keys = _key_cols(self._keys)
         df = self._kept().df
         if dropna_values:
-            df = df.where(F.col(c).isNotNull())
-        mass = df.groupBy(*self._keys, c).agg(
+            df = df.where(xc.isNotNull())
+        mass = df.groupBy(*keys, xc).agg(
             F.coalesce(F.sum(self._wdf.weights), F.lit(0.0)).alias("count")
         )
         # argmax by (count desc, value asc): max_by over the lexicographic
         # (count, -value) struct. The cast-to-double tie-breaker keeps
         # bool/int columns orderable under unary minus.
         winner = F.max_by(
-            F.struct(F.col(c).alias("value"), F.col("count").alias("count")),
+            F.struct(xc.alias("value"), F.col("count").alias("count")),
             F.struct(
                 F.col("count").alias("m"),
-                (-F.col(c).cast("double")).alias("t"),
+                (-xc.cast("double")).alias("t"),
             ),
         )
         out = (
-            mass.groupBy(*self._keys)
+            mass.groupBy(*keys)
             .agg(winner.alias("__pw_win__"))
             .select(
-                *self._keys,
+                *keys,
                 F.col("__pw_win__.value").alias(c),
                 F.col("__pw_win__.count").alias("count"),
             )
@@ -1027,15 +1053,14 @@ class WeightedGroupBy:
         is a filtered lazy view. Documented small-cardinality only — at
         scale use ``agg_all``/``apply`` instead.
         """
-        key_rows = (
-            self._wdf.df.select(*self._keys).distinct().orderBy(*self._keys).collect()
-        )
+        keys = _key_cols(self._keys)
+        key_rows = self._wdf.df.select(*keys).distinct().orderBy(*keys).collect()
         for row in key_rows:
             if self._dropna and any(row[k] is None for k in self._keys):
                 continue
             cond = None
             for k in self._keys:
-                c = F.col(k).eqNullSafe(F.lit(row[k]))
+                c = F.col(_stats.q(k)).eqNullSafe(F.lit(row[k]))
                 cond = c if cond is None else (cond & c)
             sub = self._wdf._with_df(self._wdf.df.where(cond))
             key = row[self._keys[0]] if len(self._keys) == 1 else tuple(row)

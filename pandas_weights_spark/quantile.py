@@ -31,6 +31,9 @@ from typing import NamedTuple, Optional, Sequence, Union
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from pandas_weights_spark._stats import q as _q
+from pandas_weights_spark.groupby import _join_group_stats, _key_cols
+
 __all__ = [
     "weighted_quantiles",
     "weighted_quantiles_binned",
@@ -195,10 +198,8 @@ def _banded_cums(
       RANGE includes ties, so no distinct-value aggregate or join-back
       on the value is needed.
     """
-    from pandas_weights_spark.groupby import _join_group_stats
-
     keys = list(keys)
-    kcF = [F.col(k) for k in keys]
+    kcF = _key_cols(keys)
     xs = {c: wdf._value(c) for c in masses}
     lohi = [(f"__lo_{i}__", f"__hi_{i}__") for i in range(len(masses))]
     if bounds is not None:
@@ -244,7 +245,7 @@ def _banded_cums(
             Window.unboundedPreceding, Window.unboundedFollowing
         )
         offs = btot.select(
-            *keys,
+            *kcF,
             sp.band,
             *[
                 F.coalesce(F.sum(bm[n]).over(before), F.lit(0.0)).alias(off[n])
@@ -293,7 +294,7 @@ def weighted_cdf(
                 wdf._value(c).isNotNull() & (tw > 0), F.try_divide(cw, tw)
             ).alias(f"{c}_cdf")
         )
-    return frame.select(*wdf.df.columns, *cdfs)
+    return frame.select(*_key_cols(wdf.df.columns), *cdfs)
 
 
 def weighted_qcut(
@@ -318,7 +319,7 @@ def weighted_qcut(
     if q < 1:
         raise ValueError("q must be >= 1")
     c = weighted_cdf(wdf, subset=[col], keys=keys, bands=bands)
-    cdfc = F.col(f"{col}_cdf")
+    cdfc = F.col(_q(f"{col}_cdf"))
     b = F.when(
         cdfc.isNotNull(),
         F.greatest(
@@ -385,8 +386,6 @@ def weighted_winsorize(
     row-local ``least``/``greatest`` — the same shape as the z-score
     transform.
     """
-    from pandas_weights_spark.groupby import _join_group_stats
-
     if not 0.0 <= lower < upper <= 1.0:
         raise ValueError(
             f"need 0 <= lower < upper <= 1, got {lower}, {upper}"
@@ -417,7 +416,7 @@ def weighted_winsorize(
     hi_of = {c: quantile_col_name(c, upper) for c in cols}
     for c in cols:
         x = wdf._value(c)
-        lo, hi = F.col(lo_of[c]), F.col(hi_of[c])
+        lo, hi = F.col(_q(lo_of[c])), F.col(_q(hi_of[c]))
         # least/greatest SKIP nulls, so a missing bound (empty group)
         # degrades to a pass-through rather than nulling the value
         out = out.withColumn(
@@ -463,8 +462,8 @@ def weighted_quantiles_binned(
     w = wdf.weights
     df = wdf.df
     width = (hi - lo) / bins
-    sel = [F.col(k) for k in keys]
-    part = [F.col(k) for k in keys]
+    kc = _key_cols(keys)
+    sel = list(kc)
     aggs1, aggs2 = [], []
     for c in cols:
         x = wdf._value(c)
@@ -486,13 +485,13 @@ def weighted_quantiles_binned(
         c = cols[0]
         binned = (
             staged.select(
-                *[F.col(k) for k in keys],
+                *kc,
                 F.lit(0).alias("__ci__"),
-                F.col(f"__b_{c}__").alias("__b__"),
-                F.col(f"__m_{c}__").alias("__m__"),
+                F.col(_q(f"__b_{c}__")).alias("__b__"),
+                F.col(_q(f"__m_{c}__")).alias("__m__"),
             )
             .where(F.col("__b__").isNotNull())
-            .groupBy(*[F.col(k) for k in keys], "__ci__", "__b__")
+            .groupBy(*kc, "__ci__", "__b__")
             .agg(F.sum("__m__").alias("__bm__"))
         )
     else:
@@ -504,32 +503,30 @@ def weighted_quantiles_binned(
             *[
                 F.struct(
                     F.lit(i).alias("ci"),
-                    F.col(f"__b_{c}__").alias("b"),
-                    F.col(f"__m_{c}__").alias("m"),
+                    F.col(_q(f"__b_{c}__")).alias("b"),
+                    F.col(_q(f"__m_{c}__")).alias("m"),
                 )
                 for i, c in enumerate(cols)
             ]
         )
-        exploded = staged.select(
-            *[F.col(k) for k in keys], F.explode(pairs).alias("p")
-        )
+        exploded = staged.select(*kc, F.explode(pairs).alias("p"))
         binned = (
             exploded.select(
-                *[F.col(k) for k in keys],
+                *kc,
                 F.col("p.ci").alias("__ci__"),
                 F.col("p.b").alias("__b__"),
                 F.col("p.m").alias("__m__"),
             )
             .where(F.col("__b__").isNotNull())
-            .groupBy(*[F.col(k) for k in keys], "__ci__", "__b__")
+            .groupBy(*kc, "__ci__", "__b__")
             .agg(F.sum("__m__").alias("__bm__"))
         )
-    cum_w = Window.partitionBy(*part, "__ci__").orderBy("__b__").rowsBetween(
+    cum_w = Window.partitionBy(*kc, "__ci__").orderBy("__b__").rowsBetween(
         Window.unboundedPreceding, Window.currentRow
     )
-    tot_w = Window.partitionBy(*part, "__ci__")
+    tot_w = Window.partitionBy(*kc, "__ci__")
     cdf = binned.select(
-        *[F.col(k) for k in keys],
+        *kc,
         "__ci__",
         "__b__",
         F.sum("__bm__").over(cum_w).alias("__cw__"),
@@ -545,14 +542,14 @@ def weighted_quantiles_binned(
                 edge,
             )
             aggs.append(F.min(hit).alias(quantile_col_name(c, q)))
-    return cdf.groupBy(*[F.col(k) for k in keys]).agg(*aggs)
+    return cdf.groupBy(*kc).agg(*aggs)
 
 
 def _two_sample(x: Column, w: Column, group_col: str, group_a, group_b):
     """The per-side masses ``{"a": …, "b": …}`` of a two-sample
     statistic: the mass rule on rows whose ``group_col`` equals
     (null-safe) ``group_a`` / ``group_b``."""
-    g = F.col(group_col)
+    g = F.col(_q(group_col))
     return {
         "a": _mass(x, w, g.eqNullSafe(F.lit(group_a))),
         "b": _mass(x, w, g.eqNullSafe(F.lit(group_b))),
@@ -614,8 +611,9 @@ def weighted_gini(
         wdf, {col: {"m": m, "s": m * x.cast("double")}}, keys, bands
     )
     aggs, gini = _gini(x, m, spines[col])
-    return frame.groupBy(*[F.col(k) for k in keys]).agg(*aggs).select(
-        *keys, gini.alias("gini"), F.col("__W__").alias("n")
+    kc = _key_cols(keys)
+    return frame.groupBy(*kc).agg(*aggs).select(
+        *kc, gini.alias("gini"), F.col("__W__").alias("n")
     )
 
 
@@ -647,8 +645,9 @@ def weighted_ks(
         bands,
     )
     aggs, ks = _ks(x, spines[col])
-    return frame.groupBy(*[F.col(k) for k in keys]).agg(*aggs).select(
-        *keys,
+    kc = _key_cols(keys)
+    return frame.groupBy(*kc).agg(*aggs).select(
+        *kc,
         ks.alias("ks_stat"),
         F.col("__na__").alias("n_a"),
         F.col("__nb__").alias("n_b"),
@@ -682,7 +681,7 @@ def weighted_mannwhitney(
     masses = _two_sample(x, wdf.weights, group_col, group_a, group_b)
     frame, spines = _banded_cums(wdf, {col: masses}, keys, bands)
     sp = spines[col]
-    kcF = [F.col(k) for k in keys]
+    kcF = _key_cols(keys)
     at_win = (
         Window.partitionBy(*kcF, F.col(sp.band))
         .orderBy(x)
@@ -706,7 +705,7 @@ def weighted_mannwhitney(
     mu = na * nb / F.lit(2.0)
     sigma = F.sqrt(na * nb * (na + nb + F.lit(1.0)) / F.lit(12.0))
     return agg.select(
-        *keys,
+        *kcF,
         F.when((na > 0) & (nb > 0), F.col("u_stat")).alias("u_stat"),
         F.when(
             (na > 0) & (nb > 0),
@@ -738,8 +737,6 @@ def weighted_robust_zscore(
     all three quartiles of every column, AQE-broadcast join-back,
     row-local arithmetic — the winsorize/zscore shape.
     """
-    from pandas_weights_spark.groupby import _join_group_stats
-
     cols = list(subset) if subset is not None else wdf.numeric_columns()
     cols = [c for c in cols if c not in keys]
     if not cols:
@@ -762,7 +759,7 @@ def weighted_robust_zscore(
     }
     for c in cols:
         x = wdf._value(c)
-        q1, q2, q3 = [F.col(n) for n in names[c]]
+        q1, q2, q3 = _key_cols(names[c])
         out = out.withColumn(
             f"{c}{suffix}",
             F.when(x.isNotNull(), F.try_divide(x - q2, q3 - q1)),

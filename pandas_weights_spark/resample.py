@@ -3,10 +3,12 @@
 
 pandas ``resample(rule)`` with fixed-frequency rules maps to Spark's
 tumbling ``F.window(ts, interval, startTime=...)``; calendar rules
-(month/year starts) map to ``date_trunc``. Both are plain ``groupBy``
-aggregations — a single shuffle keyed on the bucket, streaming-safe
-partials (the same expressions run unchanged under Structured Streaming,
-see :mod:`pandas_weights_spark.streaming`).
+(month/year starts) map to month-index arithmetic. A resample is a
+group on its bucket: the timestamp column replaced by its bucket label,
+then the :class:`~pandas_weights_spark.groupby.WeightedGroupBy`
+statistics keyed on it — a single shuffle keyed on the bucket,
+streaming-safe partials (the same expressions run unchanged under
+Structured Streaming, see :mod:`pandas_weights_spark.streaming`).
 
 Origin semantics: pandas defaults to ``origin="start_day"`` (midnight of
 the first timestamp). Spark windows are epoch-aligned; midnight is a
@@ -34,6 +36,7 @@ from pyspark.sql import functions as F
 
 from pandas_weights_spark import _stats
 from pandas_weights_spark.frame import WEIGHT_COL
+from pandas_weights_spark.groupby import WeightedGroupBy
 
 if TYPE_CHECKING:
     from pandas_weights_spark.frame import WeightedDataFrame
@@ -112,6 +115,11 @@ def _as_seconds(value: Union[str, dt.timedelta]) -> int:
 class WeightedResampler:
     """Lazy weighted resampler: stores the rule, derives the bucket per
     aggregate call (mirrors the reference's lazy design, frame.py:370-379).
+
+    Each statistic is the :class:`WeightedGroupBy` statistic of the rows
+    with a timestamp, grouped on their bucket label (:meth:`_group`);
+    only the empty-bucket spine (``complete=True``) and the bucket order
+    are the resampler's own.
     """
 
     def __init__(
@@ -165,7 +173,7 @@ class WeightedResampler:
                 # divides a day puts it at phase 0: no probe needed
                 return self._offset_secs % self._n
             # One extra tiny job: min over a single pruned column.
-            first = self._wdf.df.agg(F.min(F.col(self._on))).collect()[0][0]
+            first = self._wdf.df.agg(F.min(F.col(_stats.q(self._on)))).collect()[0][0]
             if first is None:
                 base = 0
             else:
@@ -187,7 +195,7 @@ class WeightedResampler:
         one tiny job over a single pruned column (pandas anchors calendar
         rules on the first observation; reference frame.py:163 accepts
         any pandas frequency)."""
-        first = self._wdf.df.agg(F.min(F.col(self._on))).collect()[0][0]
+        first = self._wdf.df.agg(F.min(F.col(_stats.q(self._on)))).collect()[0][0]
         if first is None:
             return 0
         return first.year * 12 + first.month - 1
@@ -243,41 +251,28 @@ class WeightedResampler:
             day = f"last_day({day})"
         return f"CAST({day} AS TIMESTAMP)"
 
-    def _aggregated(self, exprs: Sequence[str], complete: bool) -> DataFrame:
-        """``exprs`` (aliased aggregate SQL) per non-empty bucket, in
-        bucket order; ``complete`` adds the empty buckets."""
+    def _group(self) -> WeightedGroupBy:
+        """The rows with a timestamp, ``on`` replaced by its bucket label,
+        grouped on it (``dropna=False``: no NULL label is left)."""
         on = _stats.q(self._on)
-        out = (
-            self._wdf.df.where(f"{on} IS NOT NULL")
-            .groupBy(F.expr(f"{self._bucket_sql()} AS {on}"))
-            .agg(*[F.expr(e) for e in exprs])
+        df = self._wdf.df.where(f"{on} IS NOT NULL").withColumn(
+            self._on, F.expr(self._bucket_sql())
         )
+        return WeightedGroupBy(self._wdf._with_df(df), [self._on], dropna=False)
+
+    def _finish(self, out: DataFrame, complete: bool = False) -> DataFrame:
+        """``out`` in bucket order; ``complete`` adds the empty buckets."""
         if complete:
             out = self._complete(out)
-        return out.orderBy(F.col(on))
-
-    def _agg(self, stat: str, complete: bool = False, **kwargs) -> DataFrame:
-        cols = [c for c in self._wdf.numeric_columns() if c != self._on]
-        if not cols:
-            raise ValueError("no numeric columns to aggregate")
-        w = _stats.q(WEIGHT_COL)
-        return self._aggregated(
-            [
-                f"{_stats.stat_sql(stat, self._wdf._value_sql(c), w, **kwargs)}"
-                f" AS {_stats.q(c)}"
-                for c in cols
-            ],
-            complete,
-        )
+        return out.orderBy(F.col(_stats.q(self._on)))
 
     def _complete(self, out: DataFrame) -> DataFrame:
         """Left-join against a generated bucket spine so empty buckets are
         emitted with NULLs (pandas full-range semantics, SURVEY.md §3.3)."""
+        on = F.col(_stats.q(self._on))
         if self._kind == "fixed":
             step = F.expr(f"INTERVAL {self._n} SECOND")
-            spine = out.agg(
-                F.min(self._on).alias("lo"), F.max(self._on).alias("hi")
-            ).select(
+            spine = out.agg(F.min(on).alias("lo"), F.max(on).alias("hi")).select(
                 F.explode(F.sequence(F.col("lo"), F.col("hi"), step)).alias(
                     self._on
                 )
@@ -295,12 +290,10 @@ class WeightedResampler:
                     step,
                 )
             ).alias(self._on)
-            spine = out.agg(
-                F.min(self._on).alias("lo"), F.max(self._on).alias("hi")
-            ).select(lab)
+            spine = out.agg(F.min(on).alias("lo"), F.max(on).alias("hi")).select(lab)
             if anchor == "end":
                 spine = spine.select(
-                    F.last_day(F.col(self._on))
+                    F.last_day(on)
                     .cast("timestamp")
                     .alias(self._on)
                 )
@@ -309,23 +302,23 @@ class WeightedResampler:
     # -- statistics (frame.py:381-446) -------------------------------------------
 
     def count(self, skipna: bool = True, complete: bool = False) -> DataFrame:
-        return self._agg("count", complete, skipna=skipna)
+        return self._finish(self._group().count(skipna=skipna), complete)
 
     def sum(self, min_count: int = 0, complete: bool = False) -> DataFrame:
-        return self._agg("sum", complete, min_count=min_count)
+        return self._finish(self._group().sum(min_count=min_count), complete)
 
     def mean(self, skipna: bool = True, complete: bool = False) -> DataFrame:
-        return self._agg("mean", complete, skipna=skipna)
+        return self._finish(self._group().mean(skipna=skipna), complete)
 
     def var(
         self, ddof: int = 1, skipna: bool = True, complete: bool = False
     ) -> DataFrame:
-        return self._agg("var", complete, ddof=ddof, skipna=skipna)
+        return self._finish(self._group().var(ddof=ddof, skipna=skipna), complete)
 
     def std(
         self, ddof: int = 1, skipna: bool = True, complete: bool = False
     ) -> DataFrame:
-        return self._agg("std", complete, ddof=ddof, skipna=skipna)
+        return self._finish(self._group().std(ddof=ddof, skipna=skipna), complete)
 
     def quantile(
         self,
@@ -345,32 +338,9 @@ class WeightedResampler:
         ``exact=False`` switches to the binned CDF (shuffle ∝ buckets ×
         bins) for short-range/huge-data shapes.
         """
-        from pandas_weights_spark.quantile import (
-            weighted_quantiles,
-            weighted_quantiles_binned,
+        return self._finish(
+            self._group().quantile(q, exact=exact, lo=lo, hi=hi, bins=bins)
         )
-
-        cols = [c for c in self._wdf.numeric_columns() if c != self._on]
-        if not cols:
-            raise ValueError("no numeric columns to aggregate")
-        staged = self._wdf._with_df(
-            self._wdf.df.where(F.col(self._on).isNotNull()).withColumn(
-                self._on, self.bucket()
-            ),
-            cols,
-        )
-        if exact:
-            out = weighted_quantiles(
-                staged, q, subset=cols, keys=[self._on]
-            )
-        else:
-            if lo is None or hi is None:
-                raise ValueError("exact=False needs explicit lo and hi")
-            out = weighted_quantiles_binned(
-                staged, q, lo=lo, hi=hi, bins=bins,
-                subset=cols, keys=[self._on],
-            )
-        return out.orderBy(self._on)
 
     def median(self, **kwargs) -> DataFrame:
         return self.quantile(0.5, **kwargs)
@@ -381,16 +351,7 @@ class WeightedResampler:
         """Several statistics in one bucket-keyed aggregate pass.
         ``complete=True`` joins the generated bucket spine so empty
         buckets appear (NULL statistics), like the single-stat paths."""
-        from pandas_weights_spark.groupby import _STATS, _stat_exprs
-
-        cols = [c for c in self._wdf.numeric_columns() if c != self._on]
-        bad = [s for s in stats if s not in _STATS]
-        if bad:
-            raise ValueError(f"unknown statistics: {bad}")
-        return self._aggregated(
-            [e for c in cols for e in _stat_exprs(self._wdf, c, stats, **kwargs)],
-            complete,
-        )
+        return self._finish(self._group().agg_all(stats, **kwargs), complete)
 
 
 def hypertable_rollup(

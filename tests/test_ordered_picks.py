@@ -64,6 +64,13 @@ class TestFirstLast:
         with pytest.raises(ValueError, match="order_by"):
             wt(sdf, "w").groupby("g").first(order_by=[])
 
+    @pytest.mark.parametrize("which", ["first", "last"])
+    def test_no_value_column_left(self, sdf, which):
+        """Ordering by every value column leaves nothing to pick."""
+        grouped = wt(sdf, "w")[["g", "o", "x"]].groupby("g")
+        with pytest.raises(ValueError, match="no numeric columns to aggregate"):
+            getattr(grouped, which)(order_by=["o", "x"])
+
     def test_one_aggregate_no_window(self, sdf):
         import pandas_weights_spark.plans as P
 

@@ -166,6 +166,43 @@ CALLS = {
     "crosstab": lambda t, n: wt(t, "w")
     .groupby(n["key0"])
     .crosstab(n["cat"], margins=True, normalize="index"),
+    # the rank and count paths, keyed on the dotted ``c a.t``
+    "groupby.impute_median": lambda t, n: wt(t, "w")[[n["cat"], n["val0"], n["val1"]]]
+    .groupby(n["cat"])
+    .impute("median"),
+    "groupby.mad": lambda t, n: wt(t, "w")[[n["cat"], n["val0"], n["val1"]]]
+    .groupby(n["cat"])
+    .mad(),
+    "groupby.cdf": lambda t, n: wt(t, "w")[[n["cat"], n["val1"], n["val2"]]]
+    .groupby(n["cat"])
+    .cdf(),
+    "groupby.qcut": lambda t, n: wt(t, "w").groupby(n["cat"]).qcut(n["val1"], 3),
+    "groupby.winsorize": lambda t, n: wt(t, "w")[[n["cat"], n["val1"]]]
+    .groupby(n["cat"])
+    .winsorize(lower=0.1, upper=0.9),
+    "groupby.robust_zscore": lambda t, n: wt(t, "w")[[n["cat"], n["val1"]]]
+    .groupby(n["cat"])
+    .robust_zscore(),
+    "groupby.value_counts": lambda t, n: wt(t, "w")[[n["cat"], n["grp"]]]
+    .groupby(n["cat"])
+    .value_counts(k=1, normalize=True),
+    "groupby.mode": lambda t, n: wt(t, "w")[[n["cat"], n["val1"]]]
+    .groupby(n["cat"])
+    .mode(),
+    "groupby.nth": lambda t, n: wt(t, "w").groupby(n["cat"]).nth(1, order_by=[n["rid"]]),
+    "frame.mad": lambda t, n: wt(t, "w")[[n["val0"], n["val1"]]].mad(),
+    "frame.cdf": lambda t, n: wt(t, "w").cdf(subset=[n["val1"], n["val2"]]),
+    "frame.qcut": lambda t, n: wt(t, "w").qcut(n["val1"], 4),
+    "series.value_counts": lambda t, n: wt(t, "w")[n["val1"]].value_counts(),
+    "series.mode": lambda t, n: wt(t, "w")[n["val1"]].mode(),
+    "series.histogram": lambda t, n: wt(t, "w")[n["val1"]].histogram(0.0, 4.5, 9),
+    # the resample origin probes and the empty-bucket spine
+    "resample.probe": lambda t, n: wt(_select(t, n["tstamp"], n["val0"], "w"), "w")
+    .resample("7h", on=n["tstamp"])
+    .mean(),
+    "resample.calendar": lambda t, n: wt(_select(t, n["tstamp"], n["val0"], "w"), "w")
+    .resample("MS", on=n["tstamp"])
+    .count(complete=True),
 }
 
 
